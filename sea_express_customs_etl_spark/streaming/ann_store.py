@@ -14,11 +14,8 @@ and search over it is bit-identical too. This is why production
 systems freeze quantizers and re-train offline: an index whose codes
 depend on co-arriving data cannot be maintained incrementally.
 
-Same exactly-once scheme as the sibling stores
-(``incremental_dedup.py``/``sketch_store.py``): batch-tagged rows,
-commit-marker fence, distinct-on-read collapsing deterministic
-crash-window duplicates. Codes are bucketed by ``cluster`` so the ADC
-scan of a probed cell is bucket-local.
+Exactly-once: the ``commit_fence.py`` contract. Codes are bucketed by
+``cluster`` so the ADC scan of a probed cell is bucket-local.
 """
 
 from __future__ import annotations
@@ -34,6 +31,12 @@ from sea_express_customs_etl_spark.operators.pq import (
     pq_train_q,
 )
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
+from sea_express_customs_etl_spark.streaming.commit_fence import (
+    CommitFence,
+    marker_rows,
+    tombstone_writer,
+)
+from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
 
 
 def encode_with_frozen_model(
@@ -101,17 +104,11 @@ def ann_store_batch_writer(
     fence. The frozen model rides in the closure — broadcast per
     batch, never re-trained."""
     c_tab = f"{table_prefix}_codes"
-    m_tab = f"{table_prefix}_batches"
+    fence = CommitFence(f"{table_prefix}_batches")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
-        if spark.catalog.tableExists(m_tab) and (
-            spark.table(m_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
+        if fence.committed(spark, batch_id):
             return
         codes = encode_with_frozen_model(
             batch_df, centroids, codebook, m, dim, vec_col, id_col
@@ -123,9 +120,7 @@ def ann_store_batch_writer(
             "code",
         )
         append_bucketed(codes, c_tab, ("cluster",), num_buckets)
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(m_tab)
+        fence.commit(spark, batch_id)
 
     return write
 
@@ -145,28 +140,7 @@ def ann_store_delete_writer(
     come from ONE monotonically increasing sequence — which a single
     maintenance stream's ``foreachBatch`` batch ids are. Deletion is
     logical until :func:`compact_ann_store` folds the tombstones out."""
-    t_tab = f"{table_prefix}_tombstones"
-    dm_tab = f"{table_prefix}_del_batches"
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch_df.sparkSession
-        if spark.catalog.tableExists(dm_tab) and (
-            spark.table(dm_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return
-        batch_df.select(
-            F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-            F.col(id_col),
-        ).write.mode("append").format("parquet").saveAsTable(t_tab)
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(dm_tab)
-
-    return write
+    return tombstone_writer(table_prefix, id_col)
 
 
 def committed_codes(
@@ -227,8 +201,6 @@ def compact_ann_store(
     rerun re-derives the same survivors). Post-compaction delete
     batches must keep using ids ABOVE the fold generation — true for
     one monotonically numbered maintenance stream."""
-    from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
-
     m_tab = f"{table_prefix}_batches"
     gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
     if gen is None:
@@ -241,19 +213,10 @@ def compact_ann_store(
         "code",
     )
 
-    def write_codes(staging: str) -> None:
-        survivors.write.mode("overwrite").format("parquet").bucketBy(
-            num_buckets, "cluster"
-        ).saveAsTable(staging)
-
-    backup_swap(spark, f"{table_prefix}_codes", write_codes)
-
-    def write_marker(staging: str) -> None:
-        spark.createDataFrame(
-            [(int(gen),)], "batch_id bigint"
-        ).write.mode("overwrite").format("parquet").saveAsTable(staging)
-
-    backup_swap(spark, m_tab, write_marker)
+    backup_swap(
+        spark, f"{table_prefix}_codes", survivors, "cluster", num_buckets
+    )
+    backup_swap(spark, m_tab, marker_rows(spark, [gen]))
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_tombstones")
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_del_batches")
 

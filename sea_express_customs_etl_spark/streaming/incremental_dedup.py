@@ -14,12 +14,8 @@ maintains three grow-only tables across micro-batches,
 * ``<prefix>_edges``    — the accumulated verified near-dup edges
   (graph-sized), tagged with the micro-batch id.
 
-Exactly-once: each row carries its ``batch_id``; a ``_batches`` marker
-table records committed batches and the writer SKIPS a batch id it has
-already committed — the reference's move-to-processed commit marker
-(``/root/reference/src/import_xml_history.py:181-216``: process only
-unseen inputs, then fold them into history), re-expressed as
-idempotent ``foreachBatch`` replay protection.
+Exactly-once: the ``commit_fence.py`` contract (``_batches`` markers
+for the adds, ``_del_batches`` for the tombstones).
 
 Resolution stays separate by design: components over the accumulated
 edge table (``dedup_clusters(corpus, spark.table(prefix + "_edges"))``)
@@ -41,6 +37,12 @@ from sea_express_customs_etl_spark.operators.dedup import (
     shingle_profiles,
 )
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
+from sea_express_customs_etl_spark.streaming.commit_fence import (
+    CommitFence,
+    marker_rows,
+    tombstone_writer,
+)
+from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
 
 
 def incremental_dedup_batch_writer(
@@ -60,19 +62,14 @@ def incremental_dedup_batch_writer(
     p_tab = f"{table_prefix}_profiles"
     b_tab = f"{table_prefix}_bands"
     e_tab = f"{table_prefix}_edges"
-    m_tab = f"{table_prefix}_batches"
+    fence = CommitFence(f"{table_prefix}_batches")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
-        have_store = spark.catalog.tableExists(m_tab)
-        if have_store and (
-            spark.table(m_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return  # replayed batch — already committed, skip (idempotent)
+        if fence.committed(spark, batch_id):
+            return
+        # a marker table means the profile and band tables exist too
+        have_store = spark.catalog.tableExists(fence.table)
         prof = shingle_profiles(
             batch_df, text_col, id_col, n, num_hashes
         ).localCheckpoint()  # computed once; feeds join + two writes
@@ -91,15 +88,7 @@ def incremental_dedup_batch_writer(
         edges.write.mode("append").format("parquet").saveAsTable(e_tab)
         append_bucketed(prof, p_tab, (id_col,), num_buckets)
         append_bucketed(new_b, b_tab, ("band",), num_buckets)
-        # marker LAST (commit fence): a batch that crashed before this
-        # line is replayed in full. The replay may re-append rows a
-        # partial first attempt already wrote — but every operator here
-        # is deterministic, so those rows are EXACT duplicates, and the
-        # committed_* readers below restore exactly-once with a
-        # distinct. (A lakehouse table format would MERGE instead.)
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(m_tab)
+        fence.commit(spark, batch_id)
 
     return write
 
@@ -110,36 +99,15 @@ def dedup_delete_writer(
     """Fenced TOMBSTONES for the dedup signature store (r7 VERDICT
     #6) — takedown / right-to-forget: delete-batch doc ids land in
     ``<prefix>_tombstones`` under a ``<prefix>_del_batches`` commit
-    marker (the ann_store fence). Contract: TAKEDOWN-FINAL — a
-    committed tombstone retires the doc id permanently; re-adding a
-    retired id is a caller error. This is deliberately simpler than
-    the ann_store/winnow VERSIONED contract because profile and band
-    rows carry no add-batch version (they are per-doc idempotent
-    facts), and the right-to-forget flow this serves never re-admits
-    the removed identity. Deletion is logical until
+    marker (``commit_fence.tombstone_writer``). Contract:
+    TAKEDOWN-FINAL — a committed tombstone retires the doc id
+    permanently; re-adding a retired id is a caller error. This is
+    deliberately simpler than the ann_store/winnow VERSIONED contract
+    because profile and band rows carry no add-batch version (they are
+    per-doc idempotent facts), and the right-to-forget flow this serves
+    never re-admits the removed identity. Deletion is logical until
     :func:`compact_dedup_store` folds survivors."""
-    t_tab = f"{table_prefix}_tombstones"
-    dm_tab = f"{table_prefix}_del_batches"
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch_df.sparkSession
-        if spark.catalog.tableExists(dm_tab) and (
-            spark.table(dm_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return
-        batch_df.select(
-            F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-            F.col(id_col),
-        ).write.mode("append").format("parquet").saveAsTable(t_tab)
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(dm_tab)
-
-    return write
+    return tombstone_writer(table_prefix, id_col)
 
 
 def _committed_tombstones(
@@ -219,22 +187,10 @@ def compact_dedup_store(
     post-compaction appends reject a mismatched spec). Same
     quiesced-stream contract and idempotence as
     ``sketch_store.compact_sketch_store``."""
-    from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
-
     m_tab = f"{table_prefix}_batches"
     gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
     if gen is None:
         return
-
-    def swap(table: str, df: DataFrame, bucket_col: str | None) -> None:
-        def write_staging(staging: str) -> None:
-            w = df.write.mode("overwrite").format("parquet")
-            if bucket_col:
-                w = w.bucketBy(num_buckets, bucket_col)
-            w.saveAsTable(staging)
-
-        backup_swap(spark, table, write_staging)
-
     edges = committed_edges(spark, table_prefix).select(
         "id_a", "id_b", F.lit(int(gen)).cast("bigint").alias("batch_id")
     )
@@ -243,13 +199,11 @@ def compact_dedup_store(
     dead = _committed_tombstones(spark, table_prefix, "doc_id")
     if dead is not None:
         bands = bands.join(dead, "doc_id", "left_anti")
-    swap(f"{table_prefix}_edges", edges, None)
-    swap(f"{table_prefix}_profiles", profiles, "doc_id")
-    swap(f"{table_prefix}_bands", bands, "band")
-    swap(
-        m_tab,
-        spark.createDataFrame([(int(gen),)], "batch_id bigint"),
-        None,
+    backup_swap(spark, f"{table_prefix}_edges", edges)
+    backup_swap(
+        spark, f"{table_prefix}_profiles", profiles, "doc_id", num_buckets
     )
+    backup_swap(spark, f"{table_prefix}_bands", bands, "band", num_buckets)
+    backup_swap(spark, m_tab, marker_rows(spark, [gen]))
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_tombstones")
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_del_batches")

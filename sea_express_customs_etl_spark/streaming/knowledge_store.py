@@ -14,15 +14,11 @@ sink that maintains a persisted vote-state table across micro-batches,
   batch_id)`` — the ALGEBRAIC state (summable), appended per load;
 * ``<prefix>_batches`` — commit markers.
 
-Exactly-once: the writer SKIPS an already-committed batch id; a batch
-that crashed before its marker is replayed in full, and because the
-align→count chain is deterministic the replayed rows are bit-identical
-duplicates of the partial first attempt — the committed reader
-restores exactly-once with a ``distinct`` over
-``(keys, frequency, batch_id)`` BEFORE merging (two different batches
-legitimately producing the same count row must both survive; only
-same-batch replays collapse). Same crash-window contract as
-``incremental_dedup.committed_edges``.
+Exactly-once: the ``commit_fence.py`` contract. A crash-window replay
+re-appends bit-identical rows, and the committed reader's ``distinct``
+runs over ``(keys, frequency, batch_id)`` BEFORE merging (two different
+batches legitimately producing the same count row must both survive;
+only same-batch replays collapse).
 
 Why the state is per-batch DELTAS, not a maintained merged table:
 appending a load's model-sized count rows is a blind append (no
@@ -50,6 +46,11 @@ from sea_express_customs_etl_spark.operators.vote import (
     vote_counts,
 )
 from sea_express_customs_etl_spark.plans.knowledge import knowledge_aligned
+from sea_express_customs_etl_spark.streaming.commit_fence import (
+    CommitFence,
+    marker_rows,
+)
+from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
 
 _KEYS = ("original_description", "official_description", "ccc_code")
 
@@ -62,18 +63,12 @@ def _vote_writer(
     sign: int,
 ) -> Callable[[DataFrame, DataFrame, int], None]:
     v_tab = f"{table_prefix}_votes"
-    m_tab = f"{table_prefix}_batches"
+    fence = CommitFence(f"{table_prefix}_batches")
 
     def write(delta_a: DataFrame, delta_b: DataFrame, batch_id: int) -> None:
         spark: SparkSession = delta_a.sparkSession
-        if spark.catalog.tableExists(m_tab) and (
-            spark.table(m_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return  # replayed batch — already committed, skip (idempotent)
+        if fence.committed(spark, batch_id):
+            return
         votes = vote_counts(
             knowledge_aligned(
                 delta_a, delta_b, use_nfkc=use_nfkc, strategy=strategy
@@ -84,11 +79,7 @@ def _vote_writer(
             F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
         )
         votes.write.mode("append").format("parquet").saveAsTable(v_tab)
-        # marker LAST (commit fence) — see module docstring for the
-        # crash-window replay reasoning
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(m_tab)
+        fence.commit(spark, batch_id)
 
     return write
 
@@ -164,18 +155,12 @@ def tagged_knowledge_writer(
     description_original (A side), item_sequence, description_official,
     ccc_code (B side) — unused side's columns null."""
     v_tab = f"{table_prefix}_votes"
-    m_tab = f"{table_prefix}_batches"
+    fence = CommitFence(f"{table_prefix}_batches")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
-        if spark.catalog.tableExists(m_tab) and (
-            spark.table(m_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return  # replayed batch — already committed, skip
+        if fence.committed(spark, batch_id):
+            return
 
         def delta(side_a: str, side_b: str, sign: int) -> DataFrame:
             a = batch_df.filter(F.col("side") == side_a).select(
@@ -199,9 +184,7 @@ def tagged_knowledge_writer(
         # and keeps the write single-append (atomic under one marker)
         votes = delta("a", "b", 1).unionByName(delta("a_del", "b_del", -1))
         votes.write.mode("append").format("parquet").saveAsTable(v_tab)
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(m_tab)
+        fence.commit(spark, batch_id)
 
     return write
 
@@ -248,8 +231,6 @@ def compact_knowledge_store(spark: SparkSession, table_prefix: str) -> None:
     contract and idempotence as ``sketch_store.compact_sketch_store``;
     generation replacement via ``table_swap.backup_swap`` (crash-safe,
     no data-loss window)."""
-    from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
-
     m_tab = f"{table_prefix}_batches"
     gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
     if gen is None:
@@ -259,20 +240,5 @@ def compact_knowledge_store(spark: SparkSession, table_prefix: str) -> None:
         "frequency",
         F.lit(int(gen)).cast("bigint").alias("batch_id"),
     )
-    backup_swap(
-        spark,
-        f"{table_prefix}_votes",
-        lambda staging: folded.write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(staging),
-    )
-    backup_swap(
-        spark,
-        m_tab,
-        lambda staging: spark.createDataFrame(
-            [(int(gen),)], "batch_id bigint"
-        )
-        .write.mode("overwrite")
-        .format("parquet")
-        .saveAsTable(staging),
-    )
+    backup_swap(spark, f"{table_prefix}_votes", folded)
+    backup_swap(spark, m_tab, marker_rows(spark, [gen]))

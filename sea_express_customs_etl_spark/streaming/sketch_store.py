@@ -6,13 +6,11 @@ any moment without ever rescanning history.
 
 Design: the store is an append-only LOG of per-batch states (HLL
 register rows, histogram bin rows), each tagged with its ``batch_id``
-and fenced by a commit-marker table — the same replay protection as
-``streaming/incremental_dedup.py``. Because every per-batch state row
-is keyed uniquely within its batch ((batch_id, bucket) for HLL,
-(batch_id, group..., bin) for histograms) and recomputation is
-deterministic, crash-window duplicates are EXACT row duplicates and a
-``distinct`` on read restores exactly-once — even under the
-non-idempotent ``sum`` merge.
+and fenced by the ``commit_fence.py`` contract. Every per-batch state
+row is keyed uniquely within its batch ((batch_id, bucket) for HLL,
+(batch_id, group..., bin) for histograms), so crash-window replays
+are EXACT row duplicates and the read-side ``distinct`` protects even
+the non-idempotent ``sum`` merge.
 
 Merging is the sketches' defining property (`operators/sketches.py`):
 HLL registers fold by ``max``, histogram bins by ``+``. The read-side
@@ -31,6 +29,11 @@ import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.operators.quantiles import value_histogram
 from sea_express_customs_etl_spark.operators.sketches import hll_registers
+from sea_express_customs_etl_spark.streaming.commit_fence import (
+    CommitFence,
+    marker_rows,
+)
+from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
 
 
 def sketch_batch_writer(
@@ -45,18 +48,12 @@ def sketch_batch_writer(
     bins of ``value_col`` per ``group_cols``)."""
     h_tab = f"{table_prefix}_hll"
     q_tab = f"{table_prefix}_hist"
-    m_tab = f"{table_prefix}_batches"
+    fence = CommitFence(f"{table_prefix}_batches")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
-        if spark.catalog.tableExists(m_tab) and (
-            spark.table(m_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return  # already committed — idempotent replay
+        if fence.committed(spark, batch_id):
+            return
         bid = F.lit(int(batch_id)).cast("bigint").alias("batch_id")
         hll_registers(batch_df, hll_col).select(
             bid, "bucket", "max_rank"
@@ -64,9 +61,7 @@ def sketch_batch_writer(
         value_histogram(batch_df, value_col, group_cols).select(
             bid, *group_cols, "bin", "n"
         ).write.mode("append").format("parquet").saveAsTable(q_tab)
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(m_tab)
+        fence.commit(spark, batch_id)
 
     return write
 
@@ -124,34 +119,25 @@ def compact_sketch_store(spark: SparkSession, table_prefix: str) -> None:
     rewrites it to itself. Generation replacement goes through
     ``table_swap.backup_swap`` (backup-then-swap: crash-safe in the
     no-data-loss sense, not transactional)."""
-    from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
-
     m_tab = f"{table_prefix}_batches"
     gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
     if gen is None:
         return
     bid = F.lit(int(gen)).cast("bigint").alias("batch_id")
 
-    def swap(table: str, df: DataFrame) -> None:
-        backup_swap(
-            spark,
-            table,
-            lambda staging: df.write.mode("overwrite")
-            .format("parquet")
-            .saveAsTable(staging),
-        )
-
-    swap(
+    backup_swap(
+        spark,
         f"{table_prefix}_hll",
         merged_hll(spark, table_prefix).select(bid, "bucket", "max_rank"),
     )
-    swap(
+    backup_swap(
+        spark,
         f"{table_prefix}_hist",
         merged_histogram(spark, table_prefix).select(
             bid, "event_type", "bin", "n"
         ),
     )
-    swap(m_tab, spark.createDataFrame([(int(gen),)], "batch_id bigint"))
+    backup_swap(spark, m_tab, marker_rows(spark, [gen]))
 
 
 def rebuild_sketch_store(
@@ -180,8 +166,6 @@ def rebuild_sketch_store(
     generation. Idempotent: a rerun recomputes the same survivor state
     under the next generation id — merged reads are unchanged.
     Quiesced-stream contract, same as :func:`compact_sketch_store`."""
-    from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
-
     m_tab = f"{table_prefix}_batches"
     prior = sorted(
         int(r.batch_id) for r in spark.table(m_tab).collect()
@@ -189,28 +173,16 @@ def rebuild_sketch_store(
     gen = (prior[-1] if prior else -1) + 1
     bid = F.lit(int(gen)).cast("bigint").alias("batch_id")
 
-    def swap(table: str, df: DataFrame) -> None:
-        backup_swap(
-            spark,
-            table,
-            lambda staging: df.write.mode("overwrite")
-            .format("parquet")
-            .saveAsTable(staging),
-        )
-
-    swap(
+    backup_swap(
+        spark,
         f"{table_prefix}_hll",
         hll_registers(survivors, hll_col).select(bid, "bucket", "max_rank"),
     )
-    swap(
+    backup_swap(
+        spark,
         f"{table_prefix}_hist",
         value_histogram(survivors, value_col, group_cols).select(
             bid, *group_cols, "bin", "n"
         ),
     )
-    swap(
-        m_tab,
-        spark.createDataFrame(
-            [(b,) for b in prior + [gen]], "batch_id bigint"
-        ),
-    )
+    backup_swap(spark, m_tab, marker_rows(spark, prior + [gen]))

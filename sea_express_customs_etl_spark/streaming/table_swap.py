@@ -21,23 +21,29 @@ no-data-loss sense, which is the property the maintenance job needs.
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def backup_swap(
-    spark: SparkSession, table: str, write_staging: Callable[[str], None]
+    spark: SparkSession,
+    table: str,
+    df: DataFrame,
+    bucket_col: str | None = None,
+    num_buckets: int = 8,
 ) -> None:
-    """Replace ``table`` with the generation ``write_staging`` writes.
+    """Replace ``table`` with the generation ``df`` (parquet, bucketed
+    by ``bucket_col`` into ``num_buckets`` when given, so the staging
+    table carries the live table's bucket spec).
 
-    ``write_staging(staging_name)`` must ``saveAsTable`` the new
-    generation under the given staging name (mode overwrite — reruns
-    after a crash-before-swap simply rewrite it).
+    The staging write is mode overwrite — reruns after a
+    crash-before-swap simply rewrite it.
     """
     staging = f"{table}_compact_staging"
     backup = f"{table}_compact_backup"
-    write_staging(staging)
+    w = df.write.mode("overwrite").format("parquet")
+    if bucket_col:
+        w = w.bucketBy(num_buckets, bucket_col)
+    w.saveAsTable(staging)
     # a leftover backup from a crashed prior swap is an already-
     # superseded generation — safe to clear before taking a new one
     spark.sql(f"DROP TABLE IF EXISTS {backup}")

@@ -14,12 +14,8 @@ hash-identical to a one-shot ``winnow_dup_pairs`` over all documents
 (the parity the gate checks); the df cap stays corpus-global and
 correct because it is applied at READ time, not fold time.
 
-Exactly-once: the ``incremental_dedup.py`` commit-marker fence — rows
-carry their ``batch_id``, a marker table records committed batches,
-replayed batch ids are skipped, and crash-window partial appends are
-exact duplicates (deterministic recomputation) collapsed by the
-committed reader's distinct. Reference anchor: the move-to-processed
-commit discipline of ``/root/reference/src/import_xml_history.py:181``.
+Exactly-once: the ``commit_fence.py`` contract, for the adds and the
+tombstones alike.
 
 Scale shape: per-batch cost is ∝ |new documents| (map-only fingerprint
 + one bucketed append); the store is bucketed by ``fp`` so the
@@ -37,6 +33,12 @@ from sea_express_customs_etl_spark.operators.fingerprint import (
     winnow_fingerprints,
 )
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
+from sea_express_customs_etl_spark.streaming.commit_fence import (
+    CommitFence,
+    marker_rows,
+    tombstone_writer,
+)
+from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
 
 
 def winnow_batch_writer(
@@ -52,31 +54,19 @@ def winnow_batch_writer(
     plain DataFrame batches — the one-code-path batch/stream parity
     kept engine-wide)."""
     f_tab = f"{table_prefix}_fps"
-    m_tab = f"{table_prefix}_batches"
+    fence = CommitFence(f"{table_prefix}_batches")
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
-        if spark.catalog.tableExists(m_tab) and (
-            spark.table(m_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return  # replayed batch — already committed, skip
+        if fence.committed(spark, batch_id):
+            return
         fps = winnow_fingerprints(
             batch_df, k=k, w=w, text_col=text_col, id_col=id_col
         ).select(
             id_col, "fp", F.lit(int(batch_id)).cast("bigint").alias("batch_id")
         )
         append_bucketed(fps, f_tab, ("fp",), num_buckets)
-        # marker LAST (commit fence) — see incremental_dedup.py: a
-        # crash before this line replays the batch; replayed rows are
-        # bit-identical and the committed reader's distinct collapses
-        # them back to exactly-once.
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(m_tab)
+        fence.commit(spark, batch_id)
 
     return write
 
@@ -92,28 +82,7 @@ def winnow_delete_writer(
     rows ADDED at batch ``<= d``; a later re-add resurrects the
     document (add and delete batch ids share one monotonic sequence).
     Deletion is logical until :func:`compact_winnow_store`."""
-    t_tab = f"{table_prefix}_tombstones"
-    dm_tab = f"{table_prefix}_del_batches"
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch_df.sparkSession
-        if spark.catalog.tableExists(dm_tab) and (
-            spark.table(dm_tab)
-            .filter(F.col("batch_id") == batch_id)
-            .limit(1)
-            .count()
-            > 0
-        ):
-            return
-        batch_df.select(
-            F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-            F.col(id_col),
-        ).write.mode("append").format("parquet").saveAsTable(t_tab)
-        spark.createDataFrame(
-            [(int(batch_id),)], "batch_id bigint"
-        ).write.mode("append").format("parquet").saveAsTable(dm_tab)
-
-    return write
+    return tombstone_writer(table_prefix, id_col)
 
 
 def committed_fingerprints(
@@ -172,8 +141,6 @@ def compact_winnow_store(
     ``ann_store.compact_ann_store`` sequencing verbatim. Quiesced
     stream, idempotent; post-compaction batch ids must stay above the
     fold generation (true for one monotonic maintenance stream)."""
-    from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
-
     m_tab = f"{table_prefix}_batches"
     gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
     if gen is None:
@@ -184,18 +151,7 @@ def compact_winnow_store(
         F.lit(int(gen)).cast("bigint").alias("batch_id"),
     )
 
-    def write_fps(staging: str) -> None:
-        survivors.write.mode("overwrite").format("parquet").bucketBy(
-            num_buckets, "fp"
-        ).saveAsTable(staging)
-
-    backup_swap(spark, f"{table_prefix}_fps", write_fps)
-
-    def write_marker(staging: str) -> None:
-        spark.createDataFrame(
-            [(int(gen),)], "batch_id bigint"
-        ).write.mode("overwrite").format("parquet").saveAsTable(staging)
-
-    backup_swap(spark, m_tab, write_marker)
+    backup_swap(spark, f"{table_prefix}_fps", survivors, "fp", num_buckets)
+    backup_swap(spark, m_tab, marker_rows(spark, [gen]))
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_tombstones")
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_del_batches")

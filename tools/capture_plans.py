@@ -15,9 +15,23 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def latest_history(hist_dir: str) -> str:
+    """The ``BENCH_HISTORY`` file of the latest round, and within that
+    round the run with the most cores: ``r<round>[_c<cores>].json``,
+    compared as numbers (``r11_c32`` beats ``r11_c8``; a file without
+    a core count ranks below one with)."""
+
+    def key(name: str) -> tuple[int, int]:
+        m = re.fullmatch(r"r(\d+)(?:_c(\d+))?\.json", name)
+        return (int(m.group(1)), int(m.group(2) or 0)) if m else (-1, -1)
+
+    return max(os.listdir(hist_dir), key=key)
 
 
 def main() -> None:
@@ -34,8 +48,7 @@ def main() -> None:
     if names and names[0] == "--top":
         n = int(names[1])
         hist_dir = os.path.join(repo, "BENCH_HISTORY")
-        latest = sorted(os.listdir(hist_dir))[-1]
-        with open(os.path.join(hist_dir, latest)) as f:
+        with open(os.path.join(hist_dir, latest_history(hist_dir))) as f:
             q = json.load(f)["queries"]
         names = [k for k, _ in sorted(q.items(), key=lambda kv: -kv[1])[:n]]
 
