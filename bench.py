@@ -167,6 +167,9 @@ def main() -> None:
     # measured numbers are steady-state throughput, which is what a
     # long-lived cluster sees.
     from sea_express_customs_etl_spark.plans.cache import release_tracked
+    from sea_express_customs_etl_spark.plans.session_tables import (
+        drop_session_tables,
+    )
     from sea_express_customs_etl_spark.plans.standins import load_table
 
     for t in ("lineitem", "orders", "part", "documents", "embeddings", "events"):
@@ -265,6 +268,7 @@ def main() -> None:
             }
         )
     )
+    drop_session_tables(spark)
     spark.stop()
 
 

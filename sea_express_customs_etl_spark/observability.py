@@ -3,8 +3,7 @@
 The reference logs per-file row counts and run totals
 (``src/import_xml_history.py:184-218``). Spark-side the idiomatic
 equivalent is ``DataFrame.observe`` — named aggregate metrics computed
-DURING the job (no second pass) and retrieved from the query execution,
-plus a ``StreamingQueryListener`` for per-batch streaming counts.
+DURING the job (no second pass) and retrieved from the query execution.
 """
 
 from __future__ import annotations
@@ -38,21 +37,3 @@ def observed_counts(df: DataFrame, name: str = "ingest") -> tuple[DataFrame, Obs
         obs,
     )
 
-
-class BatchCountListener:
-    """StreamingQueryListener-shaped collector of per-batch row counts
-    (the streaming analog of the reference's per-file log lines). Attach
-    with ``spark.streams.addListener`` in long-running jobs."""
-
-    def __init__(self) -> None:
-        self.batches: list[tuple[str, int]] = []
-
-    def onQueryStarted(self, event) -> None:  # pragma: no cover - callback shape
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        p = event.progress
-        self.batches.append((p.id, p.numInputRows))
-
-    def onQueryTerminated(self, event) -> None:  # pragma: no cover
-        pass

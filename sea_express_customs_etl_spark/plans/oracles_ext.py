@@ -1237,7 +1237,9 @@ WHERE rn <= 2
 # observed threshold sweep (operators/dedup.py:
 # jaccard_threshold_sweep): exact-jaccard deciles over the LSH
 # candidate set (zero-intersection false positives kept in band 0),
-# cumulative at-or-above on the 11-row spine.
+# cumulative at-or-above on the 11-row spine. DuckDB widens a BIGINT
+# window sum to HUGEINT; the sum is at most the candidate-pair count,
+# itself a BIGINT count, so the cast back is exact.
 DEDUP_THRESHOLD_SWEEP_SQL = f"""
 WITH {_SHINGLES}, {_SIG}, {_BANDS}, {_PAIRS},
 sw_z AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
@@ -1262,8 +1264,9 @@ sw_s AS (
   FROM (SELECT unnest(generate_series(0, 10)) AS g) g
   LEFT JOIN sw_c c ON c.band = g.g)
 SELECT band, n_pairs,
-       sum(n_pairs) OVER (ORDER BY band DESC
-                          ROWS UNBOUNDED PRECEDING) AS pairs_at_or_above
+       (sum(n_pairs) OVER (ORDER BY band DESC
+                           ROWS UNBOUNDED PRECEDING))::BIGINT
+         AS pairs_at_or_above
 FROM sw_s
 """
 

@@ -57,7 +57,11 @@ GROUP BY 1, 2
 # did_lift (operators/abtest.py): user-grain DiD — variants are the
 # CUPED md5 halves, pre/post the 2024-01-16 split; equal user
 # denominators pre/post so did = (Σy_T − Σx_T)/n_T − (Σy_C − Σx_C)/n_C
-# carried as an exact HUGEINT numerator over n_T·n_C.
+# carried as an exact numerator over n_T·n_C, computed in HUGEINT and
+# emitted as BIGINT: with E events, U users and V = max |value|,
+# |did_num| ≤ 100·V·E·U (8.4e12 at sf0.1; 1.8e9 observed) and
+# did_den ≤ U²/4, both far inside int64 — and a cast that did
+# overflow raises instead of wrapping.
 DID_LIFT_SQL = """
 WITH pu AS (
   SELECT user_id,
@@ -83,10 +87,10 @@ WITH pu AS (
 SELECT t.n_users AS n_treat, c.n_users AS n_ctrl,
        t.sum_pre_c AS sum_pre_treat_c, t.sum_post_c AS sum_post_treat_c,
        c.sum_pre_c AS sum_pre_ctrl_c, c.sum_post_c AS sum_post_ctrl_c,
-       (t.sum_post_c::HUGEINT - t.sum_pre_c::HUGEINT) * c.n_users
+       ((t.sum_post_c::HUGEINT - t.sum_pre_c::HUGEINT) * c.n_users
          - (c.sum_post_c::HUGEINT - c.sum_pre_c::HUGEINT) * t.n_users
-           AS did_num,
-       t.n_users::HUGEINT * c.n_users::HUGEINT AS did_den
+       )::BIGINT AS did_num,
+       (t.n_users::HUGEINT * c.n_users::HUGEINT)::BIGINT AS did_den
 FROM t, c
 """
 

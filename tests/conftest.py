@@ -47,6 +47,9 @@ def pytest_collection_modifyitems(config, items):
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sea_express_customs_etl_spark.plans.session_tables import (  # noqa: E402
+    drop_session_tables,
+)
 from sea_express_customs_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -60,6 +63,7 @@ def spark(tmp_path_factory):
         extra_conf={"spark.sql.warehouse.dir": wh},
     )
     yield s
+    drop_session_tables(s)
     s.stop()
 
 

@@ -1,13 +1,14 @@
-"""Regression: the two compaction queries share `_COMPACT_STORE_MEMO`
-with DIFFERENT key shapes — the ANN entry's (app_id, sf_dir) and the
-sketch entry's ("sketchcomp", app_id, sf_dir). The stale-session purge
-must membership-test the current applicationId, not positionally match
-k[0]: a positional purge evicts the sketch key every time the ANN
-query runs, and the next sketch invocation replays its writer batches
-onto an ALREADY-COMPACTED store (whose batch markers were collapsed),
-resurrecting deleted users (r10 suite-caught hash mismatch on
-sketch_compact_merged; order-dependent, so this test pins the exact
-interleaving).
+"""Regression: the two compaction queries' session builds
+(`ann_store_compact_topk`'s "ann_compact_build" and
+`sketch_compact_merged`'s "sketch_compact_build") must never evict each
+other. Both now go through `plans/session_tables.shared`, keyed by
+(applicationId, sf_dir, name); before that they shared one hand-rolled
+memo set with two key shapes, and a purge that matched k[0] evicted the
+sketch key every time the ANN query ran. The next sketch invocation
+then replayed its writer batches onto an ALREADY-COMPACTED store (whose
+batch markers were collapsed), resurrecting deleted users (r10
+suite-caught hash mismatch on sketch_compact_merged; order-dependent,
+so this test pins the exact interleaving).
 """
 
 from __future__ import annotations
