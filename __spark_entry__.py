@@ -7398,9 +7398,10 @@ def _q_two_hop_reach_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     density (l_orderkey % 4, the prefix_jaccard_pairs slice
     precedent): sliced median degree is 30, p90 = 47, and cap = 40
     drops ~19% of nodes as genuine hubs, cutting wedge volume 43% at
-    sf0.1 (measured). The skewed-hub 8× probe
-    (tools/scale_probe.py two_hop_capped) shows the capped plan flat
-    where the uncapped form grows quadratically."""
+    sf0.1 (measured). The skewed-hub 8× probe (SCALE.md round 7,
+    two_hop_capped) shows the capped plan flat where the uncapped form
+    grows quadratically; this query's own 1×/8× record is in
+    BENCH_HISTORY/scale_r12_c4.json."""
     from sea_express_customs_etl_spark.operators.graph import cooccur_edges
     from sea_express_customs_etl_spark.operators.reach import two_hop_reach
 

@@ -12,12 +12,10 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import tempfile
-import time
 import zipfile
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from tools import runner
 
 
 def _build_ingest_fixtures(root: str) -> tuple[str, str, int, int]:
@@ -97,19 +95,17 @@ def _ingest_rates(spark) -> dict[str, float]:
         read_jsonl_docs,
     )
 
-    rates: dict[str, float] = {}
     with tempfile.TemporaryDirectory() as root:
         xml_dir, xlsx_dir, xml_rows, xlsx_rows = _build_ingest_fixtures(root)
         jsonl_dir = os.path.join(root, "jsonl_in")
         os.makedirs(jsonl_dir)
         jsonl_rows = 100_000
-        import json as _json
 
         for shard in range(8):
             with open(os.path.join(jsonl_dir, f"part-{shard}.jsonl"), "w") as f:
                 for i in range(shard, jsonl_rows, 8):
                     f.write(
-                        _json.dumps(
+                        json.dumps(
                             {
                                 "doc_id": i,
                                 "text": f"document body {i} " * 12,
@@ -120,76 +116,52 @@ def _ingest_rates(spark) -> dict[str, float]:
                         )
                         + "\n"
                     )
-        for key, rows, plan in (
-            (
-                "ingest_zip_xml_rows_per_sec",
+        plans = {
+            "ingest_zip_xml_rows_per_sec": (
                 xml_rows,
-                lambda: official_history(read_bid_heads_raw(spark, xml_dir)),
+                lambda s, _: official_history(read_bid_heads_raw(s, xml_dir)),
             ),
-            (
-                "ingest_xlsx_rows_per_sec",
+            "ingest_xlsx_rows_per_sec": (
                 xlsx_rows,
-                lambda: declared_cargo(read_manifests_raw(spark, xlsx_dir)),
+                lambda s, _: declared_cargo(read_manifests_raw(s, xlsx_dir)),
             ),
-            (
-                "ingest_jsonl_rows_per_sec",
+            "ingest_jsonl_rows_per_sec": (
                 jsonl_rows,
-                lambda: clean_docs(read_jsonl_docs(spark, jsonl_dir)),
+                lambda s, _: clean_docs(read_jsonl_docs(s, jsonl_dir)),
             ),
-        ):
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                plan().write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
-            rates[key] = round(rows / best, 1)
-    return rates
+        }
+        recs = runner.run(
+            spark, {k: fn for k, (_, fn) in plans.items()}, list(plans), [root]
+        )
+    _raise_failed(recs)
+    return {r["query"]: round(plans[r["query"]][0] / r["best_s"], 1) for r in recs}
+
+
+def _raise_failed(recs: list[dict]) -> None:
+    failed = {r["query"]: r["error"] for r in recs if "error" in r}
+    if failed:
+        raise RuntimeError(f"bench queries failed: {failed}")
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    sf_dir = runner.sf_dir()
+    cpus = runner.cpus()
+    with runner.bench_session("bench") as spark:
+        _bench(spark, sf_dir, cpus)
 
-    from sea_express_customs_etl_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) * 2 if cpus.isdigit() else 32,
-    )
-
+def _bench(spark, sf_dir: str, cpus: str) -> None:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-
-    # warmup: touch all tables once (scan + count), then run the flagship
-    # end-to-end once so JIT/codegen/shuffle machinery is warm — the
-    # measured numbers are steady-state throughput, which is what a
-    # long-lived cluster sees.
-    from sea_express_customs_etl_spark.plans.cache import release_tracked
-    from sea_express_customs_etl_spark.plans.session_tables import (
-        drop_session_tables,
-    )
-    from sea_express_customs_etl_spark.plans.standins import load_table
-
-    for t in ("lineitem", "orders", "part", "documents", "embeddings", "events"):
-        load_table(spark, sf_dir, t).count()
-    if "knowledge_extraction" in qs:
-        qs["knowledge_extraction"](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
+    # warm before timing: the measured numbers are steady-state
+    # throughput, which is what a long-lived cluster sees
+    runner.warm(spark, qs, sf_dir)
     # best-of-2 per query: the local machine is noisy (±50% on short
     # queries); the minimum is the honest steady-state capability
-    timings: dict[str, float] = {}
-    for name, fn in qs.items():
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        release_tracked()  # queries stay independent; reps share pins
-        timings[name] = round(best, 3)
+    recs = runner.run(spark, qs, list(qs), [sf_dir])
+    _raise_failed(recs)
+    timings = {r["query"]: r["best_s"] for r in recs}
 
     rates = _ingest_rates(spark)
 
@@ -268,8 +240,6 @@ def main() -> None:
             }
         )
     )
-    drop_session_tables(spark)
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -94,7 +94,8 @@ def hashed_doc_topk(
     predicate on the vector frame — the production shape is a FIXED
     panel (candidate volume then grows linearly with the corpus; a
     corpus-derived panel grows the panel too, quadratic worst case —
-    both shapes measured in ``tools/scale_probe.py``).
+    both shapes measured in SCALE.md round 6, and ``hashed_doc_topk``
+    at 1×/8× in ``BENCH_HISTORY/scale_r12_c4.json``).
 
     The vector frame feeds three consumers (norms, query side, corpus
     side) → pinned via ``tracked_persist``.

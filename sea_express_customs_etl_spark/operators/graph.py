@@ -283,8 +283,9 @@ def triangle_counts(
       with forward-degree d has d neighbors of degree ≥ its own, so
       d² ≤ Σdeg = 2m) — hub nodes in a power-law graph contribute
       O(m) wedges instead of O(deg²). This is the 100 TB dial the
-      canonical form lacks; measured on a skewed star-heavy graph in
-      ``tools/scale_probe.py`` (SCALE.md).
+      canonical form lacks; measured on a skewed star-heavy graph
+      (SCALE.md round 6; ``copurchase_triangles`` at 1×/8× is in
+      ``BENCH_HISTORY/scale_r12_c4.json``).
     - ``"canonical"`` — direct by node id only (a < b). One fewer
       degree join; safe when degrees are bounded (TPC-H co-purchase
       baskets cap at 7), quadratic on hubs otherwise.

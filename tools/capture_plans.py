@@ -20,6 +20,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.runner import ROOT, session  # noqa: E402
+
 
 def latest_history(hist_dir: str) -> str:
     """The ``BENCH_HISTORY`` file of the latest round, and within that
@@ -39,44 +41,41 @@ def main() -> None:
     suffix = sys.argv[2]
     names = sys.argv[3:]
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_dir = os.path.join(
-        repo, "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r11")
+        ROOT, "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r11")
     )
     os.makedirs(out_dir, exist_ok=True)
 
     if names and names[0] == "--top":
         n = int(names[1])
-        hist_dir = os.path.join(repo, "BENCH_HISTORY")
+        hist_dir = os.path.join(ROOT, "BENCH_HISTORY")
         with open(os.path.join(hist_dir, latest_history(hist_dir))) as f:
             q = json.load(f)["queries"]
         names = [k for k, _ in sorted(q.items(), key=lambda kv: -kv[1])[:n]]
 
     import __spark_entry__ as entrymod
     from sea_express_customs_etl_spark.plans.cache import release_tracked
-    from sea_express_customs_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="capture_plans")
-    qs = entrymod.queries()
-    for name in names:
-        if name not in qs:
-            print(f"SKIP unknown query: {name}")
-            continue
-        try:
-            df = qs[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
+    with session(app_name="capture_plans") as spark:
+        qs = entrymod.queries()
+        for name in names:
+            if name not in qs:
+                print(f"SKIP unknown query: {name}")
+                continue
+            try:
+                df = qs[name](spark, sf_dir)
+                plan = df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"
+                    )
                 )
-            )
-        except Exception as e:  # capture the failure, keep going
-            plan = f"PLAN BUILD FAILED: {e!r}"
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(plan)
-        release_tracked()
-        print(f"wrote {path} ({len(plan)} chars)")
-    spark.stop()
+            except Exception as e:  # capture the failure, keep going
+                plan = f"PLAN BUILD FAILED: {e!r}"
+            path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+            with open(path, "w") as f:
+                f.write(plan)
+            release_tracked()
+            print(f"wrote {path} ({len(plan)} chars)")
 
 
 if __name__ == "__main__":

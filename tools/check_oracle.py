@@ -11,14 +11,15 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.runner import TABLES, session  # noqa: E402
 
 
 def _canon_cell(v) -> str:
@@ -151,16 +152,15 @@ def witness_summary(qs: dict) -> None:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
-    from sea_express_customs_etl_spark.plans.cache import release_tracked
-    from sea_express_customs_etl_spark.plans.session_tables import (
-        drop_session_tables,
-    )
-    from sea_express_customs_etl_spark.session import get_spark
+    with session(shuffle_partitions=8) as spark:
+        return _gate(spark, entrymod, sf_dir, set(sys.argv[2:]))
 
-    spark = get_spark(shuffle_partitions=8)
+
+def _gate(spark, entrymod, sf_dir: str, only: set[str]) -> int:
+    from sea_express_customs_etl_spark.plans.cache import release_tracked
+
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -170,7 +170,6 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     witness_summary(qs)
-    only = set(sys.argv[2:])
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -216,8 +215,6 @@ def main() -> int:
                 if a != b:
                     print(f"  spark: {a[:200]}\n  duck : {b[:200]}")
                     break
-    drop_session_tables(spark)
-    spark.stop()
     return 1 if failures else 0
 
 
