@@ -1,5 +1,6 @@
 """DuckDB oracle SQL — the ANSI-SQL ground truth for every checkable
-query in ``__spark_entry__.queries()``.
+query in ``__spark_entry__.queries()``; each query names its oracle in
+its ``@query(oracle=...)`` declaration (``queries/``).
 
 These strings mirror, fragment by fragment, the Spark plans in
 ``plans/standins.py`` / ``plans/knowledge.py`` and the operators in

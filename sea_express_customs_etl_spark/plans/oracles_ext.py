@@ -302,7 +302,7 @@ WHERE ('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT < thr
 """
 
 # --------------------------------------------------------------------------
-# xlsx connector lineage (__spark_entry__._q_manifest_xlsx_ingest): the
+# xlsx connector lineage (queries/ingest.py:_q_manifest_xlsx_ingest): the
 # Spark side synthesizes a new-format .xlsx manifest FROM the part
 # table (anchor HAWB every 3rd row, positional A/D/J/K/N/O cells) and
 # parses it back through read_manifests_raw → declared_cargo; this SQL
@@ -5455,7 +5455,7 @@ SELECT event_type, count(*)::BIGINT AS n_runs,
 FROM runs GROUP BY 1
 """
 
-# Pareto concentration (revenue_pareto in __spark_entry__.py):
+# Pareto concentration (revenue_pareto in queries/stats.py):
 # customers to 80% of revenue, cross-multiplied threshold.
 REVENUE_PARETO_SQL = """
 WITH cr AS (
@@ -5506,7 +5506,7 @@ GROUP BY 1, 2
 """
 
 # Gini-Simpson behavioral diversity (user_behavior_diversity in
-# __spark_entry__.py): 1e6*(n^2 - sum c^2) // n^2, log-free.
+# queries/stats.py): 1e6*(n^2 - sum c^2) // n^2, log-free.
 USER_BEHAVIOR_DIVERSITY_SQL = """
 WITH c AS (
   SELECT user_id, event_type, count(*)::BIGINT AS c
@@ -5806,7 +5806,7 @@ def wordpiece_train_sql(n_merges: int = 8, src: str = "documents") -> str:
 
 
 # per-document novelty gain (operators/textstats-adjacent, composed in
-# __spark_entry__): the fraction of a doc's distinct 3-gram shingles
+# queries/pretrain.py): the fraction of a doc's distinct 3-gram shingles
 # that are corpus-UNIQUE (df = 1) — the marginal-diversity signal a
 # data-selection pass ranks on (a doc whose shingles all exist
 # elsewhere adds nothing a dedup pass wouldn't remove).
@@ -5828,7 +5828,7 @@ FROM documents d LEFT JOIN ng_doc g USING (doc_id)
 """
 
 
-# tokenizer-budget sizing curve (__spark_entry__._q_vocab_coverage_curve):
+# tokenizer-budget sizing curve (queries/pretrain.py:_q_vocab_coverage_curve):
 # corpus token coverage of the top-k vocab under the total order
 # (freq DESC, token ASC) at four fixed budgets.
 VOCAB_COVERAGE_SQL = """
@@ -5855,8 +5855,8 @@ FROM vc_k k CROSS JOIN vc_tot t
 JOIN vc_r r ON r.r = least(k.vocab_k, t.n_types)
 """
 
-# per-(lang, source) LM quality report (__spark_entry__.
-# _q_lm_slice_report): bigram mass + mean per-bigram NLL in
+# per-(lang, source) LM quality report
+# (queries/pretrain.py:_q_lm_slice_report): bigram mass + mean per-bigram NLL in
 # micro-units, numerator negated BEFORE the integer division so both
 # engines divide positives.
 LM_SLICE_REPORT_SQL = f"""
@@ -5874,8 +5874,8 @@ FROM sr_j GROUP BY lang, source
 """
 
 
-# per-source duplication scorecard (__spark_entry__.
-# _q_dedup_rate_by_source): exact-dup = digest multiplicity > 1;
+# per-source duplication scorecard
+# (queries/pretrain.py:_q_dedup_rate_by_source): exact-dup = digest multiplicity > 1;
 # near-dup = endpoint of any LSH-candidate pair verified at
 # Jaccard >= 0.5 (the ngram_jaccard_dups pipeline, membership only).
 DEDUP_RATE_BY_SOURCE_SQL = f"""

@@ -46,13 +46,6 @@ N_SHARDS = 8
 N_MERGES = 10
 
 
-def _survivor_ids(docs: DataFrame, emb: DataFrame) -> DataFrame:
-    """Stages 1-4: quarantine → gate → exact dedup → multi-signal
-    near-dup components → canonical keep. Returns (doc_id, text,
-    source) of survivors."""
-    return pretrain_e2e_stages(docs, emb)["kept"]
-
-
 def pretrain_e2e_stages(
     docs: DataFrame, emb: DataFrame
 ) -> dict[str, DataFrame]:

@@ -18,21 +18,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from sea_express_customs_etl_spark.plans import oracles_ext as ext, oracles_rel as orel
 from sea_express_customs_etl_spark.plans.standins import load_table
+from sea_express_customs_etl_spark.queries import query
 from sea_express_customs_etl_spark.streaming.windows import (
     hourly_event_counts,
     sessionize,
 )
 
 
+@query(oracle=orel.EVENTS_HOURLY_SQL)
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hourly_event_counts(load_table(spark, sf_dir, "events"))
 
 
+@query(oracle=orel.EVENTS_SESSIONIZE_SQL)
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load_table(spark, sf_dir, "events"), gap_minutes=30)
 
 
+@query(oracle=orel.EVENTS_SESSION_WINDOW_SQL)
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Built-in ``session_window`` (batch mode) — checked against a
     first-principles lag/cumsum sessionization oracle. The window's
@@ -54,6 +59,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.PURCHASE_LAST_CLICK_ASOF_SQL)
 def purchase_last_click_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each purchase event, the user's most recent
     click at or before the purchase time."""
@@ -84,6 +90,7 @@ def purchase_last_click_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.PRICING_SUMMARY_SQL)
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped aggregation: partial+final hash agg, fully
     codegen'd; the parquet scan reads only the 6 touched columns."""
@@ -103,6 +110,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.TOPK_PARTS_PER_BRAND_SQL)
 def topk_parts_per_brand(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     """Top-k per group via rank window (OP-TOP1 generalized)."""
     part = load_table(spark, sf_dir, "part")
@@ -116,6 +124,7 @@ def topk_parts_per_brand(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFr
     )
 
 
+@query(oracle=orel.ROLLUP_ORDER_STATS_SQL)
 def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (status, priority) → subtotals + grand
     total — the grouping-set surface the reference lacks."""
@@ -126,6 +135,7 @@ def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.CUBE_ORDER_STATS_SQL)
 def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets — all 4 combinations of (status, priority)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -135,6 +145,7 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.CUSTOMERS_WITHOUT_ORDERS_SQL)
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join surface: customers never seen in orders, per segment."""
     cust = load_table(spark, sf_dir, "customer")
@@ -146,6 +157,7 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.REVENUE_BY_NATION_SQL)
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Five-table star join (lineitem ⋈ orders ⋈ customer ⋈ nation ⋈
     region) — Catalyst orders the joins and broadcasts every dimension;
@@ -175,6 +187,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.ORDER_GAPS_SQL)
 def order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lead/lag analytic surface: days since the customer's previous
     order (NULL for the first)."""
@@ -188,6 +201,7 @@ def order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.CUSTOMER_RUNNING_TOTALS_SQL)
 def customer_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer running order total (analytic frame window)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -203,6 +217,7 @@ def customer_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.SHIPPING_PRIORITY_SQL)
 def shipping_priority(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     """TPC-H Q3 shape: unshipped-order revenue as of a cutoff date —
     orders placed before it with lineitems shipping after it, top-k by
@@ -227,6 +242,7 @@ def shipping_priority(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFram
     )
 
 
+@query(oracle=orel.NATION_REVENUE_SHARE_SQL)
 def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed share-of-total over an aggregate: each nation's revenue
     share within its order year. The window runs over the AGGREGATED
@@ -257,6 +273,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.LATE_SHIPMENT_PRIORITY_SQL)
 def late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: orders (in a one-year window) having at least
     one lineitem shipped more than 60 days after the order date,
@@ -279,6 +296,7 @@ def late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return late.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_orders"))
 
 
+@query(oracle=orel.BRAND_SUPPLIER_VARIETY_SQL)
 def brand_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN → LEFT ANTI join shape: distinct suppliers per brand,
     excluding suppliers in bad standing (negative account balance).
@@ -306,6 +324,7 @@ def brand_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.RETURNED_REVENUE_TOPK_SQL)
 def returned_revenue_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     """TPC-H Q10 shape: customers ranked by revenue of returned items
     (l_returnflag = 'R'). Filter pushed below the join; the customer
@@ -328,6 +347,7 @@ def returned_revenue_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> Data
     )
 
 
+@query(oracle=orel.NATION_YEAR_PIVOT_SQL)
 def nation_year_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT surface: nation × order-year revenue matrix via
     ``groupBy().pivot()`` with an EXPLICIT value list — with the years
@@ -368,6 +388,7 @@ def nation_year_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.ORDER_PRIORITY_UNPIVOT_SQL)
 def order_priority_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT (melt) surface: the per-priority order aggregate turned
     into long (priority, metric, value) rows via ``DataFrame.unpivot``
@@ -389,6 +410,7 @@ def order_priority_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.RETURNFLAG_QTY_PRICE_CORR_SQL)
 def returnflag_qty_price_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation per return flag from EXACT integer component
     sums — the engine's bit-portable replacement for ``corr()``.
@@ -435,6 +457,7 @@ def returnflag_qty_price_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.USER_ROLLING_24H_SQL)
 def user_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling time-RANGE window: per user, the trailing-24 h event
     count and micro-unit value sum at every event (feature-engineering
@@ -466,6 +489,7 @@ def user_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.JSON_PROPS_ROLLUP_SQL)
 def json_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction: per-event-type rollup of the JSON
     ``props`` payload (cf. the free-form history attributes the
@@ -477,6 +501,7 @@ def json_props_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return props_rollup(load_table(spark, sf_dir, "events"))
 
 
+@query(oracle=orel.CLICK_PURCHASE_INTERVAL_SQL)
 def click_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join: every click in the 24 h before each purchase by
     the same user (attribution-touchpoints shape; also the exact plan
@@ -503,6 +528,7 @@ def click_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.FUNNEL_CONVERSION_SQL)
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-step funnel over the event stream: per user, the first
     'view', the first 'click' strictly after it, the first 'purchase'
@@ -565,6 +591,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return step1.unionByName(step2).unionByName(step3)
 
 
+@query(oracle=orel.COHORT_RETENTION_SQL)
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic cohort-retention triangle: users grouped by first-seen
     calendar day, counted on each later active day as an offset from
@@ -592,6 +619,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.EVENTS_SLIDING_COUNTS_SQL)
 def events_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OVERLAPPING (hopping) event-time windows — 1-hour length, 15-min
     hop, so every event lands in exactly 4 windows (the tumbling
@@ -621,7 +649,8 @@ def events_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query(oracle=orel.GROUPING_SETS_ORDER_STATS_SQL)
+def order_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSTOM grouping sets — ((status), (priority)): the non-prefix
     set combination neither ROLLUP nor CUBE expresses (two independent
     one-dimension summaries in ONE scan via Expand). grouping_id
@@ -643,6 +672,7 @@ def grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=ext.SEGMENT_CONVERSION_ZTEST_SQL)
 def segment_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test per market segment: is this segment's
     conversion rate (customers with ≥1 order) different from the REST
@@ -702,6 +732,7 @@ def segment_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.SMALL_QTY_REVENUE_SQL)
 def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape (small-quantity-order revenue): revenue locked
     in lineitems whose quantity is below 20% of the part's average,
@@ -735,6 +766,7 @@ def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.COHORT_LTV_CURVE_SQL)
 def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort lifetime-value curves: customers cohorted by FIRST order
     month, then cumulative revenue per cohort across month offsets —
@@ -781,6 +813,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.NATION_REVENUE_MOM_SQL)
 def nation_revenue_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue per nation: monthly order revenue with
     the prior month's value, absolute delta (signed exact cents) and
@@ -831,7 +864,8 @@ def nation_revenue_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def priority_return_exists_counts(
+@query(oracle=orel.PRIORITY_RETURN_EXISTS_SQL)
+def priority_return_exists(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """EXISTS-decorrelation pattern (the TPC-H Q4 shape on available
@@ -870,6 +904,7 @@ def priority_return_exists_counts(
     )
 
 
+@query(oracle=ext.DAILY_ACTIVE_GROWTH_SQL)
 def daily_active_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Growth accounting at day-bucket grain: per day, total events,
     distinct active users, NEW users (first-ever-seen that day) and
@@ -919,7 +954,8 @@ def daily_active_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def click_next_purchase_fwd_asof(
+@query(oracle=ext.CLICK_NEXT_PURCHASE_FWD_SQL)
+def click_next_purchase_fwd(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """FORWARD as-of join: every click attached to the user's NEXT
@@ -971,6 +1007,7 @@ def click_next_purchase_fwd_asof(
     )
 
 
+@query(oracle=orel.DISCOUNT_REVENUE_Q6_SQL)
 def discount_revenue_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape (forecast revenue change): one filtered
     map-side-only scan — the query whose entire cost is predicate
@@ -996,6 +1033,7 @@ def discount_revenue_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.NATION_TRADE_FLOWS_SQL)
 def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape (volume shipping): revenue flows between
     SUPPLIER nation and CUSTOMER nation per ship year — the canonical
@@ -1047,6 +1085,7 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.CUSTOMER_ORDER_CUSTDIST_SQL)
 def customer_order_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape (customer distribution): histogram of customers
     by how many orders they placed, INCLUDING the zero bucket — the
@@ -1068,6 +1107,7 @@ def customer_order_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.LARGE_ORDER_CUSTOMERS_SQL)
 def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape (large-volume customers): orders whose total
     quantity exceeds a threshold, joined back to the customer. The
@@ -1109,6 +1149,7 @@ def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=orel.BRAND_SIZE_QTY_REVENUE_SQL)
 def brand_size_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape (discounted revenue, disjunctive predicate):
     three (brand, size-band, quantity-band) OR-arms across the

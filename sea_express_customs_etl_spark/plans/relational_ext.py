@@ -17,9 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from sea_express_customs_etl_spark.plans import oracles_rel_ext as rex
 from sea_express_customs_etl_spark.plans.standins import load_table
+from sea_express_customs_etl_spark.queries import query
 
 
+@query(oracle=rex.LATE_SUPPLIER_BLAME_SQL)
 def late_supplier_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept orders waiting): for
     finished multi-supplier orders, count per supplier the orders where
@@ -77,6 +80,7 @@ def late_supplier_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.IDLE_RICH_CUSTOMERS_SQL)
 def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global-sales-opportunity): customers in chosen
     segments with above-average positive balance and NO orders — a
@@ -119,6 +123,7 @@ def idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.PART_MIN_COST_SUPPLIER_SQL)
 def part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape (minimum-cost supplier): for each part in a
     size/type slice, the supplier offering it at the lowest unit
@@ -190,6 +195,7 @@ def part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.IMPORTANT_PARTS_VALUE_SQL)
 def important_parts_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (important stock): parts whose revenue exceeds a
     FRACTION OF THE GLOBAL TOTAL — the groupwise-HAVING-vs-scalar-
@@ -221,6 +227,7 @@ def important_parts_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.TOP_SUPPLIER_REVENUE_SQL)
 def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): suppliers whose windowed revenue
     EQUALS the global maximum — the scalar-max view join, ties kept.
@@ -254,6 +261,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.EXCESS_SHARE_SUPPLIERS_SQL)
 def excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (excess availability): suppliers who shipped
     MORE THAN 30% of a part's 1996 total — the nested
@@ -299,6 +307,7 @@ def excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.NATION_MARKET_SHARE_SQL)
 def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (national market share): one supplier nation's
     share of a region's market for a part type, per order year — the
@@ -371,6 +380,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.NATION_YEAR_PROFIT_SQL)
 def nation_year_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit): per (supplier nation,
     ship year) profit over a part-name slice — the widest snowflake
@@ -423,6 +433,7 @@ def nation_year_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=rex.PROMO_REVENUE_SHARE_SQL)
 def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape (promotion effect): PROMO-type parts' share of
     monthly revenue — the conditional-share-per-bucket ratio, exact:
@@ -451,7 +462,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.groupBy("ship_month").agg(
         F.sum("_promo_u5").cast("bigint").alias("promo_u5"),
         F.sum("_u5").cast("bigint").alias("total_u5"),
-        F.expr("(sum(_promo_u5) * 1000000) DIV sum(_u5)")
+        F.expr("(CAST(sum(_promo_u5) AS DECIMAL(38,0)) * 1000000) DIV sum(_u5)")
         .cast("bigint")
         .alias("promo_ppm"),
     )

@@ -4,6 +4,7 @@ no same-label negative survives, no self-pairs, ranks are contiguous
 from 1, and distances are non-decreasing in rank per anchor."""
 
 import __spark_entry__ as entry
+from sea_express_customs_etl_spark.queries.shared import _emb
 
 
 def test_ann_hard_negatives_invariants(spark, sf_dir):
@@ -11,7 +12,7 @@ def test_ann_hard_negatives_invariants(spark, sf_dir):
     assert out, "mining returned no rows"
     emb = {
         r.vec_id: r.label
-        for r in entry._emb(spark, sf_dir).select("vec_id", "label").collect()
+        for r in _emb(spark, sf_dir).select("vec_id", "label").collect()
     }
     by_anchor = {}
     for r in out:

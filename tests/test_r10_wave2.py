@@ -85,9 +85,10 @@ def test_psi_layout_invariance(spark):
 
 def test_training_cartography_invariants(spark, sf_dir):
     import __spark_entry__ as entry
+    from sea_express_customs_etl_spark.queries.shared import _docs
 
     out = entry.queries()["training_cartography"](spark, sf_dir).collect()
-    docs = entry._docs(spark, sf_dir).count()
+    docs = _docs(spark, sf_dir).count()
     assert len(out) == docs
     for r in out:
         assert r.var_num >= 0

@@ -18,7 +18,7 @@ def test_vocab_coverage_monotone_and_bounded(spark):
     try:
         rows = {
             r.vocab_k: r
-            for r in entry._q_vocab_coverage_curve(spark, SF_DIR).collect()
+            for r in entry.queries()["vocab_coverage_curve"](spark, SF_DIR).collect()
         }
     finally:
         release_tracked()
@@ -42,7 +42,7 @@ def test_lm_slice_report_partitions_corpus(spark):
     from sea_express_customs_etl_spark.operators.lm import lm_score
     from sea_express_customs_etl_spark.plans.standins import load_table
 
-    rep = entry._q_lm_slice_report(spark, SF_DIR)
+    rep = entry.queries()["lm_slice_report"](spark, SF_DIR)
     agg = rep.agg(
         F.sum("n_docs").alias("docs"),
         F.sum("total_bigrams").alias("bg"),

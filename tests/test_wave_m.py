@@ -91,7 +91,7 @@ def test_nation_revenue_mom_delta_and_ratio(spark, tmp_path):
 
 def test_priority_return_exists_counts(spark, tmp_path):
     from sea_express_customs_etl_spark.plans.relational import (
-        priority_return_exists_counts,
+        priority_return_exists,
     )
 
     orders = spark.createDataFrame(
@@ -105,7 +105,7 @@ def test_priority_return_exists_counts(spark, tmp_path):
     _write(orders, f"{sf}/orders.parquet")
     _write(li, f"{sf}/lineitem.parquet")
     got = {r.o_orderpriority: (r.n_orders, r.n_with_return, r.share_ppm)
-           for r in priority_return_exists_counts(spark, sf).collect()}
+           for r in priority_return_exists(spark, sf).collect()}
     assert got == {"1-URGENT": (2, 1, 500_000), "2-HIGH": (1, 0, 0)}
 
 

@@ -101,7 +101,7 @@ def test_daily_growth_new_vs_returning(spark, tmp_path):
 
 def test_forward_asof_next_purchase(spark, tmp_path):
     from sea_express_customs_etl_spark.plans.relational import (
-        click_next_purchase_fwd_asof,
+        click_next_purchase_fwd,
     )
 
     base = dt.datetime(2024, 1, 1)
@@ -120,7 +120,7 @@ def test_forward_asof_next_purchase(spark, tmp_path):
     sf = str(tmp_path)
     df.write.parquet(f"{sf}/events.parquet")
     got = {r.event_id: (r.next_purchase_id, r.lag_us)
-           for r in click_next_purchase_fwd_asof(spark, sf).collect()}
+           for r in click_next_purchase_fwd(spark, sf).collect()}
     assert got[0] == (2, 10_000_000)
     assert got[1] == (2, 5_000_000)
     assert got[3] == (None, None)

@@ -85,7 +85,7 @@ def test_run_stats_islands(spark):
 
 
 def test_pareto_concentrated_revenue(spark, tmp_path):
-    from __spark_entry__ import _q_revenue_pareto
+    from __spark_entry__ import queries
 
     # one whale with 80x the revenue of each of 9 minnows:
     # whale alone holds 80/89 < 80%? 80/89 = 89.9% >= 80% -> n_to_80 = 1
@@ -97,5 +97,5 @@ def test_pareto_concentrated_revenue(spark, tmp_path):
     )
     sf = str(tmp_path)
     orders.write.parquet(f"{sf}/orders.parquet")
-    r = _q_revenue_pareto(spark, sf).collect()[0]
+    r = queries()["revenue_pareto"](spark, sf).collect()[0]
     assert (r.n_customers, r.n_to_80pct, r.pareto_ppm) == (10, 1, 100_000)

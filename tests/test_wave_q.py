@@ -55,7 +55,7 @@ def test_peak_concurrency_earliest_tie(spark):
 
 
 def test_behavior_diversity_golden(spark, tmp_path):
-    from __spark_entry__ import _q_user_behavior_diversity
+    from __spark_entry__ import queries
 
     base = dt.datetime(2024, 1, 1)
     rows = (
@@ -69,5 +69,5 @@ def test_behavior_diversity_golden(spark, tmp_path):
     sf = str(tmp_path)
     df.write.parquet(f"{sf}/events.parquet")
     got = {r.user_id: (r.n_events, r.diversity_ppm)
-           for r in _q_user_behavior_diversity(spark, sf).collect()}
+           for r in queries()["user_behavior_diversity"](spark, sf).collect()}
     assert got == {1: (4, 500_000), 2: (3, 0)}
