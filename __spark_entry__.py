@@ -64,23 +64,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     machinery sit at the tail (still verified locally by
     ``tools/check_oracle.py``, which runs everything).
 
-    Rotation (r7 wave 2, r9 wave 3): each round the prefix swaps
-    already-witnessed rows for never-witnessed ones so the external
-    CORRECTNESS artifacts eventually cover the whole surface (the
-    cumulative witness set is tracked by
-    ``tools/check_oracle.py:witness_summary``). ``_PREFIX_R10``
+    Rotation: each round the prefix swaps already-witnessed rows for
+    never-witnessed ones so the external CORRECTNESS artifacts
+    eventually cover the whole surface (the cumulative witness set is
+    tracked by ``tools/check_oracle.py:witness_summary``). ``_PREFIX``
     comes first, so the driver's 50-entry check lands on this round's
     wave; the rest follow in registration order — every entry stays
     hash-checked by the local gate either way."""
-    missing = [n for n in _PREFIX_R10 if n not in REGISTRY]
-    if len(_PREFIX_R10) != 50 or missing:
+    missing = [n for n in _PREFIX if n not in REGISTRY]
+    if len(_PREFIX) != 50 or missing:
         # RuntimeError, not assert: the invariant must survive
         # ``python -O`` (a drifted prefix silently shrinks the
         # driver-checked window otherwise).
         raise RuntimeError(
-            f"prefix drifted: len={len(_PREFIX_R10)}, missing={missing}"
+            f"prefix drifted: len={len(_PREFIX)}, missing={missing}"
         )
-    ordered = {n: REGISTRY[n].fn for n in _PREFIX_R10}
+    ordered = {n: REGISTRY[n].fn for n in _PREFIX}
     ordered.update((n, q.fn) for n, q in REGISTRY.items() if n not in ordered)
     return ordered
 
@@ -89,64 +88,61 @@ def oracle_sql() -> dict[str, str]:
     return {n: q.oracle for n, q in REGISTRY.items()}
 
 
-# Driver-checked prefix, rotation wave 5 (r10 VERDICT #9): 3 kept rows
-# (the flagship family + connector lineage) + inverted_index (r10's
-# one red row — kept IN so the driver witnesses the fix, r10 VERDICT
-# #1) + 46 of the 47 planned tools/rotation_plan.json r11 entries
-# (curriculum_shards moves to the r12 wave to make room). 117 queries
-# had never been driver-witnessed entering r11; this wave cuts that
-# to ≤ 71 and driver-witnesses the r10 optimization round's touched-
-# but-unwitnessed rows (psm_att_lift, domain_reweight_mw,
-# pretrain_e2e_datacard, item_item_jaccard, …).
-_PREFIX_R10: tuple[str, ...] = (
+# Driver-checked prefix: the driver hash-checks only the first 50
+# queries() entries, so each round this tuple swaps already-witnessed
+# rows for the next wave of tools/rotation_plan.json. This wave: the
+# flagship (knowledge_extraction) and the manifest connector, then the
+# 48 planned r12 rows, none of which any CORRECTNESS_r*.json has
+# witnessed yet (did_lift among them).
+_PREFIX: tuple[str, ...] = (
     "knowledge_extraction",
-    "curation_pipeline",
     "manifest_xlsx_ingest",
-    "inverted_index",
-    "k_anonymity_audit",
-    "length_emd_drift",
-    "neyman_allocation_sample",
-    "domain_reweight_mw",
-    "ann_hard_negatives",
-    "training_cartography",
-    "bpe_fertility_by_source",
-    "value_psi_drift",
-    "group_kfold_split",
-    "uncertainty_sample_topk",
-    "hill_tail_index",
-    "dedup_threshold_sweep",
-    "split_srm_check",
-    "hll_sliding_users",
-    "psm_att_lift",
-    "wordpiece_fertility_by_source",
-    "corpus_balance_report",
-    "pretrain_e2e_datacard",
-    "heaps_law_fit",
-    "events_sliding_counts",
-    "events_gapfill_locf",
-    "funnel_conversion",
-    "cohort_retention",
-    "nation_year_pivot",
-    "order_priority_unpivot",
-    "returnflag_qty_price_corr",
-    "user_rolling_24h",
-    "zorder_locality",
-    "incremental_agg_merge",
-    "key_skew_stats",
-    "clicks_in_error_window",
-    "lineitem_constraints",
-    "latest_event_per_user",
-    "salted_join_revenue",
-    "event_percent_rank",
-    "unmatched_declared_keys",
-    "pmi_collocations",
-    "domain_kl_divergence",
-    "top_duplicated_ngrams",
-    "event_sigma_outliers",
-    "order_value_gini",
-    "event_winsorized_sums",
-    "order_grouping_sets",
-    "hashed_doc_topk",
-    "chi2_features",
-    "item_item_jaccard",
+    "curriculum_shards",
+    "event_trigram_paths",
+    "orders_profile_drift",
+    "copurchase_edge_churn",
+    "segment_priority_lift",
+    "source_vocab_overlap",
+    "event_value_ks_pairs",
+    "event_value_mwu_pairs",
+    "qty_price_spearman",
+    "event_lag1_autocorr",
+    "temperature_mix_alloc",
+    "price_band_pairs",
+    "segment_conversion_ztest",
+    "cf_holdout_hitrate",
+    "phrase_search_topk",
+    "event_seasonal_profile",
+    "cohort_ltv_curve",
+    "nation_revenue_mom",
+    "kwic_snippets",
+    "stump_split_length",
+    "token_vote_confusion",
+    "daily_active_growth",
+    "click_next_purchase_fwd",
+    "user_credit_balance",
+    "label_centroid_affinity",
+    "order_basket_near_dups",
+    "event_run_stats",
+    "revenue_pareto",
+    "peak_concurrency",
+    "user_behavior_diversity",
+    "mutual_knn_pairs",
+    "fk_orphan_audit",
+    "km_life_table",
+    "rake_top_phrases",
+    "multitouch_attribution",
+    "user_active_coverage",
+    "doc_readability",
+    "bootstrap_value_ci",
+    "image_resize_stats",
+    "customer_decile_migration",
+    "did_lift",
+    "tree_depth2_length",
+    "priority_ship_bizdays",
+    "memorization_scores",
+    "event_ewma_hourly",
+    "two_hop_reach",
+    "event_trimmed_sums",
+    "consistent_hash_rebalance",
 )

@@ -44,16 +44,6 @@ from ..plans.cache import tracked_persist
 MICRO = 1_000_000
 
 
-def copurchase_edges(lineitem: DataFrame) -> DataFrame:
-    """Undirected co-purchase edges: parts appearing in the same order,
-    both directions, deduplicated. The per-order self-join fans out
-    |order|² pairs — bounded by the max basket size (7 in TPC-H), so
-    edge volume is a small constant multiple of lineitem, not n².
-    Exactly :func:`cooccur_edges` with no weight threshold (distinct ≡
-    count ≥ 1) — one implementation, two entry points."""
-    return cooccur_edges(lineitem, min_weight=1)
-
-
 def pagerank(
     edges: DataFrame,
     iters: int = 3,
@@ -196,9 +186,12 @@ def cooccur_edges(lineitem: DataFrame, min_weight: int = 2) -> DataFrame:
     least ``min_weight`` distinct orders (both directions). The weight
     filter is the standard sparsifier for co-occurrence graphs — it
     drops the long tail of one-off pairings (noise at corpus scale)
-    and bounds the graph to genuinely associated items. Same
-    basket-bounded fan-out as :func:`copurchase_edges`; the groupBy
-    adds one partial-aggregated shuffle on the pair key."""
+    and bounds the graph to genuinely associated items;
+    ``min_weight=1`` keeps every co-purchase pair. The per-order
+    self-join fans out |order|² pairs — bounded by the max basket size
+    (7 in TPC-H), so edge volume is a small constant multiple of
+    lineitem, not n². The groupBy adds one partial-aggregated shuffle
+    on the pair key."""
     items = tracked_persist(
         lineitem.select("l_orderkey", "l_partkey").distinct()
     )

@@ -119,52 +119,6 @@ def _weights_frame(
     )
 
 
-def train_perceptron_q(
-    df: DataFrame,
-    label_expr,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 64,
-    epochs: int = 3,
-) -> DataFrame:
-    """Train integer perceptron weights. ``label_expr`` is a Column
-    evaluating to the 0/1 label per row. Output: (bucket int, w
-    bigint).
-
-    Epoch semantics (all integer, ties predict 0 — ``score > 0`` is
-    strict on both engines): epoch 1 starts from w = 0, so every
-    prediction is 0 and the first update is +Σ over positive docs —
-    the class-conditional count vector; later epochs correct against
-    the running sign.
-    """
-    cnt, w, _, _snaps = _train_weight_dicts(
-        df, label_expr, text_col, id_col, buckets, epochs
-    )
-    return _weights_frame(cnt, w, "w")
-
-
-def train_averaged_perceptron_q(
-    df: DataFrame,
-    label_expr,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 64,
-    epochs: int = 3,
-) -> DataFrame:
-    """Averaged perceptron (Freund & Schapire 1999's standard variance
-    fix): the returned weight per bucket is Σ over epochs of that
-    epoch's POST-UPDATE weight — the unnormalized epoch average, kept
-    as an exact integer (dividing by the epoch count would leave the
-    integers and changes no comparison). Output: (bucket int, w_avg
-    bigint). Same trajectory discipline as ``train_perceptron_q``:
-    full-batch epochs, partitioning-independent, hash-checkable
-    against an unrolled SQL oracle."""
-    cnt, _, wsum, _snaps = _train_weight_dicts(
-        df, label_expr, text_col, id_col, buckets, epochs
-    )
-    return _weights_frame(cnt, wsum, "w_avg")
-
-
 def confusion_stats(
     df: DataFrame, pred_col: str, truth_col: str
 ) -> DataFrame:

@@ -88,8 +88,8 @@ def pq_codebook(
     """Codebook from a (deterministic) sample: each sample vector's
     j-th subvector becomes codeword ``code = id`` of subspace j.
     Output: subspace, code, codeword. For trained codebooks run
-    :func:`...similarity.kmeans_fit` per subspace instead; the
-    consumers below only see (subspace, code, codeword) either way."""
+    :func:`pq_train` instead; the consumers below only see
+    (subspace, code, codeword) either way."""
     return subvectors(sample, m, dim, vec_col, id_col).select(
         "subspace", F.col(id_col).alias("code"), F.col("subvec").alias("codeword")
     )
@@ -108,8 +108,8 @@ def pq_train(
     corpus's subvectors — ALL ``m`` subspaces train simultaneously in
     one Lloyd loop (the subspace id is just an extra grouping key), so
     each iteration is one broadcast-argmin assignment pass and one
-    partial-aggregated mean, exactly like
-    :func:`...similarity.kmeans_fit` with driver state m·k·(dim/m) =
+    partial-aggregated mean, the Lloyd shape of
+    :func:`...similarity.kmeans_fit_q`, with driver state m·k·(dim/m) =
     one model.
 
     Init is deterministic MAXIMIN (farthest-point): the first codeword
@@ -122,7 +122,7 @@ def pq_train(
     subvector frame — training-time model work, not per-query work.
 
     Float means → reproducible to tolerance, not bitwise
-    (property-tested via quantization error, like ``kmeans_fit``); the
+    (property-tested via quantization error); the
     oracle-checked queries use the deterministic sample codebook
     instead. Output: subspace, code, codeword."""
     from pyspark.sql import Window

@@ -281,9 +281,9 @@ def kmeans_fit_q(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Lloyd's k-means over MICRO-UNIT INTEGER vectors — bit-portable
-    training: unlike :func:`kmeans_fit` (float means, reproducible only
-    to tolerance), every step here is exact integer arithmetic or a
-    floor, so the trained centroids hash-match a SQL oracle.
+    training: float means would be reproducible only to tolerance;
+    every step here is exact integer arithmetic or a floor, so the
+    trained centroids hash-match a SQL oracle.
 
     * vectors quantized via :func:`quantize_u6`;
     * init: the ``k`` vectors with the lowest ``(md5(id), id)`` — a
@@ -296,8 +296,9 @@ def kmeans_fit_q(
       early stop — the oracle unrolls the same count);
     * output: (cluster, dim, c_u6) — k·dim rows.
 
-    Scale: same shape as :func:`kmeans_fit` (broadcast-argmin assignment,
-    partial-aggregated per-dim sums, O(k·dim) driver state). Exactness
+    Scale: per iteration one broadcast-argmin assignment pass and one
+    partial-aggregated per-dim sum; O(k·dim) driver state (the
+    centroids, collected each iteration like MLlib's k-means). Exactness
     bound: per-(cluster,dim) sums stay below 2^53 (double-division
     floor) up to ~10⁸ training rows at |x|≤10 — train on a bounded
     deterministic sample beyond that, which is standard practice anyway.
@@ -343,7 +344,7 @@ def kmeans_fit_q(
             .agg(
                 F.floor(F.sum("x") / F.count(F.lit(1))).cast("bigint").alias("m")
             )
-            .collect()  # k·dim rows — model-sized, like kmeans_fit
+            .collect()  # k·dim rows — model-sized
         )
         new_cents = [list(c) for c in cents]  # empty clusters keep position
         for r in sums:
@@ -452,78 +453,6 @@ def ivf_topk_q(
         sims.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .drop("_rn")
-    )
-
-
-def kmeans_fit(
-    df: DataFrame,
-    k: int = 8,
-    max_iter: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Distributed Lloyd's k-means over an embedding column → the
-    centroid table :func:`ivf_topk`/:func:`ivf_assign` consume
-    (columns: ``vec_id`` = centroid id, ``embedding`` array<double>).
-
-    Scale shape: per iteration, ONE broadcast-join assignment pass
-    (map-only argmin, no window) and ONE partial-aggregatable
-    ``posexplode → avg`` for the new means — two shuffles bounded by
-    k·dim output rows. Driver state is O(k·dim) (the centroids
-    themselves, collected each iteration exactly like MLlib's
-    implementation), never O(corpus).
-
-    Deterministic init, no RNG: the k corpus vectors with the lowest
-    ``xxhash64(id)`` (a fixed pseudo-random spread — same seeds on
-    every run and any partitioning). Empty clusters keep their
-    previous centroid. Distributed float-mean summation order is not
-    bit-stable across partitionings, so trained centroids are
-    reproducible to float tolerance, not bitwise — the reason the
-    k-means query is property-tested (recall floor) rather than
-    hash-matched against a SQL oracle.
-    """
-    # the training set is re-scanned once per iteration (assignment) —
-    # persist it so iterations read the materialized vectors, not the
-    # upstream plan (at cluster scale this is the cached training frame
-    # every iterative fitter holds; MEMORY_AND_DISK spills, not evicts)
-    base = df.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("_v")
-    ).persist()
-    init = (
-        base.withColumn("_h", F.xxhash64(F.col(id_col)))
-        .orderBy("_h", F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    cents: list[list[float]] = [list(r["_v"]) for r in init]
-
-    spark = df.sparkSession
-    for _ in range(max_iter):
-        cen_df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(cents)],
-            schema=f"{id_col} long, {vec_col} array<double>",
-        )
-        assigned = ivf_assign(base.withColumnRenamed("_v", vec_col), cen_df,
-                              vec_col, id_col)
-        means = (
-            assigned.select("cluster", F.posexplode("_v").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()  # k·dim rows — bounded by model size, not data
-        )
-        new_cents = list(cents)  # empty clusters keep previous position
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cluster.setdefault(r["cluster"], {})[r["pos"]] = r["m"]
-        for c, dims in by_cluster.items():
-            new_cents[c] = [dims[p] for p in range(len(dims))]
-        if new_cents == cents:
-            break
-        cents = new_cents
-    base.unpersist()
-    return spark.createDataFrame(
-        [(i, v) for i, v in enumerate(cents)],
-        schema=f"{id_col} long, {vec_col} array<double>",
     )
 
 

@@ -31,6 +31,8 @@ all: build per partition, merge model-sized states.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
@@ -101,22 +103,25 @@ def hll_stats(df: DataFrame, value_col: str, salt: str = "") -> DataFrame:
     )
 
 
+def _hll_cardinality(n_zero: int, s_scaled: int) -> float:
+    """HLL estimate from the :func:`hll_stats` encoding of one sketch."""
+    m = HLL_M
+    # Σ 2^-M over all m registers: observed from s_scaled, plus 2^0
+    # for every never-hit register
+    z = s_scaled / float(1 << (_HLL_WBITS + 1)) + n_zero
+    alpha = 0.7213 / (1 + 1.079 / m)
+    est = alpha * m * m / z
+    if est <= 2.5 * m and n_zero > 0:  # small-range correction
+        est = m * math.log(m / n_zero)
+    return est
+
+
 def hll_estimate(df: DataFrame, value_col: str, salt: str = "") -> float:
     """The HLL cardinality estimate (driver-side float math over the
     one-row stats — NOT part of the oracle-checked surface; accuracy
     is property-tested at ~1/√m ≈ 6.5% instead)."""
-    import math
-
     row = hll_stats(df, value_col, salt).first()
-    m = HLL_M
-    # Σ 2^-M over all m registers: observed from s_scaled, plus 2^0
-    # for every never-hit register
-    z = row["s_scaled"] / float(1 << (_HLL_WBITS + 1)) + row["n_zero"]
-    alpha = 0.7213 / (1 + 1.079 / m)
-    est = alpha * m * m / z
-    if est <= 2.5 * m and row["n_zero"] > 0:  # small-range correction
-        est = m * math.log(m / row["n_zero"])
-    return est
+    return _hll_cardinality(row["n_zero"], row["s_scaled"])
 
 
 # --------------------------------------------------------------------------
@@ -451,21 +456,10 @@ def hll_overlap_estimate(stats_row) -> float:
     """Driver-side inclusion-exclusion finish over one
     :func:`hll_pair_overlap` row — NOT oracle-checked (float), accuracy
     property-tested like :func:`hll_estimate`."""
-    import math
-
-    def _est(n_zero: int, s_scaled: int) -> float:
-        m = HLL_M
-        z = s_scaled / float(1 << (_HLL_WBITS + 1)) + n_zero
-        alpha = 0.7213 / (1 + 1.079 / m)
-        est = alpha * m * m / z
-        if est <= 2.5 * m and n_zero > 0:
-            est = m * math.log(m / n_zero)
-        return est
-
     return (
-        _est(stats_row["n_zero_a"], stats_row["s_scaled_a"])
-        + _est(stats_row["n_zero_b"], stats_row["s_scaled_b"])
-        - _est(stats_row["n_zero_u"], stats_row["s_scaled_u"])
+        _hll_cardinality(stats_row["n_zero_a"], stats_row["s_scaled_a"])
+        + _hll_cardinality(stats_row["n_zero_b"], stats_row["s_scaled_b"])
+        - _hll_cardinality(stats_row["n_zero_u"], stats_row["s_scaled_u"])
     )
 
 

@@ -61,8 +61,3 @@ def release_tracked() -> int:
             if alive:
                 raise
     return n
-
-
-def tracked_count() -> int:
-    """Number of currently tracked (not yet released) frames."""
-    return len(_TRACKED)

@@ -743,8 +743,8 @@ def _q_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``kmeans_fit_q`` — the same trainer the checked
     ``kmeans_q_centroids`` pins), and the search (``ivf_topk_q``)
     ranks by exact bigint squared-L2, so train → index → query all
-    hash-match the unrolled DuckDB oracle. The float-mean trainer
-    (``kmeans_fit``) remains recall-property-tested
+    hash-match the unrolled DuckDB oracle. The trained centroids'
+    recall against brute force is property-tested
     (tests/test_similarity.py::test_kmeans_ivf_recall_floor)."""
     emb = _emb(spark, sf_dir)
     cents = kmeans_fit_q(emb, k=4, iters=2)

@@ -157,9 +157,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _perceptron_model(spark: SparkSession, sf_dir: str) -> dict:
     """The classifier family's ONE training run as collected weight
-    rows (<= 64 per variant: model-sized). Row-identical to an inline
-    train_perceptron_q call: the build runs that function's own epoch
-    loop."""
+    rows (<= 64 per variant: model-sized): final weights, the
+    averaged-perceptron snapshot sum and each epoch's snapshot, all
+    from one ``_train_weight_dicts`` epoch loop."""
 
     def build(_tbl: str) -> dict:
         cnt, w, wsum, snaps = _train_weight_dicts(
@@ -321,7 +321,7 @@ def _shared_edges(
 ) -> DataFrame:
     """(src, dst) co-purchase edges at the given weight threshold, read
     from the session's materialized weighted edge table — row-identical
-    to ``cooccur_edges(lineitem, min_weight)`` / ``copurchase_edges``."""
+    to ``cooccur_edges(lineitem, min_weight)``."""
     ew = spark.table(_graph_shared(spark, sf_dir)["ew"])
     if min_weight > 1:
         ew = ew.filter(F.col("w") >= min_weight)

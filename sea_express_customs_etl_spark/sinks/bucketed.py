@@ -11,7 +11,7 @@ link_key join runs nightly" — persist both sides bucketed by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -30,15 +30,6 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two identically-bucketed tables; with matching bucket
-    specs Spark plans this without any shuffle exchange (verify with
-    ``.explain`` — no ``Exchange hashpartitioning`` above the scans)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def append_bucketed(

@@ -83,14 +83,6 @@ def clean_docs(df: DataFrame) -> DataFrame:
     ).drop("_corrupt_record")
 
 
-def corrupt_docs(df: DataFrame) -> DataFrame:
-    """The quarantine complement of :func:`clean_docs`: raw text of
-    every line that failed to parse (for a dead-letter sink)."""
-    return df.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw_line")
-    )
-
-
 def stream_jsonl_docs(
     spark: SparkSession,
     path: str,
@@ -102,7 +94,7 @@ def stream_jsonl_docs(
     text-scan + ``from_json`` projection over a file-source stream, so
     a landing directory of .jsonl drops becomes an incremental corpus
     feed (checkpoint exactly-once, same containment semantics —
-    `clean_docs`/`corrupt_docs` compose unchanged on the stream)."""
+    `clean_docs` composes unchanged on the stream)."""
     reader = spark.readStream
     if path_glob:
         reader = reader.option("pathGlobFilter", path_glob)

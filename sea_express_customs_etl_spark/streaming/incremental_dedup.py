@@ -39,10 +39,8 @@ from sea_express_customs_etl_spark.operators.dedup import (
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 from sea_express_customs_etl_spark.streaming.commit_fence import (
     CommitFence,
-    marker_rows,
     tombstone_writer,
 )
-from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
 
 
 def incremental_dedup_batch_writer(
@@ -105,8 +103,8 @@ def dedup_delete_writer(
     deliberately simpler than the ann_store/winnow VERSIONED contract
     because profile and band rows carry no add-batch version (they are
     per-doc idempotent facts), and the right-to-forget flow this serves
-    never re-admits the removed identity. Deletion is logical until
-    :func:`compact_dedup_store` folds survivors."""
+    never re-admits the removed identity. Deletion is logical: the
+    committed readers filter tombstoned ids."""
     return tombstone_writer(table_prefix, id_col)
 
 
@@ -162,48 +160,3 @@ def committed_edges(spark: SparkSession, table_prefix: str, id_col: str = "doc_i
             dead.withColumnRenamed(id_col, "id_a"), "id_a", "left_anti"
         ).join(dead.withColumnRenamed(id_col, "id_b"), "id_b", "left_anti")
     return edges.select("id_a", "id_b")
-
-
-def committed_profiles(spark: SparkSession, table_prefix: str, id_col: str = "doc_id") -> DataFrame:
-    """Exactly-once signature store view (see :func:`committed_edges`):
-    one profile row per LIVE document (tombstoned docs filtered)."""
-    prof = spark.table(f"{table_prefix}_profiles").dropDuplicates([id_col])
-    dead = _committed_tombstones(spark, table_prefix, id_col)
-    if dead is not None:
-        prof = prof.join(dead, id_col, "left_anti")
-    return prof
-
-
-def compact_dedup_store(
-    spark: SparkSession, table_prefix: str, num_buckets: int = 8
-) -> None:
-    """Fold the signature store's committed log into one generation:
-    exact duplicates from crash-window replays drop, the edge table
-    collapses to distinct committed pairs, and the marker table to one
-    id. Bucketing is preserved — pass the writer's ``num_buckets`` so
-    the staging tables carry the SAME bucket spec through the
-    backup-then-swap generation replacement (``table_swap.backup_swap``
-    — crash-safe in the no-data-loss sense, not transactional;
-    post-compaction appends reject a mismatched spec). Same
-    quiesced-stream contract and idempotence as
-    ``sketch_store.compact_sketch_store``."""
-    m_tab = f"{table_prefix}_batches"
-    gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
-    if gen is None:
-        return
-    edges = committed_edges(spark, table_prefix).select(
-        "id_a", "id_b", F.lit(int(gen)).cast("bigint").alias("batch_id")
-    )
-    profiles = committed_profiles(spark, table_prefix)
-    bands = spark.table(f"{table_prefix}_bands").distinct()
-    dead = _committed_tombstones(spark, table_prefix, "doc_id")
-    if dead is not None:
-        bands = bands.join(dead, "doc_id", "left_anti")
-    backup_swap(spark, f"{table_prefix}_edges", edges)
-    backup_swap(
-        spark, f"{table_prefix}_profiles", profiles, "doc_id", num_buckets
-    )
-    backup_swap(spark, f"{table_prefix}_bands", bands, "band", num_buckets)
-    backup_swap(spark, m_tab, marker_rows(spark, [gen]))
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_tombstones")
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_del_batches")

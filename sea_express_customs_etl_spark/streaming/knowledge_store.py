@@ -23,10 +23,8 @@ only same-batch replays collapse).
 Why the state is per-batch DELTAS, not a maintained merged table:
 appending a load's model-sized count rows is a blind append (no
 read-modify-write race, idempotent under replay); the merge is a
-partial-aggregated SUM at read time, cost ∝ state size, and
-``compact_knowledge_store`` folds the log to one generation whenever
-read-side merge cost matters — the sketch-store design
-(``sketch_store.py``), applied to the flagship.
+partial-aggregated SUM at read time, cost ∝ state size — the
+sketch-store design (``sketch_store.py``), applied to the flagship.
 
 Scale: per-batch work is the flagship align+count over the DELTA only
 (cost ∝ load, independent of history size); the state table holds one
@@ -46,11 +44,7 @@ from sea_express_customs_etl_spark.operators.vote import (
     vote_counts,
 )
 from sea_express_customs_etl_spark.plans.knowledge import knowledge_aligned
-from sea_express_customs_etl_spark.streaming.commit_fence import (
-    CommitFence,
-    marker_rows,
-)
-from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
+from sea_express_customs_etl_spark.streaming.commit_fence import CommitFence
 
 _KEYS = ("original_description", "official_description", "ccc_code")
 
@@ -93,8 +87,7 @@ def knowledge_batch_writer(
     """Fold one waybill-complete load — paired declared (A) and
     official (B) deltas — into the persisted vote-state store.
     Callable directly on plain DataFrame batches (batch/stream parity:
-    one code path); for a single tagged stream use
-    :func:`tagged_knowledge_writer`.
+    one code path).
 
     The load must be WAYBILL-COMPLETE (each waybill's A and B rows in
     the same batch) — the ``knowledge_base_ivm`` invariant: alignment
@@ -125,68 +118,10 @@ def knowledge_retract_writer(
 
     Contract: retract only loads (or waybill-complete sub-loads) that
     were previously committed — a net-negative key is a caller error,
-    exactly as removing a non-member from a multiset would be.
-    Compaction needs no special delete path: :func:`compact_knowledge_store`
-    already folds through the net state, so fully-retracted keys
-    vanish physically at the next fold."""
+    exactly as removing a non-member from a multiset would be."""
     return _vote_writer(
         table_prefix, use_nfkc=use_nfkc, strategy=strategy, sign=-1
     )
-
-
-def tagged_knowledge_writer(
-    table_prefix: str,
-    *,
-    use_nfkc: bool = False,
-    strategy: str = "array",
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch``-shaped adapter: one stream of TAGGED rows
-    carries both halves of each load AND retractions — the natural
-    shape when declared manifests, official history, and takedown
-    events land in one ingest stream. ``side = 'a' | 'b'`` rows fold
-    in; ``side = 'a_del' | 'b_del'`` rows are a waybill-complete
-    RETRACTION load whose votes append NEGATED (r8 — the streaming
-    face of :func:`knowledge_retract_writer`). Adds and retracts in
-    the SAME micro-batch commit atomically under one marker: the
-    combined delta is one blind append, so the exactly-once contract
-    is unchanged.
-
-    Union schema: side, mawb_no, hawb_no, item_no,
-    description_original (A side), item_sequence, description_official,
-    ccc_code (B side) — unused side's columns null."""
-    v_tab = f"{table_prefix}_votes"
-    fence = CommitFence(f"{table_prefix}_batches")
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch_df.sparkSession
-        if fence.committed(spark, batch_id):
-            return
-
-        def delta(side_a: str, side_b: str, sign: int) -> DataFrame:
-            a = batch_df.filter(F.col("side") == side_a).select(
-                "mawb_no", "hawb_no", "item_no", "description_original"
-            )
-            b = batch_df.filter(F.col("side") == side_b).select(
-                "mawb_no", "hawb_no", "item_sequence",
-                "description_official", "ccc_code",
-            )
-            return vote_counts(
-                knowledge_aligned(
-                    a, b, use_nfkc=use_nfkc, strategy=strategy
-                )
-            ).select(
-                *_KEYS,
-                (F.lit(sign) * F.col("frequency")).alias("frequency"),
-                F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-            )
-
-        # the retract side is usually empty — the union costs nothing
-        # and keeps the write single-append (atomic under one marker)
-        votes = delta("a", "b", 1).unionByName(delta("a_del", "b_del", -1))
-        votes.write.mode("append").format("parquet").saveAsTable(v_tab)
-        fence.commit(spark, batch_id)
-
-    return write
 
 
 def committed_vote_state(spark: SparkSession, table_prefix: str) -> DataFrame:
@@ -222,23 +157,3 @@ def knowledge_store_kb(spark: SparkSession, table_prefix: str) -> DataFrame:
     return state_winners(committed_vote_state(spark, table_prefix)).select(
         "original_description", "official_description", "ccc_code", "frequency"
     )
-
-
-def compact_knowledge_store(spark: SparkSession, table_prefix: str) -> None:
-    """Fold the committed per-batch vote log into ONE generation under
-    the max committed batch id — read-side merge cost returns to
-    |distinct tuples| after any number of loads. Same quiesced-stream
-    contract and idempotence as ``sketch_store.compact_sketch_store``;
-    generation replacement via ``table_swap.backup_swap`` (crash-safe,
-    no data-loss window)."""
-    m_tab = f"{table_prefix}_batches"
-    gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
-    if gen is None:
-        return
-    folded = committed_vote_state(spark, table_prefix).select(
-        *_KEYS,
-        "frequency",
-        F.lit(int(gen)).cast("bigint").alias("batch_id"),
-    )
-    backup_swap(spark, f"{table_prefix}_votes", folded)
-    backup_swap(spark, m_tab, marker_rows(spark, [gen]))

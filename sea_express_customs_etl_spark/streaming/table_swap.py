@@ -1,7 +1,7 @@
 """Backup-then-swap generation replacement for managed tables.
 
-The compaction jobs (``incremental_dedup.compact_dedup_store``,
-``sketch_store.compact_sketch_store``) replace a live table with a
+The compaction jobs (``sketch_store.compact_sketch_store``,
+``ann_store.compact_ann_store``) replace a live table with a
 freshly-written generation. A naive DROP-then-RENAME has a crash
 window in which NO table exists and the old data is already deleted.
 This helper sequences the swap so every crash point leaves the data

@@ -35,10 +35,8 @@ from sea_express_customs_etl_spark.operators.fingerprint import (
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 from sea_express_customs_etl_spark.streaming.commit_fence import (
     CommitFence,
-    marker_rows,
     tombstone_writer,
 )
-from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
 
 
 def winnow_batch_writer(
@@ -81,7 +79,7 @@ def winnow_delete_writer(
     Versioned semantics: a tombstone at batch ``d`` kills fingerprint
     rows ADDED at batch ``<= d``; a later re-add resurrects the
     document (add and delete batch ids share one monotonic sequence).
-    Deletion is logical until :func:`compact_winnow_store`."""
+    Deletion is logical: :func:`committed_fingerprints` filters it."""
     return tombstone_writer(table_prefix, id_col)
 
 
@@ -126,32 +124,3 @@ def committed_fingerprints(
             .drop("_del_bid")
         )
     return fps.select(id_col, "fp").distinct()
-
-
-def compact_winnow_store(
-    spark: SparkSession,
-    table_prefix: str,
-    num_buckets: int = 8,
-    id_col: str = "doc_id",
-) -> None:
-    """Fold the logical deletes out: rewrite the fingerprint store to
-    the SURVIVORS of :func:`committed_fingerprints` as one generation
-    (batch_id = max committed add batch, ``fp`` bucketing preserved),
-    collapse the marker table, drop the tombstone tables — the
-    ``ann_store.compact_ann_store`` sequencing verbatim. Quiesced
-    stream, idempotent; post-compaction batch ids must stay above the
-    fold generation (true for one monotonic maintenance stream)."""
-    m_tab = f"{table_prefix}_batches"
-    gen = spark.table(m_tab).agg(F.max("batch_id")).first()[0]
-    if gen is None:
-        return
-    survivors = committed_fingerprints(spark, table_prefix, id_col).select(
-        id_col,
-        "fp",
-        F.lit(int(gen)).cast("bigint").alias("batch_id"),
-    )
-
-    backup_swap(spark, f"{table_prefix}_fps", survivors, "fp", num_buckets)
-    backup_swap(spark, m_tab, marker_rows(spark, [gen]))
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_tombstones")
-    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_del_batches")

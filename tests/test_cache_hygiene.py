@@ -31,8 +31,8 @@ import pytest
 import __spark_entry__ as entrymod
 from sea_express_customs_etl_spark.plans import standins
 from sea_express_customs_etl_spark.plans.cache import (
+    _TRACKED,
     release_tracked,
-    tracked_count,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -86,7 +86,7 @@ def test_query_releases_all_caches(spark, name):
     fn = entrymod.queries()[name]
     fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
     release_tracked()
-    assert tracked_count() == 0
+    assert not _TRACKED
     grown = _cached_entries(spark) - before
     allowed = len(standins._MATERIALIZED) - mat_before
     assert grown <= allowed, (

@@ -118,19 +118,6 @@ def test_simhash_properties(spark):
     assert all(0 <= s < 2**16 for s in sigs.values())
 
 
-def test_ml_near_dup_pairs(spark):
-    from sea_express_customs_etl_spark.operators.ml_dedup import ml_near_dup_pairs
-
-    pairs = {
-        (r.id_a, r.id_b): r.jaccard_distance
-        for r in ml_near_dup_pairs(_docs(spark), max_distance=0.6).collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] == 0.0  # identical docs
-    assert not any(4 in p or 5 in p for p in pairs)  # unrelated/short never pair
-    # near-dup 1~3 share most trigrams → distance well under 0.6
-    assert (1, 3) in pairs and 0.0 < pairs[(1, 3)] <= 0.6
-
-
 def _hamming(a: int, b: int) -> int:
     return bin(a ^ b).count("1")
 

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from sea_express_customs_etl_spark.operators.graph import (
-    copurchase_edges,
+    cooccur_edges,
     pagerank,
 )
 
@@ -73,7 +73,7 @@ def test_copurchase_edges_shape(spark):
         [(1, 10), (1, 11), (1, 10), (2, 11), (2, 12), (3, 13)],
         ["l_orderkey", "l_partkey"],
     )
-    got = {(r.src, r.dst) for r in copurchase_edges(li).collect()}
+    got = {(r.src, r.dst) for r in cooccur_edges(li, min_weight=1).collect()}
     # duplicates collapse; both directions; single-item orders drop
     assert got == {(10, 11), (11, 10), (11, 12), (12, 11)}
 

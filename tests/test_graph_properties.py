@@ -154,7 +154,8 @@ def test_perceptron_matches_reference(spark):
     import hashlib
 
     from sea_express_customs_etl_spark.operators.perceptron import (
-        train_perceptron_q,
+        _train_weight_dicts,
+        _weights_frame,
     )
 
     rnd = random.Random(3)
@@ -166,12 +167,10 @@ def test_perceptron_matches_reference(spark):
     labels = {i: i % 2 for i in range(30)}
     rows = [(i, t, "en" if labels[i] else "de") for i, t in docs]
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
-    got = {
-        r.bucket: r.w
-        for r in train_perceptron_q(
-            df, F.col("lang") == "en", buckets=64, epochs=3
-        ).collect()
-    }
+    cnt, w, _, _ = _train_weight_dicts(
+        df, F.col("lang") == "en", buckets=64, epochs=3
+    )
+    got = {r.bucket: r.w for r in _weights_frame(cnt, w, "w").collect()}
 
     def bucket_of(tok):
         return int(hashlib.md5(tok.encode()).hexdigest()[:8], 16) % 64

@@ -2,9 +2,10 @@
 
 import json
 
+import pyspark.sql.functions as F
+
 from sea_express_customs_etl_spark.sources.jsonl_source import (
     clean_docs,
-    corrupt_docs,
     read_jsonl_docs,
 )
 
@@ -39,15 +40,16 @@ def test_jsonl_containment_and_typing(spark, tmp_path):
     assert rows[1].meta["url"] == "http://a"
     assert rows[1].lang == "en"
 
-    bad = corrupt_docs(raw).collect()
-    assert len(bad) == 1 and bad[0].raw_line.startswith('{"doc_id": 3')
+    bad = raw.filter(F.col("_corrupt_record").isNotNull()).collect()
+    assert len(bad) == 1 and bad[0]._corrupt_record.startswith('{"doc_id": 3')
 
 
 def test_jsonl_corrupt_rows_are_countable_not_fatal(spark, tmp_path):
     src = _write_corpus(tmp_path)
     raw = read_jsonl_docs(spark, src)
     # quarantine split partitions the input exactly
-    assert clean_docs(raw).count() + corrupt_docs(raw).count() + 2 == raw.count()
+    corrupt = raw.filter(F.col("_corrupt_record").isNotNull())
+    assert clean_docs(raw).count() + corrupt.count() + 2 == raw.count()
 
 
 def test_compression_ratio_signal(spark):

@@ -1,6 +1,6 @@
 """Streaming knowledge-base IVM (streaming/knowledge_store.py):
-stream-final ≡ full-rebuild parity, commit-marker replay idempotence,
-crash-window replay, compaction, and a true foreachBatch drive."""
+store-final ≡ full-rebuild parity, commit-marker replay idempotence,
+crash-window replay and retraction."""
 
 from __future__ import annotations
 
@@ -16,10 +16,8 @@ from sea_express_customs_etl_spark.plans.standins import (
 )
 from sea_express_customs_etl_spark.streaming.knowledge_store import (
     committed_vote_state,
-    compact_knowledge_store,
     knowledge_batch_writer,
     knowledge_store_kb,
-    tagged_knowledge_writer,
 )
 
 
@@ -94,86 +92,6 @@ def test_uncommitted_batch_invisible(spark, sf_dir):
     assert state_before == state_after
 
 
-def test_compaction_preserves_kb(spark, sf_dir):
-    a = declared_table(spark, sf_dir)
-    b = official_table(spark, sf_dir)
-    prefix = f"kbc_{uuid.uuid4().hex[:8]}"
-    writer = knowledge_batch_writer(prefix, use_nfkc=False)
-    writer(_half(a, 0), _half(b, 0), 0)
-    writer(_half(a, 1), _half(b, 1), 1)
-    # plant a crash-window duplicate before compaction
-    dup = spark.table(f"{prefix}_votes").filter(F.col("batch_id") == 0)
-    dup.write.mode("append").format("parquet").saveAsTable(f"{prefix}_votes")
-    want = _kb_map(knowledge_store_kb(spark, prefix))
-
-    compact_knowledge_store(spark, prefix)
-    assert spark.table(f"{prefix}_batches").count() == 1
-    assert _kb_map(knowledge_store_kb(spark, prefix)) == want
-    # post-compaction loads still fold correctly (batch counter ahead
-    # of the folded generation id)
-    writer(_half(a, 0).limit(0), _half(b, 0).limit(0), 9)
-    assert _kb_map(knowledge_store_kb(spark, prefix)) == want
-    # idempotent: compacting a compacted store rewrites it to itself
-    compact_knowledge_store(spark, prefix)
-    assert _kb_map(knowledge_store_kb(spark, prefix)) == want
-
-
-def test_streaming_foreachbatch_end_to_end(spark, sf_dir, tmp_path):
-    """True Structured Streaming drive: a tagged-union file stream of
-    two waybill-complete loads through foreachBatch == full rebuild."""
-    a = declared_table(spark, sf_dir)
-    b = official_table(spark, sf_dir)
-    a_t = dict(a.dtypes)
-    b_t = dict(b.dtypes)
-
-    def tagged(i: int):
-        ta = _half(a, i).select(
-            F.lit("a").alias("side"),
-            "mawb_no",
-            "hawb_no",
-            "item_no",
-            "description_original",
-            F.lit(None).cast(b_t["item_sequence"]).alias("item_sequence"),
-            F.lit(None).cast("string").alias("description_official"),
-            F.lit(None).cast("string").alias("ccc_code"),
-        )
-        tb = _half(b, i).select(
-            F.lit("b").alias("side"),
-            "mawb_no",
-            "hawb_no",
-            F.lit(None).cast(a_t["item_no"]).alias("item_no"),
-            F.lit(None).cast("string").alias("description_original"),
-            "item_sequence",
-            "description_official",
-            "ccc_code",
-        )
-        return ta.unionByName(tb)
-
-    src = str(tmp_path / "loads_in")
-    # one file per load -> maxFilesPerTrigger=1 gives one micro-batch
-    # per waybill-complete load
-    tagged(0).coalesce(1).write.parquet(src, mode="append")
-    tagged(1).coalesce(1).write.parquet(src, mode="append")
-
-    prefix = f"kbst_{uuid.uuid4().hex[:8]}"
-    schema = tagged(0).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            tagged_knowledge_writer(prefix, use_nfkc=False)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert _kb_map(knowledge_store_kb(spark, prefix)) == _want(spark, sf_dir)
-
-
 def _third(df, i: int):
     lk = link_key(F.col("mawb_no"), F.col("hawb_no"))
     return df.filter(F.crc32(lk) % 3 == i)
@@ -184,8 +102,7 @@ def test_retraction_equals_fresh_build_on_surviving_loads(spark, sf_dir):
     one retracted out ≡ a fresh build on the two surviving loads, row
     for row (the algebraic Z-relation exactness); retraction replay is
     fenced; retracting EVERYTHING nets the state to empty (zero-count
-    keys vanish, never rank); compaction after retraction folds the
-    net state and is idempotent."""
+    keys vanish, never rank)."""
     from sea_express_customs_etl_spark.streaming.knowledge_store import (
         knowledge_retract_writer,
     )
@@ -220,13 +137,6 @@ def test_retraction_equals_fresh_build_on_surviving_loads(spark, sf_dir):
     retract(_third(a, 1), _third(b, 1), 3)
     assert spark.table(f"{prefix}_votes").count() == n_votes
 
-    # compaction folds the net state; idempotent; kb unchanged
-    kb_before = _kb_map(knowledge_store_kb(spark, prefix))
-    compact_knowledge_store(spark, prefix)
-    assert _kb_map(knowledge_store_kb(spark, prefix)) == kb_before
-    compact_knowledge_store(spark, prefix)
-    assert _kb_map(knowledge_store_kb(spark, prefix)) == kb_before
-
     # retract the remaining loads: net state must vanish entirely
     retract(_third(a, 0), _third(b, 0), 10)
     retract(_third(a, 2), _third(b, 2), 11)
@@ -234,77 +144,3 @@ def test_retraction_equals_fresh_build_on_surviving_loads(spark, sf_dir):
     assert knowledge_store_kb(spark, prefix).count() == 0
 
 
-def test_tagged_stream_retraction_in_flight(spark, sf_dir, tmp_path):
-    """Streaming retraction (r8): one tagged stream carries adds AND
-    a_del/b_del retraction rows; a micro-batch that simultaneously
-    adds load 2 and retracts load 1 commits atomically under one
-    marker, and the final store equals a fresh build on the surviving
-    loads — the streaming face of knowledge_retract_writer."""
-    a = declared_table(spark, sf_dir)
-    b = official_table(spark, sf_dir)
-    a_t = dict(a.dtypes)
-    b_t = dict(b.dtypes)
-
-    def tagged(i: int, kind: str):
-        sa, sb = ("a_del", "b_del") if kind == "del" else ("a", "b")
-        ta = _third(a, i).select(
-            F.lit(sa).alias("side"),
-            "mawb_no",
-            "hawb_no",
-            "item_no",
-            "description_original",
-            F.lit(None).cast(b_t["item_sequence"]).alias("item_sequence"),
-            F.lit(None).cast("string").alias("description_official"),
-            F.lit(None).cast("string").alias("ccc_code"),
-        )
-        tb = _third(b, i).select(
-            F.lit(sb).alias("side"),
-            "mawb_no",
-            "hawb_no",
-            F.lit(None).cast(a_t["item_no"]).alias("item_no"),
-            F.lit(None).cast("string").alias("description_original"),
-            "item_sequence",
-            "description_official",
-            "ccc_code",
-        )
-        return ta.unionByName(tb)
-
-    src = str(tmp_path / "loads_in")
-    # batch 0: loads 0+1; batch 1: load 2 added AND load 1 retracted
-    tagged(0, "add").unionByName(tagged(1, "add")).coalesce(1).write.parquet(
-        src, mode="append"
-    )
-    tagged(2, "add").unionByName(tagged(1, "del")).coalesce(1).write.parquet(
-        src, mode="append"
-    )
-
-    prefix = f"kbret_{uuid.uuid4().hex[:8]}"
-    schema = tagged(0, "add").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    writer = tagged_knowledge_writer(prefix, use_nfkc=False)
-    q = (
-        stream.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    fresh = f"kbret_{uuid.uuid4().hex[:8]}"
-    fw = knowledge_batch_writer(fresh, use_nfkc=False)
-    fw(_third(a, 0), _third(b, 0), 0)
-    fw(_third(a, 2), _third(b, 2), 1)
-    assert _kb_map(knowledge_store_kb(spark, prefix)) == _kb_map(
-        knowledge_store_kb(spark, fresh)
-    )
-
-    # replayed mixed batch is fenced (single marker covers both sides)
-    n = spark.table(f"{prefix}_votes").count()
-    writer(
-        tagged(2, "add").unionByName(tagged(1, "del")), 1
-    )
-    assert spark.table(f"{prefix}_votes").count() == n

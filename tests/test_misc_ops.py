@@ -106,17 +106,6 @@ def test_ivf_near_dups_is_cluster_blocked(spark):
     assert all(r.cluster in (0, 10) for r in rows)
 
 
-def test_grouped_zscore(spark):
-    from sea_express_customs_etl_spark.operators.grouped import grouped_zscore
-
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 3.0), ("b", 5.0)], "k string, v double"
-    )
-    got = {(r.k, r.v): r.zscore for r in grouped_zscore(df, ["k"], "v").collect()}
-    assert got[("a", 1.0)] == -1.0 and got[("a", 3.0)] == 1.0
-    assert got[("b", 5.0)] == 0.0  # singleton group
-
-
 def test_asof_join(spark):
     import datetime
 

@@ -6,10 +6,23 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.operators.perceptron import (
+    _train_weight_dicts,
+    _weights_frame,
     confusion_stats,
-    train_averaged_perceptron_q,
-    train_perceptron_q,
 )
+
+
+def _final_weights(df, label, buckets=64, epochs=3):
+    """(bucket, w): the final weights of one training run, read the way
+    the classifier family's shared build reads them."""
+    cnt, w, _, _ = _train_weight_dicts(df, label, buckets=buckets, epochs=epochs)
+    return _weights_frame(cnt, w, "w")
+
+
+def _averaged_weights(df, label, buckets=64, epochs=3):
+    """(bucket, w_avg): the sum of the per-epoch weight snapshots."""
+    cnt, _, wsum, _ = _train_weight_dicts(df, label, buckets=buckets, epochs=epochs)
+    return _weights_frame(cnt, wsum, "w_avg")
 
 
 def _score(cnt_rows, weights):
@@ -27,7 +40,7 @@ def test_separable_corpus_learns_the_signal(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
     w = [
         (r.bucket, r.w)
-        for r in train_perceptron_q(
+        for r in _final_weights(
             df, F.col("lang") == "en", buckets=64, epochs=3
         ).collect()
     ]
@@ -57,13 +70,13 @@ def test_trajectory_is_layout_invariant(spark):
     a = sorted(
         map(
             tuple,
-            train_perceptron_q(df, F.col("lang") == "en", epochs=3).collect(),
+            _final_weights(df, F.col("lang") == "en", epochs=3).collect(),
         )
     )
     b = sorted(
         map(
             tuple,
-            train_perceptron_q(
+            _final_weights(
                 df.repartition(7), F.col("lang") == "en", epochs=3
             ).collect(),
         )
@@ -83,12 +96,12 @@ def test_averaged_is_snapshot_sum(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
     label = F.col("lang") == "en"
     snaps = [
-        {r.bucket: r.w for r in train_perceptron_q(df, label, epochs=e).collect()}
+        {r.bucket: r.w for r in _final_weights(df, label, epochs=e).collect()}
         for e in (1, 2, 3)
     ]
     avg = {
         r.bucket: r.w_avg
-        for r in train_averaged_perceptron_q(df, label, epochs=3).collect()
+        for r in _averaged_weights(df, label, epochs=3).collect()
     }
     want = {b: snaps[0][b] + snaps[1][b] + snaps[2][b] for b in snaps[2]}
     assert avg == want and len(avg) > 3
@@ -128,9 +141,9 @@ def test_averaged_at_least_as_good_on_noisy_corpus(spark):
     rows += [(24 + i, "alpha beta shared0", "de") for i in range(3)]  # noise
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
     label = F.col("lang") == "en"
-    plain = _confusion(df, train_perceptron_q(df, label, epochs=3), "w")
+    plain = _confusion(df, _final_weights(df, label, epochs=3), "w")
     avg = _confusion(
-        df, train_averaged_perceptron_q(df, label, epochs=3), "w_avg"
+        df, _averaged_weights(df, label, epochs=3), "w_avg"
     )
     assert avg.precision_ppm >= plain.precision_ppm
     assert avg.recall_ppm >= plain.recall_ppm

@@ -32,7 +32,7 @@ def test_every_oracle_is_nonempty_sql():
 
 
 def test_prefix_leads_queries():
-    assert list(entrymod.queries())[:50] == list(entrymod._PREFIX_R10)
+    assert list(entrymod.queries())[:50] == list(entrymod._PREFIX)
 
 
 def test_queries_and_oracles_cover_the_same_349_names():

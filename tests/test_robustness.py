@@ -52,7 +52,7 @@ def test_excel_parser_never_raises(payload):
 def test_truncated_xls_never_raises(payload, cut):
     """A VALID BIFF8 prefix chopped or tail-corrupted at an arbitrary
     byte must be contained per-file, never crash the task."""
-    from sea_express_customs_etl_spark.sources.xls_stdlib import write_xls
+    from tests.xls_writer import write_xls
 
     good = write_xls(
         [["25040104EX"], [], ["h1", "h2", "h3"], ["a", 1, 2.5], ["b", 2, None]]

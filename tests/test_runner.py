@@ -15,7 +15,7 @@ import duckdb
 import pytest
 
 from sea_express_customs_etl_spark.plans import session_tables as st
-from sea_express_customs_etl_spark.plans.cache import tracked_count, tracked_persist
+from sea_express_customs_etl_spark.plans.cache import _TRACKED, tracked_persist
 from sea_express_customs_etl_spark.plans.standins import load_table
 from tools import runner
 
@@ -104,7 +104,7 @@ def test_run_records_every_rep_and_the_split(spark, sf_dir):
     assert set(recs[0]["session_builds"]) == {"runner_test_build"}
     assert recs[0]["session_builds"]["runner_test_build"] >= 0.05
     assert recs[1]["session_builds"] == {}
-    assert tracked_count() == 0
+    assert not _TRACKED
 
 
 def test_run_records_a_failing_query_and_goes_on(spark, sf_dir):

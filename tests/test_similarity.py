@@ -8,7 +8,7 @@ from sea_express_customs_etl_spark.operators.similarity import (
     brute_force_topk,
     ivf_assign,
     ivf_topk,
-    kmeans_fit,
+    kmeans_fit_q,
 )
 
 VECS = [
@@ -79,9 +79,23 @@ def _blob_corpus(spark, blobs=4, per_blob=40, dim=8):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
+def _kmeans_centroids(emb, k, iters):
+    """``kmeans_fit_q``'s integer centroids as the (vec_id, embedding)
+    table that ``ivf_assign`` and ``ivf_topk`` read."""
+    return (
+        kmeans_fit_q(emb, k=k, iters=iters)
+        .groupBy("cluster")
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "c_u6"))).alias("_s"))
+        .select(
+            F.col("cluster").cast("long").alias("vec_id"),
+            F.transform("_s", lambda s: s["c_u6"] / 1e6).alias("embedding"),
+        )
+    )
+
+
 def test_kmeans_recovers_blobs(spark):
     emb = _blob_corpus(spark)
-    cents = kmeans_fit(emb, k=4, max_iter=5)
+    cents = _kmeans_centroids(emb, k=4, iters=5)
     # every trained centroid points dominantly along one blob axis, and
     # all four blob axes are covered
     rows = cents.collect()
@@ -97,12 +111,11 @@ def test_kmeans_recovers_blobs(spark):
 
 
 def test_kmeans_layout_invariant_assignment(spark):
-    """Trained model must not depend on physical layout (float means
-    are tolerance-stable here because blobs are tight)."""
+    """Trained model must not depend on physical layout."""
     emb = _blob_corpus(spark)
-    a = ivf_assign(emb, kmeans_fit(emb, k=4, max_iter=3)).collect()
+    a = ivf_assign(emb, _kmeans_centroids(emb, k=4, iters=3)).collect()
     b = ivf_assign(
-        emb.repartition(13), kmeans_fit(emb.repartition(13), k=4, max_iter=3)
+        emb.repartition(13), _kmeans_centroids(emb.repartition(13), k=4, iters=3)
     ).collect()
     pa = {r.vec_id: r.cluster for r in a}
     pb = {r.vec_id: r.cluster for r in b}
@@ -115,7 +128,7 @@ def test_kmeans_ivf_recall_floor(spark):
     emb = _blob_corpus(spark)
     queries = emb.filter(F.col("vec_id") % 40 < 2)  # 2 per blob
     exact = brute_force_topk(emb, queries, k=10).collect()
-    cents = kmeans_fit(emb, k=4, max_iter=5)
+    cents = _kmeans_centroids(emb, k=4, iters=5)
     approx = ivf_topk(emb, cents, queries, k=10, nprobe=2).collect()
     truth: dict[int, set] = {}
     for r in exact:

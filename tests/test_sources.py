@@ -316,7 +316,7 @@ def test_xlsx_corrupt_is_contained(spark, tmp_path):
 def test_manifest_end_to_end_xls_biff8(spark, tmp_path):
     """Legacy .xls (BIFF8/OLE2) manifests parse for real: mini-stream
     compound doc, RK/NUMBER/LABELSST cells, CJK via UTF-16 strings."""
-    from sea_express_customs_etl_spark.sources.xls_stdlib import write_xls
+    from tests.xls_writer import write_xls
 
     d = tmp_path / "xls_in"
     d.mkdir()
@@ -346,7 +346,7 @@ def test_manifest_end_to_end_xls_biff8(spark, tmp_path):
 
 
 def test_xls_continue_split_sst_and_corruption(spark, tmp_path):
-    from sea_express_customs_etl_spark.sources.xls_stdlib import write_xls
+    from tests.xls_writer import write_xls
 
     d = tmp_path / "xls_mixed"
     d.mkdir()

@@ -1,91 +1,10 @@
-"""Tests: cross-batch stateful dedup stream + shuffle-free bucketed joins."""
+"""Tests: shuffle-free joins over bucketed tables."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from sea_express_customs_etl_spark.sinks.bucketed import bucketed_join, write_bucketed
-from sea_express_customs_etl_spark.streaming.stateful import dedup_stream
-
-
-def test_dedup_stream_across_batches(spark, tmp_path):
-    src = str(tmp_path / "dup_events")
-    # two files → two potential micro-batches, duplicate keys within and across
-    spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "c")], "k long, payload string"
-    ).repartition(1).write.mode("append").parquet(src)
-    spark.createDataFrame(
-        [(2, "d"), (3, "e")], "k long, payload string"
-    ).repartition(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema("k long, payload string").option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    # timeout_ms=None for a drain-style run: with a processing-time
-    # timeout the availableNow trigger would keep scheduling batches to
-    # fire expirations and never terminate
-    q = (
-        dedup_stream(stream, "k", timeout_ms=None)
-        .writeStream.format("memory")
-        .queryName("dedup_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(90)
-    finally:
-        q.stop()
-    rows = spark.sql("select * from dedup_test").collect()
-    assert sorted(r.k for r in rows) == [1, 2, 3]  # one row per key, ever
-
-
-def test_dedup_stream_within_watermark(spark, tmp_path):
-    import datetime
-
-    from sea_express_customs_etl_spark.streaming.stateful import (
-        dedup_stream_within_watermark,
-    )
-
-    t = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    m = datetime.timedelta(minutes=1)
-    schema = "k long, ts timestamp, payload string"
-    src = str(tmp_path / "wm_dup_events")
-    # batch 1: keys 1, 2 (+ an in-batch duplicate of 1)
-    spark.createDataFrame(
-        [(1, t, "first"), (1, t + m, "dup-in-batch"), (2, t + 2 * m, "b")],
-        schema,
-    ).repartition(1).write.mode("append").parquet(src)
-    # batch 2: cross-batch duplicate of 2 within the delay + new key 3
-    spark.createDataFrame(
-        [(2, t + 5 * m, "dup-cross-batch"), (3, t + 6 * m, "c")], schema
-    ).repartition(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src)
-    q = (
-        dedup_stream_within_watermark(stream, "k", delay="1 hour")
-        .writeStream.format("memory")
-        .queryName("wm_dedup_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "wm_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(90)
-    finally:
-        q.stop()
-    rows = spark.sql("select * from wm_dedup_test").collect()
-    # first occurrence per key survives; in-batch and cross-batch
-    # duplicates within the 1h horizon collapse
-    assert sorted((r.k, r.payload) for r in rows) == [
-        (1, "first"),
-        (2, "b"),
-        (3, "c"),
-    ]
+from sea_express_customs_etl_spark.sinks.bucketed import write_bucketed
 
 
 def test_bucketed_join_no_shuffle(spark, tmp_path):
@@ -98,7 +17,7 @@ def test_bucketed_join_no_shuffle(spark, tmp_path):
     write_bucketed(left, "t_left", ("k",), num_buckets=4, sort_cols=("k",))
     write_bucketed(right, "t_right", ("k",), num_buckets=4, sort_cols=("k",))
     try:
-        joined = bucketed_join(spark, "t_left", "t_right", ["k"])
+        joined = spark.table("t_left").join(spark.table("t_right"), ["k"])
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in plan  # bucket-local join
         assert joined.count() == 1000

@@ -79,9 +79,8 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
     (including the read-time survivor-grain df cap); delete replay is
     fenced; a later re-add RESURRECTS (versioned tombstones); the
     crash window (tombstones without a del-marker table) serves the
-    delete-free view; compaction folds deletes out and is idempotent."""
+    delete-free view."""
     from sea_express_customs_etl_spark.streaming.winnow_store import (
-        compact_winnow_store,
         winnow_delete_writer,
     )
 
@@ -123,19 +122,6 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
         map(tuple, winnow_fingerprints(docs, k=3, w=4).collect())
     )
     assert full == want_full
-
-    # compaction folds a fresh delete out; idempotent; view unchanged
-    deleter(docs.filter(F.col("doc_id") % 11 == 0).select("doc_id"), 4)
-    before = sorted(map(tuple, committed_fingerprints(spark, prefix).collect()))
-    compact_winnow_store(spark, prefix)
-    assert not spark.catalog.tableExists(f"{prefix}_tombstones")
-    assert sorted(
-        map(tuple, committed_fingerprints(spark, prefix).collect())
-    ) == before
-    compact_winnow_store(spark, prefix)
-    assert sorted(
-        map(tuple, committed_fingerprints(spark, prefix).collect())
-    ) == before
 
 
 def test_crash_window_tombstones_without_marker_table(spark, sf_dir):
