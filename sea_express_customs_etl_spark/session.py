@@ -12,6 +12,9 @@ Defaults are chosen for the scale target (many-executor clusters over
   columnar batches
 * session timezone pinned to UTC so date/timestamp derivations are
   deterministic across drivers and match the DuckDB oracle
+* two cuts to the per-call cost of the Python/JVM boundary: the
+  engine's worker daemon (:mod:`.worker_daemon`) and no DataFrame
+  call-site capture (see :func:`get_spark`)
 """
 
 from __future__ import annotations
@@ -31,6 +34,24 @@ def get_spark(
 
     Env knobs: ``SPARK_GRAFT_CPUS`` (local parallelism),
     ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
+
+    Python workers fork from :mod:`.worker_daemon`, which stops every
+    task from re-reading the pyspark, py4j and Spark jar zips. The
+    workers must import this package to find it, as they must for the
+    engine's own UDFs (pickled by reference): run from the repo root or
+    put it on ``PYTHONPATH``.
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is ``false``: each
+    ``F.*`` and DataFrame call otherwise makes about four extra Py4J
+    round trips to capture its Python call site. An analysis error
+    still raises ``AnalysisException`` naming the column or table; what
+    is lost is the Python ``file:line`` in the DataFrame query context.
+    To get it back, set that conf to ``"true"`` through ``extra_conf``
+    in a fresh process: pyspark reads the flag on its first DataFrame
+    call and caches it for the process
+    (``pyspark.errors.utils._enable_debugging_cache``), so a later
+    session in the same process keeps the first setting and a
+    ``tools/runner.py --conf`` A/B of the flag measures nothing.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -55,6 +76,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "sea_express_customs_etl_spark.worker_daemon")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -79,8 +79,9 @@ def _is_meaningful(val: str | None) -> bool:
     return bool(val) and str(val).strip().lower() not in ("nan", "none", "")
 
 
-def _probe_a1(content: bytes, fname: str) -> str | None:
-    """Read only cell A1 (OP-SRC-CELL)."""
+def _probe_a1(content: bytes, fname: str, grid: list[list] | None) -> str | None:
+    """Read only cell A1 (OP-SRC-CELL); a legacy ``.xls`` takes it from
+    the caller's already-parsed ``grid``."""
     try:
         if fname.lower().endswith(".csv"):
             df = pd.read_csv(
@@ -94,9 +95,6 @@ def _probe_a1(content: bytes, fname: str) -> str | None:
             if v is not None and _is_meaningful(str(v)):
                 return str(v).strip()
         elif fname.lower().endswith(".xls"):
-            from sea_express_customs_etl_spark.sources import xls_stdlib
-
-            grid = xls_stdlib.read_xls_grid(content)
             v = grid[0][0] if grid and grid[0] else None
             if v is not None and _is_meaningful(str(v)):
                 return str(v).strip()
@@ -219,14 +217,6 @@ def _new_format_frame(df: pd.DataFrame, fname: str, mawb: str) -> pd.DataFrame:
 
 
 def _rows_for_file(fname: str, content: bytes) -> pd.DataFrame:
-    # MAWB: A1 if strictly alphanumeric, else filename stem
-    a1 = _probe_a1(content, fname)
-    mawb = (
-        a1
-        if a1 and _ALNUM.match(a1)
-        else fname.rsplit("/", 1)[-1].rsplit(".", 1)[0].strip()
-    )
-
     grid: list[list] | None = None
     if fname.lower().endswith((".xlsx", ".xls")):
         try:
@@ -234,6 +224,14 @@ def _rows_for_file(fname: str, content: bytes) -> pd.DataFrame:
         except Exception as e:
             log.error("cannot read workbook %s: %s", fname, e)
             return _EMPTY
+
+    # MAWB: A1 if strictly alphanumeric, else filename stem
+    a1 = _probe_a1(content, fname, grid)
+    mawb = (
+        a1
+        if a1 and _ALNUM.match(a1)
+        else fname.rsplit("/", 1)[-1].rsplit(".", 1)[0].strip()
+    )
 
     # Strategy A: old format (header row 4, named columns)
     df_old = _read_table(content, fname, header=3, grid=grid)

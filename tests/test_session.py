@@ -1,0 +1,68 @@
+"""The Python/JVM boundary confs ``get_spark`` sets: Python workers fork
+from the engine's worker daemon, and DataFrame call-site capture is off
+without losing the analysis error that names a bad column."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.errors import AnalysisException
+
+from sea_express_customs_etl_spark.sources import declared_cargo, read_manifests_raw
+
+
+def test_worker_daemon_rereads_no_archive_inside_a_task(spark):
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        reads = []
+        read = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return read(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {
+                "daemon": [sys.modules["__main__"].__spec__.name],
+                "zip_importers": [zips],
+                "reads": [len(reads)],
+            }
+        )
+
+    rows = (
+        spark.range(4)
+        .repartition(2)
+        .mapInPandas(probe, "daemon string, zip_importers long, reads long")
+        .collect()
+    )
+    assert len(rows) == 2
+    for r in rows:
+        assert r.daemon == "sea_express_customs_etl_spark.worker_daemon"
+        assert r.zip_importers > 0  # the worker imports from archives
+        assert r.reads == 0
+
+
+def test_call_site_capture_is_off(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_misspelled_column_still_names_it(spark, tmp_path):
+    (tmp_path / "m.csv").write_text("a,b\n1,2\n", encoding="utf-8")
+    cargo = declared_cargo(read_manifests_raw(spark, str(tmp_path)))
+    with pytest.raises(AnalysisException, match="hawb_nmuber"):
+        cargo.select("hawb_nmuber")

@@ -358,6 +358,42 @@ def test_xls_continue_split_sst_and_corruption(spark, tmp_path):
     assert len(cargo) == 3
 
 
+def test_xls_workbook_is_parsed_once_per_file(monkeypatch):
+    """A1 comes from the one BIFF8 grid the rows are read from: one
+    ``read_xls_grid`` call per file, and the same rows and MAWB rule."""
+    from sea_express_customs_etl_spark.sources import excel_source, xls_stdlib
+    from tests.xls_writer import write_xls
+
+    calls = []
+    read = xls_stdlib.read_xls_grid
+
+    def counting(content):
+        calls.append(len(content))
+        return read(content)
+
+    monkeypatch.setattr(xls_stdlib, "read_xls_grid", counting)
+    old = excel_source._rows_for_file(
+        "old_manifest.xls", write_xls(_csv_to_rows(OLD_CSV))
+    )
+    assert len(calls) == 1
+    new = excel_source._rows_for_file(
+        "new_manifest.xls", write_xls(_csv_to_rows(NEW_CSV))
+    )
+    assert len(calls) == 2
+
+    assert list(old.columns) == excel_source._RAW_COLS
+    assert set(old["mawb_no"]) == {"old_manifest"}  # A1 not alphanumeric
+    assert list(old["fmt"]) == ["old"] * 3
+    assert list(old["hawb_raw"]) == ["H001", "H001", "H002"]
+    assert list(old["item_no"]) == [1, 2, 1]
+    assert old["desc_raw"][0] == "宝宝辅食机/料理机"
+    assert set(new["mawb_no"]) == {"25040104EX"}  # A1 from the grid
+    assert list(new["fmt"]) == ["new"] * 3
+    assert list(new["hawb_raw"]) == ["N001", "N001", "N002"]
+    assert list(new["item_no"]) == [1, 2, 1]
+    assert list(new["qty_raw"]) == ["3", "2", "1"]
+
+
 def test_manifest_rejects_narrow_and_junk_files(spark, tmp_path):
     d = tmp_path / "bad_in"
     d.mkdir()
