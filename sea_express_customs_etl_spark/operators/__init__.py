@@ -3,8 +3,6 @@
 from sea_express_customs_etl_spark.operators.linking import (  # noqa: F401
     add_link_key,
     count_matched_keys,
-    positional_align,
-    semi_filter,
 )
 from sea_express_customs_etl_spark.operators.vote import majority_vote  # noqa: F401
 from sea_express_customs_etl_spark.operators.ordered import (  # noqa: F401

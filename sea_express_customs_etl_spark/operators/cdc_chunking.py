@@ -259,20 +259,15 @@ def cdc_shared_chunks(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_docs: int = 2,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Cross-document chunk reuse — the dedup-store view: for every
     chunk digest stored by ≥ ``min_docs`` distinct documents, the
     dedupable footprint (chunk_hash, chunk_len, n_docs, n_occ). One
     digest-grain partial-aggregated shuffle; at 100 TB this IS the
     question a chunked object store answers before admitting bytes.
-
-    ``impl``: "arrow" (default — the vectorized fast path) or
-    "catalyst" (the spec-reference fold); bit-identical outputs,
-    parity-pinned by test."""
-    chunker = cdc_chunks_arrow if impl == "arrow" else cdc_chunks
+    Chunks come from the vectorized ``cdc_chunks_arrow``."""
     return (
-        chunker(df, text_col, id_col)
+        cdc_chunks_arrow(df, text_col, id_col)
         .groupBy("chunk_hash")
         .agg(
             F.max("chunk_len").alias("chunk_len"),

@@ -257,7 +257,6 @@ def kcore(
 
 def triangle_counts(
     edges: DataFrame,
-    orient: str = "degree",
     triples: DataFrame | None = None,
 ) -> DataFrame:
     """Per-node triangle counts over an undirected edge list (either
@@ -267,21 +266,15 @@ def triangle_counts(
     exactly once under any strict total order on nodes, and the
     per-node counts are one explode + one partial-aggregated groupBy.
 
-    ``orient`` picks the total order that directs the wedge joins:
-
-    - ``"degree"`` (default) — the compact-forward optimization:
-      direct each edge from the (degree, id)-smaller endpoint to the
-      larger, pivot wedges on the LOW-degree node. Per-pivot fan-out
-      is the FORWARD degree, which is O(√m) for any graph (a node
-      with forward-degree d has d neighbors of degree ≥ its own, so
-      d² ≤ Σdeg = 2m) — hub nodes in a power-law graph contribute
-      O(m) wedges instead of O(deg²). This is the 100 TB dial the
-      canonical form lacks; measured on a skewed star-heavy graph
-      (SCALE.md round 6; ``copurchase_triangles`` at 1×/8× is in
-      ``BENCH_HISTORY/scale_r12_c4.json``).
-    - ``"canonical"`` — direct by node id only (a < b). One fewer
-      degree join; safe when degrees are bounded (TPC-H co-purchase
-      baskets cap at 7), quadratic on hubs otherwise.
+    The total order that directs the wedge joins is the compact-forward
+    one: direct each edge from the (degree, id)-smaller endpoint to the
+    larger, pivot wedges on the LOW-degree node. Per-pivot fan-out is
+    the FORWARD degree, which is O(√m) for any graph (a node with
+    forward-degree d has d neighbors of degree ≥ its own, so
+    d² ≤ Σdeg = 2m) — hub nodes in a power-law graph contribute O(m)
+    wedges instead of the O(deg²) of an id-only (a < b) orientation
+    (SCALE.md round 6; ``copurchase_triangles`` at 1×/8× is in
+    ``BENCH_HISTORY/scale_r12_c4.json``).
 
     ``triples`` (optional) short-circuits the enumeration with a
     PRECOMPUTED (x, y, z) frame over the same undirected graph — the
@@ -289,7 +282,7 @@ def triangle_counts(
     position-invariant (all three corners explode), so any valid
     one-per-triangle enumeration gives identical output.
     """
-    tris = _triangle_triples(edges, orient) if triples is None else triples
+    tris = _triangle_triples(edges) if triples is None else triples
     return (
         tris.select(
             F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("node")
@@ -299,11 +292,11 @@ def triangle_counts(
     )
 
 
-def _triangle_triples(edges: DataFrame, orient: str = "degree") -> DataFrame:
+def _triangle_triples(edges: DataFrame) -> DataFrame:
     """Enumerate each triangle exactly once as an (x, y, z) triple
-    under the chosen edge orientation (see :func:`triangle_counts` for
-    the degree-vs-canonical trade). Shared by the per-node counts and
-    the per-edge support (k-truss) operator."""
+    under the degree orientation (see :func:`triangle_counts`). Shared
+    by the per-node counts and the per-edge support (k-truss)
+    operator."""
     e = tracked_persist(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -311,56 +304,46 @@ def _triangle_triples(edges: DataFrame, orient: str = "degree") -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )  # multi-scan: wedge sides + closing side (and the degree count)
-    if orient == "canonical":
-        ab = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        bc = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-        ac = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-        tris = ab.join(bc, "y").join(ac, ["x", "z"])
-    elif orient == "degree":
-        deg = (
-            e.select(F.explode(F.array("a", "b")).alias("node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("_deg"))
+    deg = (
+        e.select(F.explode(F.array("a", "b")).alias("node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("_deg"))
+    )
+    # forward-direct each edge by the (degree, id) total order —
+    # plain scalar comparisons, not struct keys (structs shuffle
+    # and compare slower than two long columns); carry the head's
+    # (degree, id) so the wedge pair orders without re-joining
+    a_first = (F.col("_da") < F.col("_db")) | (
+        (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
+    )
+    fwd = tracked_persist(
+        e.join(deg.select(F.col("node").alias("a"), F.col("_deg").alias("_da")), "a")
+        .join(deg.select(F.col("node").alias("b"), F.col("_deg").alias("_db")), "b")
+        .select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(a_first, F.col("_db")).otherwise(F.col("_da")).alias("_dv"),
         )
-        # forward-direct each edge by the (degree, id) total order —
-        # plain scalar comparisons, not struct keys (structs shuffle
-        # and compare slower than two long columns); carry the head's
-        # (degree, id) so the wedge pair orders without re-joining
-        a_first = (F.col("_da") < F.col("_db")) | (
-            (F.col("_da") == F.col("_db")) & (F.col("a") < F.col("b"))
-        )
-        fwd = tracked_persist(
-            e.join(deg.select(F.col("node").alias("a"), F.col("_deg").alias("_da")), "a")
-            .join(deg.select(F.col("node").alias("b"), F.col("_deg").alias("_db")), "b")
-            .select(
-                F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-                F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-                F.when(a_first, F.col("_db")).otherwise(F.col("_da")).alias("_dv"),
-            )
-        )  # three scans: both wedge sides + the closing edge
-        w1 = fwd.select("u", F.col("v").alias("x2"), F.col("_dv").alias("_d1"))
-        w2 = fwd.select("u", F.col("v").alias("z"), F.col("_dv").alias("_d2"))
-        fwd_lt = (F.col("_d1") < F.col("_d2")) | (
-            (F.col("_d1") == F.col("_d2")) & (F.col("x2") < F.col("z"))
-        )
-        wedges = (
-            w1.join(w2, "u")
-            .filter(fwd_lt)
-            .select(F.col("u").alias("x"), F.col("x2").alias("y"), "z")
-        )
-        # the closing edge {y,z} has key(y) < key(z), so if present it is
-        # oriented y→z — one equi-join, no direction disjunction
-        tris = wedges.join(
-            fwd.select(F.col("u").alias("y"), F.col("v").alias("z")), ["y", "z"]
-        )
-    else:
-        raise ValueError(f"orient must be 'degree' or 'canonical', got {orient!r}")
-    return tris
+    )  # three scans: both wedge sides + the closing edge
+    w1 = fwd.select("u", F.col("v").alias("x2"), F.col("_dv").alias("_d1"))
+    w2 = fwd.select("u", F.col("v").alias("z"), F.col("_dv").alias("_d2"))
+    fwd_lt = (F.col("_d1") < F.col("_d2")) | (
+        (F.col("_d1") == F.col("_d2")) & (F.col("x2") < F.col("z"))
+    )
+    wedges = (
+        w1.join(w2, "u")
+        .filter(fwd_lt)
+        .select(F.col("u").alias("x"), F.col("x2").alias("y"), "z")
+    )
+    # the closing edge {y,z} has key(y) < key(z), so if present it is
+    # oriented y→z — one equi-join, no direction disjunction
+    return wedges.join(
+        fwd.select(F.col("u").alias("y"), F.col("v").alias("z")), ["y", "z"]
+    )
 
 
 def edge_support(
     edges: DataFrame,
-    orient: str = "degree",
     triples: DataFrame | None = None,
 ) -> DataFrame:
     """Per-EDGE triangle support — the k-truss building block: an edge
@@ -371,7 +354,7 @@ def edge_support(
     groups) and the unit of work a truss-decomposition peel repeats.
 
     Same triangle enumeration as :func:`triangle_counts` (degree
-    orientation by default — the power-law dial), then each triple
+    orientation — the power-law dial), then each triple
     unpivots to its THREE canonical (min, max) edges and one
     partial-aggregated groupBy counts per edge. Edges in no triangle
     are absent (support 0 — join back against the edge list when the
@@ -381,7 +364,7 @@ def edge_support(
     frame over the same graph — the unpivot canonicalizes each corner
     pair to (min, max), so the support is enumeration-invariant.
     """
-    tris = _triangle_triples(edges, orient) if triples is None else triples
+    tris = _triangle_triples(edges) if triples is None else triples
     # ONE pass over the triples: a 3-struct explode (a union of three
     # selects would re-execute the wedge joins per branch — measured
     # 15.4 s → ~6 s at sf0.1)

@@ -247,133 +247,3 @@ def dup_substring_stats(
             F.col("dup_hi"),
         )
     )
-
-
-def strip_dup_substrings(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 64,
-    stride: int = 16,
-    max_occurrences: int = 1,
-) -> DataFrame:
-    """Remove every duplicated window span from every document (the
-    destructive MassiveText step; :func:`dup_substring_stats` is the
-    audit form). Overlapping/adjacent duplicated windows merge into
-    maximal spans (gaps-and-islands over the sorted offsets), and the
-    surviving text is the concatenation of the inter-span segments.
-
-    Output: id, ``text`` (rebuilt), ``n_removed_chars``. Same
-    corpus-wide count shuffle as the stats form, then per-document
-    island merging as an ordered array fold — bounded by windows per
-    document (text-length physics, not corpus size).
-    """
-    t = F.col("_t")
-    wins = (
-        df.select(F.col(id_col), F.col(text_col).alias("_t"))
-        .filter(F.length(t) >= window)
-        .select(
-            id_col,
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    ((F.length(t) - window) / stride).cast("int"),
-                )
-            ).alias("_i"),
-            "_t",
-        )
-        .select(
-            F.col(id_col),
-            (F.col("_i") * stride).alias("_off"),
-            F.md5(F.substr(t, F.col("_i") * stride + 1, F.lit(window))).alias(
-                "_h"
-            ),
-        )
-    )
-    counts = wins.groupBy("_h").agg(F.count(F.lit(1)).alias("_cnt"))
-    dup_offs = (
-        wins.join(counts, "_h")
-        .filter(F.col("_cnt") > max_occurrences)
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("_off")).alias("_offs"))
-    )
-    # gaps-and-islands over sorted window starts: extend the open span
-    # while the next window starts at or before its end, else emit
-    spans = F.aggregate(
-        F.col("_offs"),
-        F.array().cast("array<struct<lo:int,hi:int>>"),
-        lambda acc, o: F.when(
-            F.size(acc) == 0,
-            F.array(
-                F.struct(
-                    o.cast("int").alias("lo"),
-                    (o + window).cast("int").alias("hi"),
-                )
-            ),
-        ).otherwise(
-            F.when(
-                o <= F.element_at(acc, -1)["hi"],
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(
-                        F.struct(
-                            F.element_at(acc, -1)["lo"].alias("lo"),
-                            (o + window).cast("int").alias("hi"),
-                        )
-                    ),
-                ),
-            ).otherwise(
-                F.concat(
-                    acc,
-                    F.array(
-                        F.struct(
-                            o.cast("int").alias("lo"),
-                            (o + window).cast("int").alias("hi"),
-                        )
-                    ),
-                )
-            )
-        ),
-    )
-    with_spans = (
-        df.select(F.col(id_col), F.col(text_col).alias("_t"))
-        .join(dup_offs, id_col, "left")
-        .withColumn("_spans", spans)
-    )
-    # surviving text = segments between spans (plus head and tail)
-    kept = F.when(F.col("_spans").isNull(), F.col("_t")).otherwise(
-        F.concat(
-            F.aggregate(
-                F.col("_spans"),
-                F.struct(
-                    F.lit(0).cast("int").alias("pos"),
-                    F.lit("").alias("acc"),
-                ),
-                lambda st, sp: F.struct(
-                    sp["hi"].alias("pos"),
-                    F.concat(
-                        st["acc"],
-                        F.substr(
-                            F.col("_t"),
-                            st["pos"] + 1,
-                            F.greatest(sp["lo"] - st["pos"], F.lit(0)),
-                        ),
-                    ).alias("acc"),
-                ),
-                lambda st: st["acc"],
-            ),
-            F.substr(
-                F.col("_t"),
-                F.element_at(F.col("_spans"), -1)["hi"] + 1,
-                F.greatest(
-                    F.length("_t") - F.element_at(F.col("_spans"), -1)["hi"],
-                    F.lit(0),
-                ),
-            ),
-        )
-    )
-    return with_spans.select(
-        F.col(id_col),
-        kept.alias(text_col),
-        (F.length("_t") - F.length(kept)).cast("int").alias("n_removed_chars"),
-    )

@@ -1,28 +1,20 @@
-"""Linking operators: key derivation, count-match validation, semi-join
-reduction, positional alignment (SURVEY.md §2.4).
+"""Linking operators: key derivation and count-match validation
+(SURVEY.md §2.4).
 
 The reference implements its one analytical join imperatively
 (``src/batch_train.py:84-126``: pandas groupby sizes, index
-intersection, ``isin`` masks, sort + ``zip``). Here each step is a real
-Spark join/window so Catalyst sees — and can reorder, broadcast and
-prune — the whole plan.
-
-Scale notes (100 TB design):
-
-* ``count_matched_keys`` produces one row per waybill key — orders of
-  magnitude smaller than the item tables — so downstream semi-joins
-  against it are AQE-broadcastable; we mark it ``broadcast()`` when
-  small enough at plan time.
-* ``positional_align`` shuffles both sides once on ``link_key`` (the
-  window and the join share the partitioning, so Spark reuses the
-  exchange rather than shuffling twice).
-* No driver-side collection anywhere: key validation stays distributed,
-  unlike the reference's in-RAM index intersection.
+intersection, ``isin`` masks, sort + ``zip``). The flagship plan
+(``plans/knowledge.py:knowledge_aligned``) does count match, semi-join
+reduction and positional alignment in one pass: one sorted item array
+per waybill and side, an inner join on ``link_key`` with equal array
+sizes, then ``arrays_zip``. ``count_matched_keys`` is the valid-key set
+on its own, one row per waybill key; key validation stays distributed,
+unlike the reference's in-RAM index intersection.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.functions.strings import link_key
@@ -63,44 +55,3 @@ def count_matched_keys(
         .filter((F.col("_cnt_a") - F.col("_cnt_b")) == 0)
         .select(key)
     )
-
-
-def semi_filter(df: DataFrame, valid_keys: DataFrame, key: str = "link_key") -> DataFrame:
-    """Restrict ``df`` to rows whose key appears in ``valid_keys``
-    (OP-JOIN-SEMI / OP-FIL-ISIN; reference ``src/batch_train.py:109-110``).
-
-    The key set is per-waybill (small relative to items) but still
-    GROWS with the corpus — billions of keys at 100 TB — so no pinned
-    broadcast hint: AQE broadcasts the build side whenever its measured
-    size fits (it always does at bench scale) and degrades to a
-    shuffled semi-join beyond that instead of OOMing the executors.
-    """
-    return df.join(valid_keys, key, "left_semi")
-
-
-def positional_align(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    key: str = "link_key",
-    order_a: str = "item_no",
-    order_b: str = "item_sequence",
-) -> DataFrame:
-    """Ordinal alignment join: pair the i-th item of each waybill in A
-    with the i-th item of the same waybill in B (OP-JOIN-POS; reference
-    ``src/batch_train.py:113-126`` — sort both sides then ``zip``).
-
-    Spark-first restatement: ``row_number()`` per key on each side's own
-    sort column, then an equi-join on ``(key, pos)``. Both the windows
-    and the join hash-partition on ``key``, so the exchange is reused.
-
-    Caller must pre-filter both sides to count-matched keys (else the
-    reference's zip would silently mis-pair; here unmatched positions
-    simply drop out of the inner join).
-    """
-    pos_a = df_a.withColumn(
-        "_pos", F.row_number().over(Window.partitionBy(key).orderBy(F.col(order_a)))
-    )
-    pos_b = df_b.withColumn(
-        "_pos", F.row_number().over(Window.partitionBy(key).orderBy(F.col(order_b)))
-    )
-    return pos_a.join(pos_b.drop(order_b), [key, "_pos"], "inner")

@@ -57,7 +57,6 @@ def lm_score(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_model: bool = False,
 ) -> DataFrame:
     """Score every document under the corpus bigram LM. Output: id,
     n_bigrams (int), logprob_u6 (bigint — sum of per-bigram
@@ -66,14 +65,12 @@ def lm_score(
     two words keep a row with n_bigrams=0 and logprob_u6=0 —
     auditable, not dropped.
 
-    ``broadcast_model`` pins a broadcast hint on the unigram/bigram
-    count tables. Default ``False``: the count tables are
+    The unigram/bigram count tables carry no broadcast hint: they are
     corpus-VOCABULARY-sized (the distinct-bigram table reaches
     billions of rows at 100 TB), so the join must be allowed to
     degrade to a shuffled equi-join — AQE still broadcasts them at
     runtime whenever the measured size fits under
-    ``spark.sql.autoBroadcastJoinThreshold``, which is the size-based
-    switch the docstring above promises. Only the 1-row ``_v``
+    ``spark.sql.autoBroadcastJoinThreshold``. Only the 1-row ``_v``
     vocabulary scalar keeps an unconditional hint."""
     bigrams = _doc_bigrams(df, text_col, id_col)
     uni = (
@@ -86,8 +83,6 @@ def lm_score(
     vdf = bigrams.select(
         F.countDistinct(F.col("a")).alias("_v")
     )
-    if broadcast_model:
-        big, uni = F.broadcast(big), F.broadcast(uni)
     scored = (
         bigrams.join(big, ["a", "b"])
         .join(uni, "a")

@@ -4,8 +4,10 @@ Reference: ``src/batch_train.py:121-146`` — a Python ``Counter`` per
 normalized source description, ``most_common(1)`` winner.
 
 Spark-first restatement: vote counting is a plain groupBy (partial
-aggregation map-side, one shuffle), winner selection is a row_number
-window over the vote counts — both fully inside Catalyst, never a UDAF.
+aggregation map-side, one shuffle), winner selection is a second
+aggregate, ``min(struct(-frequency, targets...))`` over the vote
+counts — both fully inside Catalyst, never a UDAF, and no per-group
+sort.
 
 Determinism: ``Counter.most_common`` breaks ties by insertion order,
 which is row-order dependent and therefore nondeterministic under
@@ -16,7 +18,7 @@ documented, deterministic divergence (SURVEY.md §7.3.2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 
@@ -25,35 +27,15 @@ def majority_vote(
     src_col: str = "original_description",
     target_cols: tuple[str, ...] = ("official_description", "ccc_code"),
     freq_col: str = "frequency",
-    strategy: str = "agg",
 ) -> DataFrame:
     """Per ``src_col``, count votes for each distinct target tuple and
     keep the winner (highest count; deterministic tie-break by target
     columns ascending). Empty-string sources are excluded (reference
-    ``src/batch_train.py:127``).
-
-    Strategies (identical results, different physical plans):
-
-    * ``"agg"`` (default): winner via ``min(struct(-freq, targets...))``
-      — an ordinary aggregate, so Spark applies map-side partial
-      aggregation and needs no per-group sort. Scale path: two shuffles
-      (vote count on (src, targets), winner on src), both with partial
-      combine, no window sort buffer.
-    * ``"window"``: the textbook ``row_number() == 1`` top-1-per-group,
-      kept for parity demonstration and as the shape Catalyst sees for
-      generic top-k.
-    """
-    votes = vote_counts(df, src_col, target_cols, freq_col)
-    if strategy == "window":
-        win = Window.partitionBy(src_col).orderBy(
-            F.col(freq_col).desc(), *[F.col(c).asc() for c in target_cols]
-        )
-        return (
-            votes.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    return state_winners(votes, src_col, target_cols, freq_col)
+    ``src/batch_train.py:127``). Two partial-aggregated shuffles: the
+    vote count on (src, targets), then the winner on src."""
+    return state_winners(
+        vote_counts(df, src_col, target_cols, freq_col), src_col, target_cols, freq_col
+    )
 
 
 def vote_counts(
@@ -82,8 +64,8 @@ def state_winners(
 ) -> DataFrame:
     """Winner per source from a vote-count state — the aggregate
     (non-window) top-1: min over struct(-freq, targets..., freq);
-    -freq ASC == freq DESC, then target columns ascending — the same
-    total order as the window form, map-side combinable."""
+    -freq ASC == freq DESC, then target columns ascending — the
+    ``row_number()`` top-1 order, map-side combinable."""
     winner = F.min(
         F.struct(
             (-F.col(freq_col)).alias("_nf"),

@@ -417,9 +417,7 @@ def _q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MassiveText-style exact-substring duplication signal: 64-char
     windows at stride 16, md5-counted corpus-wide; per-document window
-    counts and duplicated-span bounds (self-repeats included). The
-    destructive companion `strip_dup_substrings` (merged-span removal)
-    is golden-tested in tests/test_hygiene_substrings.py."""
+    counts and duplicated-span bounds (self-repeats included)."""
     return dup_substring_stats(_docs(spark, sf_dir))
 
 

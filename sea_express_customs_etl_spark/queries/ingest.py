@@ -16,6 +16,7 @@ from sea_express_customs_etl_spark.operators.linking import (
     count_matched_keys,
 )
 from sea_express_customs_etl_spark.operators.scd import cdc_apply, pit_join
+from sea_express_customs_etl_spark.operators.vote import vote_counts
 from sea_express_customs_etl_spark.plans import (
     oracles,
     oracles_ext as ext,
@@ -288,12 +289,10 @@ def _q_positional_align(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(oracle=oracles.VOTE_COUNTS_SQL)
 def _q_vote_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _aligned_shared(spark, sf_dir)
-        .filter(F.col("original_description") != "")
-        .withColumnRenamed("description_official", "official_description")
-        .groupBy("original_description", "official_description", "ccc_code")
-        .agg(F.count(F.lit(1)).alias("frequency"))
+    return vote_counts(
+        _aligned_shared(spark, sf_dir).withColumnRenamed(
+            "description_official", "official_description"
+        )
     )
 
 
@@ -441,10 +440,10 @@ def _q_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering key end-to-end: Morton-interleave the
     bucketized (l_partkey, l_suppkey) plane, derive the file bucket
     from the TOP z-bits (map-only — no global sort in the checked
-    plan; ``write_zordered`` adds the range exchange when actually
-    laying out files), and report each bucket's row count and per-axis
-    min/max envelope — the tight two-dimensional rectangles that make
-    parquet min/max stats selective on BOTH join keys at 100 TB."""
+    plan; laying out files adds a range exchange on the key), and
+    report each bucket's row count and per-axis min/max envelope — the
+    tight two-dimensional rectangles that make parquet min/max stats
+    selective on BOTH join keys at 100 TB."""
     li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_partkey") % 256).alias("x"),
         (F.col("l_suppkey") % 256).alias("y"),

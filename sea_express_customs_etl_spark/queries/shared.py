@@ -10,7 +10,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
-from sea_express_customs_etl_spark.functions.strings import normalize_text_col
 from sea_express_customs_etl_spark.operators.bm25 import (
     bm25_topk,
     term_coverage_ranked,
@@ -37,7 +36,6 @@ from sea_express_customs_etl_spark.operators.graph import (
     _walk_frontiers,
     label_propagation,
 )
-from sea_express_customs_etl_spark.operators.linking import add_link_key
 from sea_express_customs_etl_spark.operators.lm import lm_score
 from sea_express_customs_etl_spark.operators.pca import pca_power_train
 from sea_express_customs_etl_spark.operators.perceptron import (
@@ -55,6 +53,10 @@ from sea_express_customs_etl_spark.plans.cache import (
     release_tracked,
     tracked_persist as _tracked_persist,
 )
+from sea_express_customs_etl_spark.plans.knowledge import (
+    knowledge_aligned,
+    linked_sides,
+)
 from sea_express_customs_etl_spark.plans.pretrain_e2e import (
     N_MERGES,
     pretrain_e2e_select_stages,
@@ -71,72 +73,25 @@ from sea_express_customs_etl_spark.streaming.ann_store import (
 )
 
 
-def _ab_linked(spark: SparkSession, sf_dir: str):
-    a = add_link_key(
-        declared_table(spark, sf_dir).filter(
-            F.col("mawb_no").isNotNull()
-            & F.col("hawb_no").isNotNull()
-            & F.col("description_original").isNotNull()
-        )
-    ).select(
-        "link_key",
-        "item_no",
-        normalize_text_col(F.col("description_original"), use_nfkc=False).alias(
-            "original_description"
-        ),
+def _ab_linked(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    return linked_sides(
+        declared_table(spark, sf_dir), official_table(spark, sf_dir), use_nfkc=False
     )
-    b = add_link_key(
-        official_table(spark, sf_dir).filter(
-            F.col("mawb_no").isNotNull() & F.col("hawb_no").isNotNull()
-        )
-    ).select("link_key", "item_sequence", "description_official", "ccc_code")
-    return a, b
 
 
 def _aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-match + positional alignment on the packed-array scale
-    path (one collect_list aggregate per side, join reusing the
-    link_key exchanges, posexplode for ordinals) — same semantics as
-    ``positional_align`` over ``count_matched_keys``-filtered inputs,
-    which the window-strategy ``knowledge_base`` and the operator unit
-    tests exercise directly."""
-    a, b = _ab_linked(spark, sf_dir)
-    a_packed = a.groupBy("link_key").agg(
-        F.sort_array(F.collect_list(F.struct("item_no", "original_description"))).alias(
-            "_ia"
-        )
-    )
-    b_packed = b.groupBy("link_key").agg(
-        F.sort_array(
-            F.collect_list(F.struct("item_sequence", "description_official", "ccc_code"))
-        ).alias("_ib")
-    )
-    return (
-        a_packed.join(b_packed, "link_key", "inner")
-        .filter((F.size("_ia") - F.size("_ib")) == 0)
-        .select(
-            "link_key",
-            F.posexplode(
-                F.arrays_zip(
-                    F.col("_ia.original_description").alias("original_description"),
-                    F.col("_ib.description_official").alias("description_official"),
-                    F.col("_ib.ccc_code").alias("ccc_code"),
-                )
-            ).alias("_pos0", "_p"),
-        )
-        .select(
-            "link_key",
-            (F.col("_pos0") + 1).alias("pos"),
-            "_p.original_description",
-            "_p.description_official",
-            "_p.ccc_code",
-        )
-    )
+    """The flagship's aligned pairs (``knowledge_aligned``) in the
+    ``positional_align`` oracle's schema: (link_key, pos,
+    original_description, description_official, ccc_code)."""
+    return knowledge_aligned(
+        declared_table(spark, sf_dir), official_table(spark, sf_dir), use_nfkc=False
+    ).withColumnRenamed("official_description", "description_official")
 
 
 def _aligned_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The aligned frame positional_align and vote_counts both consume,
-    as a session table: the table IS the frame, written once."""
+    """The aligned frame the positional_align and vote_counts queries
+    both consume, as a session table: the table IS the frame, written
+    once."""
 
     def build(tbl: str) -> str:
         _aligned(spark, sf_dir).write.mode("overwrite").format(

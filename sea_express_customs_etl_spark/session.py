@@ -20,6 +20,7 @@ Defaults are chosen for the scale target (many-executor clusters over
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -38,8 +39,9 @@ def get_spark(
     Python workers fork from :mod:`.worker_daemon`, which stops every
     task from re-reading the pyspark, py4j and Spark jar zips. The
     workers must import this package to find it, as they must for the
-    engine's own UDFs (pickled by reference): run from the repo root or
-    put it on ``PYTHONPATH``.
+    engine's own UDFs (pickled by reference), so
+    ``spark.executorEnv.PYTHONPATH`` starts with the package's parent
+    directory, ahead of any value given in ``extra_conf``.
 
     ``spark.python.sql.dataFrameDebugging.enabled`` is ``false``: each
     ``F.*`` and DataFrame call otherwise makes about four extra Py4J
@@ -79,7 +81,11 @@ def get_spark(
         .config("spark.python.daemon.module", "sea_express_customs_etl_spark.worker_daemon")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    root = str(Path(__file__).resolve().parents[1])
+    conf[key] = os.pathsep.join(filter(None, (root, conf.get(key))))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,67 +1,11 @@
-"""Lakehouse layout management: partitioned writes, small-file
-compaction, keyed upsert — the table-maintenance operators a streaming
-lakehouse needs (the reference's MySQL got these for free from the DB;
-a parquet lake must manage its own layout).
+"""Z-order (Morton) clustering keys: the multi-dimensional layout key
+behind Delta/Iceberg ``OPTIMIZE ZORDER`` as a Catalyst expression, and
+its SQL mirror for the oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
-
-from sea_express_customs_etl_spark.sinks.parquet_sink import overwrite_with_backup
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: tuple[str, ...], mode: str = "append"
-) -> None:
-    """Hive-style partitioned parquet. Readers filtering on the
-    partition columns prune directories at plan time (``PartitionFilters``
-    in the scan, zero I/O for pruned partitions) — the physical design
-    lever for time-sliced 100 TB tables (e.g. partition by import
-    month, prune to the trained window)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession, path: str, target_files: int
-) -> None:
-    """Rewrite a directory of many small files (a streaming sink's
-    natural output) into ``target_files`` right-sized files. Uses the
-    backup-swap writer, so a crash never loses the original layout."""
-    df = spark.read.parquet(path).coalesce(target_files)
-    overwrite_with_backup(df, path)
-
-
-def upsert_parquet(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: tuple[str, ...],
-    version_col: str | None = None,
-) -> None:
-    """Keyed upsert into a parquet table: last-writer-wins per key
-    (ordered by ``version_col`` when given, else updates beat existing).
-
-    Plain-parquet MERGE equivalent: union existing+updates with a
-    precedence rank, keep rank-1 per key, swap atomically with backup.
-    The shuffle is one window by key; at scale, partition/bucket the
-    table by the key so the rewrite touches only affected partitions.
-    """
-    existing = spark.read.parquet(path)
-    tagged = existing.withColumn("_prec", F.lit(0)).unionByName(
-        updates.withColumn("_prec", F.lit(1))
-    )
-    order = (
-        [F.col(version_col).desc()] if version_col else [F.col("_prec").desc()]
-    )
-    w = Window.partitionBy(*key_cols).orderBy(*order, F.col("_prec").desc())
-    merged = (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_prec")
-    )
-    overwrite_with_backup(merged, path)
 
 
 def morton_key(x, y, bits: int = 16):
@@ -95,27 +39,3 @@ def morton_key_sql(x: str, y: str, bits: int = 16) -> str:
         for i in range(bits)
     ]
     return "(" + " + ".join(terms) + ")"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x: str,
-    y: str,
-    num_files: int,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Range-partition by the Morton key and write: each output file
-    covers a compact z-range, i.e. a small rectangle in (x, y) — both
-    columns' parquet min/max stats become selective. One range-exchange
-    (sampled boundaries, no global sort funnel); files are internally
-    sorted so predicate row-group pruning works too."""
-    (
-        df.withColumn("_z", morton_key(x, y, bits))
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )

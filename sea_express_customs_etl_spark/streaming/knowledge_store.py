@@ -53,7 +53,6 @@ def _vote_writer(
     table_prefix: str,
     *,
     use_nfkc: bool,
-    strategy: str,
     sign: int,
 ) -> Callable[[DataFrame, DataFrame, int], None]:
     v_tab = f"{table_prefix}_votes"
@@ -64,9 +63,7 @@ def _vote_writer(
         if fence.committed(spark, batch_id):
             return
         votes = vote_counts(
-            knowledge_aligned(
-                delta_a, delta_b, use_nfkc=use_nfkc, strategy=strategy
-            )
+            knowledge_aligned(delta_a, delta_b, use_nfkc=use_nfkc)
         ).select(
             *_KEYS,
             (F.lit(sign) * F.col("frequency")).alias("frequency"),
@@ -82,7 +79,6 @@ def knowledge_batch_writer(
     table_prefix: str,
     *,
     use_nfkc: bool = False,
-    strategy: str = "array",
 ) -> Callable[[DataFrame, DataFrame, int], None]:
     """Fold one waybill-complete load — paired declared (A) and
     official (B) deltas — into the persisted vote-state store.
@@ -93,16 +89,13 @@ def knowledge_batch_writer(
     the same batch) — the ``knowledge_base_ivm`` invariant: alignment
     is per-waybill, so a complete waybill contributes exactly its
     full-run votes."""
-    return _vote_writer(
-        table_prefix, use_nfkc=use_nfkc, strategy=strategy, sign=1
-    )
+    return _vote_writer(table_prefix, use_nfkc=use_nfkc, sign=1)
 
 
 def knowledge_retract_writer(
     table_prefix: str,
     *,
     use_nfkc: bool = False,
-    strategy: str = "array",
 ) -> Callable[[DataFrame, DataFrame, int], None]:
     """RETRACTION load (r7 VERDICT #6) — takedown / right-to-forget /
     bad-ingest rollback for the vote-state store: the same
@@ -119,9 +112,7 @@ def knowledge_retract_writer(
     Contract: retract only loads (or waybill-complete sub-loads) that
     were previously committed — a net-negative key is a caller error,
     exactly as removing a non-member from a multiset would be."""
-    return _vote_writer(
-        table_prefix, use_nfkc=use_nfkc, strategy=strategy, sign=-1
-    )
+    return _vote_writer(table_prefix, use_nfkc=use_nfkc, sign=-1)
 
 
 def committed_vote_state(spark: SparkSession, table_prefix: str) -> DataFrame:

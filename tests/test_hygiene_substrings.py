@@ -1,17 +1,11 @@
-"""Exact-substring dedup (operators/hygiene.py: dup_substring_stats /
-strip_dup_substrings) — the MassiveText granularity between document-
-and line-level dedup. The stats form is oracle-checked by the
-``substring_dedup`` query; these tests pin the destructive form and
-the edge semantics."""
+"""Exact-substring dedup (operators/hygiene.py: dup_substring_stats) —
+the MassiveText granularity between document- and line-level dedup.
+The stats are oracle-checked by the ``substring_dedup`` query; this
+test pins the edge semantics."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
-from sea_express_customs_etl_spark.operators.hygiene import (
-    dup_substring_stats,
-    strip_dup_substrings,
-)
+from sea_express_customs_etl_spark.operators.hygiene import dup_substring_stats
 
 BOILER = "x" * 80  # an 80-char run shared by two docs
 
@@ -42,60 +36,3 @@ def test_stats_marks_shared_spans_and_keeps_short_docs(spark):
     assert got[2].dup_lo == 0
     # < window chars → zero windows, NULL bounds, row kept
     assert (got[3].n_windows, got[3].dup_lo) == (0, None)
-
-
-def test_strip_removes_merged_spans_exactly(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "HEAD------" + BOILER + "------TAIL"),
-            (2, "prefix----" + BOILER + "----suffix"),
-            (3, "clean document with no repeats at all here"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r.doc_id: r
-        for r in strip_dup_substrings(docs, window=32, stride=8).collect()
-    }
-    # the shared x-run's aligned windows form ONE merged island per doc
-    for d in (1, 2):
-        assert "x" * 40 not in out[d].text
-        assert out[d].n_removed_chars > 0
-        orig = docs.filter(F.col("doc_id") == d).first().text
-        assert len(out[d].text) == len(orig) - out[d].n_removed_chars
-    assert out[1].text.startswith("HEAD") and out[1].text.endswith("TAIL")
-    assert out[3].text == "clean document with no repeats at all here"
-    assert out[3].n_removed_chars == 0
-
-
-def test_strip_consistent_with_stats_single_island(spark):
-    """When a document's duplicated windows form one island, strip
-    removes exactly the [dup_lo, dup_hi) span the stats report."""
-    docs = _docs(spark)
-    stats = {
-        r.doc_id: r
-        for r in dup_substring_stats(docs, window=32, stride=8).collect()
-    }
-    stripped = {
-        r.doc_id: r
-        for r in strip_dup_substrings(docs, window=32, stride=8).collect()
-    }
-    orig1 = docs.filter("doc_id = 1").first().text
-    lo, hi = stats[1].dup_lo, stats[1].dup_hi
-    assert stripped[1].text == orig1[:lo] + orig1[hi:]
-    assert stripped[1].n_removed_chars == hi - lo
-
-
-def test_strip_layout_invariant(spark):
-    docs = _docs(spark)
-    a = {
-        (r.doc_id, r.text)
-        for r in strip_dup_substrings(docs, window=32, stride=8).collect()
-    }
-    b = {
-        (r.doc_id, r.text)
-        for r in strip_dup_substrings(
-            docs.repartition(5), window=32, stride=8
-        ).collect()
-    }
-    assert a == b

@@ -1,53 +1,7 @@
-"""Layout sink tests: partition pruning, compaction, keyed upsert."""
+"""Layout tests: the Morton key against a Python reference, and
+schema evolution across appended parquet batches."""
 
 from __future__ import annotations
-
-import glob
-import os
-
-import pyspark.sql.functions as F
-
-from sea_express_customs_etl_spark.sinks.layout import (
-    compact_parquet,
-    upsert_parquet,
-    write_partitioned,
-)
-
-
-def test_write_partitioned_prunes(spark, tmp_path):
-    path = str(tmp_path / "pt")
-    df = spark.createDataFrame(
-        [("202503", 1), ("202503", 2), ("202504", 3)], "month string, v int"
-    )
-    write_partitioned(df, path, ("month",), mode="overwrite")
-    assert os.path.isdir(os.path.join(path, "month=202503"))
-
-    q = spark.read.parquet(path).filter(F.col("month") == "202503")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(month" in plan
-    assert q.count() == 2
-
-
-def test_compact_parquet(spark, tmp_path):
-    path = str(tmp_path / "many")
-    spark.range(100).repartition(10).write.parquet(path)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 10
-    compact_parquet(spark, path, target_files=2)
-    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 2
-    assert spark.read.parquet(path).count() == 100
-
-
-def test_upsert_parquet(spark, tmp_path):
-    path = str(tmp_path / "kb")
-    spark.createDataFrame(
-        [("a", "old_a", 1), ("b", "old_b", 1)], "k string, v string, ver int"
-    ).write.parquet(path)
-    updates = spark.createDataFrame(
-        [("b", "new_b", 2), ("c", "new_c", 2)], "k string, v string, ver int"
-    )
-    upsert_parquet(spark, path, updates, ("k",), version_col="ver")
-    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert got == {"a": "old_a", "b": "new_b", "c": "new_c"}
 
 
 def test_morton_key_matches_python_reference(spark):
@@ -67,37 +21,6 @@ def test_morton_key_matches_python_reference(spark):
     got = df.select("x", "y", morton_key("x", "y", bits=8).alias("z")).collect()
     for r in got:
         assert r.z == ref(r.x, r.y), (r.x, r.y)
-
-
-def test_write_zordered_files_cover_disjoint_z_ranges(spark, tmp_path):
-    """Range partitioning on the Morton key must give each file a
-    non-overlapping z-interval — the property that makes per-file
-    min/max stats selective."""
-    import pyspark.sql.functions as F
-
-    from sea_express_customs_etl_spark.sinks.layout import (
-        morton_key,
-        write_zordered,
-    )
-
-    df = spark.range(4096).select(
-        (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
-    )
-    path = str(tmp_path / "zo")
-    write_zordered(df, path, "x", "y", num_files=8, bits=8)
-    back = spark.read.parquet(path).select(
-        "x", "y",
-        morton_key("x", "y", bits=8).alias("z"),
-        F.input_file_name().alias("f"),
-    )
-    assert back.count() == 4096
-    spans = back.groupBy("f").agg(
-        F.min("z").alias("lo"), F.max("z").alias("hi")
-    ).collect()
-    spans = sorted([(r.lo, r.hi) for r in spans])
-    assert len(spans) > 1
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2  # disjoint, ordered intervals
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

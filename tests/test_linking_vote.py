@@ -10,12 +10,11 @@ from sea_express_customs_etl_spark.operators import (
     add_link_key,
     count_matched_keys,
     majority_vote,
-    positional_align,
-    semi_filter,
 )
+from sea_express_customs_etl_spark.plans.knowledge import knowledge_aligned
 
 
-def _ab(spark):
+def _raw_ab(spark):
     # key K1: 2 items on both sides (valid); K2: 2 vs 1 (count mismatch);
     # K3: only in A (no intersection)
     a = spark.createDataFrame(
@@ -37,6 +36,11 @@ def _ab(spark):
         "mawb_no string, hawb_no string, item_sequence int,"
         " description_official string, ccc_code string",
     )
+    return a, b
+
+
+def _ab(spark):
+    a, b = _raw_ab(spark)
     return add_link_key(a), add_link_key(b)
 
 
@@ -46,36 +50,35 @@ def test_count_match_excludes_mismatched_and_orphans(spark):
     assert [r.link_key for r in valid.collect()] == ["M1_K1"]
 
 
-def test_semi_filter(spark):
-    a, b = _ab(spark)
-    valid = count_matched_keys(a, b)
-    assert semi_filter(a, valid).count() == 2
-    assert semi_filter(b, valid).count() == 2
-
-
 def test_positional_align_pairs_by_rank(spark):
-    a, b = _ab(spark)
-    valid = count_matched_keys(a, b)
-    aligned = positional_align(semi_filter(a, valid), semi_filter(b, valid))
-    rows = {(r.description_original, r.description_official) for r in aligned.collect()}
-    assert rows == {("apple", "APPLE_OFF"), ("banana", "BANANA_OFF")}
+    # only K1 is count-matched; its items pair by rank, 1-based
+    aligned = knowledge_aligned(*_raw_ab(spark), use_nfkc=False)
+    rows = {
+        (r.link_key, r.pos, r.original_description, r.official_description, r.ccc_code)
+        for r in aligned.collect()
+    }
+    assert rows == {
+        ("M1_K1", 1, "APPLE", "APPLE_OFF", "C1"),
+        ("M1_K1", 2, "BANANA", "BANANA_OFF", "C2"),
+    }
 
 
 def test_positional_align_ignores_gaps_in_order_values(spark):
     # ordinal rank matters, not the raw order values (10,30 ≡ 1,2)
     a = spark.createDataFrame(
-        [("K", 10, "first"), ("K", 30, "second")],
-        "link_key string, item_no int, description_original string",
+        [("M", "K", 10, "first"), ("M", "K", 30, "second")],
+        "mawb_no string, hawb_no string, item_no int, description_original string",
     )
     b = spark.createDataFrame(
-        [("K", 2, "SECOND"), ("K", 1, "FIRST")],
-        "link_key string, item_sequence int, description_official string",
+        [("M", "K", 2, "SECOND", "C2"), ("M", "K", 1, "FIRST", "C1")],
+        "mawb_no string, hawb_no string, item_sequence int,"
+        " description_official string, ccc_code string",
     )
     got = {
-        (r.description_original, r.description_official)
-        for r in positional_align(a, b).collect()
+        (r.pos, r.original_description, r.official_description)
+        for r in knowledge_aligned(a, b, use_nfkc=False).collect()
     }
-    assert got == {("first", "FIRST"), ("second", "SECOND")}
+    assert got == {(1, "FIRST", "FIRST"), (2, "SECOND", "SECOND")}
 
 
 def test_majority_vote_winner_and_tiebreak(spark):
@@ -98,37 +101,6 @@ def test_majority_vote_winner_and_tiebreak(spark):
         "shirt": ("POLO", "C1", 2),
         "cup": ("MUG", "C9", 1),
     }
-
-
-def test_majority_vote_strategies_agree(spark):
-    df = spark.createDataFrame(
-        [
-            ("shirt", "POLO", "C1"),
-            ("shirt", "POLO", "C1"),
-            ("shirt", "TEE", "C2"),
-            ("cup", "MUG", "C9"),
-            ("cup", "ZCUP", "C0"),
-        ],
-        "original_description string, official_description string, ccc_code string",
-    )
-    agg = sorted(map(tuple, majority_vote(df, strategy="agg").collect()))
-    win = sorted(map(tuple, majority_vote(df, strategy="window").collect()))
-    assert agg == win
-
-
-def test_knowledge_base_strategies_agree(spark, sf_dir):
-    from sea_express_customs_etl_spark.plans.knowledge import knowledge_base
-    from sea_express_customs_etl_spark.plans.standins import (
-        declared_table,
-        official_table,
-    )
-
-    a, b = declared_table(spark, sf_dir), official_table(spark, sf_dir)
-    arr = sorted(map(tuple, knowledge_base(a, b, use_nfkc=False).collect()))
-    win = sorted(
-        map(tuple, knowledge_base(a, b, use_nfkc=False, strategy="window").collect())
-    )
-    assert arr == win and len(arr) > 0
 
 
 def test_majority_vote_permutation_invariant(spark):

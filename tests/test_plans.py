@@ -112,3 +112,44 @@ def test_flagship_broadcasts_nothing_unexpected(spark, sf_dir):
     )
     assert "CartesianProduct" not in plan
     assert "CollectLimit" not in plan
+
+
+def _own_exchanges(df) -> int:
+    """Shuffle exchanges in ``df``'s executed plan, not counting those
+    under an InMemoryRelation: a persisted input (the stand-ins) keeps
+    the plan it was first cached with, which depends on the session
+    state at that moment, not on ``df``."""
+    n, skip = 0, None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        if skip is not None and depth > skip:
+            continue
+        skip = None
+        if node.startswith("InMemoryRelation"):
+            skip = depth
+        elif node.startswith("Exchange "):
+            n += 1
+    return n
+
+
+def test_flagship_exchange_counts(spark, sf_dir):
+    """The one link-align-vote plan keeps its shuffles: each side's
+    collect_list exchange on link_key is reused by the join (no
+    re-shuffle for the count match or the alignment), and the vote adds
+    two. The aligned-pairs session table's build has the aligned
+    frame's shape."""
+    from sea_express_customs_etl_spark.plans.knowledge import (
+        knowledge_aligned,
+        knowledge_base,
+    )
+    from sea_express_customs_etl_spark.plans.standins import (
+        declared_table,
+        official_table,
+    )
+    from sea_express_customs_etl_spark.queries.shared import _aligned
+
+    a, b = declared_table(spark, sf_dir), official_table(spark, sf_dir)
+    assert _own_exchanges(knowledge_base(a, b, use_nfkc=False)) == 4
+    assert _own_exchanges(knowledge_aligned(a, b, use_nfkc=False)) == 2
+    assert _own_exchanges(_aligned(spark, sf_dir)) == 2

@@ -14,6 +14,11 @@ A def is reached when its name is used, transitively, from a root:
 Reachability is by name, so two defs that share a name are reached
 together and the scan can miss dead code. A def reached only through
 a string (``getattr``) is not seen: name it in code.
+
+The same walk finds forks inside reached defs: a parameter whose
+default selects one branch and whose other branch no call in the
+package or a harness selects. Such a branch is a second implementation
+only tests reach, unless it is allowlisted as a test's reference.
 """
 
 from __future__ import annotations
@@ -71,11 +76,6 @@ TEST_REFERENCES: dict[str, str] = {
 # deleted together with those tests, a few tests per change, so each
 # removal stays reviewable: def -> the tests that go with it.
 DELETE_NEXT: dict[str, tuple[str, ...]] = {
-    "strip_dup_substrings": (
-        "tests/test_hygiene_substrings.py::test_strip_removes_merged_spans_exactly",
-        "tests/test_hygiene_substrings.py::test_strip_consistent_with_stats_single_island",
-        "tests/test_hygiene_substrings.py::test_strip_layout_invariant",
-    ),
     "compression_ratio": (
         "tests/test_jsonl_source.py::test_compression_ratio_signal",
         "tests/test_jsonl_source.py::test_compression_ratio_separates_prose_from_spam",
@@ -83,12 +83,6 @@ DELETE_NEXT: dict[str, tuple[str, ...]] = {
     "stream_jsonl_docs": (
         "tests/test_jsonl_source.py::test_stream_jsonl_matches_batch",
         "tests/test_jsonl_source.py::test_streaming_quality_gate_matches_batch",
-    ),
-    "write_partitioned": ("tests/test_layout.py::test_write_partitioned_prunes",),
-    "compact_parquet": ("tests/test_layout.py::test_compact_parquet",),
-    "upsert_parquet": ("tests/test_layout.py::test_upsert_parquet",),
-    "write_zordered": (
-        "tests/test_layout.py::test_write_zordered_files_cover_disjoint_z_ranges",
     ),
     "attach_binary_metadata": ("tests/test_multimodal.py::test_attach_binary_metadata",),
     "fake_image_features": (
@@ -109,6 +103,21 @@ DELETE_NEXT: dict[str, tuple[str, ...]] = {
     "extract_json_field": (
         "tests/test_jsonops.py::test_extract_json_field_null_on_malformed",
     ),
+}
+
+# (c) Forks: parameters whose default selects one branch of their
+# function (see ``_forks``) while no call in the package or a harness
+# passes anything else. The other branch is kept only as the reference
+# a test checks the default path against: (def, parameter) -> that test
+# (or the fixture that selects it).
+FORK_REFERENCES: dict[tuple[str, str], str] = {
+    ("embedding_near_dups", "strategy"): "tests/test_misc_ops.py::test_embedding_near_dups_blocked_matches_fold",
+    ("kcore", "converge"): "tests/test_graph.py::test_kcore_peel_cascade_golden",
+    ("profile_table", "exact_ndv"): "tests/test_profiling.py::test_profile_approx_no_expand",
+    ("stratified_exact", "two_phase"): "tests/test_textstats.py::test_stratified_exact_two_phase_skew_invariance",
+    ("ivfpq_topk", "train_codebook"): "tests/test_pq_mix.py::test_ivfpq_nprobe_recall_monotone_and_nprobe1_bit_stable",
+    # the reader's inline-string xlsx fixture
+    ("write_xlsx", "inline"): "tests/test_sources.py::xlsx_dir",
 }
 
 _CITE = re.compile(r"(src/\w+\.py|SURVEY\.md):\d+(-\d+)?(,\d+(-\d+)?)*")
@@ -174,17 +183,24 @@ def _closure(uses: dict[str, set[str]], roots: set[str]) -> set[str]:
     return reached
 
 
-def _test_uses(test_id: str) -> set[str] | None:
-    """Names used by the test ``tests/<file>.py::<function>``, or None when
-    it does not exist."""
+def _test_def(test_id: str) -> ast.FunctionDef | None:
+    """The function ``tests/<file>.py::<function>``, or None when it
+    does not exist."""
     file, _, func = test_id.partition("::")
     path = ROOT / file
     if not path.is_file():
         return None
     for stmt in ast.parse(path.read_text()).body:
         if isinstance(stmt, ast.FunctionDef) and stmt.name == func:
-            return _names([stmt])
+            return stmt
     return None
+
+
+def _test_uses(test_id: str) -> set[str] | None:
+    """Names used by the test ``tests/<file>.py::<function>``, or None when
+    it does not exist."""
+    fn = _test_def(test_id)
+    return None if fn is None else _names([fn])
 
 
 KEPT = REFERENCE_BACKED.keys() | TEST_REFERENCES.keys() | DELETE_NEXT.keys()
@@ -230,4 +246,154 @@ def test_named_tests_exist_and_use_the_def():
         for name, test in named
         if name not in (_test_uses(test) or set())
     ]
+    assert not bad
+
+
+def _params(fn) -> list[str]:
+    """Positional parameter names as a call binds them (``self``/``cls``
+    are bound by the attribute access)."""
+    names = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+    return names[1:] if names[:1] in (["self"], ["cls"]) else names
+
+
+def _arg_names(fn) -> set[str]:
+    a = fn.args
+    return {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+
+
+def _defaults(fn) -> dict[str, object]:
+    """Parameter -> its literal default."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    pairs += [(k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return {p.arg: d.value for p, d in pairs if isinstance(d, ast.Constant)}
+
+
+def _is_str_literal(node: ast.expr) -> bool:
+    elts = node.elts if isinstance(node, (ast.Tuple, ast.List, ast.Set)) else [node]
+    return bool(elts) and all(
+        isinstance(e, ast.Constant) and isinstance(e.value, str) for e in elts
+    )
+
+
+def _forks(fn) -> dict[str, object]:
+    """Parameters of ``fn`` that pick a branch, with their defaults: a
+    str default compared by ``==``/``!=``/``in`` against a string
+    literal, or a bool default tested by an ``if`` or a conditional
+    expression."""
+    out: dict[str, object] = {}
+    tests = [n.test for n in ast.walk(fn) if isinstance(n, (ast.If, ast.IfExp))]
+    compares = [
+        (n.left, n.comparators[0])
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Compare)
+        and len(n.ops) == 1
+        and isinstance(n.ops[0], (ast.Eq, ast.NotEq, ast.In, ast.NotIn))
+    ]
+    for p, d in _defaults(fn).items():
+        if isinstance(d, bool):
+            if any(
+                isinstance(x, ast.Name) and x.id == p for t in tests for x in ast.walk(t)
+            ):
+                out[p] = d
+        elif isinstance(d, str):
+            if any(
+                (getattr(x, "id", None) == p and _is_str_literal(y))
+                for pair in compares
+                for x, y in (pair, pair[::-1])
+            ):
+                out[p] = d
+    return out
+
+
+@functools.cache
+def _fork_scan() -> tuple[dict[tuple[str, str], tuple[object, str]], set[tuple[str, str]]]:
+    """((def, parameter) -> (default, ``module:line``) for every fork,
+    the forks some call selects a non-default branch of). A call passes
+    a literal, or forwards a parameter of its enclosing function under
+    the same name, which then selects what that function's callers
+    select."""
+    defs: dict[str, list] = {}
+    forks: dict[tuple[str, str], tuple[object, str]] = {}
+    trees = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        trees.append(tree)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            defs.setdefault(fn.name, []).append(fn)
+            for p, d in _forks(fn).items():
+                forks[(fn.name, p)] = (d, f"{path.relative_to(ROOT).as_posix()}:{fn.lineno}")
+    trees += [ast.parse(path.read_text()) for path in HARNESS]
+
+    literals: dict[tuple[str, str], set] = {}  # (def, param) -> literals passed
+    forwards: dict[tuple[str, str], set[tuple[str, str]]] = {}  # callee -> callers
+
+    def visit(node: ast.AST, scopes: tuple) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scopes = (*scopes, node)
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            for fn in defs.get(name, ()):
+                bound = list(zip(_params(fn), node.args))
+                bound += [(k.arg, k.value) for k in node.keywords if k.arg]
+                for p, v in bound:
+                    if isinstance(v, ast.Constant):
+                        literals.setdefault((name, p), set()).add(v.value)
+                    elif isinstance(v, ast.Name) and v.id == p:
+                        owner = next(
+                            (s for s in reversed(scopes) if p in _arg_names(s)), None
+                        )
+                        if owner is not None:
+                            forwards.setdefault((name, p), set()).add((owner.name, p))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scopes)
+
+    for tree in trees:
+        visit(tree, ())
+
+    def selects(key: tuple[str, str], default: object, seen: frozenset) -> bool:
+        if any(v != default for v in literals.get(key, ())):
+            return True
+        return any(
+            selects(caller, default, seen | {key})
+            for caller in forwards.get(key, ())
+            if caller not in seen
+        )
+
+    selected = {key for key, (d, _) in forks.items() if selects(key, d, frozenset())}
+    return forks, selected
+
+
+def test_every_fork_is_selected_or_allowlisted():
+    """A parameter that forks its function into a second implementation
+    no query, harness or benchmark selects is a parallel implementation
+    only tests reach: delete the branch, or allowlist it with the test
+    that uses it as the reference."""
+    forks, selected = _fork_scan()
+    unselected = sorted(
+        f"{site} {name}({param}={default!r})"
+        for (name, param), (default, site) in forks.items()
+        if (name, param) not in selected and (name, param) not in FORK_REFERENCES
+    )
+    assert not unselected, (
+        "forks no caller selects (delete the branch, or allowlist with the "
+        "test that uses it as a reference):\n" + "\n".join(unselected)
+    )
+
+
+def test_fork_references_are_unselected_forks_their_tests_select():
+    forks, selected = _fork_scan()
+    stale = sorted(k for k in FORK_REFERENCES if k not in forks or k in selected)
+    assert not stale, f"allowlisted but not an unselected fork: {stale}"
+    bad = []
+    for (name, param), test in FORK_REFERENCES.items():
+        fn = _test_def(test)
+        if fn is None or name not in _names([fn]) or param not in {
+            k.arg for k in ast.walk(fn) if isinstance(k, ast.keyword)
+        }:
+            bad.append((name, param, test))
     assert not bad

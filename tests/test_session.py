@@ -1,8 +1,14 @@
 """The Python/JVM boundary confs ``get_spark`` sets: Python workers fork
-from the engine's worker daemon, and DataFrame call-site capture is off
-without losing the analysis error that names a bad column."""
+from the engine's worker daemon and import the engine wherever the
+driver was started, and DataFrame call-site capture is off without
+losing the analysis error that names a bad column."""
 
 from __future__ import annotations
+
+import os
+from pathlib import Path
+import subprocess
+import sys
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -66,3 +72,46 @@ def test_misspelled_column_still_names_it(spark, tmp_path):
     cargo = declared_cargo(read_manifests_raw(spark, str(tmp_path)))
     with pytest.raises(AnalysisException, match="hawb_nmuber"):
         cargo.select("hawb_nmuber")
+
+
+_OUTSIDE_THE_REPO = """
+import sys
+
+sys.path.insert(0, {root!r})
+from sea_express_customs_etl_spark.session import get_spark
+
+
+def probe(batches):
+    import sea_express_customs_etl_spark  # noqa: F401
+
+    yield from batches
+
+
+spark = get_spark(
+    master="local[2]",
+    shuffle_partitions=2,
+    extra_conf={{"spark.sql.warehouse.dir": {wh!r}}},
+)
+print("ROWS", spark.range(4).mapInPandas(probe, "id long").count())
+spark.stop()
+"""
+
+
+def test_workers_import_the_engine_from_another_cwd(tmp_path):
+    """A driver started outside the repo root with no ``PYTHONPATH``
+    (the package put on ``sys.path`` by the script itself): the workers
+    still find the package, through ``spark.executorEnv.PYTHONPATH``."""
+    root = str(Path(__file__).resolve().parents[1])
+    script = tmp_path / "job.py"
+    script.write_text(_OUTSIDE_THE_REPO.format(root=root, wh=str(tmp_path / "wh")))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "ROWS 4" in out.stdout, out.stderr[-2000:]

@@ -14,11 +14,9 @@ def test_edge_support_k4_and_orientation_invariance(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {(r.a, r.b): r.support for r in edge_support(df).collect()}
     assert got == {(a, b): 2 for a, b in edges}
-    can = {
-        (r.a, r.b): r.support
-        for r in edge_support(df, orient="canonical").collect()
-    }
-    assert can == got
+    # both directions of every edge: the same support per canonical edge
+    both = df.unionByName(df.selectExpr("dst AS src", "src AS dst"))
+    assert {(r.a, r.b): r.support for r in edge_support(both).collect()} == got
 
 
 def test_edge_support_bridge_absent(spark):
