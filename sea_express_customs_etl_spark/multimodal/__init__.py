@@ -1,12 +1,9 @@
 """Multimodal (image/audio/video) column plumbing."""
 
 from sea_express_customs_etl_spark.multimodal.binary_ops import (  # noqa: F401
-    attach_binary_metadata,
     decode_images,
     decode_pnm,
     encode_ppm,
     extract_ppm_frames,
-    fake_image_features,
     resize_images,
-    sample_frames,
 )

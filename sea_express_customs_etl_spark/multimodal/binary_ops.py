@@ -17,14 +17,11 @@ Decode story, honestly split by what this container can do:
   such rows surface ``decode_error`` (per-row containment, the only
   scale-safe behavior) rather than failing the stage; with Pillow
   installed the same kernel decodes them.
-* ``fake_image_features`` stays the deterministic stand-in for a
-  learned embedding kernel (swap the kernel, keep the plan).
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,53 +45,6 @@ _MAGIC = (
     (b"P6", "ppm"),
     (b"P5", "pgm"),
 )
-
-
-def attach_binary_metadata(df: DataFrame, binary_col: str = "payload") -> DataFrame:
-    """Typed metadata columns for an opaque binary payload: byte length,
-    content digest, magic-byte format sniff. Pure Catalyst expressions
-    (no Python) — cheap enough to run inline at ingest."""
-    b = F.col(binary_col)
-    fmt = F.lit("unknown")
-    for magic, name in reversed(_MAGIC):
-        fmt = F.when(
-            F.expr(f"substring({binary_col}, 1, {len(magic)})") == F.lit(magic),
-            F.lit(name),
-        ).otherwise(fmt)
-    return df.withColumns(
-        {
-            "media_length": F.length(b).alias("media_length"),
-            "media_digest": F.md5(b),
-            "media_format": fmt,
-        }
-    )
-
-
-def fake_image_features(
-    df: DataFrame,
-    binary_col: str = "payload",
-    id_col: str = "media_id",
-    dim: int = 8,
-) -> DataFrame:
-    """Deterministic stand-in for an image-embedding kernel: features
-    derived from the content digest, as float32 in [0, 1). The
-    mapInPandas shape (schema, Arrow batches, output arity) is exactly
-    what a real encoder stage uses — swap the kernel, keep the plan."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for content in pdf[binary_col]:
-                digest = hashlib.md5(bytes(content)).digest()
-                rng = np.frombuffer((digest * ((4 * dim) // 16 + 1))[: 4 * dim], dtype=np.uint32)
-                feats.append((rng % 1_000_003).astype(np.float32) / 1_000_003.0)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "features": [f.tolist() for f in feats]}
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel, f"{id_col} long, features array<float>"
-    )
 
 
 def _parse_pnm_header(buf: bytes) -> tuple[str, int, int, int, int]:
@@ -283,24 +233,6 @@ def extract_ppm_frames(
 
     return df.select(id_col, binary_col).mapInPandas(
         kernel, f"{id_col} long, frame_idx int, frame binary"
-    )
-
-
-def sample_frames(
-    df: DataFrame,
-    n_frames_col: str = "n_frames",
-    every_n: int = 10,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Video frame-sampling plan shape: one row per sampled frame index
-    (0, n, 2n, …) per media item — the explode pattern a real
-    frame-decoder UDTF plugs into. Frame extraction itself is the
-    stubbed kernel; the sampled index stream is real."""
-    return df.select(
-        F.col(id_col),
-        F.explode(
-            F.sequence(F.lit(0), F.col(n_frames_col) - 1, F.lit(every_n))
-        ).alias("frame_idx"),
     )
 
 
@@ -494,6 +426,42 @@ def decode_wav(
     return df.select(id_col, binary_col).mapInPandas(kernel, _WAV_SCHEMA)
 
 
+def _per_payload(
+    df: DataFrame,
+    one: Callable[[bytes], tuple],
+    cols: tuple[str, ...],
+    binary_col: str,
+    id_col: str,
+) -> DataFrame:
+    """Arrow-batched ``mapInPandas`` of a fingerprint kernel:
+    ``one(payload)`` returns one tuple per row — the bigint values of
+    ``cols[:-1]`` and, last, the ``cols[-1]`` error string (NULL values
+    with it, so a bad payload is contained to its row). Map-only: the
+    decode cost IS the operator; downstream dedup touches only the
+    (id, fingerprint) rows. Output: id, *cols."""
+    *vals, err = cols
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [one(bytes(c)) for c in pdf[binary_col]]
+            cols_out = [list(x) for x in zip(*out)] if out else [[]] * len(cols)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    **{
+                        c: pd.array(v, dtype="Int64")
+                        for c, v in zip(vals, cols_out)
+                    },
+                    err: cols_out[-1],
+                }
+            )
+
+    schema = ", ".join(
+        [f"{id_col} long", *(f"{c} long" for c in vals), f"{err} string"]
+    )
+    return df.select(id_col, binary_col).mapInPandas(kernel, schema)
+
+
 # --------------------------------------------------------------------------
 # perceptual image dedup: average-hash (aHash) over REAL decoded pixels
 # — the multimodal × dedup crossover a training-data pipeline runs to
@@ -563,14 +531,12 @@ def image_ahash(
     ``(r+g+b)//3`` (PPM), bit_k = 1 iff ``p_k·64 > Σp`` (strict,
     division-free). The hash ships as TWO 32-bit words (ahash_hi bits
     63..32, ahash_lo bits 31..0) — no int64 sign games in either
-    engine. Undecodable rows surface ``ahash_error`` per row.
-
-    Scale: Arrow-batched ``mapInPandas``, map-only — the decode cost IS
-    the operator; downstream dedup touches only the 2-word hashes."""
+    engine. Undecodable rows surface ``ahash_error`` per row
+    (:func:`_per_payload`)."""
 
     def one(content: bytes) -> tuple:
         try:
-            arr, _ = decode_pnm(bytes(content))
+            arr, _ = decode_pnm(content)
             gray = (
                 arr[:, :, 0].astype(np.int64)
                 if arr.shape[2] == 1
@@ -588,92 +554,8 @@ def image_ahash(
         except Exception as e:
             return (None, None, str(e)[:200])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [one(c) for c in pdf[binary_col]]
-            hi, lo, err = (list(x) for x in zip(*out)) if out else ([],) * 3
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "ahash_hi": pd.array(hi, dtype="Int64"),
-                    "ahash_lo": pd.array(lo, dtype="Int64"),
-                    "ahash_error": err,
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel, f"{id_col} long, ahash_hi long, ahash_lo long, ahash_error string"
-    )
-
-
-def ahash_hamming_pairs(
-    hashes: DataFrame,
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """Near-dup image pairs by banded LSH over the 64-bit aHash: the
-    four 16-bit slices are the band keys (pigeonhole: any pair within
-    ``max_hamming < bands`` bit flips shares an untouched band — EXACT,
-    not approximate, for the default parameters), verify =
-    ``bit_count(xor)`` over both words. Same shape as
-    ``dedup.simhash_hamming_pairs``: bucket self-join on tiny band
-    buckets, popcount verify on candidates only."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= bands={bands} loses the "
-            "pigeonhole exactness guarantee"
-        )
-    import pyspark.sql.functions as F
-
-    mask = (1 << 16) - 1
-    slices = [
-        F.col("ahash_lo").bitwiseAND(F.lit(mask)),
-        F.shiftright(F.col("ahash_lo"), 16).bitwiseAND(F.lit(mask)),
-        F.col("ahash_hi").bitwiseAND(F.lit(mask)),
-        F.shiftright(F.col("ahash_hi"), 16).bitwiseAND(F.lit(mask)),
-    ]
-    banded = hashes.filter(F.col("ahash_error").isNull()).select(
-        id_col,
-        "ahash_hi",
-        "ahash_lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("_band"), s.alias("_slice"))
-                    for b, s in enumerate(slices[:bands])
-                ]
-            )
-        ).alias("_bk"),
-    ).select(id_col, "ahash_hi", "ahash_lo", "_bk._band", "_bk._slice")
-    left = banded.select(
-        F.col(id_col).alias("id_a"),
-        F.col("ahash_hi").alias("_ha"),
-        F.col("ahash_lo").alias("_la"),
-        "_band",
-        "_slice",
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"),
-        F.col("ahash_hi").alias("_hb"),
-        F.col("ahash_lo").alias("_lb"),
-        "_band",
-        "_slice",
-    )
-    return (
-        left.join(right, ["_band", "_slice"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_ha", "_la", "_hb", "_lb")
-        .distinct()
-        .withColumn(
-            "hamming",
-            (
-                F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb")))
-                + F.bit_count(F.col("_la").bitwiseXOR(F.col("_lb")))
-            ).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return _per_payload(
+        df, one, ("ahash_hi", "ahash_lo", "ahash_error"), binary_col, id_col
     )
 
 
@@ -752,15 +634,13 @@ def audio_fingerprint(
     differential coding that makes the fingerprint invariant to
     uniform attenuation (both sides of every comparison scale
     together). Pure integers end-to-end → hash-portable. Short or
-    malformed payloads surface ``fp_error`` per row.
-
-    Scale: Arrow-batched ``mapInPandas``, map-only; downstream dedup
-    touches only (id, fp) rows."""
+    malformed payloads surface ``fp_error`` per row
+    (:func:`_per_payload`)."""
     need = n_windows * win
 
     def one(buf: bytes) -> tuple:
         try:
-            _rate, n_ch, _bits, samples = _parse_wav(bytes(buf))
+            _rate, n_ch, _bits, samples = _parse_wav(buf)
             if n_ch != 1:
                 return (None, "multichannel unsupported")
             if len(samples) < need:
@@ -772,76 +652,7 @@ def audio_fingerprint(
         except Exception as exc:
             return (None, str(exc)[:200])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [one(c) for c in pdf[binary_col]]
-            fp, err = (list(x) for x in zip(*out)) if out else ([], [])
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "fp": pd.array(fp, dtype="Int64"),
-                    "fp_error": err,
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel, f"{id_col} long, fp long, fp_error string"
-    )
-
-
-def audio_fp_hamming_pairs(
-    fps: DataFrame,
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup audio pairs over the 31-bit fingerprint: 4 band slices
-    (8+8+8+7 bits) as LSH keys, ``bit_count(xor)`` verify — exact for
-    ``max_hamming < 4`` by pigeonhole, same contract as the simhash
-    and aHash siblings. Output: id_a < id_b, hamming."""
-    if max_hamming >= 4:
-        raise ValueError("max_hamming must be < 4 bands for exactness")
-    import pyspark.sql.functions as F
-
-    slices = [
-        F.col("fp").bitwiseAND(F.lit(0xFF)),
-        F.shiftright(F.col("fp"), 8).bitwiseAND(F.lit(0xFF)),
-        F.shiftright(F.col("fp"), 16).bitwiseAND(F.lit(0xFF)),
-        F.shiftright(F.col("fp"), 24).bitwiseAND(F.lit(0x7F)),
-    ]
-    banded = (
-        fps.filter(F.col("fp_error").isNull())
-        .select(
-            id_col,
-            "fp",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("_band"), s.alias("_slice"))
-                        for b, s in enumerate(slices)
-                    ]
-                )
-            ).alias("_bk"),
-        )
-        .select(id_col, "fp", "_bk._band", "_bk._slice")
-    )
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col("fp").alias("_fa"), "_band", "_slice"
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col("fp").alias("_fb"), "_band", "_slice"
-    )
-    return (
-        left.join(right, ["_band", "_slice"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_fa", "_fb")
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return _per_payload(df, one, ("fp", "fp_error"), binary_col, id_col)
 
 
 def synth_video_scenes(
@@ -999,13 +810,11 @@ def video_fingerprint(
     shifts (both sides of every comparison move together; pixels that
     wrap at the 251 modulus can flip a near-tie bit, which the banded
     ≤3-hamming verify absorbs — the audio attenuation contract).
-    Short/malformed payloads surface ``fp_error`` per row. Map-only
-    Arrow ``mapInPandas``; downstream dedup touches (id, fp) rows
-    only."""
+    Short/malformed payloads surface ``fp_error`` per row
+    (:func:`_per_payload`)."""
 
     def one(buf: bytes) -> tuple:
         try:
-            buf = bytes(buf)
             pos, sums = 0, []
             while pos < len(buf) and len(sums) < n_frames:
                 arr, consumed = decode_pnm(buf[pos:])
@@ -1019,74 +828,7 @@ def video_fingerprint(
         except Exception as exc:
             return (None, str(exc)[:200])
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [one(c) for c in pdf[binary_col]]
-            fp, err = (list(x) for x in zip(*out)) if out else ([], [])
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "fp": pd.array(fp, dtype="Int64"),
-                    "fp_error": err,
-                }
-            )
-
-    return df.select(id_col, binary_col).mapInPandas(
-        kernel, f"{id_col} long, fp long, fp_error string"
-    )
-
-
-def video_fp_hamming_pairs(
-    fps: DataFrame,
-    id_col: str = "media_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup video pairs over the 32-bit temporal fingerprint:
-    4×8-bit band slices as LSH keys, ``bit_count(xor)`` verify — exact
-    for ``max_hamming < 4`` by pigeonhole, the aHash/audio-fp
-    contract. Output: id_a < id_b, hamming."""
-    if max_hamming >= 4:
-        raise ValueError("max_hamming must be < 4 bands for exactness")
-    import pyspark.sql.functions as F
-
-    slices = [
-        F.shiftright(F.col("fp"), 8 * b).bitwiseAND(F.lit(0xFF))
-        for b in range(4)
-    ]
-    banded = (
-        fps.filter(F.col("fp_error").isNull())
-        .select(
-            id_col,
-            "fp",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("_band"), s.alias("_slice"))
-                        for b, s in enumerate(slices)
-                    ]
-                )
-            ).alias("_bk"),
-        )
-        .select(id_col, "fp", "_bk._band", "_bk._slice")
-    )
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col("fp").alias("_fa"), "_band", "_slice"
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col("fp").alias("_fb"), "_band", "_slice"
-    )
-    return (
-        left.join(right, ["_band", "_slice"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_fa", "_fb")
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return _per_payload(df, one, ("fp", "fp_error"), binary_col, id_col)
 
 
 # --------------------------------------------------------------------------

@@ -10,6 +10,10 @@ the whole plan JVM-side:
   signatures → bucket self-join for candidate pairs
 * n-gram Jaccard verification — exact set overlap on candidate pairs
 * SimHash — per-token hash bit-vote aggregated into a compact signature
+* banded Hamming search — band slices → bucket self-join → popcount
+  verify, the one pair search behind every bit-signature near-dup
+  signal (SimHash here, the image/audio/video fingerprints of
+  ``multimodal/binary_ops.py``)
 
 Portability note: all hashing is ``md5`` (identical hex output in
 Spark, DuckDB, Python) so every operator is oracle-checkable.
@@ -711,6 +715,105 @@ def simhash(
     return agg.select(F.col(id_col), sig.cast("bigint").alias("simhash"))
 
 
+def band_slices(
+    sigs: DataFrame, sig_col: str, num_bits: int, bands: int, *keep: str
+) -> DataFrame:
+    """The banding step of bit-sampling LSH: one row per (signature,
+    band) carrying ``keep``, ``_band`` and ``_slice`` — band ``b`` is
+    bits ``b·r .. b·r + r − 1`` of the ``num_bits``-bit ``sig_col``
+    (``r = num_bits // bands``). Arithmetic shift then mask, so a
+    64-bit signature's sign bit lands in its top slice unextended."""
+    if num_bits % bands:
+        raise ValueError("bands must divide num_bits")
+    r = num_bits // bands
+    mask = (1 << r) - 1
+    return sigs.select(
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("_band"),
+                        F.shiftright(F.col(sig_col), b * r)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("_slice"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("_bk"),
+    ).select(*keep, "_bk._band", "_bk._slice")
+
+
+def hamming_pairs(
+    sigs: DataFrame,
+    sig_col: str,
+    num_bits: int,
+    bands: int,
+    max_hamming: int,
+    id_col: str,
+) -> DataFrame:
+    """Pairs of rows whose ``num_bits``-bit signatures lie within
+    ``max_hamming`` bit flips, found via banded bucketing instead of an
+    all-pairs compare — the one candidate-then-verify search behind
+    every near-duplicate signal here (text SimHash, image aHash, audio
+    and video fingerprints).
+
+    The signature is cut into ``bands`` equal slices
+    (:func:`band_slices`); two rows become a candidate pair iff they
+    agree on at least one whole slice, and candidates are then verified
+    with an exact popcount (``bit_count(xor)``). By pigeonhole, any
+    pair within Hamming distance ``bands - 1`` must agree on some
+    slice, so with ``max_hamming < bands`` the banded plan returns
+    EXACTLY the pairs an all-pairs scan would — which is what the
+    DuckDB oracles run. ``max_hamming >= bands`` would silently lose
+    pairs; rejected. A NULL signature (an undecodable payload) never
+    pairs.
+
+    Output: id_a < id_b, hamming (int).
+
+    Scale shape: the join shuffles on (band, slice-value) buckets,
+    Σ bucket² work, not n²; each side carries only (id, signature).
+    Hot buckets (mass-produced boilerplate hashing to one signature)
+    are the same skew case as MinHash-LSH: cap or salt the bucket key
+    at ingest if a bucket exceeds task memory.
+    """
+    if max_hamming >= bands:
+        raise ValueError(
+            "banded search is only exact for max_hamming < bands "
+            f"(got max_hamming={max_hamming}, bands={bands})"
+        )
+    banded = band_slices(
+        sigs.filter(F.col(sig_col).isNotNull()),
+        sig_col,
+        num_bits,
+        bands,
+        id_col,
+        sig_col,
+    )
+    a, b = (
+        banded.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col(sig_col).alias(f"_sig_{s}"),
+            "_band",
+            "_slice",
+        )
+        for s in "ab"
+    )
+    return (
+        a.join(b, ["_band", "_slice"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", "_sig_a", "_sig_b")
+        .distinct()
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("_sig_a").bitwiseXOR(F.col("_sig_b"))).cast("int"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
+
+
 def simhash_hamming_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -719,80 +822,16 @@ def simhash_hamming_pairs(
     bands: int = 4,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance, found via
-    banded bucketing instead of an all-pairs compare (the classic
-    bit-sampling LSH on top of :func:`simhash`).
-
-    The ``num_bits`` signature is cut into ``bands`` equal slices; two
-    documents become a candidate pair iff they agree on at least one
-    whole slice, and candidates are then verified with an exact
-    popcount (``bit_count(xor)``). By pigeonhole, any pair within
-    Hamming distance ``bands - 1`` must agree on some slice, so with
-    ``max_hamming < bands`` the banded plan returns EXACTLY the pairs
-    an all-pairs scan would — which is what the DuckDB oracle runs.
-    ``max_hamming >= bands`` would silently lose pairs; rejected.
-
+    """Near-duplicate document pairs by SimHash Hamming distance: the
+    :func:`hamming_pairs` search over :func:`simhash` signatures.
     Output: id_a < id_b, hamming (int).
 
-    Scale shape: the signature frame is (id, bigint) — two orders of
-    magnitude narrower than the corpus — and is persisted so the
-    self-join's two branches don't recompute the token-vote aggregate;
-    the join shuffles on (band, slice-value) buckets, Σ bucket² work,
-    not n². Hot buckets (mass-produced boilerplate hashing to one
-    signature) are the same skew case as MinHash-LSH: cap or salt the
-    bucket key at ingest if a bucket exceeds task memory.
+    The signature frame is (id, bigint) — two orders of magnitude
+    narrower than the corpus — and is persisted so the self-join's two
+    branches don't recompute the token-vote aggregate.
     """
-    if num_bits % bands:
-        raise ValueError("bands must divide num_bits")
-    if max_hamming >= bands:
-        raise ValueError(
-            "banded search is only exact for max_hamming < bands "
-            f"(got max_hamming={max_hamming}, bands={bands})"
-        )
-    r = num_bits // bands
-    mask = (1 << r) - 1
     sig = tracked_persist(simhash(df, text_col, id_col, num_bits))
-    banded = sig.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("_band"),
-                        F.shiftright(F.col("simhash"), b * r)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("_slice"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bk"),
-    ).select(id_col, "simhash", "_bk._band", "_bk._slice")
-    left = banded.select(
-        F.col(id_col).alias("id_a"),
-        F.col("simhash").alias("_sh_a"),
-        "_band",
-        "_slice",
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"),
-        F.col("simhash").alias("_sh_b"),
-        "_band",
-        "_slice",
-    )
-    return (
-        left.join(right, ["_band", "_slice"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sh_a", "_sh_b")
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return hamming_pairs(sig, "simhash", num_bits, bands, max_hamming, id_col)
 
 
 # --------------------------------------------------------------------------

@@ -109,24 +109,6 @@ def dsir_scores(
     )
 
 
-def dsir_select(
-    df: DataFrame,
-    weights: DataFrame,
-    keep: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 1024,
-) -> DataFrame:
-    """Keep the ``keep`` most target-like documents, deterministic
-    tie-break by id. At 100 TB this is TakeOrderedAndProject on a
-    (id, bigint) frame — never a global sort of the corpus; join the
-    returned manifest back to the corpus to materialize the slice."""
-    scores = dsir_scores(df, weights, text_col, id_col, buckets)
-    return scores.orderBy(
-        F.col("dsir_score").desc(), F.col(id_col)
-    ).limit(keep)
-
-
 def dsir_pipeline(
     raw: DataFrame,
     target: DataFrame,

@@ -25,19 +25,8 @@ interval length × event rate (physics), not corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
-
-
-def extract_json_field(
-    df: DataFrame,
-    json_col: str,
-    field: str,
-    cast: str = "bigint",
-) -> Column:
-    """`get_json_object` extraction of a scalar ``$.field`` with a
-    `try_cast`-semantics cast (NULL on malformed, never an error)."""
-    return F.get_json_object(F.col(json_col), f"$.{field}").try_cast(cast)
 
 
 def props_rollup(

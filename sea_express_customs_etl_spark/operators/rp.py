@@ -46,6 +46,7 @@ import pyspark.sql.functions as F
 
 from ..plans.cache import tracked_persist
 
+from sea_express_customs_etl_spark.operators.dedup import band_slices
 from sea_express_customs_etl_spark.operators.similarity import cosine, with_norm
 
 MICRO = 1_000_000
@@ -143,7 +144,8 @@ def srp_near_dups(
     salt: str = "rp",
 ) -> DataFrame:
     """Cosine near-duplicate pairs via SRP-LSH: candidates share at
-    least one of ``bands`` signature slices; candidates are verified
+    least one of ``bands`` signature slices (:func:`..dedup.band_slices`,
+    the Hamming search's banding); candidates are verified
     with the exact (rounded-6dp) cosine and kept at ≥ ``threshold``.
     Output: id_a < id_b, cosine.
 
@@ -155,27 +157,8 @@ def srp_near_dups(
     (signatures are bit-portable), so the query checks the composed
     semantics, not a lucky subset.
     """
-    if n_planes % bands:
-        raise ValueError("bands must divide n_planes")
-    r = n_planes // bands
-    mask = (1 << r) - 1
     sig = tracked_persist(srp_signatures(df, n_planes, dim, vec_col, id_col, salt))
-    banded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("_band"),
-                        F.shiftright(F.col("srp"), b * r)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("_slice"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_bk"),
-    ).select(id_col, "_bk._band", "_bk._slice")
+    banded = band_slices(sig, "srp", n_planes, bands, id_col)
     cands = (
         banded.select(F.col(id_col).alias("id_a"), "_band", "_slice")
         .join(

@@ -59,13 +59,14 @@ def _h48(value: Column, salt: str) -> Column:
     ).cast("bigint")
 
 
-def hll_registers(
-    df: DataFrame, value_col: str, salt: str = ""
+def _hll_registers(
+    df: DataFrame, value_col: str, salt: str, *groups: str
 ) -> DataFrame:
-    """HyperLogLog register table over a value column: 256 rows of
-    (bucket, max_rank). Duplicate values are harmless (``max`` is
-    idempotent), so no pre-distinct — the one shuffle carries 256
-    partial maxima per map task, never the values.
+    """HyperLogLog register table over a value column: per ``groups``
+    value, 256 rows of (bucket, max_rank). Duplicate values are
+    harmless (``max`` is idempotent), so no pre-distinct — the one
+    shuffle is keyed on (groups, bucket) and carries only partial
+    maxima, never the values.
 
     rank = 1-based position of the first set bit in the 40-bit window
     (0 window → 41) = 41 − bit_length(w), computed as the LENGTH of
@@ -79,10 +80,18 @@ def hll_registers(
         F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
     )
     return (
-        df.select(bucket.alias("bucket"), rank.cast("int").alias("_rank"))
-        .groupBy("bucket")
+        df.select(*groups, bucket.alias("bucket"), rank.cast("int").alias("_rank"))
+        .groupBy(*groups, "bucket")
         .agg(F.max("_rank").alias("max_rank"))
     )
+
+
+def hll_registers(
+    df: DataFrame, value_col: str, salt: str = ""
+) -> DataFrame:
+    """The 256-register HyperLogLog state of a value column:
+    (bucket, max_rank)."""
+    return _hll_registers(df, value_col, salt)
 
 
 def hll_stats(df: DataFrame, value_col: str, salt: str = "") -> DataFrame:
@@ -337,24 +346,8 @@ def hll_registers_by(
     """Per-GROUP HyperLogLog register tables — the partitioned form of
     :func:`hll_registers`: one 256-register state per group value, so
     per-domain/per-language distinct counts ship as |groups|·256
-    mergeable integer rows instead of |groups| exact distinct scans.
-    Same bucket/rank derivation; the one shuffle is keyed on
-    (group, bucket) and carries only partial maxima."""
-    h = _h48(F.col(value_col), salt)
-    bucket = (h % F.lit(HLL_M)).cast("int")
-    w = (h / F.lit(HLL_M)).cast("bigint")
-    rank = F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-        F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-    )
-    return (
-        df.select(
-            F.col(group_col),
-            bucket.alias("bucket"),
-            rank.cast("int").alias("_rank"),
-        )
-        .groupBy(group_col, "bucket")
-        .agg(F.max("_rank").alias("max_rank"))
-    )
+    mergeable integer rows instead of |groups| exact distinct scans."""
+    return _hll_registers(df, value_col, salt, group_col)
 
 
 def hll_pair_overlap(

@@ -428,52 +428,6 @@ def vocab_top_tokens(
     ).limit(k)
 
 
-def compression_ratio(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", level: int = 6
-) -> DataFrame:
-    """Per-document deflate compression ratio — the classic
-    machine-generated/boilerplate detector (highly repetitive text
-    compresses far below natural prose; the signal used alongside the
-    Gopher gates in public corpus-curation recipes).
-
-    zlib is not expressible in Catalyst, so this is an Arrow-batched
-    ``mapInPandas`` kernel — bytes cross the Python boundary once per
-    batch, columnar, and the op stays map-only (zero shuffles; the
-    schema is declared so Catalyst can prune everything else away).
-    Output: id, n_bytes, n_compressed, ratio (compressed/raw, 4dp;
-    NULL for NULL text, 0-byte docs report ratio NULL too — a 0/0
-    ratio is meaningless).
-    """
-    import zlib
-    from typing import Iterator
-
-    import pandas as pd
-
-    out_schema = f"{id_col} long, n_bytes long, n_compressed long, ratio double"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            raw = b[text_col].map(
-                lambda s: len(s.encode("utf-8")) if isinstance(s, str) else None
-            )
-            comp = b[text_col].map(
-                lambda s: len(zlib.compress(s.encode("utf-8"), level))
-                if isinstance(s, str)
-                else None
-            )
-            ratio = (comp / raw).where(raw.gt(0)).round(4)
-            yield pd.DataFrame(
-                {
-                    id_col: b[id_col],
-                    "n_bytes": raw,
-                    "n_compressed": comp,
-                    "ratio": ratio,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(kernel, out_schema)
-
-
 def hashed_logit_score(
     df: DataFrame,
     text_col: str = "text",

@@ -6,9 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.multimodal.binary_ops import (
-    ahash_hamming_pairs,
     audio_fingerprint,
-    audio_fp_hamming_pairs,
     image_ahash,
     synth_pgm_near_dups,
     synth_wav_near_dups,
@@ -19,6 +17,7 @@ from sea_express_customs_etl_spark.operators.dedup import (
     containment_verify_profiles,
     dedup_clusters,
     exact_duplicates,
+    hamming_pairs,
     ivf_near_dups,
     jaccard_threshold_sweep,
     jaccard_verify_profiles,
@@ -96,13 +95,18 @@ def _q_multisignal_dedup_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("signal", F.lit("embedding"))
     )
     ids = docs.select(F.col("doc_id").alias("media_id"))
+    ahash = image_ahash(synth_pgm_near_dups(ids)).select(
+        "media_id",
+        F.shiftleft("ahash_hi", 32).bitwiseOR(F.col("ahash_lo")).alias("ahash"),
+    )
     img = (
-        ahash_hamming_pairs(image_ahash(synth_pgm_near_dups(ids)))
+        hamming_pairs(ahash, "ahash", 64, 4, 3, "media_id")
         .select("id_a", "id_b")
         .withColumn("signal", F.lit("image"))
     )
+    afp = audio_fingerprint(synth_wav_near_dups(ids))
     aud = (
-        audio_fp_hamming_pairs(audio_fingerprint(synth_wav_near_dups(ids)))
+        hamming_pairs(afp, "fp", 32, 4, 3, "media_id")
         .select("id_a", "id_b")
         .withColumn("signal", F.lit("audio"))
     )

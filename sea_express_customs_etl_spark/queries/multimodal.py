@@ -6,9 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.multimodal.binary_ops import (
-    ahash_hamming_pairs,
     audio_fingerprint,
-    audio_fp_hamming_pairs,
     decode_images,
     decode_wav,
     extract_ppm_frames,
@@ -24,10 +22,10 @@ from sea_express_customs_etl_spark.multimodal.binary_ops import (
     synth_wav_payloads,
     synth_wav_silence,
     video_fingerprint,
-    video_fp_hamming_pairs,
     video_scene_sads,
     wav_window_energy,
 )
+from sea_express_customs_etl_spark.operators.dedup import hamming_pairs
 from sea_express_customs_etl_spark.plans import oracles_ext as ext, oracles_wx as wx
 from sea_express_customs_etl_spark.plans.standins import load_table
 from sea_express_customs_etl_spark.queries import query
@@ -47,7 +45,11 @@ def _q_image_ahash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").alias("media_id"))
         .filter(F.col("media_id") <= 2000)
     )
-    return ahash_hamming_pairs(image_ahash(synth_pgm_near_dups(ids)))
+    hashes = image_ahash(synth_pgm_near_dups(ids)).select(
+        "media_id",
+        F.shiftleft("ahash_hi", 32).bitwiseOR(F.col("ahash_lo")).alias("ahash"),
+    )
+    return hamming_pairs(hashes, "ahash", 64, 4, 3, "media_id")
 
 
 @query(oracle=ext.AUDIO_FP_DUPS_SQL)
@@ -63,7 +65,8 @@ def _q_audio_fp_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").alias("media_id"))
         .filter(F.col("media_id") <= 2000)
     )
-    return audio_fp_hamming_pairs(audio_fingerprint(synth_wav_near_dups(ids)))
+    fps = audio_fingerprint(synth_wav_near_dups(ids))
+    return hamming_pairs(fps, "fp", 32, 4, 3, "media_id")
 
 
 @query(oracle=ext.VIDEO_FP_DUPS_SQL)
@@ -84,7 +87,8 @@ def _q_video_fp_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").alias("media_id"))
         .filter(F.col("media_id") <= 2000)
     )
-    return video_fp_hamming_pairs(video_fingerprint(synth_video_near_dups(ids)))
+    fps = video_fingerprint(synth_video_near_dups(ids))
+    return hamming_pairs(fps, "fp", 32, 4, 3, "media_id")
 
 
 @query(oracle=ext.IMAGE_DECODE_STATS_SQL)

@@ -5,8 +5,6 @@ Each build runs once per session through ``session_tables.shared``."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
@@ -249,12 +247,10 @@ def _graph_shared(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         # + edge join, kcore/lpa degree passes — reads the hash
         # distribution straight from the bucket spec instead of paying
         # its own exchange (ppr ed-build 2.0 → 0.7 s, full query
-        # 8.6 → 4.0 s at sf0.1). Bucket count is env-parameterised:
-        # local default 16; at cluster scale size buckets to ~1 GB of
-        # edges each (SPARK_GRAFT_GRAPH_BUCKETS).
-        nb = int(os.environ.get("SPARK_GRAFT_GRAPH_BUCKETS", "16"))
+        # 8.6 → 4.0 s at sf0.1). 16 buckets; at cluster scale size
+        # buckets to ~1 GB of edges each.
         ew.write.mode("overwrite").format("parquet").bucketBy(
-            nb, "src"
+            16, "src"
         ).sortBy("src", "dst").saveAsTable(base + "_ew")
         _triangle_triples(
             spark.table(base + "_ew").select("src", "dst")

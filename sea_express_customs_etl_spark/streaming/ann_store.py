@@ -33,6 +33,7 @@ from sea_express_customs_etl_spark.operators.pq import (
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 from sea_express_customs_etl_spark.streaming.commit_fence import (
     CommitFence,
+    drop_tombstoned,
     marker_rows,
     tombstone_writer,
 )
@@ -148,41 +149,19 @@ def committed_codes(
 ) -> DataFrame:
     """Exactly-once SEARCHABLE code-store view (marker semi-join +
     duplicate collapse, minus committed tombstones): id, cluster,
-    subspace, code. A code row survives if no committed tombstone for
-    its id has delete-batch >= its add-batch (see
-    :func:`ann_store_delete_writer`). The tombstone side is id-grained
-    and grows with the corpus — joined WITHOUT a pinned broadcast (AQE
-    picks the strategy; at 100 TB it becomes a shuffled anti-join)."""
+    subspace, code. Tombstones follow
+    :func:`..commit_fence.drop_tombstoned` (see
+    :func:`ann_store_delete_writer`)."""
     codes = spark.table(f"{table_prefix}_codes").join(
         F.broadcast(spark.table(f"{table_prefix}_batches")),
         "batch_id",
         "left_semi",
     )
-    t_tab = f"{table_prefix}_tombstones"
-    dm_tab = f"{table_prefix}_del_batches"
-    # Both tables must exist: a crash between the first tombstone
-    # append and the marker-table creation leaves t_tab without dm_tab;
-    # the committed (delete-free) view must still serve (ADVICE r7).
-    if spark.catalog.tableExists(t_tab) and spark.catalog.tableExists(dm_tab):
-        last_del = (
-            spark.table(t_tab)
-            .join(
-                F.broadcast(spark.table(dm_tab)),
-                "batch_id",
-                "left_semi",
-            )
-            .groupBy(id_col)
-            .agg(F.max("batch_id").alias("_del_bid"))
-        )
-        codes = (
-            codes.join(last_del, id_col, "left")
-            .filter(
-                F.col("_del_bid").isNull()
-                | (F.col("batch_id") > F.col("_del_bid"))
-            )
-            .drop("_del_bid")
-        )
-    return codes.select(id_col, "cluster", "subspace", "code").distinct()
+    return (
+        drop_tombstoned(codes, table_prefix, id_col)
+        .select(id_col, "cluster", "subspace", "code")
+        .distinct()
+    )
 
 
 def compact_ann_store(

@@ -82,8 +82,8 @@ def tombstone_writer(
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` callable appending each delete batch's ids to
     ``<prefix>_tombstones`` under the ``<prefix>_del_batches`` fence —
-    the shared body of the stores' delete writers (each store's own
-    docstring states what a committed tombstone means there)."""
+    the shared body of the stores' delete writers; :func:`drop_tombstoned`
+    is the read half."""
     t_tab = f"{table_prefix}_tombstones"
     fence = CommitFence(f"{table_prefix}_del_batches")
 
@@ -98,3 +98,34 @@ def tombstone_writer(
         fence.commit(spark, batch_id)
 
     return write
+
+
+def drop_tombstoned(rows: DataFrame, table_prefix: str, id_col: str) -> DataFrame:
+    """The read half of :func:`tombstone_writer`: ``rows`` (each with
+    its add ``batch_id``) minus those a committed tombstone kills — a
+    row survives unless a committed tombstone for its id has
+    delete-batch >= its add-batch, so a later re-add resurrects it.
+    Both tombstone tables must exist before the filter arms: a crash
+    between the first tombstone append and the marker-table creation
+    leaves ``<prefix>_tombstones`` without ``<prefix>_del_batches``,
+    and the committed delete-free view must still serve. The tombstone
+    side is id-grained and grows with the corpus, so it is joined
+    without a pinned broadcast (AQE picks the strategy)."""
+    spark = rows.sparkSession
+    t_tab = f"{table_prefix}_tombstones"
+    dm_tab = f"{table_prefix}_del_batches"
+    if not (spark.catalog.tableExists(t_tab) and spark.catalog.tableExists(dm_tab)):
+        return rows
+    last_del = (
+        spark.table(t_tab)
+        .join(F.broadcast(spark.table(dm_tab)), "batch_id", "left_semi")
+        .groupBy(id_col)
+        .agg(F.max("batch_id").alias("_del_bid"))
+    )
+    return (
+        rows.join(last_del, id_col, "left")
+        .filter(
+            F.col("_del_bid").isNull() | (F.col("batch_id") > F.col("_del_bid"))
+        )
+        .drop("_del_bid")
+    )

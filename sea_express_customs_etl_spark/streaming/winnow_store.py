@@ -35,6 +35,7 @@ from sea_express_customs_etl_spark.operators.fingerprint import (
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 from sea_express_customs_etl_spark.streaming.commit_fence import (
     CommitFence,
+    drop_tombstoned,
     tombstone_writer,
 )
 
@@ -88,12 +89,8 @@ def committed_fingerprints(
 ) -> DataFrame:
     """Exactly-once view of the fingerprint store: committed batches
     only (marker semi-join), crash-window duplicates collapsed, minus
-    committed tombstones (a fingerprint row survives if no committed
-    tombstone for its doc has delete-batch >= its add-batch). Both
-    tombstone tables must exist before the anti-filter arms — a crash
-    between the first tombstone append and the marker-table creation
-    must still serve the committed delete-free view (the ann_store
-    ADVICE-r7 crash window). The corpus-global df cap downstream
+    committed tombstones (:func:`..commit_fence.drop_tombstoned`). The
+    corpus-global df cap downstream
     (``pairs_from_fingerprints``) is applied at READ time, so it
     re-computes correctly over the SURVIVORS — a deleted boilerplate
     document stops counting toward any fingerprint's df."""
@@ -102,25 +99,8 @@ def committed_fingerprints(
         "batch_id",
         "left_semi",
     )
-    t_tab = f"{table_prefix}_tombstones"
-    dm_tab = f"{table_prefix}_del_batches"
-    if spark.catalog.tableExists(t_tab) and spark.catalog.tableExists(dm_tab):
-        last_del = (
-            spark.table(t_tab)
-            .join(
-                F.broadcast(spark.table(dm_tab)),
-                "batch_id",
-                "left_semi",
-            )
-            .groupBy(id_col)
-            .agg(F.max("batch_id").alias("_del_bid"))
-        )
-        fps = (
-            fps.join(last_del, id_col, "left")
-            .filter(
-                F.col("_del_bid").isNull()
-                | (F.col("batch_id") > F.col("_del_bid"))
-            )
-            .drop("_del_bid")
-        )
-    return fps.select(id_col, "fp").distinct()
+    return (
+        drop_tombstoned(fps, table_prefix, id_col)
+        .select(id_col, "fp")
+        .distinct()
+    )

@@ -12,7 +12,6 @@ from sea_express_customs_etl_spark.operators.dsir import (
     dsir_bucket_weights,
     dsir_pipeline,
     dsir_scores,
-    dsir_select,
     token_buckets,
 )
 
@@ -73,13 +72,3 @@ def test_pipeline_equals_two_step(spark, raw):
     }
     fused = {r.doc_id: r.dsir_score for r in dsir_pipeline(raw, target).collect()}
     assert fused == two_step
-
-
-def test_select_is_deterministic_topk(spark, raw):
-    target = raw.filter(F.col("lang") == "en")
-    weights = dsir_bucket_weights(raw, target)
-    kept = [r.doc_id for r in dsir_select(raw, weights, keep=3).collect()]
-    assert len(kept) == 3
-    scores = {r.doc_id: r.dsir_score for r in dsir_scores(raw, weights).collect()}
-    want = sorted(scores, key=lambda d: (-scores[d], d))[:3]
-    assert kept == want

@@ -52,40 +52,6 @@ def test_jsonl_corrupt_rows_are_countable_not_fatal(spark, tmp_path):
     assert clean_docs(raw).count() + corrupt.count() + 2 == raw.count()
 
 
-def test_compression_ratio_signal(spark):
-    from sea_express_customs_etl_spark.operators.textstats import compression_ratio
-
-    df = spark.createDataFrame(
-        [
-            (1, "abc " * 500),          # highly repetitive -> tiny ratio
-            (2, None),                   # NULL text -> NULL ratio
-            (3, ""),                     # empty -> NULL ratio (0/0 guarded)
-        ],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r for r in compression_ratio(df).collect()}
-    assert got[1].n_bytes == 2000
-    assert got[1].ratio is not None and got[1].ratio < 0.05
-    assert got[2].ratio is None and got[2].n_bytes is None
-    assert got[3].n_bytes == 0 and got[3].ratio is None
-
-
-def test_compression_ratio_separates_prose_from_spam(spark):
-    import random
-
-    from sea_express_customs_etl_spark.operators.textstats import compression_ratio
-
-    rng = random.Random(7)
-    words = ["alpha", "bridge", "copper", "delta", "ember", "fjord", "glade"]
-    prose = " ".join(rng.choice(words) + str(rng.randint(0, 999)) for _ in range(300))
-    spam = "buy now " * 300
-    df = spark.createDataFrame(
-        [(1, prose), (2, spam)], "doc_id long, text string"
-    )
-    got = {r.doc_id: r.ratio for r in compression_ratio(df).collect()}
-    assert got[2] < got[1]  # repetitive spam compresses harder
-
-
 def test_streaming_quality_gate_matches_batch(spark, tmp_path):
     """Curation gates are map-only Catalyst expressions, so the SAME
     operator runs unchanged on a readStream source — streaming corpus

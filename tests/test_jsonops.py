@@ -9,7 +9,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from sea_express_customs_etl_spark.operators.jsonops import (
-    extract_json_field,
     interval_join,
     props_rollup,
 )
@@ -36,14 +35,6 @@ def test_props_rollup_parses_and_aggregates(spark):
     assert got["click"].avg_v == 20.0
     assert got["view"].n_parsed == 1
     assert got["view"].min_v == 7 and got["view"].max_v == 7
-
-
-def test_extract_json_field_null_on_malformed(spark):
-    df = spark.createDataFrame(
-        [('{"k": 3}',), ("{broken",), (None,)], "props string"
-    )
-    vals = [r.v for r in df.select(extract_json_field(df, "props", "k").alias("v")).collect()]
-    assert vals == [3, None, None]
 
 
 def test_interval_join_bounds(spark):

@@ -1,17 +1,12 @@
-"""Multimodal tests: metadata sniffing, feature-kernel batch shape,
-REAL PPM/PGM decode + resize + frame extraction, per-row containment
-of undecodable payloads, frame-index sampling."""
+"""Multimodal tests: REAL PPM/PGM decode + resize + frame extraction,
+per-row containment of undecodable payloads, and the perceptual
+fingerprints with their planted-copy recall through ``hamming_pairs``."""
 
 from __future__ import annotations
 
 import numpy as np
 
-from sea_express_customs_etl_spark.multimodal import (
-    attach_binary_metadata,
-    decode_images,
-    fake_image_features,
-    sample_frames,
-)
+from sea_express_customs_etl_spark.multimodal import decode_images
 from sea_express_customs_etl_spark.multimodal.binary_ops import (
     decode_pnm,
     encode_ppm,
@@ -41,27 +36,6 @@ def _media(spark):
         (5, _ppm(6, 4)),
     ]
     return spark.createDataFrame(rows, "media_id long, payload binary")
-
-
-def test_attach_binary_metadata(spark):
-    got = {r.media_id: r for r in attach_binary_metadata(_media(spark)).collect()}
-    assert got[1].media_format == "png"
-    assert got[2].media_format == "jpeg"
-    assert got[3].media_format == "wav"
-    assert got[4].media_format == "unknown"
-    assert got[5].media_format == "ppm"
-    assert got[1].media_length == 18
-    assert len(got[1].media_digest) == 32
-
-
-def test_fake_image_features_deterministic(spark):
-    df = _media(spark)
-    a = {r.media_id: r.features for r in fake_image_features(df, dim=8).collect()}
-    b = {r.media_id: r.features for r in fake_image_features(df, dim=8).collect()}
-    assert a == b
-    assert all(len(v) == 8 for v in a.values())
-    assert all(0.0 <= x < 1.0 for v in a.values() for x in v)
-    assert a[1] != a[2]
 
 
 def test_decode_images_real_pnm_and_containment(spark):
@@ -122,15 +96,6 @@ def test_extract_ppm_frames_stream(spark):
         by_idx = dict(got[mid])
         arr, _ = decode_pnm(by_idx[4])
         assert (arr == 4).all()  # frame 4 carries its constant value
-
-
-def test_sample_frames(spark):
-    df = spark.createDataFrame([(1, 25), (2, 5)], "media_id long, n_frames int")
-    got = {}
-    for r in sample_frames(df, every_n=10).collect():
-        got.setdefault(r.media_id, []).append(r.frame_idx)
-    assert sorted(got[1]) == [0, 10, 20]
-    assert sorted(got[2]) == [0]
 
 
 def test_synth_pgm_roundtrip_and_corruption(spark):
@@ -239,19 +204,21 @@ def test_image_ahash_brightness_invariance_and_containment(spark):
     assert got[3].ahash_hi is None
 
 
-def test_ahash_pairs_catch_planted_dups_and_guard_params(spark):
+def test_ahash_pairs_catch_planted_dups(spark):
     import pyspark.sql.functions as F
-    import pytest
 
     from sea_express_customs_etl_spark.multimodal.binary_ops import (
-        ahash_hamming_pairs,
         image_ahash,
         synth_pgm_near_dups,
     )
+    from sea_express_customs_etl_spark.operators.dedup import hamming_pairs
 
     ids = spark.range(1, 80).select(F.col("id").alias("media_id"))
-    hashes = image_ahash(synth_pgm_near_dups(ids))
-    pairs = ahash_hamming_pairs(hashes).collect()
+    hashes = image_ahash(synth_pgm_near_dups(ids)).select(
+        "media_id",
+        F.shiftleft("ahash_hi", 32).bitwiseOR(F.col("ahash_lo")).alias("ahash"),
+    )
+    pairs = hamming_pairs(hashes, "ahash", 64, 4, 3, "media_id").collect()
     planted = {
         (r.id_a, r.id_b): r.hamming
         for r in pairs
@@ -261,8 +228,6 @@ def test_ahash_pairs_catch_planted_dups_and_guard_params(spark):
     # can flip bits; a handful escaping is the honest behavior)
     assert len(planted) >= 5
     assert all(h <= 3 for h in planted.values())
-    with pytest.raises(ValueError):
-        ahash_hamming_pairs(hashes, max_hamming=4, bands=4)
 
 
 def test_audio_fingerprint_attenuation_invariance_and_containment(spark):
@@ -317,14 +282,13 @@ def test_audio_fp_pairs_catch_planted_attenuated_copies(spark):
 
     from sea_express_customs_etl_spark.multimodal.binary_ops import (
         audio_fingerprint,
-        audio_fp_hamming_pairs,
         synth_wav_near_dups,
     )
+    from sea_express_customs_etl_spark.operators.dedup import hamming_pairs
 
     ids = spark.range(1, 80).select(F.col("id").alias("media_id"))
-    pairs = audio_fp_hamming_pairs(
-        audio_fingerprint(synth_wav_near_dups(ids))
-    ).collect()
+    fps = audio_fingerprint(synth_wav_near_dups(ids))
+    pairs = hamming_pairs(fps, "fp", 32, 4, 3, "media_id").collect()
     planted = [r for r in pairs if r.id_b - r.id_a == 100_000]
     assert len(planted) == 7  # ids 10, 20, ..., 70
     assert all(r.hamming == 0 for r in planted)
@@ -403,9 +367,6 @@ def test_video_fp_brightness_invariance_and_containment(spark):
     assert bin(fps[10].fp ^ fps[100010].fp).count("1") <= 3
 
     # containment: a truncated payload errors per-row, others survive
-    from sea_express_customs_etl_spark.multimodal.binary_ops import (
-        video_fp_hamming_pairs,
-    )
     full = synth_video_near_dups(ids, every=0)
     bad = full.select(
         (F.col("media_id") + 1).alias("media_id"),
@@ -418,12 +379,6 @@ def test_video_fp_brightness_invariance_and_containment(spark):
     assert got[10].fp_error is None
     assert got[11].fp_error is not None and got[11].fp is None
 
-    # guard: >=4 hamming breaks the 4-band pigeonhole exactness
-    import pytest
-
-    with pytest.raises(ValueError):
-        video_fp_hamming_pairs(None, max_hamming=4)
-
 
 def test_video_fp_pairs_catch_planted_copies(spark):
     import pyspark.sql.functions as F
@@ -431,13 +386,12 @@ def test_video_fp_pairs_catch_planted_copies(spark):
     from sea_express_customs_etl_spark.multimodal.binary_ops import (
         synth_video_near_dups,
         video_fingerprint,
-        video_fp_hamming_pairs,
     )
+    from sea_express_customs_etl_spark.operators.dedup import hamming_pairs
 
     ids = spark.range(1, 80).select(F.col("id").alias("media_id"))
-    pairs = video_fp_hamming_pairs(
-        video_fingerprint(synth_video_near_dups(ids))
-    ).collect()
+    fps = video_fingerprint(synth_video_near_dups(ids))
+    pairs = hamming_pairs(fps, "fp", 32, 4, 3, "media_id").collect()
     planted = [r for r in pairs if r.id_b - r.id_a == 100_000]
     assert len(planted) == 7  # ids 10, 20, ..., 70
     assert all(r.hamming <= 3 for r in planted)

@@ -76,19 +76,10 @@ TEST_REFERENCES: dict[str, str] = {
 # deleted together with those tests, a few tests per change, so each
 # removal stays reviewable: def -> the tests that go with it.
 DELETE_NEXT: dict[str, tuple[str, ...]] = {
-    "compression_ratio": (
-        "tests/test_jsonl_source.py::test_compression_ratio_signal",
-        "tests/test_jsonl_source.py::test_compression_ratio_separates_prose_from_spam",
-    ),
     "stream_jsonl_docs": (
         "tests/test_jsonl_source.py::test_stream_jsonl_matches_batch",
         "tests/test_jsonl_source.py::test_streaming_quality_gate_matches_batch",
     ),
-    "attach_binary_metadata": ("tests/test_multimodal.py::test_attach_binary_metadata",),
-    "fake_image_features": (
-        "tests/test_multimodal.py::test_fake_image_features_deterministic",
-    ),
-    "sample_frames": ("tests/test_multimodal.py::test_sample_frames",),
     "stream_xml_history_quarantined": (
         "tests/test_sources.py::test_quarantine_reconciles_batch_and_streaming",
     ),
@@ -99,10 +90,6 @@ DELETE_NEXT: dict[str, tuple[str, ...]] = {
         "tests/test_sources.py::test_replay_quarantined_recovers_fixable_units",
     ),
     "sessionize_stream": ("tests/test_streaming.py::test_sessionize_stream_smoke",),
-    "dsir_select": ("tests/test_dsir.py::test_select_is_deterministic_topk",),
-    "extract_json_field": (
-        "tests/test_jsonops.py::test_extract_json_field_null_on_malformed",
-    ),
 }
 
 # (c) Forks: parameters whose default selects one branch of their

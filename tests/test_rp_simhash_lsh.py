@@ -1,6 +1,6 @@
-"""Tests for the bit-sampling LSH family: simhash Hamming banding
-(operators/dedup.py) and deterministic random projections / SRP-LSH
-(operators/rp.py)."""
+"""Tests for the bit-sampling LSH family: the banded Hamming search and
+simhash on top of it (operators/dedup.py), and deterministic random
+projections / SRP-LSH (operators/rp.py)."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from sea_express_customs_etl_spark.operators.dedup import (
+    hamming_pairs,
     simhash,
     simhash_hamming_pairs,
 )
@@ -56,11 +57,67 @@ def test_simhash_hamming_pairs_match_brute_force(docs):
     assert (1, 2) in got and got[(1, 2)] == 0  # exact dup → distance 0
 
 
-def test_simhash_hamming_pairs_rejects_lossy_params(docs):
+def test_hamming_pairs_match_brute_force_64bit(spark):
+    """64-bit signatures, half with the sign bit set: the banded plan
+    returns EXACTLY the all-pairs popcount result. Each planted copy
+    leaves one 16-bit band intact — cycling through all four — and
+    flips the edge bits next to it (the top bit of the band below, the
+    bottom bit of the band above) plus the top bit of the remaining
+    band, the sign bit when that band is the top one. It can only pair
+    through the intact band, so a slice that is mis-cut, sign-extended
+    or taken modulo loses it."""
+    import random
+
+    rng = random.Random(64)
+    full = (1 << 64) - 1
+
+    def signed(u):
+        return u - (1 << 64) if u >> 63 else u
+
+    def flips(keep):
+        return [
+            16 * b + (0 if b == keep + 1 else 15) for b in range(4) if b != keep
+        ]
+
+    sigs = {}
+    for i in range(40):
+        base = rng.getrandbits(64) | ((i % 2) << 63)
+        sigs[i] = base
+        keep = i % 4  # the band the copy leaves intact
+        n = 3 if i % 5 else 4 if i % 10 else 0  # hamming 3, 4 (out) or 0
+        copy = base
+        for bit in (flips(keep) + [16 * keep + 7])[:n]:
+            copy ^= 1 << bit
+        sigs[1000 + i] = copy
+    df = spark.createDataFrame(
+        [(k, signed(v)) for k, v in sigs.items()], "id long, sig long"
+    )
+    got = {
+        (r.id_a, r.id_b): r.hamming
+        for r in hamming_pairs(df, "sig", 64, 4, 3, "id").collect()
+    }
+    ids = sorted(sigs)
+    want = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            h = bin((sigs[a] ^ sigs[b]) & full).count("1")
+            if h <= 3:
+                want[(a, b)] = h
+    assert got == want
+    assert sum(h == 3 for h in want.values()) >= 20
+
+
+@pytest.mark.parametrize(
+    "num_bits,bands,max_hamming",
+    [(64, 4, 4), (32, 4, 4), (16, 4, 5), (16, 3, 2)],
+    ids=["64bit-max4", "32bit-max4", "16bit-max5", "16bit-3bands"],
+)
+def test_hamming_pairs_rejects_lossy_params(spark, num_bits, bands, max_hamming):
+    """``max_hamming >= bands`` loses the pigeonhole exactness, and
+    ``bands`` must cut ``num_bits`` into equal slices."""
+    df = spark.createDataFrame([(1, 5)], "id long, sig long")
     with pytest.raises(ValueError):
-        simhash_hamming_pairs(docs, bands=4, max_hamming=4)
-    with pytest.raises(ValueError):
-        simhash_hamming_pairs(docs, num_bits=16, bands=3)
+        hamming_pairs(df, "sig", num_bits, bands, max_hamming, "id")
 
 
 def test_projection_signs_deterministic_and_md5_derived():
