@@ -8,9 +8,10 @@ Beyond-parity operator (the reference's pandas core has no embedding
 surface). Train/test split by vec_id parity: integer k-means
 (``kmeans_fit_q``) indexes the EVEN half, every ODD vector is
 classified by majority label among its k nearest even neighbors under
-the exact-integer IVF search (``ivf_knn_q`` — a test vector can never
-be its own neighbor by construction). Vote tie-break: count DESC,
-label ASC — deterministic on both engines.
+the exact-integer IVF search (``ivf_topk_q``, queries quantized from
+their own frame — a test vector can never be its own neighbor by
+construction). Vote tie-break: count DESC, label ASC — deterministic
+on both engines.
 
 Scale shape: the classifier adds ONE |test|·k-row join against the
 train-label table and one per-query top-1 window (WindowGroupLimit
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.operators.similarity import (
-    ivf_knn_q,
+    ivf_topk_q,
     kmeans_fit_q,
 )
 
@@ -66,8 +67,8 @@ def knn_label_vote(
         n_centroids = max(4, math.ceil(math.sqrt(train.count())))
     cents = kmeans_fit_q(train, k=n_centroids, iters=iters,
                          vec_col=vec_col, id_col=id_col)
-    nn = ivf_knn_q(train, cents, test, k=k, nprobe=nprobe,
-                   vec_col=vec_col, id_col=id_col)
+    nn = ivf_topk_q(train, cents, test, k=k, nprobe=nprobe,
+                    vec_col=vec_col, id_col=id_col)
     votes = (
         nn.join(
             train.select(

@@ -5,8 +5,8 @@ store's ADC distances (8 LUT lookups per candidate) instead of exact
 64-dim integer folds, the ``mmr_ann_rerank`` recipe applied to
 classification.
 
-The search is ``streaming/ann_store.py:store_adc_topk`` with ONE
-addition: a candidate-scope predicate applied to the committed codes
+The search is ``streaming/ann_store.py:store_adc_topk`` with its
+``neighbor_pred`` candidate scope applied to the committed codes
 BEFORE ranking (here: even vec_ids only — the train half; the same
 hook scopes a store to a tenant or a time window). The frozen
 quantizer (centroids + codebook) comes from the session's shared
@@ -27,44 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
-
-def store_adc_topk_scoped(
-    spark: SparkSession,
-    table_prefix: str,
-    centroids: DataFrame,
-    codebook: DataFrame,
-    queries: DataFrame,
-    neighbor_pred,
-    k: int = 5,
-    m: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    nprobe: int = 2,
-) -> DataFrame:
-    """``store_adc_topk`` with the committed codes filtered by
-    ``neighbor_pred`` (a Column over ``neighbor_id``) before the
-    per-query top-k — a thin delegation so probe / tie-break fixes land
-    in ONE place (the scoped copy this replaced could silently
-    desynchronize from the store's ranking)."""
-    from sea_express_customs_etl_spark.streaming.ann_store import (
-        store_adc_topk,
-    )
-
-    return store_adc_topk(
-        spark,
-        table_prefix,
-        centroids,
-        codebook,
-        queries,
-        k=k,
-        m=m,
-        dim=dim,
-        vec_col=vec_col,
-        id_col=id_col,
-        nprobe=nprobe,
-        neighbor_pred=neighbor_pred,
-    )
+from sea_express_customs_etl_spark.streaming.ann_store import store_adc_topk
 
 
 def hard_negative_mining(
@@ -98,10 +61,6 @@ def hard_negative_mining(
     store's cell-pruned ADC probe (nlist dial applies); the label
     join is id-grain. Output: vec_id, neg_id, neg_rank, dist_u12.
     """
-    from sea_express_customs_etl_spark.streaming.ann_store import (
-        store_adc_topk,
-    )
-
     anchors = emb.filter(F.col(id_col) % anchor_mod == 0)
     sl = store_adc_topk(
         spark,
@@ -164,13 +123,13 @@ def knn_adc_vote(
     the two classifiers' quality is directly comparable under the
     gate."""
     test = emb.filter(F.col(id_col) % 2 == 1)
-    nn = store_adc_topk_scoped(
+    nn = store_adc_topk(
         spark,
         table_prefix,
         centroids,
         codebook,
         test,
-        neighbor_pred=F.col("neighbor_id") % 2 == 0,
+        neighbor_pred=F.col(id_col) % 2 == 0,
         k=k,
         nprobe=nprobe,
         id_col=id_col,

@@ -387,7 +387,10 @@ def ivf_topk_q(
 
     ``centroids`` is ``kmeans_fit_q`` output — long format
     ``(cluster, dim, c_u6)``; reassembled to arrays here (k·dim rows,
-    model-sized).
+    model-sized). ``queries`` quantize from their OWN frame, so the
+    same search serves queries drawn from ``df`` and a query set
+    disjoint from it (the holdout-kNN shape: a test vector can never
+    appear among its own candidates); self-matches are dropped.
 
     Output: query_id, neighbor_id, cluster, d2_u12 (squared L2 in
     units of 10⁻¹² — ascending = most similar).
@@ -404,9 +407,9 @@ def ivf_topk_q(
             "cluster", F.transform("_s", lambda s: s["c_u6"]).alias("cv")
         )
     )
-    base = quantize_u6(df, vec_col, id_col)
     assigned = (
-        base.join(F.broadcast(cen))
+        quantize_u6(df, vec_col, id_col)
+        .join(F.broadcast(cen))
         .select(
             id_col,
             "v",
@@ -420,7 +423,7 @@ def ivf_topk_q(
         .agg(F.min("_dc").alias("_b"), F.first("v").alias("v"))
         .select(id_col, "v", F.col("_b.c").alias("cluster"))
     )
-    q = base.join(queries.select(F.col(id_col)), id_col, "left_semi").select(
+    q = quantize_u6(queries, vec_col, id_col).select(
         F.col(id_col).alias("query_id"), F.col("v").alias("_qv")
     )
     pw = Window.partitionBy("query_id").orderBy(
@@ -494,87 +497,4 @@ def pool_embeddings_q(
             .cast("bigint")
             .alias("mean_u6"),
         )
-    )
-
-
-def ivf_knn_q(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """:func:`ivf_topk_q` with a query set DISJOINT from the searched
-    corpus — the holdout-kNN shape (train/test separation): queries
-    quantize from their OWN frame instead of semi-joining the corpus,
-    so a test vector can never appear among its own candidates.
-    Everything else is the exact-integer IVF search unchanged:
-    bigint squared-L2, ties → lowest cluster / lowest neighbor id.
-
-    Output: query_id, neighbor_id, cluster, d2_u12.
-
-    Scale shape: identical to :func:`ivf_topk_q` — broadcast-argmin
-    assignment, |queries|·nprobe probe table broadcast, search join
-    shuffled on ``cluster``, per-query top-k via the
-    row_number-then-filter WindowGroupLimit shape.
-    """
-    cen = (
-        centroids.groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "c_u6"))).alias("_s"))
-        .select(
-            "cluster", F.transform("_s", lambda s: s["c_u6"]).alias("cv")
-        )
-    )
-    assigned = (
-        quantize_u6(corpus, vec_col, id_col)
-        .join(F.broadcast(cen))
-        .select(
-            id_col,
-            "v",
-            F.struct(
-                _d2_q(F.col("v"), F.col("cv")).alias("d"),
-                F.col("cluster").alias("c"),
-            ).alias("_dc"),
-        )
-        .groupBy(id_col)
-        .agg(F.min("_dc").alias("_b"), F.first("v").alias("v"))
-        .select(id_col, "v", F.col("_b.c").alias("cluster"))
-    )
-    q = quantize_u6(queries, vec_col, id_col).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("_qv")
-    )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("_d").asc(), F.col("cluster").asc()
-    )
-    probes = (
-        q.join(F.broadcast(cen))
-        .select(
-            "query_id",
-            "_qv",
-            "cluster",
-            _d2_q(F.col("_qv"), F.col("cv")).alias("_d"),
-        )
-        .withColumn("_pr", F.row_number().over(pw))
-        .filter(F.col("_pr") <= nprobe)
-        .select("query_id", "_qv", "cluster")
-    )
-    sims = (
-        assigned.withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(probes), "cluster")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cluster",
-            _d2_q(F.col("_qv"), F.col("v")).alias("d2_u12"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d2_u12").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
     )

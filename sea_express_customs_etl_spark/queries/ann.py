@@ -222,7 +222,7 @@ def _q_pq_trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TRAINED PQ model itself as a checked artifact (VERDICT r4
     #3): integer Lloyd's per subspace over micro-unit residuals — every
     codeword component hash-matches the unrolled DuckDB oracle, closing
-    the 'training isn't bit-portable' gap of float-mean pq_train.
+    the 'training isn't bit-portable' gap of float-mean training.
     The training run itself comes from the session model memo
     (_ann_model — the same pq_train_q recipe, executed once per
     session, shared with the whole trained-index family)."""
@@ -240,12 +240,7 @@ def _q_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     cen, codebook = _ann_model(spark, sf_dir)
     return ivfpq_trained_topk(
-        emb,
-        cen,
-        emb.filter(F.col("vec_id") < 10),
-        k=5,
-        nprobe=2,
-        codebook=codebook,
+        emb, cen, codebook, emb.filter(F.col("vec_id") < 10), k=5, nprobe=2
     )
 
 
@@ -260,8 +255,8 @@ def _q_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets are the checked method plans verbatim.
 
     Shared-state build (VERDICT r5 #6): ONE persisted embedding scan
-    feeds every pipeline, the IVFPQ codebook trains ONCE
-    (``ivfpq_residual_codebook``) and is shared by the trained-ADC and
+    feeds every pipeline, the IVFPQ codebook trains ONCE (the
+    session's ``_ann_model``) and is shared by the trained-ADC and
     refined pipelines, and the trained method's top-5 is derived from
     the SAME persisted top-200 candidate frame the refine stage
     consumes — deterministic ordering makes it bit-identical to an
@@ -280,8 +275,8 @@ def _q_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id", F.lit(1).alias("_t"))
     )
 
-    # the session's one trained model (≡ ivfpq_residual_codebook here
-    # by construction — see _ann_model); already a local relation
+    # the session's one trained model (integer Lloyd's over the
+    # residuals of ids 16..48 — see _ann_model); a local relation
     _cen_unused, codebook = _ann_model(spark, sf_dir)
     # feeds BOTH the trained top-5 and the refine stage, and is
     # model-sized (|q|·200 rows at ANY corpus size) downstream of a
@@ -291,7 +286,7 @@ def _q_ann_recall_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan string (the mmr_ann_rerank rule; r11 probe 13.0 → 9.8 s
     # same-session)
     adc50 = (
-        ivfpq_trained_topk(emb, cen, q10, k=200, nprobe=2, codebook=codebook)
+        ivfpq_trained_topk(emb, cen, codebook, q10, k=200, nprobe=2)
         .select("query_id", "neighbor_id", "dist_u12")
         .localCheckpoint()
     )
@@ -447,7 +442,7 @@ def _q_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe of the representation-eval toolbox: odd vectors classified
     by majority label of their 5 nearest even neighbors under the
     exact-integer IVF search (train/test disjoint by construction —
-    ivf_knn_q quantizes queries from their own frame). Per-prediction
+    ivf_topk_q quantizes queries from their own frame). Per-prediction
     output grain, so the hash pins every vote. Accuracy at sf0.01
     sits at the 10-class chance floor — consistent with
     pca_label_anova's F ≈ 0.87: the synthetic labels carry no
@@ -464,9 +459,9 @@ def _q_knn_adc_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     through): classify every odd vector from the SESSION'S SHARED
     code store via ADC distances — 8 LUT lookups per candidate
     instead of a 64-dim integer fold — with the committed codes
-    scoped to even ids BEFORE ranking (store_adc_topk_scoped: the
-    tombstone-view mechanism as a candidate-scope predicate; the same
-    hook scopes a store to a tenant or time window). The frozen
+    scoped to even ids BEFORE ranking (store_adc_topk's neighbor_pred:
+    the tombstone-view mechanism as a candidate-scope predicate; the
+    same hook scopes a store to a tenant or time window). The frozen
     quantizer is label-free compression, so training it on the full
     sample leaks nothing; accuracy 0.10 ≈ chance, agreeing with the
     exact variant's 0.108. Zero extra store builds — rides
@@ -724,14 +719,8 @@ def _q_ann_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: consumed twice inside the refine (ids + join)
     cand = _tracked_persist(
         ivfpq_trained_topk(
-            emb,
-            cen,
-            emb.filter(F.col("vec_id") < 10),
-            k=200,
-            nprobe=2,
-            codebook=codebook,
-        )
-        .select("query_id", "neighbor_id")
+            emb, cen, codebook, emb.filter(F.col("vec_id") < 10), k=200, nprobe=2
+        ).select("query_id", "neighbor_id")
     )
     return refine_exact_topk(emb, cand, k=5)
 

@@ -163,14 +163,13 @@ def _ann_model(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The session's ONE trained PQ model as (centroids, codebook), the
-    codebook kept as collected rows (m·k = 128: model-sized).
-    train_frozen_model's codebook is bit-identical to the one-shot
-    queries' own ``pq_train_q``/``ivfpq_residual_codebook`` recipe
-    (same sample ids 16..48, same centroids, same integer Lloyd's —
-    ``_l2_assign`` is row-wise so filtering before/after assignment is
-    the same frame), so pq_trained_codebook / ivfpq_trained_topk /
-    ann_refined_topk / the recall matrix's trained tier and the store
-    family all legitimately share it."""
+    codebook kept as collected rows (m·k = 128: model-sized):
+    ``train_frozen_model``, the integer Lloyd's of ``pq_train_q`` over
+    the micro-unit residuals of the sample ids 16..48 against the
+    centroids ids < 16 (``_l2_assign`` is row-wise, so filtering before
+    or after assignment is the same frame). pq_trained_codebook /
+    ivfpq_trained_topk / ann_refined_topk / the recall matrix's trained
+    tier and the store family all share it."""
     emb = _emb(spark, sf_dir)
     cen = emb.filter(F.col("vec_id") < 16)
 

@@ -81,30 +81,3 @@ def clean_docs(df: DataFrame) -> DataFrame:
         & F.col("doc_id").isNotNull()
         & F.col("text").isNotNull()
     ).drop("_corrupt_record")
-
-
-def stream_jsonl_docs(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = DOCUMENT_SCHEMA,
-    path_glob: str | None = "*.jsonl*",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Structured-Streaming twin of :func:`read_jsonl_docs`: the same
-    text-scan + ``from_json`` projection over a file-source stream, so
-    a landing directory of .jsonl drops becomes an incremental corpus
-    feed (checkpoint exactly-once, same containment semantics —
-    `clean_docs` composes unchanged on the stream)."""
-    reader = spark.readStream
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.text(path)
-    return lines.select(
-        F.from_json(
-            F.col("value"),
-            schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-        ).alias("_p")
-    ).select("_p.*")

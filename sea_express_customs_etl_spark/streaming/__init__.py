@@ -8,5 +8,4 @@ from sea_express_customs_etl_spark.streaming.file_ingest import (  # noqa: F401
 from sea_express_customs_etl_spark.streaming.windows import (  # noqa: F401
     hourly_event_counts,
     sessionize,
-    sessionize_stream,
 )

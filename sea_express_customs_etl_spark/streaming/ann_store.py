@@ -22,12 +22,13 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.operators.pq import (
-    MICRO,
-    _l2_assign,
+    _residuals_u6,
+    encode_with_frozen_model,
+    ivfpq_codes_topk,
     pq_train_q,
 )
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
@@ -38,56 +39,6 @@ from sea_express_customs_etl_spark.streaming.commit_fence import (
     tombstone_writer,
 )
 from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
-
-
-def encode_with_frozen_model(
-    batch: DataFrame,
-    centroids: DataFrame,
-    codebook: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Assign + residual-encode one batch against the FROZEN model:
-    micro-unit residuals vs the assigned centroid, exact integer
-    argmin vs the integer codebook (``pq_train_q`` output). Map-only
-    + one partial-aggregated argmin shuffle; per-row deterministic, so
-    batch composition cannot change any code. Output: id, cluster,
-    subspace, code."""
-    d = dim // m
-    assigned = _l2_assign(batch, centroids, vec_col, id_col)
-    r_u6 = F.zip_with(
-        F.col("_v"),
-        F.col("_cv"),
-        lambda x, y: F.round((x - y) * MICRO).cast("bigint"),
-    )
-    rsv = assigned.select(id_col, "cluster", r_u6.alias("_r")).select(
-        id_col,
-        "cluster",
-        F.posexplode(
-            F.array(*[F.slice(F.col("_r"), j * d + 1, d) for j in range(m)])
-        ).alias("subspace", "subvec"),
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("subvec"), F.col("cw_u6"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        rsv.join(F.broadcast(codebook), "subspace")
-        .select(
-            id_col,
-            "cluster",
-            "subspace",
-            F.struct(d2.alias("d"), F.col("code").alias("c")).alias("_dc"),
-        )
-        .groupBy(id_col, "cluster", "subspace")
-        .agg(F.min("_dc").alias("_b"))
-        .select(id_col, "cluster", "subspace", F.col("_b.c").alias("code"))
-    )
 
 
 def ann_store_batch_writer(
@@ -215,94 +166,22 @@ def store_adc_topk(
     neighbor_pred=None,
 ) -> DataFrame:
     """Cell-relative multi-probe ADC search over the INCREMENTAL code
-    store — the same ranking as ``ivfpq_trained_topk`` computes over a
-    one-shot encode, reading codes from the store instead (the point:
-    search is decoupled from how the index was built). Output:
-    query_id, neighbor_id, cluster, dist_u12.
+    store: :func:`committed_codes`, then ``operators/pq.py:
+    ivfpq_codes_topk`` — the search ``ivfpq_trained_topk`` runs over a
+    one-shot encode (the point: search is decoupled from how the index
+    was built).
+    Output: query_id, neighbor_id, cluster, dist_u12.
 
-    ``neighbor_pred`` (optional Column over ``neighbor_id``) scopes the
-    committed codes BEFORE ranking — the hook that restricts a store to
-    a tenant / time window / holdout half (``operators/knn_adc.py``)
-    through the same mechanism the tombstone views use for deletes."""
-    from sea_express_customs_etl_spark.operators.pq import _l2sq_micro
-    from sea_express_customs_etl_spark.operators.similarity import _as_double
-
-    d = dim // m
-    codes = committed_codes(spark, table_prefix, id_col).withColumnRenamed(
-        id_col, "neighbor_id"
-    )
+    ``neighbor_pred`` (optional Column over the store's ``id_col``)
+    scopes the committed codes BEFORE ranking — the hook that restricts
+    a store to a tenant / time window / holdout half
+    (``operators/knn_adc.py``) through the same mechanism the
+    tombstone views use for deletes."""
+    codes = committed_codes(spark, table_prefix, id_col)
     if neighbor_pred is not None:
         codes = codes.filter(neighbor_pred)
-    cen = centroids.select(
-        F.col(id_col).alias("_cid"), _as_double(F.col(vec_col)).alias("_cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("_qv"),
-    )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("_d").asc(), F.col("_cid").asc()
-    )
-    probes = (
-        q.join(F.broadcast(cen))
-        .select(
-            "query_id",
-            "_qv",
-            "_cid",
-            "_cv",
-            _l2sq_micro(F.col("_qv"), F.col("_cv")).alias("_d"),
-        )
-        .withColumn("_pr", F.row_number().over(pw))
-        .filter(F.col("_pr") <= nprobe)
-        .select(
-            "query_id",
-            F.col("_cid").alias("_qc"),
-            F.zip_with(
-                F.col("_qv"),
-                F.col("_cv"),
-                lambda x, y: F.round((x - y) * MICRO).cast("bigint"),
-            ).alias("_r"),
-        )
-    )
-    qsv = probes.select(
-        "query_id",
-        "_qc",
-        F.posexplode(
-            F.array(*[F.slice(F.col("_r"), j * d + 1, d) for j in range(m)])
-        ).alias("subspace", "subvec"),
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("subvec"), F.col("cw_u6"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    lut = qsv.join(F.broadcast(codebook), "subspace").select(
-        "query_id",
-        "_qc",
-        F.col("subspace").alias("_ls"),
-        F.col("code").alias("_lc"),
-        d2.alias("_d"),
-    )
-    sims = (
-        codes.join(
-            F.broadcast(lut),
-            (F.col("cluster") == F.col("_qc"))
-            & (F.col("subspace") == F.col("_ls"))
-            & (F.col("code") == F.col("_lc")),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id", "cluster")
-        .agg(F.sum("_d").alias("dist_u12"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist_u12").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+    return ivfpq_codes_topk(
+        codes, centroids, codebook, queries, k, m, dim, vec_col, id_col, nprobe
     )
 
 
@@ -320,14 +199,8 @@ def train_frozen_model(
     (exact integer Lloyd's, bit-portable) — the model that then stays
     frozen across every incremental add. Returns (subspace, code,
     cw_u6)."""
-    assigned = _l2_assign(sample, centroids, vec_col, id_col)
-    residuals = assigned.select(
-        id_col,
-        F.zip_with(
-            F.col("_v"),
-            F.col("_cv"),
-            lambda x, y: F.round((x - y) * MICRO).cast("bigint"),
-        ).alias("v"),
+    residuals = _residuals_u6(sample, centroids, vec_col, id_col).select(
+        id_col, F.col("_r").alias("v")
     )
     return pq_train_q(
         residuals, m, dim, k=train_k, iters=train_iters,

@@ -69,26 +69,3 @@ def sessionize(
             F.max(ts_col).alias("session_end"),
         )
     )
-
-
-def sessionize_stream(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Streaming sessionization via the built-in ``session_window``
-    (dynamic-gap session state, watermark-expired). The batch
-    :func:`sessionize` is the oracle-checkable equivalent."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), f"{gap_minutes} minutes"), user_col)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            user_col,
-            "n_events",
-        )
-    )

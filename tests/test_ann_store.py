@@ -8,12 +8,14 @@ import uuid
 
 import pyspark.sql.functions as F
 
-from sea_express_customs_etl_spark.operators.pq import ivfpq_trained_topk
+from sea_express_customs_etl_spark.operators.pq import (
+    encode_with_frozen_model,
+    ivfpq_trained_topk,
+)
 from sea_express_customs_etl_spark.plans.standins import load_table
 from sea_express_customs_etl_spark.streaming.ann_store import (
     ann_store_batch_writer,
     committed_codes,
-    encode_with_frozen_model,
     store_adc_topk,
     train_frozen_model,
 )
@@ -76,7 +78,7 @@ def test_store_search_matches_one_shot_trained_index(spark, sf_dir):
     want = sorted(
         map(
             tuple,
-            ivfpq_trained_topk(emb, cen, q, k=5, nprobe=2).collect(),
+            ivfpq_trained_topk(emb, cen, codebook, q, k=5, nprobe=2).collect(),
         )
     )
     assert got == want and len(got) > 0

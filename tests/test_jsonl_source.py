@@ -50,72 +50,3 @@ def test_jsonl_corrupt_rows_are_countable_not_fatal(spark, tmp_path):
     # quarantine split partitions the input exactly
     corrupt = raw.filter(F.col("_corrupt_record").isNotNull())
     assert clean_docs(raw).count() + corrupt.count() + 2 == raw.count()
-
-
-def test_streaming_quality_gate_matches_batch(spark, tmp_path):
-    """Curation gates are map-only Catalyst expressions, so the SAME
-    operator runs unchanged on a readStream source — streaming corpus
-    curation with zero extra code. Gate verdicts must match batch."""
-    import json as _json
-
-    from sea_express_customs_etl_spark.operators.textstats import quality_gate
-    from sea_express_customs_etl_spark.sources.jsonl_source import (
-        stream_jsonl_docs,
-    )
-
-    d = tmp_path / "gate_stream"
-    d.mkdir()
-    rows = [
-        {"doc_id": i,
-         "text": ("salt pepper thyme basil clove nutmeg " * 12) if i % 2
-         else "spam " * 80,  # repetitive → fails the gate
-         "lang": "en", "source": "s", "meta": {}}
-        for i in range(10)
-    ]
-    (d / "p0.jsonl").write_text(
-        "\n".join(_json.dumps(r) for r in rows), encoding="utf-8"
-    )
-    stream = clean_docs(stream_jsonl_docs(spark, str(d)))
-    q = (
-        quality_gate(stream)
-        .writeStream.format("memory")
-        .queryName("gate_stream_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "gate_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(90)
-    finally:
-        q.stop()
-    got = {
-        r.doc_id: r.passed
-        for r in spark.sql("select * from gate_stream_test").collect()
-    }
-    batch = {
-        r.doc_id: r.passed
-        for r in quality_gate(
-            clean_docs(read_jsonl_docs(spark, str(d)))
-        ).collect()
-    }
-    assert got == batch and len(got) == 10
-    assert not any(v for k, v in got.items() if k % 2 == 0)  # spam fails
-
-
-def test_stream_jsonl_matches_batch(spark, tmp_path):
-    from sea_express_customs_etl_spark.sources.jsonl_source import stream_jsonl_docs
-
-    src = _write_corpus(tmp_path)
-    stream = clean_docs(stream_jsonl_docs(spark, src))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("jsonl_stream_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r.doc_id for r in spark.sql("select * from jsonl_stream_test").collect()}
-    batch = {r.doc_id for r in clean_docs(read_jsonl_docs(spark, src)).collect()}
-    assert got == batch == {1, 2}

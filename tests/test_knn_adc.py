@@ -7,13 +7,11 @@ import uuid
 
 import pyspark.sql.functions as F
 
-from sea_express_customs_etl_spark.operators.knn_adc import (
-    knn_adc_vote,
-    store_adc_topk_scoped,
-)
+from sea_express_customs_etl_spark.operators.knn_adc import knn_adc_vote
 from sea_express_customs_etl_spark.plans.standins import load_table
 from sea_express_customs_etl_spark.streaming.ann_store import (
     ann_store_batch_writer,
+    store_adc_topk,
     train_frozen_model,
 )
 
@@ -36,25 +34,21 @@ def _store(spark):
 def test_candidate_scope_restricts_neighbors(spark):
     emb, cen, codebook, prefix = _store(spark)
     test = emb.filter(F.col("vec_id") % 2 == 1).limit(5)
-    nn = store_adc_topk_scoped(
+    nn = store_adc_topk(
         spark,
         prefix,
         cen,
         codebook,
         test,
-        neighbor_pred=F.col("neighbor_id") % 2 == 0,
         k=5,
         nprobe=2,
+        neighbor_pred=F.col("vec_id") % 2 == 0,
     ).collect()
     assert nn, "scoped search returned no candidates"
     # every neighbor comes from the even (train) half
     assert all(r.neighbor_id % 2 == 0 for r in nn)
     # and the scoped top-k is a prefix of the unscoped ranking
     # restricted to even ids (scoping before top-k, not after)
-    from sea_express_customs_etl_spark.streaming.ann_store import (
-        store_adc_topk,
-    )
-
     full = store_adc_topk(
         spark, prefix, cen, codebook, test, k=10_000, nprobe=2
     ).collect()

@@ -153,3 +153,43 @@ def test_flagship_exchange_counts(spark, sf_dir):
     assert _own_exchanges(knowledge_base(a, b, use_nfkc=False)) == 4
     assert _own_exchanges(knowledge_aligned(a, b, use_nfkc=False)) == 2
     assert _own_exchanges(_aligned(spark, sf_dir)) == 2
+
+
+def test_ann_search_exchange_counts(spark, sf_dir):
+    """The IVF search family keeps its shuffles. The trained index
+    shuffles the corpus assignment, the queries' assignment (the probe
+    window reuses its partitioning) and the top-k. The store's codes
+    are bucketed by cell, so only the probe window and the top-k
+    shuffle. The float index adds two assignments of its codebook
+    sample. The exact-integer search shuffles the same for a query set
+    drawn from the corpus and for a disjoint one."""
+    from sea_express_customs_etl_spark.operators.pq import (
+        ivfpq_topk,
+        ivfpq_trained_topk,
+    )
+    from sea_express_customs_etl_spark.operators.similarity import (
+        ivf_topk_q,
+        kmeans_fit_q,
+    )
+    from sea_express_customs_etl_spark.queries.shared import (
+        _ann_shared_store,
+        _emb,
+    )
+    from sea_express_customs_etl_spark.streaming.ann_store import (
+        store_adc_topk,
+    )
+
+    emb = _emb(spark, sf_dir)
+    q = emb.filter(F.col("vec_id") < 10)
+    cen, codebook, prefix = _ann_shared_store(spark, sf_dir)
+    trained = ivfpq_trained_topk(emb, cen, codebook, q, k=5, nprobe=2)
+    assert _own_exchanges(trained) == 3
+    store = store_adc_topk(spark, prefix, cen, codebook, q, k=5, nprobe=2)
+    assert _own_exchanges(store) == 2
+    assert _own_exchanges(ivfpq_topk(emb, cen, q, k=5, nprobe=2)) == 5
+
+    cents = kmeans_fit_q(emb, k=4, iters=2)
+    assert _own_exchanges(ivf_topk_q(emb, cents, q, k=5, nprobe=2)) == 5
+    train = emb.filter(F.col("vec_id") % 2 == 0)
+    test = emb.filter(F.col("vec_id") % 2 == 1)
+    assert _own_exchanges(ivf_topk_q(train, cents, test, k=5, nprobe=2)) == 5

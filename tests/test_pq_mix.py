@@ -174,10 +174,7 @@ def test_ivfpq_nprobe_recall_monotone_and_nprobe1_bit_stable(spark, sf_dir):
     must not lose recall vs the exact-L2 ground truth (measured on this
     fixture: 0.12 → 0.17/0.16 for nprobe 1→2/4), and explicit
     ``nprobe=1`` must reproduce the oracle-checked default
-    bit-for-bit. The trained-codebook path is exercised for shape
-    (recall on this synthetic near-uniform data is a data property —
-    random-sample codewords are already near-optimal for uniform
-    distributions, so training is not asserted to beat them)."""
+    bit-for-bit."""
     from pyspark.sql import Window
 
     from sea_express_customs_etl_spark.operators.pq import (
@@ -231,61 +228,12 @@ def test_ivfpq_nprobe_recall_monotone_and_nprobe1_bit_stable(spark, sf_dir):
     assert r4 >= r1
     assert recall(run(nprobe=2)) >= r1
 
-    trained = run(nprobe=2, train_codebook=True, train_k=8, train_iters=1)
-    assert len(trained) == len(default)
-    assert {r.query_id for r in trained} == {r.query_id for r in default}
-
-
-def test_pq_train_reduces_quantization_error(spark):
-    """Per-subspace k-means codebooks must beat the naive
-    sample-vector codebook on mean quantization error (the property PQ
-    training exists for; top-k recall on a corpus with planted exact
-    near-dups is NOT monotone in MSE, so error is what we pin)."""
-    from sea_express_customs_etl_spark.operators.pq import (
-        pq_codebook,
-        pq_train,
-        subvectors,
-    )
-    import pyspark.sql.functions as F
-
-    # 4 well-separated cluster centers per subspace, 10 points each
-    centers = [0.0, 5.0, 10.0, 15.0]
-    rows = []
-    i = 0
-    for c in centers:
-        for j_off in range(10):
-            rows.append((i, [c + 0.05 * j_off] * 8))
-            i += 1
-    df = _vecs(spark, rows, dim=8)
-
-    d2 = F.aggregate(
-        F.zip_with(F.col("subvec"), F.col("codeword"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def mse(cb):
-        j = subvectors(df, m=2, dim=8).join(F.broadcast(cb), "subspace").select(
-            "vec_id", "subspace", F.struct(d2.alias("d"), F.col("code").alias("c")).alias("dc")
-        )
-        return (
-            j.groupBy("vec_id", "subspace").agg(F.min("dc").alias("b"))
-            .agg(F.avg("b.d")).first()[0]
-        )
-
-    naive = mse(pq_codebook(df.filter(F.col("vec_id") < 4), m=2, dim=8))
-    trained = mse(pq_train(df, m=2, dim=8, k=4, iters=3))
-    # naive codebook = 4 vectors from ONE cluster (ids 0-3) → large err;
-    # trained k=4 recovers the 4 centers → near-zero err
-    assert trained < naive
-    assert trained < 0.1
-
 
 def test_pq_train_q_recovers_centers_and_is_layout_invariant(spark):
     """Integer per-subspace Lloyd's: on well-separated blobs the
     trained codewords land on the (floored) blob means, and the whole
     codebook is BIT-IDENTICAL under repartitioning — the property that
-    makes it hash-checkable (pq_train, float means, only promises
+    makes it hash-checkable (float means would only promise
     tolerance)."""
     from sea_express_customs_etl_spark.operators.pq import pq_train_q
     import pyspark.sql.functions as F
@@ -361,12 +309,17 @@ def test_ivfpq_trained_nprobe1_prefix_of_nprobe2(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from sea_express_customs_etl_spark.plans.standins import load_table
+    from sea_express_customs_etl_spark.streaming.ann_store import (
+        train_frozen_model,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     cen = emb.filter(F.col("vec_id") < 16)
+    sample = emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 48))
+    codebook = train_frozen_model(sample, cen).persist()
     q = emb.filter(F.col("vec_id") < 10)
-    one = ivfpq_trained_topk(emb, cen, q, k=5, nprobe=1)
-    two = ivfpq_trained_topk(emb, cen, q, k=5, nprobe=2)
+    one = ivfpq_trained_topk(emb, cen, codebook, q, k=5, nprobe=1)
+    two = ivfpq_trained_topk(emb, cen, codebook, q, k=5, nprobe=2)
     d1 = {(r.query_id, r.neighbor_id): r.dist_u12 for r in one.collect()}
     d2_ = {(r.query_id, r.neighbor_id): r.dist_u12 for r in two.collect()}
     # every nprobe=2 pair that lives in the query's own cell must carry

@@ -76,10 +76,6 @@ TEST_REFERENCES: dict[str, str] = {
 # deleted together with those tests, a few tests per change, so each
 # removal stays reviewable: def -> the tests that go with it.
 DELETE_NEXT: dict[str, tuple[str, ...]] = {
-    "stream_jsonl_docs": (
-        "tests/test_jsonl_source.py::test_stream_jsonl_matches_batch",
-        "tests/test_jsonl_source.py::test_streaming_quality_gate_matches_batch",
-    ),
     "stream_xml_history_quarantined": (
         "tests/test_sources.py::test_quarantine_reconciles_batch_and_streaming",
     ),
@@ -89,7 +85,6 @@ DELETE_NEXT: dict[str, tuple[str, ...]] = {
     "replay_quarantined": (
         "tests/test_sources.py::test_replay_quarantined_recovers_fixable_units",
     ),
-    "sessionize_stream": ("tests/test_streaming.py::test_sessionize_stream_smoke",),
 }
 
 # (c) Forks: parameters whose default selects one branch of their
@@ -102,7 +97,6 @@ FORK_REFERENCES: dict[tuple[str, str], str] = {
     ("kcore", "converge"): "tests/test_graph.py::test_kcore_peel_cascade_golden",
     ("profile_table", "exact_ndv"): "tests/test_profiling.py::test_profile_approx_no_expand",
     ("stratified_exact", "two_phase"): "tests/test_textstats.py::test_stratified_exact_two_phase_skew_invariance",
-    ("ivfpq_topk", "train_codebook"): "tests/test_pq_mix.py::test_ivfpq_nprobe_recall_monotone_and_nprobe1_bit_stable",
     # the reader's inline-string xlsx fixture
     ("write_xlsx", "inline"): "tests/test_sources.py::xlsx_dir",
 }

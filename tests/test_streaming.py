@@ -11,7 +11,6 @@ from sea_express_customs_etl_spark.streaming import (
     hourly_event_counts,
     run_availablenow,
     sessionize,
-    sessionize_stream,
     stream_xml_history,
 )
 from sea_express_customs_etl_spark.sources import official_history, read_bid_heads_raw
@@ -240,24 +239,6 @@ def test_archive_only_after_commit(spark, tmp_path):
     assert any(p.name == "batch1.zip" for p in archive.rglob("*")), (
         "archived zip must land under the archive dir"
     )
-
-
-def test_sessionize_stream_smoke(spark, tmp_path):
-    src = str(tmp_path / "events_pq2")
-    _events(spark).write.parquet(src)
-    stream = spark.readStream.schema(_events(spark).schema).parquet(src)
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("select * from sessions_test").collect()
-    got = {(r.user_id, r.n_events) for r in rows}
-    assert (7, 2) in got and (7, 1) in got and (8, 1) in got
 
 
 def test_interval_join_stream_stream_matches_batch(spark, tmp_path):
