@@ -24,7 +24,7 @@ the reference's own shape at ``:94-95,146-156``) inside the parser;
 typing happens in Catalyst afterwards.
 
 ``.xlsx`` binaries are parsed with the pure-stdlib SpreadsheetML reader
-(:mod:`.xlsx_stdlib` — zipfile + ElementTree), legacy ``.xls`` with the
+(:mod:`.xlsx_stdlib` — zipfile + a regex tokenizer), legacy ``.xls`` with the
 pure-stdlib BIFF8 reader (:mod:`.xls_stdlib` — OLE2 + record parse);
 ``.csv`` flows through ``pd.read_csv``. All three feed the identical
 downstream plan — the full trio the reference accepts
@@ -80,51 +80,51 @@ def _is_meaningful(val: str | None) -> bool:
 
 
 def _probe_a1(content: bytes, fname: str, grid: list[list] | None) -> str | None:
-    """Read only cell A1 (OP-SRC-CELL); a legacy ``.xls`` takes it from
-    the caller's already-parsed ``grid``."""
+    """Cell A1 (OP-SRC-CELL): a workbook's from the caller's parsed
+    ``grid``, a CSV's (``grid`` None) from its first line only."""
     try:
-        if fname.lower().endswith(".csv"):
+        if grid is None:
             df = pd.read_csv(
                 io.BytesIO(content), nrows=1, header=None, usecols=[0]
             )
-            if not df.empty:
-                v = str(df.iloc[0, 0]).strip()
-                return v if _is_meaningful(v) else None
-        elif fname.lower().endswith(".xlsx"):
-            v = xlsx_stdlib.probe_a1(content)
-            if v is not None and _is_meaningful(str(v)):
-                return str(v).strip()
-        elif fname.lower().endswith(".xls"):
+            v = None if df.empty else df.iloc[0, 0]
+        else:
             v = grid[0][0] if grid and grid[0] else None
-            if v is not None and _is_meaningful(str(v)):
-                return str(v).strip()
+        if v is not None and _is_meaningful(str(v)):
+            return str(v).strip()
     except Exception as e:
         log.warning("A1 probe failed for %s: %s", fname, e)
     return None
 
 
-def _read_table(
-    content: bytes,
-    fname: str,
-    header: int,
-    grid: list[list] | None = None,
-) -> pd.DataFrame | None:
-    """One header variant of the file as a DataFrame. For xlsx the
-    caller passes the pre-parsed ``grid`` so both format attempts
-    (header=3 then header=2) share a single sheet-XML parse."""
+def _is_old_header(cols) -> bool:
+    names = _norm_headers(cols)
+    return all(c in names for c in OLD_REQUIRED)
+
+
+def _manifest_frame(
+    content: bytes, grid: list[list] | None
+) -> tuple[str, pd.DataFrame]:
+    """The file's format and its one frame: "old" when header row 4
+    (0-based 3) names every ``OLD_REQUIRED`` column (headers
+    normalized), else "new" under header row 3 (0-based 2). A workbook
+    is decided from its ``grid`` rows before any frame is built; a CSV
+    (``grid`` None) is read under each header in turn. Raises when the
+    file has no such header row."""
+    if grid is not None:
+        if len(grid) > 3 and _is_old_header(xlsx_stdlib.header_names(grid, 3)):
+            df = xlsx_stdlib.grid_to_frame(grid, 3)
+            df.columns = _norm_headers(df.columns)
+            return "old", df
+        return "new", xlsx_stdlib.grid_to_frame(grid, 2)
     try:
-        low = fname.lower()
-        if low.endswith(".csv"):
-            return pd.read_csv(io.BytesIO(content), header=header, dtype=object)
-        if low.endswith((".xlsx", ".xls")):
-            if grid is None:
-                grid = _read_grid(content, fname)
-            return xlsx_stdlib.grid_to_frame(grid, header)
-        log.error("unsupported manifest format: %s", fname)
-        return None
+        df = pd.read_csv(io.BytesIO(content), header=3, dtype=object)
+        df.columns = _norm_headers(df.columns)
+        if _is_old_header(df.columns):
+            return "old", df
     except Exception as e:
-        log.info("read with header=%d failed for %s: %s", header, fname, e)
-        return None
+        log.info("read with header=3 failed: %s", e)
+    return "new", pd.read_csv(io.BytesIO(content), header=2, dtype=object)
 
 
 def _read_grid(content: bytes, fname: str) -> list[list]:
@@ -217,13 +217,17 @@ def _new_format_frame(df: pd.DataFrame, fname: str, mawb: str) -> pd.DataFrame:
 
 
 def _rows_for_file(fname: str, content: bytes) -> pd.DataFrame:
+    low = fname.lower()
     grid: list[list] | None = None
-    if fname.lower().endswith((".xlsx", ".xls")):
+    if low.endswith((".xlsx", ".xls")):
         try:
             grid = _read_grid(content, fname)
         except Exception as e:
             log.error("cannot read workbook %s: %s", fname, e)
             return _EMPTY
+    elif not low.endswith(".csv"):
+        log.error("unsupported manifest format: %s", fname)
+        return _EMPTY
 
     # MAWB: A1 if strictly alphanumeric, else filename stem
     a1 = _probe_a1(content, fname, grid)
@@ -233,25 +237,21 @@ def _rows_for_file(fname: str, content: bytes) -> pd.DataFrame:
         else fname.rsplit("/", 1)[-1].rsplit(".", 1)[0].strip()
     )
 
-    # Strategy A: old format (header row 4, named columns)
-    df_old = _read_table(content, fname, header=3, grid=grid)
-    if df_old is not None:
-        df_old.columns = _norm_headers(df_old.columns)
-        if "分提單號碼" in df_old.columns and all(
-            c in df_old.columns for c in OLD_REQUIRED
-        ):
-            return _old_format_frame(df_old, fname, mawb)
-
-    # Strategy B: new format (header row 3, positional A/D/J/K/N/O, ≥15 cols)
-    df_new = _read_table(content, fname, header=2, grid=grid)
-    if df_new is None:
+    try:
+        fmt, df = _manifest_frame(content, grid)
+    except Exception as e:
+        log.info("no header row in %s: %s", fname, e)
         return _EMPTY
-    if len(df_new.columns) < 15:
+    # Old format: header row 4, named columns
+    if fmt == "old":
+        return _old_format_frame(df, fname, mawb)
+    # New format: header row 3, positional A/D/J/K/N/O, ≥15 columns
+    if len(df.columns) < 15:
         log.error(
-            "new format needs ≥15 columns, %s has %d", fname, len(df_new.columns)
+            "new format needs ≥15 columns, %s has %d", fname, len(df.columns)
         )
         return _EMPTY
-    return _new_format_frame(df_new, fname, mawb)
+    return _new_format_frame(df, fname, mawb)
 
 
 def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

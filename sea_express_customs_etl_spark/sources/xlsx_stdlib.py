@@ -3,37 +3,64 @@
 The reference ingests shipper manifests with ``pd.read_excel``
 (``src/process_excel_order.py:200,218``), which needs openpyxl — absent
 in this container. An ``.xlsx`` file is just a ZIP of SpreadsheetML
-parts, so this module parses it with ``zipfile`` + ``ElementTree``:
+parts, so this module reads it with ``zipfile`` plus a stdlib XML
+tokenizer:
 
 * ``read_xlsx_grid(content)`` — first worksheet → row-major grid of
   typed cells (None / str / int / float / bool). Handles sharedStrings,
-  inline strings, formula-string and numeric cells, skipped rows/cells
-  (placed by their ``r=`` references, gaps left as None).
+  inline and rich-text strings, formula-string, boolean, error and
+  numeric cells, skipped rows/cells (placed by their ``r=`` references,
+  gaps left as None). Cell A1 of a manifest (OP-SRC-CELL; reference
+  ``get_mawb_no`` reads only A1, ``:48-56``) is ``grid[0][0]``.
 * ``grid_to_frame(grid, header)`` — mimics
   ``pd.read_excel(header=N, dtype=object)``: header row becomes column
   labels (missing → ``Unnamed: i``, duplicates mangled ``.1``/``.2``),
   data rows padded to sheet width, everything object-dtype.
-* ``probe_a1(content)`` — cell A1 only, without materializing the sheet
-  (OP-SRC-CELL; reference ``get_mawb_no`` reads only A1, ``:48-56``).
 * ``write_xlsx(rows)`` — minimal writer used to build genuine .xlsx
   fixture bytes in tests/benchmarks (sharedStrings by default, inline
   strings optionally) — no third-party writer exists in this
   environment either.
 
-Not handled (documented limits): date serial→datetime conversion (the
-manifests carry no date columns; serials surface as numbers), multiple
-sheets (the reference reads only the active/first sheet), and legacy
-BIFF ``.xls``.
+The worksheet part is tokenized in three steps instead of building an
+element per cell. An expat parse with no per-element handlers checks
+that the part is well-formed, so a truncated or malformed sheet raises
+(and the connector skips the file) exactly as an ElementTree parse
+would. One compiled regex pass over the ``<sheetData>`` slice then
+yields rows and cells: the canonical ``<c r=".." s=".." t="..">`` form
+with one ``<v>`` or one plain inline string is matched directly, any
+other cell (other attribute order, ``<f>`` before ``<v>``, rich text,
+self-closing) by a general cell pattern. A short Python loop places the
+values and resolves shared strings. The grid equals the ElementTree
+reading of the same part (``tests/test_xlsx_tokenizer.py`` checks it
+against an ElementTree oracle) for any namespace prefix, any attribute
+order, rows and cells without ``r``, entities and character references,
+CDATA, comments and processing instructions, and UTF-8 or UTF-16 parts.
+The sheet part is held whole in memory, as ``zipfile`` reads it; the
+small workbook, relationship and shared-string parts are still read
+with ElementTree.
+
+Rejected or not handled (documented limits): a worksheet with a
+DOCTYPE raises — OPC (ECMA-376 Part 2) forbids DTD declarations in
+package parts, and without one the only entities are XML's five
+predefined ones, which the tokenizer decodes. The SpreadsheetML elements must use
+the prefix bound on ``<sheetData>`` or its root element (no rebinding
+inside the sheet data). Date serial→datetime conversion is not done
+(the manifests carry no date columns; serials surface as numbers);
+only the first sheet is read (the reference reads only the
+active/first sheet); legacy BIFF ``.xls`` is :mod:`.xls_stdlib`.
 """
 
 from __future__ import annotations
 
+import functools
 import io
 import re
 import zipfile
 import xml.etree.ElementTree as ET
+from xml.parsers import expat
 
-_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
+_MAIN = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+_NS = "{" + _MAIN + "}"
 _PKG_REL = (
     "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}id"
 )
@@ -84,15 +111,98 @@ def _first_sheet_path(zf: zipfile.ZipFile) -> str:
     return "xl/worksheets/sheet1.xml"
 
 
-def _cell_value(c: ET.Element, shared: list[str]):
-    t = c.get("t", "n")
-    if t == "inlineStr":
-        is_el = c.find(f"{_NS}is")
-        return _si_text(is_el) if is_el is not None else None
-    v = c.find(f"{_NS}v")
-    if v is None or v.text is None:
-        return None
-    text = v.text
+# --------------------------------------------------------------------------
+# worksheet tokenizer
+# --------------------------------------------------------------------------
+
+# a start tag's attribute list (a value may hold '>' but never '<'),
+# captured, and the same list skipped
+_ATTR_LIST = r"""(?:\s+[^\s=/>]+\s*=\s*(?:"[^"]*"|'[^']*'))*"""
+_ATTRS = rf"({_ATTR_LIST})\s*"
+_SKIP_ATTRS = rf"{_ATTR_LIST}\s*"
+_ATTR = re.compile(r"""([^\s=]+)\s*=\s*(?:"([^"]*)"|'([^']*)')""")
+_START = re.compile(r"<[^\s/>]+" + _ATTRS + "/?>")
+_SHEET_DATA = re.compile(r"<(?:([^\s/>:]+):)?sheetData" + _ATTRS + "(/?)>")
+# markup that carries no element: comments, processing instructions
+# (the XML declaration among them) and CDATA sections
+_MARKUP = re.compile(r"<!--.*?-->|<\?.*?\?>|<!\[CDATA\[(.*?)\]\]>", re.S)
+_ENCODING = re.compile(
+    rb"(?:\xef\xbb\xbf)?<\?xml[^>]*?encoding\s*=\s*[\"']([A-Za-z][\w.-]*)[\"']"
+)
+_REF = re.compile(r"&(?:#x([0-9a-fA-F]+)|#([0-9]+)|(lt|gt|amp|quot|apos));")
+_PREDEFINED = {"lt": "<", "gt": ">", "amp": "&", "quot": '"', "apos": "'"}
+_ATTR_WS = str.maketrans("\t\n", "  ")
+
+
+def _no_dtd(*_) -> None:
+    raise ValueError("worksheet part declares a DTD")
+
+
+def _decode(data: bytes) -> str:
+    """Sheet part bytes → text, by BOM, then the XML declaration's
+    encoding, then UTF-8 (XML 1.0 Appendix F)."""
+    if data[:2] in (b"\xff\xfe", b"\xfe\xff"):
+        return data.decode("utf-16")
+    if data[:4] == b"<\x00?\x00":
+        return data.decode("utf-16-le")
+    if data[:4] == b"\x00<\x00?":
+        return data.decode("utf-16-be")
+    m = _ENCODING.match(data)
+    text = data.decode(m.group(1).decode("ascii") if m else "utf-8")
+    return text[1:] if text[:1] == "\ufeff" else text
+
+
+def _unmark(m: re.Match) -> str:
+    # comments and PIs vanish; a CDATA section becomes escaped text
+    cdata = m.group(1)
+    return "" if cdata is None else cdata.replace("&", "&amp;").replace("<", "&lt;")
+
+
+def _deref(m: re.Match) -> str:
+    hex_, dec, name = m.groups()
+    if name:
+        return _PREDEFINED[name]
+    return chr(int(hex_, 16) if hex_ else int(dec))
+
+
+def _text(s: str) -> str:
+    """Character data with its entity and character references decoded."""
+    return _REF.sub(_deref, s) if "&" in s else s
+
+
+def _attrs(s: str) -> dict[str, str]:
+    """Attribute list → values, normalized as an XML parser does."""
+    return {k: _text((dq or sq).translate(_ATTR_WS)) for k, dq, sq in _ATTR.findall(s)}
+
+
+@functools.cache
+def _patterns(prefix: str) -> tuple[re.Pattern, ...]:
+    """(cell/row tokens, row start, other cell, ``<v>`` text, ``<is>``
+    body, ``<t>`` text) for SpreadsheetML elements written with
+    ``prefix`` ('' or 'x:')."""
+    p = re.escape(prefix)
+    tokens = re.compile(
+        # a canonical cell whose text holds no reference → (column
+        # letters, t, <v> text, '>' + inline text); few groups keep the
+        # pass fast
+        rf'<{p}c r="([A-Z]+)[0-9]+"(?: s="[0-9]+")?(?: t="([a-zA-Z]+)")?'
+        rf"(?:/>|>(?:<{p}v>([^<&]*)</{p}v>"
+        rf'|<{p}is><{p}t(?: xml:space="preserve")?(>[^<&]*)</{p}t></{p}is>)?</{p}c>)'
+        # any other cell, a row start or a row end → the whole element
+        rf"|(<{p}c{_SKIP_ATTRS}(?:/>|>.*?</{p}c\s*>)|<{p}row{_SKIP_ATTRS}/?>|</{p}row\s*>)",
+        re.S,
+    )
+    row = re.compile(rf'<{p}row(?: r="([0-9]+)")?{_ATTRS}(/?)>')
+    cell = re.compile(rf"<{p}c{_ATTRS}(?:/>|>(.*))", re.S)
+    # an element's text is the character data before its first child
+    v = re.compile(rf"<{p}v{_SKIP_ATTRS}(?:/>|>([^<]*))")
+    is_ = re.compile(rf"<{p}is{_SKIP_ATTRS}(?:/>|>(.*?)</{p}is\s*>)", re.S)
+    t = re.compile(rf"<{p}t{_SKIP_ATTRS}(?:/>|>([^<]*))")
+    return tokens, row, cell, v, is_, t
+
+
+def _typed(t: str, text: str, shared: list[str]):
+    """A non-inline cell's ``<v>`` text as its typed value."""
     if t == "s":
         return shared[int(text)]
     if t == "str":
@@ -112,45 +222,82 @@ def read_xlsx_grid(content: bytes) -> list[list]:
         shared = _shared_strings(zf)
         sheet_xml = zf.read(_first_sheet_path(zf))
 
+    # namespace-aware, as ElementTree parses: an unbound prefix raises too
+    parser = expat.ParserCreate(namespace_separator="}")
+    parser.StartDoctypeDeclHandler = _no_dtd
+    parser.Parse(sheet_xml, True)  # raises on a malformed part
+
+    text = _decode(sheet_xml)
+    if "\r" in text:  # XML line-end normalization
+        text = text.replace("\r\n", "\n").replace("\r", "\n")
+    text = _MARKUP.sub(_unmark, text)
+    sd = _SHEET_DATA.search(text)
+    if sd is None or sd.group(3):
+        return []
+    prefix = sd.group(1)
+    xmlns = f"xmlns:{prefix}" if prefix else "xmlns"
+    bound = _attrs(sd.group(2)).get(xmlns)
+    if bound is None:
+        bound = _attrs(_START.search(text).group(1)).get(xmlns)
+    if bound != _MAIN:
+        return []
+    prefix = f"{prefix}:" if prefix else ""
+    body = text[sd.end() : text.index(f"</{prefix}sheetData", sd.end())]
+    tokens, row_pat, cell_pat, v_pat, is_pat, t_pat = _patterns(prefix)
+
     grid: list[list] = []
-    # iterparse keeps memory bounded by one <row> at a time
-    for _event, row in ET.iterparse(io.BytesIO(sheet_xml)):
-        if row.tag != f"{_NS}row":
+    cells: list | None = None  # the open row's cells
+    cols: dict[str, int] = {}  # column letters → index
+    for letters, t, v, inline, element in tokens.findall(body):
+        if letters:
+            if cells is None:  # a cell outside any row
+                continue
+            col = cols.get(letters)
+            if col is None:
+                col = cols[letters] = _col_index(letters)
+            if t == "inlineStr":
+                val = inline[1:] if inline else None
+            else:
+                val = _typed(t, v, shared) if v else None
+        elif element[1] == "/":  # row end
+            cells = None
             continue
-        r_attr = row.get("r")
-        row_idx = int(r_attr) - 1 if r_attr else len(grid)
-        while len(grid) <= row_idx:
-            grid.append([])
-        cells = grid[row_idx]
-        for c in row.iter(f"{_NS}c"):
-            ref = c.get("r")
+        elif row := row_pat.match(element):
+            r, attrs, closed = row.groups()
+            if not r and attrs:
+                r = _attrs(attrs).get("r")
+            row_idx = int(r) - 1 if r else len(grid)
+            while len(grid) <= row_idx:
+                grid.append([])
+            cells = None if closed else grid[row_idx]
+            continue
+        elif cells is None:
+            continue
+        else:
+            attrs, inner = cell_pat.match(element).groups()
+            a = _attrs(attrs)
+            ref = a.get("r")
             m = _CELL_REF.match(ref) if ref else None
             col = _col_index(m.group(1)) if m else len(cells)
+            t = a.get("t", "n")
+            if t == "inlineStr":
+                is_m = is_pat.search(inner or "")
+                val = (
+                    "".join(map(_text, t_pat.findall(is_m.group(1) or "")))
+                    if is_m
+                    else None
+                )
+            else:
+                v_m = v_pat.search(inner or "")
+                v = v_m.group(1) if v_m else None
+                val = _typed(t, _text(v), shared) if v else None
+        if col == len(cells):
+            cells.append(val)
+        else:
             while len(cells) <= col:
                 cells.append(None)
-            cells[col] = _cell_value(c, shared)
-        row.clear()
+            cells[col] = val
     return grid
-
-
-def probe_a1(content: bytes):
-    """Typed value of cell A1 (None when empty/absent) — OP-SRC-CELL."""
-    with zipfile.ZipFile(io.BytesIO(content)) as zf:
-        sheet_xml = zf.read(_first_sheet_path(zf))
-        shared: list[str] | None = None
-        for _event, el in ET.iterparse(io.BytesIO(sheet_xml)):
-            if el.tag != f"{_NS}c":
-                continue
-            ref = el.get("r")
-            if ref is not None and ref != "A1":
-                if _CELL_REF.match(ref):
-                    return None  # first cell isn't A1 → A1 empty
-                continue
-            if el.get("t") == "s":
-                shared = _shared_strings(zf) if shared is None else shared
-                return _cell_value(el, shared)
-            return _cell_value(el, [])
-    return None
 
 
 # --------------------------------------------------------------------------
@@ -158,10 +305,10 @@ def probe_a1(content: bytes):
 # --------------------------------------------------------------------------
 
 
-def grid_to_frame(grid: list[list], header: int):
-    """Mimic ``pd.read_excel(header=N, dtype=object)`` over a grid."""
-    import pandas as pd
-
+def header_names(grid: list[list], header: int) -> list:
+    """The column labels ``pd.read_excel(header=N)`` gives the grid:
+    missing → ``Unnamed: i``, duplicates mangled ``.1``/``.2``, one per
+    column of the widest row."""
     if len(grid) <= header:
         raise ValueError(f"sheet has {len(grid)} rows, header={header}")
     width = max((len(r) for r in grid), default=0)
@@ -177,6 +324,15 @@ def grid_to_frame(grid: list[list], header: int):
         else:
             seen[key] = 0
         names.append(name)
+    return names
+
+
+def grid_to_frame(grid: list[list], header: int):
+    """Mimic ``pd.read_excel(header=N, dtype=object)`` over a grid."""
+    import pandas as pd
+
+    names = header_names(grid, header)
+    width = len(names)
     data = [r + [None] * (width - len(r)) for r in grid[header + 1 :]]
     return pd.DataFrame(data, columns=names, dtype=object)
 

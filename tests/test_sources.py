@@ -394,6 +394,38 @@ def test_xls_workbook_is_parsed_once_per_file(monkeypatch):
     assert list(new["qty_raw"]) == ["3", "2", "1"]
 
 
+def test_xlsx_workbook_is_parsed_and_framed_once_per_file(monkeypatch):
+    """An xlsx manifest's sheet is tokenized once (A1 included) and
+    framed once, under the header row its format was picked from."""
+    from sea_express_customs_etl_spark.sources import excel_source, xlsx_stdlib
+    from sea_express_customs_etl_spark.sources.xlsx_stdlib import write_xlsx
+
+    calls = []
+    for name in ("read_xlsx_grid", "grid_to_frame"):
+        fn = getattr(xlsx_stdlib, name)
+        monkeypatch.setattr(
+            xlsx_stdlib,
+            name,
+            lambda *a, _fn=fn, _name=name: calls.append(_name) or _fn(*a),
+        )
+    old = excel_source._rows_for_file(
+        "old_manifest.xlsx", write_xlsx(_csv_to_rows(OLD_CSV))
+    )
+    assert calls == ["read_xlsx_grid", "grid_to_frame"]
+    new = excel_source._rows_for_file(
+        "new_manifest.xlsx", write_xlsx(_csv_to_rows(NEW_CSV), inline=True)
+    )
+    assert calls == ["read_xlsx_grid", "grid_to_frame"] * 2
+
+    assert set(old["mawb_no"]) == {"old_manifest"}  # A1 not alphanumeric
+    assert list(old["fmt"]) == ["old"] * 3
+    assert list(old["item_no"]) == [1, 2, 1]
+    assert set(new["mawb_no"]) == {"25040104EX"}  # A1 from the grid
+    assert list(new["fmt"]) == ["new"] * 3
+    assert list(new["hawb_raw"]) == ["N001", "N001", "N002"]
+    assert list(new["qty_raw"]) == ["3", "2", "1"]
+
+
 def test_manifest_rejects_narrow_and_junk_files(spark, tmp_path):
     d = tmp_path / "bad_in"
     d.mkdir()
