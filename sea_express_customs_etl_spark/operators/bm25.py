@@ -67,16 +67,15 @@ def tokenize_docs(
 
 
 def bm25_topk(
-    docs: DataFrame,
+    staged: DataFrame,
     queries: tuple[tuple[str, tuple[str, ...]], ...] = FIXED_QUERIES,
     k: int = 10,
-    text_col: str = "text",
     id_col: str = "doc_id",
     include_rank: bool = False,
-    staged: DataFrame | None = None,
     include_score: bool = False,
 ) -> DataFrame:
-    """Top-``k`` documents per query by integer BM25. Output:
+    """Top-``k`` documents per query by integer BM25 over a
+    :func:`tokenize_docs` frame. Output:
     ``query_id, doc_id, score_u6`` (score in micro-units of
     idf·saturation), ties broken by doc_id — or ``query_id, doc_id,
     rank`` with ``include_rank=True`` (the fusion-input form;
@@ -84,19 +83,14 @@ def bm25_topk(
     can serve both the fusion input and the scored top-k — a (q, doc)
     pair's score does not depend on ``k``, so the rank ≤ 10 slice of a
     k = 20 run is bit-identical to a k = 10 run).
-    ``staged`` lets a composed query (retrieval_ndcg and siblings)
-    pass ONE persisted tokenization shared across its truth/ranking
-    passes instead of re-splitting the corpus per stage."""
-    spark = docs.sparkSession
+    ``staged`` feeds both the dl branch and the tf explode, so a
+    caller persists it (the ≥2-consumers rule — without the pin each
+    branch re-splits every document)."""
+    spark = staged.sparkSession
     qterms = spark.createDataFrame(
         [(qid, t) for qid, ts in queries for t in ts],
         ["query_id", "term"],
     )
-    # persisted: the tokenized corpus feeds BOTH the dl branch and the
-    # tf explode (the CLAUDE.md ≥2-consumers rule — without the pin
-    # each branch re-splits every document)
-    if staged is None:
-        staged = tracked_persist(tokenize_docs(docs, text_col, id_col))
     dl = staged.select(id_col, F.size("_toks").cast("bigint").alias("dl"))
     scalars = dl.agg(
         F.count(F.lit(1)).cast("bigint").alias("_n_docs"),
@@ -144,25 +138,22 @@ def bm25_topk(
 
 
 def term_coverage_ranked(
-    docs: DataFrame,
+    staged: DataFrame,
     queries: tuple[tuple[str, tuple[str, ...]], ...] = FIXED_QUERIES,
     k: int = 10,
-    text_col: str = "text",
     id_col: str = "doc_id",
-    staged: DataFrame | None = None,
 ) -> DataFrame:
-    """Second lexical ranker for hybrid fusion: documents ranked by
+    """Second lexical ranker for hybrid fusion: documents of a
+    :func:`tokenize_docs` frame ranked by
     how many DISTINCT query terms they contain (coverage — the
     boolean-AND-ish signal BM25's tf-weighting can under-rank), ties
     by doc id. Same broadcast-filtered explode shape as
     :func:`bm25_topk`. Output: query_id, id, rank (1-based)."""
-    spark = docs.sparkSession
+    spark = staged.sparkSession
     qterms = spark.createDataFrame(
         [(qid, t) for qid, ts in queries for t in ts],
         ["query_id", "term"],
     )
-    if staged is None:
-        staged = tokenize_docs(docs, text_col, id_col)
     cov = (
         staged.select(id_col, F.explode("_toks").alias("term"))
         .join(F.broadcast(qterms), "term")

@@ -86,6 +86,18 @@ def apply_merge(syms: Column, left: str, right: str) -> Column:
     )
 
 
+def bpe_pieces(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """The word→pieces dictionary ``(_w, _toks)`` of the distinct
+    words in ``words._w`` under a merge list: the greedy merge folds
+    run once per distinct word. The dictionary is a pure function of
+    the word, so one built over a superset vocabulary is row-identical
+    after an inner join restricts it to a corpus's words."""
+    syms = _chars(F.col("_w"))
+    for left, right in merges:
+        syms = apply_merge(syms, left, right)
+    return words.select("_w").distinct().select("_w", syms.alias("_toks"))
+
+
 def bpe_train(
     df: DataFrame,
     n_merges: int = 20,
@@ -161,13 +173,10 @@ def bpe_encode(
     documents reassemble with one bounded-state shuffle on the doc id
     (words-per-doc is physics, not corpus size).
 
-    ``enc``: optionally inject a pre-built ``(_w, _toks)`` dictionary
-    (the session word→pieces table — r10 VERDICT #5). The dictionary
-    is a pure function of the word, so any superset dictionary (e.g.
-    one built over the FULL corpus vocabulary) is row-identical after
-    the inner join restricts it to ``df``'s words; callers composing
-    several encodes under one frozen model build the fold once per
-    session instead of once per query.
+    ``enc``: optionally inject a pre-built :func:`bpe_pieces`
+    dictionary (the session word→pieces table — r10 VERDICT #5), so
+    callers composing several encodes under one frozen model build the
+    fold once per session instead of once per query.
 
     ``counts_only``: emit only (id, n_tokens) — callers that never
     read the token array (packing, fertility-style counts) get a
@@ -188,12 +197,7 @@ def bpe_encode(
         ).alias("_wi", "_w"),
     )
     if enc is None:
-        syms = _chars(F.col("_w"))
-        for left, right in merges:
-            syms = apply_merge(syms, left, right)
-        enc = (
-            words.select("_w").distinct().select("_w", syms.alias("_toks"))
-        )
+        enc = bpe_pieces(words, merges)
     if counts_only:
         return (
             words.join(
@@ -404,14 +408,13 @@ def wordpiece_encode_pieces(
 
 def bpe_fertility(
     df: DataFrame,
-    merges: list[tuple[str, str]],
+    enc: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     group_col: str = "source",
-    enc: DataFrame | None = None,
 ) -> DataFrame:
     """Tokenizer fertility audit per domain: pieces-per-word under a
-    learned merge list — THE deployment metric for a subword
+    learned merge list, read from its :func:`bpe_pieces` dictionary
+    ``enc`` — THE deployment metric for a subword
     vocabulary (a domain whose fertility is high pays proportionally
     more sequence length / compute per word; cf. the multilingual
     fertility analyses around mBERT/XLM-R, e.g. Rust et al. 2021,
@@ -422,10 +425,10 @@ def bpe_fertility(
     share of words split into >1 piece. All integer (single
     positive-operand DIVs).
 
-    Scale: the greedy merge fold runs ONCE PER DISTINCT WORD (the
-    bpe_encode dictionary-grain discipline) and the encoded vocab
-    broadcasts back onto the exploded corpus; per-source rollup is
-    one partial-agg shuffle.
+    Scale: the greedy merge fold ran ONCE PER DISTINCT WORD when the
+    dictionary was built (the bpe_encode dictionary-grain discipline);
+    its per-word piece counts broadcast back onto the exploded corpus,
+    and the per-source rollup is one partial-agg shuffle.
     """
     words = df.select(
         F.col(group_col),
@@ -436,21 +439,7 @@ def bpe_fertility(
             )
         ).alias("_w"),
     )
-    if enc is None:
-        syms = _chars(F.col("_w"))
-        for left, right in merges:
-            syms = apply_merge(syms, left, right)
-        enc = (
-            words.select("_w")
-            .distinct()
-            .select("_w", F.size(syms).cast("bigint").alias("_np"))
-        )
-    else:
-        # injected session dictionary carries the piece ARRAY — derive
-        # the per-word count (pure function of the word, see bpe_encode)
-        enc = enc.select(
-            "_w", F.size("_toks").cast("bigint").alias("_np")
-        )
+    enc = enc.select("_w", F.size("_toks").cast("bigint").alias("_np"))
     rolled = (
         words.join(F.broadcast(enc), "_w")
         .groupBy(group_col)

@@ -30,6 +30,12 @@ import pyspark.sql.functions as F
 from ..plans.cache import tracked_persist
 
 
+def basket_items(lineitem: DataFrame) -> DataFrame:
+    """The distinct (l_orderkey, l_partkey) basket projection the
+    co-purchase operators read."""
+    return lineitem.select("l_orderkey", "l_partkey").distinct()
+
+
 def item_item_jaccard(
     lineitem: DataFrame,
     min_cooc: int = 2,
@@ -44,9 +50,8 @@ def item_item_jaccard(
     ``items`` (optional) injects an already-materialized distinct
     (order, item) projection — the session basket table."""
     if items is None:
-        items = tracked_persist(
-            lineitem.select("l_orderkey", "l_partkey").distinct()
-        )  # three scans: both co-occurrence sides + the degree count
+        # three scans: both co-occurrence sides + the degree count
+        items = tracked_persist(basket_items(lineitem))
     deg = items.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("_d")
     )
@@ -81,14 +86,11 @@ def item_item_jaccard(
     )
 
 
-def frequent_triples(
-    lineitem: DataFrame,
-    min_support: int = 2,
-    items: DataFrame | None = None,
-) -> DataFrame:
+def frequent_triples(items: DataFrame, min_support: int = 2) -> DataFrame:
     """Frequent 3-itemsets over order baskets — Apriori level 3
     (Agrawal & Srikant, VLDB 1994): every unordered part triple
-    co-occurring in at least ``min_support`` orders. The level the
+    co-occurring in at least ``min_support`` orders of the
+    :func:`basket_items` projection ``items``. The level the
     pairwise CF family (:func:`item_item_jaccard`) stops short of —
     bundle detection ("these THREE ship together") needs the triple.
 
@@ -100,14 +102,10 @@ def frequent_triples(
     does. Candidate enumeration is the ordered double self-join
     (p1 < p2 < p3 — each triple generated exactly once); fan-out is
     Σ C(basket,3), bounded by the max basket size (TPC-H caps at 7 →
-    ≤35 per order; real carts cap similarly). Output:
-    ``p1, p2, p3, support`` (bigint), all nonnegative integers.
-    ``items`` (optional) injects an already-materialized distinct
-    (order, item) projection — the session basket table."""
-    if items is None:
-        items = tracked_persist(
-            lineitem.select("l_orderkey", "l_partkey").distinct()
-        )  # scans: frequent-item count + three self-join branches
+    ≤35 per order; real carts cap similarly). ``items`` feeds the
+    frequent-item count and three self-join branches, so a caller
+    materializes it. Output:
+    ``p1, p2, p3, support`` (bigint), all nonnegative integers."""
     freq = (
         items.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -130,12 +128,10 @@ def frequent_triples(
 
 
 def basket_rules(
-    lineitem: DataFrame,
-    min_support: int = 2,
-    k: int = 50,
-    items: DataFrame | None = None,
+    items: DataFrame, min_support: int = 2, k: int = 50
 ) -> DataFrame:
-    """Association rules A → B over order baskets — the
+    """Association rules A → B over the order baskets of a
+    :func:`basket_items` projection — the
     confidence/lift layer (Agrawal/Imieliński/Swami SIGMOD 1993) on
     top of the pair co-occurrence the CF family already mines:
 
@@ -148,15 +144,9 @@ def basket_rules(
     different confidence). Top-``k`` by (lift DESC, conf DESC, a, b)
     via TakeOrderedAndProject — never a global sort.
 
-    Plan: the same distinct (order, item) projection feeds item
-    supports and the basket-bounded pair self-join; the 1-row order
-    count rides a pinned broadcast (the allowed scalar class).
-    ``items`` (optional) injects an already-materialized distinct
-    (order, item) projection — the session basket table."""
-    if items is None:
-        items = tracked_persist(
-            lineitem.select("l_orderkey", "l_partkey").distinct()
-        )
+    Plan: ``items`` feeds item supports and the basket-bounded pair
+    self-join; the 1-row order count rides a pinned broadcast (the
+    allowed scalar class)."""
     n_orders = items.agg(
         F.countDistinct("l_orderkey").cast("bigint").alias("_n")
     )

@@ -312,56 +312,25 @@ def embedding_near_dups(
     threshold: float = 0.4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    strategy: str = "blocked",
     num_blocks: int = 16,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a < b) id pairs with
     rounded cosine ≥ ``threshold``. Output: id_a, id_b, cosine.
 
-    Strategies (identical results):
-
-    * ``"blocked"`` (default): distributed block × block all-pairs.
-      Every vector gets a deterministic block id (``xxhash64(id) %
-      num_blocks``); each unordered block pair ``(bi ≤ bj)`` becomes one
-      cogroup whose two sides are compared with a numpy kernel that
-      accumulates over the DIMENSION axis, so every dot product is the
-      same left-to-right float64 fold the Catalyst/DuckDB versions
-      compute — bit-identical results. Nothing collects to the driver;
-      per-task memory is bounded by two blocks (~2·n/num_blocks rows),
-      so the corpus size the operator can handle scales with
-      ``num_blocks``, not driver RAM. Total work is still O(n²) —
-      that is what the exact all-pairs semantics costs; for sublinear
-      near-dup at 100 TB use :func:`ivf_near_dups` (cluster-blocked)
-      or the MinHash-LSH pipeline above.
-    * ``"fold"``: pure Catalyst theta-join + zip_with/aggregate fold —
-      no Python workers, slower per pair.
+    Distributed block × block all-pairs. Every vector gets a
+    deterministic block id (``xxhash64(id) % num_blocks``); each
+    unordered block pair ``(bi ≤ bj)`` becomes one cogroup whose two
+    sides are compared with a numpy kernel that accumulates over the
+    DIMENSION axis, so every dot product is the same left-to-right
+    float64 fold the Catalyst/DuckDB versions compute — bit-identical
+    results. Nothing collects to the driver; per-task memory is bounded
+    by two blocks (~2·n/num_blocks rows), so the corpus size the
+    operator can handle scales with ``num_blocks``, not driver RAM.
+    Total work is still O(n²) — that is what the exact all-pairs
+    semantics costs; for sublinear near-dup at 100 TB use
+    :func:`ivf_near_dups` (cluster-blocked) or the MinHash-LSH pipeline
+    above.
     """
-    from sea_express_customs_etl_spark.operators.similarity import cosine, with_norm
-
-    if strategy == "fold":
-        n = with_norm(df, vec_col, id_col)
-        left = n.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_v").alias("_va"),
-            F.col("_n").alias("_na"),
-        )
-        right = n.select(
-            F.col(id_col).alias("id_b"),
-            F.col("_v").alias("_vb"),
-            F.col("_n").alias("_nb"),
-        )
-        return (
-            left.join(right, F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a",
-                "id_b",
-                cosine(F.col("_va"), F.col("_na"), F.col("_vb"), F.col("_nb")).alias(
-                    "cosine"
-                ),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-
     import numpy as np
     import pandas as pd
 
@@ -961,12 +930,11 @@ def keep_by_quality(
 
 
 def jaccard_threshold_sweep(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    profiles: DataFrame | None = None,
+    prof: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Observed threshold-sweep companion to the LSH S-curve: exact
-    Jaccard for every LSH candidate pair, bucketed into similarity
+    Jaccard for every LSH candidate pair of a :func:`shingle_profiles`
+    frame (the session fingerprint table), bucketed into similarity
     deciles, with the cumulative pairs-at-or-above count — the table
     an operator reads to PICK the dedup threshold (how many more
     pairs does lowering the bar to 0.4 admit?) instead of trusting
@@ -980,17 +948,9 @@ def jaccard_threshold_sweep(
     the banded-LSH candidate set — never an all-pairs product.
 
     Output (11 rows): ``band``, ``n_pairs``, ``pairs_at_or_above``.
-    ``profiles`` (optional) injects an already-materialized
-    :func:`shingle_profiles` frame (the session fingerprint table) so
-    the corpus is not re-shingled per sweep.
     """
     from pyspark.sql import Window
 
-    prof = (
-        profiles
-        if profiles is not None
-        else tracked_persist(shingle_profiles(docs, id_col=id_col))
-    )
     pairs = lsh_candidate_pairs(lsh_bands(prof), id_col=id_col)
     pa = prof.select(
         F.col(id_col).alias("id_a"),
@@ -1017,7 +977,7 @@ def jaccard_threshold_sweep(
         .groupBy("band")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     )
-    spine = docs.sparkSession.range(0, 11).select(
+    spine = prof.sparkSession.range(0, 11).select(
         F.col("id").cast("int").alias("band")
     )
     filled = spine.join(banded, "band", "left").select(

@@ -255,16 +255,29 @@ def kcore(
     ).select(F.col("src").alias("node"), "core_deg")
 
 
-def triangle_counts(
-    edges: DataFrame,
-    triples: DataFrame | None = None,
-) -> DataFrame:
-    """Per-node triangle counts over an undirected edge list (either
-    or both directions may be present; deduplicated internally).
+def triangle_counts(triples: DataFrame) -> DataFrame:
+    """Per-node triangle counts from a one-per-triangle (x, y, z)
+    enumeration of an undirected graph (:func:`triangle_triples`).
     Output: node, n_triangles — nodes in no triangle are absent. The
-    count is orientation-invariant: each triangle is materialized
-    exactly once under any strict total order on nodes, and the
+    count is position-invariant: all three corners explode, so any
+    valid one-per-triangle enumeration gives identical output, and the
     per-node counts are one explode + one partial-aggregated groupBy.
+    """
+    return (
+        triples.select(
+            F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("node")
+        )
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
+    )
+
+
+def triangle_triples(edges: DataFrame) -> DataFrame:
+    """Enumerate each triangle of an undirected edge list (either or
+    both directions may be present; deduplicated internally) exactly
+    once as an (x, y, z) triple. Shared by the per-node counts, the
+    clustering coefficient and the per-edge support (k-truss)
+    operator.
 
     The total order that directs the wedge joins is the compact-forward
     one: direct each edge from the (degree, id)-smaller endpoint to the
@@ -274,29 +287,7 @@ def triangle_counts(
     d² ≤ Σdeg = 2m) — hub nodes in a power-law graph contribute O(m)
     wedges instead of the O(deg²) of an id-only (a < b) orientation
     (SCALE.md round 6; ``copurchase_triangles`` at 1×/8× is in
-    ``BENCH_HISTORY/scale_r12_c4.json``).
-
-    ``triples`` (optional) short-circuits the enumeration with a
-    PRECOMPUTED (x, y, z) frame over the same undirected graph — the
-    session-memo hook (r9 VERDICT #3): the per-node counts are
-    position-invariant (all three corners explode), so any valid
-    one-per-triangle enumeration gives identical output.
-    """
-    tris = _triangle_triples(edges) if triples is None else triples
-    return (
-        tris.select(
-            F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("node")
-        )
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
-    )
-
-
-def _triangle_triples(edges: DataFrame) -> DataFrame:
-    """Enumerate each triangle exactly once as an (x, y, z) triple
-    under the degree orientation (see :func:`triangle_counts`). Shared
-    by the per-node counts and the per-edge support (k-truss)
-    operator."""
+    ``BENCH_HISTORY/scale_r12_c4.json``)."""
     e = tracked_persist(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
@@ -353,10 +344,10 @@ def edge_support(
     bridges/noise; high-support edges sit inside dense cohesive
     groups) and the unit of work a truss-decomposition peel repeats.
 
-    Same triangle enumeration as :func:`triangle_counts` (degree
-    orientation — the power-law dial), then each triple
-    unpivots to its THREE canonical (min, max) edges and one
-    partial-aggregated groupBy counts per edge. Edges in no triangle
+    Same triangle enumeration as :func:`triangle_counts`
+    (:func:`triangle_triples`, degree orientation — the power-law
+    dial), then each triple unpivots to its THREE canonical (min, max)
+    edges and one partial-aggregated groupBy counts per edge. Edges in no triangle
     are absent (support 0 — join back against the edge list when the
     peel needs them). Output: a, b, support.
 
@@ -364,7 +355,7 @@ def edge_support(
     frame over the same graph — the unpivot canonicalizes each corner
     pair to (min, max), so the support is enumeration-invariant.
     """
-    tris = _triangle_triples(edges) if triples is None else triples
+    tris = triangle_triples(edges) if triples is None else triples
     # ONE pass over the triples: a 3-struct explode (a union of three
     # selects would re-execute the wedge joins per branch — measured
     # 15.4 s → ~6 s at sf0.1)
@@ -384,11 +375,8 @@ def edge_support(
     )
 
 
-def hash_walks(
-    edges: DataFrame,
-    walk_length: int = 4,
-    n_walks: int = 2,
-    final_frontier: DataFrame | None = None,
+def walk_trail(
+    edges: DataFrame, walk_length: int = 4, n_walks: int = 2
 ) -> DataFrame:
     """Deterministic 'random' walks — the DeepWalk/node2vec sampling
     primitive with positional hashing in place of randomness (the
@@ -396,37 +384,18 @@ def hash_walks(
     ``n_walks`` walks of ``walk_length`` steps; at each step the next
     neighbor is the argmin of ``md5(walk_id _ step _ cur _ neighbor)``
     — replayable bit-for-bit across engines, retries, and
-    partitionings, so walk corpora never need to be stored. Output:
-    start, walk_id, endpoint (the node after the final step). Walks
-    reaching a node with no out-edges terminate (dropped); symmetric
-    edge lists have none.
+    partitionings, so a materialized trail is row-identical to a fresh
+    one. Output: step (1..walk_length), start, walk_id, cur (the node
+    after that step). Walks reaching a node with no out-edges
+    terminate (their later steps are absent); symmetric edge lists
+    have none.
 
     Scale shape: the frontier is |nodes|·n_walks rows; each step is
     one edge join (fan-out = degree) + a per-walk argmin window whose
     rank-filter keeps Spark's WindowGroupLimit rewrite (map-side
     partial top-1), then a lazy checkpoint to truncate lineage —
     node2vec's sampling pass, one join per step, nothing driver-side.
-
-    ``final_frontier``: optionally inject the step-``walk_length``
-    frontier (start, walk_id, cur) from a session walk-trail table —
-    the walks are deterministic (bit-identical across partitionings by
-    construction), so a materialized replay is row-identical to a
-    fresh one; ``edges`` is ignored when it is given."""
-    if final_frontier is not None:
-        return final_frontier.select(
-            "start", "walk_id", F.col("cur").alias("endpoint")
-        )
-    return _walk_frontiers(edges, walk_length, n_walks)[-1].select(
-        "start", "walk_id", F.col("cur").alias("endpoint")
-    )
-
-
-def _walk_frontiers(
-    edges: DataFrame, walk_length: int, n_walks: int
-) -> list[DataFrame]:
-    """The shared walk loop: returns the frontier AFTER each step
-    (length ``walk_length``; step t's frame has columns start,
-    walk_id, cur)."""
+    """
     from pyspark.sql import Window
 
     # one scan per step (plus the frontier init): without the pin the
@@ -444,7 +413,7 @@ def _walk_frontiers(
         )
         .withColumn("cur", F.col("start"))
     )
-    out = []
+    trail = None
     for t in range(1, walk_length + 1):
         h = F.md5(
             F.concat_ws(
@@ -463,40 +432,30 @@ def _walk_frontiers(
             .select("start", "walk_id", F.col("dst").alias("cur"))
             .localCheckpoint(eager=False)
         )
-        out.append(frontier)
-    return out
+        part = frontier.select(F.lit(t).alias("step"), "start", "walk_id", "cur")
+        trail = part if trail is None else trail.unionByName(part)
+    return trail
 
 
 def walk_covisit_pairs(
-    edges: DataFrame,
-    walk_length: int = 4,
-    n_walks: int = 2,
+    trail: DataFrame,
     visit_cap: int = 50,
     min_shared: int = 3,
-    trail: DataFrame | None = None,
 ) -> DataFrame:
     """DeepWalk step 2 — node similarity from shared walk context:
-    two start nodes are related when their walks visit ≥ ``min_shared``
-    common nodes. Output: start_a < start_b, n_shared.
+    two start nodes are related when their walks (a
+    :func:`walk_trail`) visit ≥ ``min_shared`` common nodes. Output:
+    start_a < start_b, n_shared.
 
     ``visit_cap`` drops nodes visited from more than that many starts
     before the pair join — the same hot-key prune as
     ``tfidf_cosine_pairs``' df cap: the co-visit join is Σ visits²
     over KEPT nodes, so hub context nodes (visited from everywhere,
     carrying no similarity signal — the stop-words of the graph) never
-    explode the pair stage. All counts exact integers.
-
-    ``trail``: optionally inject the full (start, node) visit trail
-    from a session walk-trail table (the hash_walks determinism
-    license); ``edges`` is ignored when it is given."""
-    if trail is None:
-        steps = _walk_frontiers(edges, walk_length, n_walks)
-        trail = steps[0].select("start", F.col("cur").alias("node"))
-        for fr in steps[1:]:
-            trail = trail.unionByName(
-                fr.select("start", F.col("cur").alias("node"))
-            )
-    visited = tracked_persist(trail.distinct())  # cap count + both join sides
+    explode the pair stage. All counts exact integers."""
+    visited = tracked_persist(
+        trail.select("start", F.col("cur").alias("node")).distinct()
+    )  # cap count + both join sides
     vf = (
         visited.groupBy("node")
         .agg(F.count(F.lit(1)).alias("_nv"))
@@ -1116,14 +1075,15 @@ def centroid_affinity(
 
 def clustering_coefficient(
     edges: DataFrame,
+    triples: DataFrame,
     ppm: int = 1_000_000,
-    triples: DataFrame | None = None,
 ) -> DataFrame:
     """Local clustering coefficient per node in exact ppm —
     triangles(v) / C(deg(v), 2), the standard "how clique-like is this
-    node's neighborhood" score (Watts-Strogatz 1998). Reuses the
-    degree-oriented triangle enumeration (:func:`triangle_counts` —
-    the O(√m)-fan-out form) and joins per-node distinct degrees back;
+    node's neighborhood" score (Watts-Strogatz 1998). Counts the
+    triangles of ``triples`` (a :func:`triangle_triples` enumeration of
+    the same graph — the O(√m)-fan-out form) with
+    :func:`triangle_counts`, and joins per-node distinct degrees back;
     the ratio is ``(2 · tri · ppm) DIV (deg · (deg - 1))`` — integral,
     aggregation-order-exact, oracle-portable. Nodes with deg < 2 are
     excluded (coefficient undefined); triangle-free nodes appear with
@@ -1155,10 +1115,7 @@ def clustering_coefficient(
         .agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
         .filter(F.col("degree") >= 2)
     )
-    tri = triangle_counts(
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        triples=triples,
-    )
+    tri = triangle_counts(triples)
     return (
         deg.join(tri, "node", "left")
         .select(

@@ -546,10 +546,10 @@ def inverted_index(
 
 def tfidf_cosine_pairs(
     df: DataFrame,
+    df_max: int,
     threshold_num: int = 1,
     threshold_den: int = 2,
     df_cap_ratio: int = 10,
-    df_max: int | None = None,
     idf_unit: int = 1000,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -606,11 +606,7 @@ def tfidf_cosine_pairs(
         .join(F.broadcast(n))
         .filter(
             (F.col("_df") * df_cap_ratio <= F.col("_n"))
-            & (
-                F.col("_df") <= df_max
-                if df_max is not None
-                else F.lit(True)
-            )
+            & (F.col("_df") <= df_max)
         )
         .select(
             F.col(id_col),

@@ -235,29 +235,38 @@ def segment_words(
     )
 
 
+def unigram_piece_counts(
+    wf: DataFrame, vocab: DataFrame, max_piece_len: int = MAX_PIECE_LEN
+) -> DataFrame:
+    """(word, np): the piece count of each word of a (word, freq)
+    dictionary under its Viterbi segmentation by ``vocab`` — the
+    per-word table :func:`unigram_token_counts` applies. The count is
+    a pure function of (word, vocab), so one table over the full
+    corpus dictionary is row-identical for every subset corpus after
+    the inner join."""
+    return segment_words(wf, vocab, max_piece_len).select(
+        "word",
+        F.size(
+            F.filter(F.split("seg", " "), lambda x: x != "")
+        ).cast("bigint").alias("np"),
+    )
+
+
 def unigram_token_counts(
     df: DataFrame,
-    vocab: DataFrame,
+    per_word: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_piece_len: int = MAX_PIECE_LEN,
     max_word_len: int = MAX_WORD_LEN,
-    per_word: DataFrame | None = None,
 ) -> DataFrame:
     """The APPLY side of the trained tokenizer (bpe_encode's shape):
-    per-document token counts under the unigram vocabulary. Viterbi
-    runs once per DISTINCT word (dictionary-encode); the per-word
+    per-document token counts under the unigram vocabulary, read from
+    its :func:`unigram_piece_counts` table ``per_word`` (Viterbi ran
+    once per DISTINCT word when that table was built); the per-word
     piece count joins back onto (doc, word) occurrence counts and one
     partial-aggregated sum produces (id, n_words, n_tokens). Words
     longer than ``max_word_len`` are out of the tokenizer's domain and
-    excluded on both engines (the trainer's documented dial).
-
-    ``per_word``: optionally inject a pre-built (word, np) dictionary
-    (the session table — the bpe_encode ``enc=`` convention); the
-    piece count is a pure function of (word, vocab), so a full-corpus
-    dictionary is row-identical after the inner join and the Viterbi
-    DP runs once per session instead of once per query. ``vocab`` is
-    ignored when ``per_word`` is given."""
+    excluded on both engines (the trainer's documented dial)."""
     words = df.select(
         F.col(id_col),
         F.explode(
@@ -267,14 +276,6 @@ def unigram_token_counts(
     occ = words.groupBy(id_col, "word").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    if per_word is None:
-        wf = occ.groupBy("word").agg(F.sum("n").alias("freq"))
-        per_word = segment_words(wf, vocab, max_piece_len).select(
-            "word",
-            F.size(
-                F.filter(F.split("seg", " "), lambda x: x != "")
-            ).cast("bigint").alias("np"),
-        )
     return (
         occ.join(per_word, "word")  # dictionary-sized; AQE broadcasts
         .groupBy(id_col)

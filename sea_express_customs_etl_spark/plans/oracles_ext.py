@@ -3213,7 +3213,7 @@ FROM part p LEFT JOIN comp c ON c.id = lower(trim(p.p_name))
 """
 
 # deterministic hash-seeded random walks (operators/graph.py:
-# hash_walks): the DeepWalk sampling primitive with positional md5 in
+# walk_trail, step 4): the DeepWalk sampling primitive with positional md5 in
 # place of randomness — per step, next = argmin md5(walk_step_cur_nb),
 # 4 steps unrolled, 2 walks per node over the >=2-co-occurrence graph.
 GRAPH_HASH_WALKS_SQL = """

@@ -36,7 +36,7 @@ trained-artifact license.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from .cache import tracked_persist
@@ -104,16 +104,6 @@ def pretrain_e2e_stages(
     return {"gated": passed, "exact": exact_kept, "kept": kept}
 
 
-def pretrain_e2e_select(
-    docs: DataFrame, emb: DataFrame
-) -> tuple[DataFrame, int]:
-    """Stages 1-6: survivors → decontaminate → UniMax mix + draw.
-    Returns (selected (doc_id, text, source), budget) — the frame the
-    tokenizer trains on and encodes."""
-    st = pretrain_e2e_select_stages(docs, emb)
-    return st["sel"], st["budget"]
-
-
 def pretrain_e2e_select_stages(
     docs: DataFrame, emb: DataFrame
 ) -> dict:
@@ -154,11 +144,7 @@ def pretrain_e2e_select_stages(
 
 
 def pretrain_e2e_datacard(
-    spark: SparkSession,
-    docs: DataFrame,
-    emb: DataFrame,
-    merges: list[tuple[str, str]] | None = None,
-    stages: dict | None = None,
+    docs: DataFrame, stages: dict, merges: list[tuple[str, str]]
 ) -> DataFrame:
     """The flagship's DATACARD: one row per raw source with the
     document count surviving each stage — raw → gated (quarantine +
@@ -169,26 +155,15 @@ def pretrain_e2e_datacard(
     re-derived by the shared oracle WITH-chain, so the datacard can
     never drift from the pipeline it describes.
 
-    Scale: eight partial-agg groupBys on persisted stage frames +
-    |sources|-grained joins; the only corpus-touching work is the
-    chain itself. ``stages`` (optional) injects already-staged stage
-    frames (gated/exact/kept/clean/sel/alloc) — the session staging
-    table path: row-identical to a fresh
-    :func:`pretrain_e2e_select_stages` run by construction, and the
-    chain is then never re-derived per datacard build."""
-    from sea_express_customs_etl_spark.operators.bpe import (
-        bpe_encode,
-        bpe_train,
-    )
+    ``stages`` holds the stage frames of
+    :func:`pretrain_e2e_select_stages` (gated/exact/kept/clean/sel/
+    alloc), read back from the session staging table so their lineage
+    is flat, and ``merges`` is ``bpe_train(stages["sel"], N_MERGES)``.
+    Scale: eight partial-agg groupBys on the stage frames +
+    |sources|-grained joins."""
+    from sea_express_customs_etl_spark.operators.bpe import bpe_encode
 
-    st = stages if stages is not None else pretrain_e2e_select_stages(docs, emb)
-    sel = (
-        st["sel"]
-        if stages is not None  # table-backed: lineage already flat
-        else st["sel"].localCheckpoint(eager=False)  # feeds train + encode
-    )
-    if merges is None:
-        merges = bpe_train(sel, n_merges=N_MERGES)
+    sel = stages["sel"]
     ntok = (
         bpe_encode(sel, merges, counts_only=True)
         .select("doc_id", "n_tokens")
@@ -200,15 +175,15 @@ def pretrain_e2e_datacard(
             F.count(F.lit(1)).cast("bigint").alias(name)
         )
 
-    kept = tracked_persist(st["kept"])
+    kept = tracked_persist(stages["kept"])
     out = (
         _cnt(docs, "n_raw")
-        .join(_cnt(st["gated"], "n_gated"), "source", "left")
-        .join(_cnt(st["exact"], "n_exact"), "source", "left")
+        .join(_cnt(stages["gated"], "n_gated"), "source", "left")
+        .join(_cnt(stages["exact"], "n_exact"), "source", "left")
         .join(_cnt(kept, "n_kept"), "source", "left")
-        .join(_cnt(st["clean"], "n_clean"), "source", "left")
+        .join(_cnt(stages["clean"], "n_clean"), "source", "left")
         .join(
-            st["alloc"].select(
+            stages["alloc"].select(
                 "source", F.col("alloc").cast("bigint").alias("alloc")
             ),
             "source",
@@ -234,36 +209,17 @@ def pretrain_e2e_datacard(
     )
 
 
-def pretrain_e2e(
-    spark: SparkSession,
-    docs: DataFrame,
-    emb: DataFrame,
-    merges: list[tuple[str, str]] | None = None,
-    sel: DataFrame | None = None,
-) -> DataFrame:
-    """The full chain. ``merges`` (optional) injects session-memoized
-    learned merges — they MUST be ``bpe_train(selection, N_MERGES)``
-    of this exact selection (the entry's memo runs that training path
-    itself once; the oracle re-derives the trajectory either way).
-    ``sel`` (optional) injects an already-built (and persisted)
-    selection frame so one invocation never derives the upstream
-    lineage twice. Output: shard, bin_id, n_docs, n_tokens — the
-    sharded pack manifest, one row per (shard, 512-token bin)."""
-    from sea_express_customs_etl_spark.operators.bpe import (
-        bpe_encode,
-        bpe_train,
-    )
+def pretrain_e2e(sel: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
+    """The chain after selection: encode the selected (doc_id, text,
+    source) frame ``sel`` under ``merges`` — which MUST be
+    ``bpe_train(sel, N_MERGES)`` of this exact selection (the oracle
+    re-derives the trajectory) — and pack it. ``sel`` is read back from
+    the session staging table (:func:`pretrain_e2e_select_stages`
+    staged once per session), so its upstream lineage is never derived
+    here. Output: shard, bin_id, n_docs, n_tokens — the sharded pack
+    manifest, one row per (shard, 512-token bin)."""
+    from sea_express_customs_etl_spark.operators.bpe import bpe_encode
 
-    if sel is None:
-        sel, _budget = pretrain_e2e_select(docs, emb)
-        # lineage CUT (the mmr_ann_rerank lesson): sel feeds the
-        # 10-round BPE trainer downstream of a 7-stage composition —
-        # plan rendering alone heap-OOMs without it. localCheckpoint
-        # also persists, covering the train+encode double consumption;
-        # the production form is a staging table at this boundary.
-        sel = sel.localCheckpoint(eager=False)
-    if merges is None:
-        merges = bpe_train(sel, n_merges=N_MERGES)
     tok = bpe_encode(sel, merges, counts_only=True).select(
         "doc_id", "n_tokens"
     )

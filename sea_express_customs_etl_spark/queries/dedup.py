@@ -271,10 +271,7 @@ def _q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative pairs-at-or-above — the table that PICKS the dedup
     threshold, next to the analytic lsh_s_curve. Exact integer ppm
     bands; false-positive candidates land in band 0."""
-    return jaccard_threshold_sweep(
-        _docs(spark, sf_dir),
-        profiles=_shared_profiles(spark, sf_dir),
-    )
+    return jaccard_threshold_sweep(_shared_profiles(spark, sf_dir))
 
 
 @query(oracle=r9b.fs_em_sql(3))

@@ -18,7 +18,6 @@ from sea_express_customs_etl_spark.operators.graph import (
     cooccur_edges,
     edge_churn,
     edge_support,
-    hash_walks,
     hits_bipartite,
     kcore,
     min_plus_paths,
@@ -119,10 +118,7 @@ def _q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering-structure sibling of copurchase_pagerank (wedge-close
     joins, exact integer counts). Edges + triples from the session's
     materialized graph tables (_graph_shared)."""
-    return triangle_counts(
-        _shared_edges(spark, sf_dir, 1),
-        triples=_shared_triples_w1(spark, sf_dir),
-    )
+    return triangle_counts(_shared_triples_w1(spark, sf_dir))
 
 
 @query(oracle=wx.NODE_CLUSTERING_COEFF_SQL)
@@ -131,8 +127,7 @@ def _q_node_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ppm — triangles(v) / C(deg(v), 2): the session's shared
     triangle enumeration (_graph_shared) plus a distinct-degree join."""
     return clustering_coefficient(
-        _shared_edges(spark, sf_dir, 1),
-        triples=_shared_triples_w1(spark, sf_dir),
+        _shared_edges(spark, sf_dir, 1), _shared_triples_w1(spark, sf_dir)
     )
 
 
@@ -200,15 +195,13 @@ def _q_brand_seeded_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_graph_hash_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic DeepWalk-style sampling: 2 walks x 4 steps from
     every node of the >=2-co-occurrence graph, next-neighbor chosen by
-    positional md5 argmin — the walk corpus replays bit-for-bit (never
-    stored), endpoints hash-match the 4-step unrolled oracle."""
-    return hash_walks(
-        None,
-        walk_length=4,
-        n_walks=2,
-        final_frontier=_shared_walk_trail(spark, sf_dir).filter(
-            F.col("step") == 4
-        ),
+    positional md5 argmin — the walk corpus replays bit-for-bit, so
+    the endpoints are step 4 of the session walk trail (walk_trail) and
+    hash-match the 4-step unrolled oracle."""
+    return (
+        _shared_walk_trail(spark, sf_dir)
+        .filter(F.col("step") == 4)
+        .select("start", "walk_id", F.col("cur").alias("endpoint"))
     )
 
 
@@ -219,16 +212,8 @@ def _q_walk_covisit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes, with hub context nodes (visited from > 50 starts, the
     graph's stop-words) pruned before the pair join. Makes the walk
     corpus consumable, all exact integers."""
-    trail = _shared_walk_trail(spark, sf_dir).select(
-        "start", F.col("cur").alias("node")
-    )
     return walk_covisit_pairs(
-        None,
-        walk_length=4,
-        n_walks=2,
-        visit_cap=50,
-        min_shared=3,
-        trail=trail,
+        _shared_walk_trail(spark, sf_dir), visit_cap=50, min_shared=3
     )
 
 
@@ -307,11 +292,7 @@ def _q_frequent_part_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apriori level-3 frequent itemsets over order baskets: every
     part triple co-occurring in ≥2 orders, frequent-item pruned before
     the basket-bounded double self-join."""
-    return frequent_triples(
-        load_table(spark, sf_dir, "lineitem"),
-        min_support=2,
-        items=_shared_items(spark, sf_dir),
-    )
+    return frequent_triples(_shared_items(spark, sf_dir), min_support=2)
 
 
 @query(oracle=ext.BASKET_RULES_SQL)
@@ -319,12 +300,7 @@ def _q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Association rules A→B with exact integer ppm confidence and
     lift over order baskets — the rule layer above pair co-occurrence;
     top-50 by (lift, conf) via TakeOrderedAndProject."""
-    return basket_rules(
-        load_table(spark, sf_dir, "lineitem"),
-        min_support=2,
-        k=50,
-        items=_shared_items(spark, sf_dir),
-    )
+    return basket_rules(_shared_items(spark, sf_dir), min_support=2, k=50)
 
 
 @query(oracle=ext.COPURCHASE_EDGE_CHURN_SQL)

@@ -68,7 +68,6 @@ from sea_express_customs_etl_spark.plans.standins import load_table
 from sea_express_customs_etl_spark.queries import query
 from sea_express_customs_etl_spark.queries.shared import (
     _docs,
-    _emb,
     _lm_scored_by_source,
     _pretrain_shared,
     _pretrain_stage,
@@ -101,13 +100,7 @@ def _q_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection chain runs once per session into the staging table
     (_pretrain_shared); encode + pack read it back."""
     m = _pretrain_shared(spark, sf_dir)
-    return pretrain_e2e(
-        spark,
-        _docs(spark, sf_dir),
-        _emb(spark, sf_dir),
-        merges=m["merges"],
-        sel=_pretrain_stage(spark, m, 5),
-    )
+    return pretrain_e2e(_pretrain_stage(spark, m, 5), m["merges"])
 
 
 @query(oracle=pretrain_e2e_datacard_sql())
@@ -131,13 +124,7 @@ def _q_pretrain_e2e_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
             m["alloc"], "source string, alloc bigint"
         ),
     }
-    return pretrain_e2e_datacard(
-        spark,
-        _docs(spark, sf_dir),
-        _emb(spark, sf_dir),
-        merges=m["merges"],
-        stages=stages,
-    )
+    return pretrain_e2e_datacard(_docs(spark, sf_dir), stages, m["merges"])
 
 
 @query(oracle=ext.PPS_SAMPLE_SQL)

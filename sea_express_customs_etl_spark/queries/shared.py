@@ -15,12 +15,12 @@ from sea_express_customs_etl_spark.operators.bm25 import (
 )
 from sea_express_customs_etl_spark.operators.bpe import (
     FIXED_MERGES,
-    _chars,
-    apply_merge,
+    bpe_pieces,
     bpe_train,
     wordpiece_encode_pieces,
     wordpiece_train,
 )
+from sea_express_customs_etl_spark.operators.cf import basket_items
 from sea_express_customs_etl_spark.operators.dedup import (
     jaccard_verify_profiles,
     lsh_bands,
@@ -30,9 +30,9 @@ from sea_express_customs_etl_spark.operators.dedup import (
 from sea_express_customs_etl_spark.operators.dsir import token_buckets
 from sea_express_customs_etl_spark.operators.fusion import rrf_fuse
 from sea_express_customs_etl_spark.operators.graph import (
-    _triangle_triples,
-    _walk_frontiers,
     label_propagation,
+    triangle_triples,
+    walk_trail,
 )
 from sea_express_customs_etl_spark.operators.lm import lm_score
 from sea_express_customs_etl_spark.operators.pca import pca_power_train
@@ -43,7 +43,7 @@ from sea_express_customs_etl_spark.operators.perceptron import (
 )
 from sea_express_customs_etl_spark.operators.scd import scd2_from_snapshots
 from sea_express_customs_etl_spark.operators.unigram import (
-    segment_words,
+    unigram_piece_counts,
     unigram_train,
     word_dict,
 )
@@ -221,13 +221,9 @@ def _graph_shared(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     to (min, max))."""
 
     def build(base: str) -> dict[str, str]:
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-        ).write.mode("overwrite").format("parquet").saveAsTable(
-            base + "_items"
-        )
+        basket_items(load_table(spark, sf_dir, "lineitem")).write.mode(
+            "overwrite"
+        ).format("parquet").saveAsTable(base + "_items")
         # the edge build and the Apriori family (basket_rules /
         # frequent_part_triples) read the same materialized distinct
         items = spark.table(base + "_items")
@@ -251,7 +247,7 @@ def _graph_shared(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         ew.write.mode("overwrite").format("parquet").bucketBy(
             16, "src"
         ).sortBy("src", "dst").saveAsTable(base + "_ew")
-        _triangle_triples(
+        triangle_triples(
             spark.table(base + "_ew").select("src", "dst")
         ).write.mode("overwrite").format("parquet").saveAsTable(
             base + "_tri1"
@@ -296,16 +292,9 @@ def _shared_walk_trail(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-argmin walks are bit-identical across partitionings."""
 
     def build(tbl: str) -> str:
-        steps = _walk_frontiers(
+        walk_trail(
             _shared_edges(spark, sf_dir, 2), walk_length=4, n_walks=2
-        )
-        trail = None
-        for t, fr in enumerate(steps, start=1):
-            part = fr.select(
-                F.lit(t).alias("step"), "start", "walk_id", "cur"
-            )
-            trail = part if trail is None else trail.unionByName(part)
-        trail.write.mode("overwrite").format("parquet").saveAsTable(tbl)
+        ).write.mode("overwrite").format("parquet").saveAsTable(tbl)
         release_tracked()
         return tbl
 
@@ -404,35 +393,22 @@ def _tok_dict(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
         if kind == "unigram_vocab":
             enc = unigram_train(_docs(spark, sf_dir), rounds=2)
         elif kind == "unigram":
-            enc = segment_words(
+            enc = unigram_piece_counts(
                 word_dict(_docs(spark, sf_dir)),
                 _tok_dict(spark, sf_dir, "unigram_vocab"),
-            ).select(
-                "word",
-                F.size(
-                    F.filter(F.split("seg", " "), lambda x: x != "")
-                )
-                .cast("bigint")
-                .alias("np"),
             )
         else:
-            words = (
-                _docs(spark, sf_dir)
-                .select(
-                    F.explode(
-                        F.filter(
-                            F.split(
-                                F.trim(F.lower(F.col("text"))), r"\s+"
-                            ),
-                            lambda x: x != "",
-                        )
-                    ).alias("_w")
-                )
-                .distinct()
+            words = _docs(spark, sf_dir).select(
+                F.explode(
+                    F.filter(
+                        F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
+                        lambda x: x != "",
+                    )
+                ).alias("_w")
             )
             if kind == "wordpiece":
                 enc = wordpiece_encode_pieces(
-                    words.select(F.col("_w").alias("word")),
+                    words.distinct().select(F.col("_w").alias("word")),
                     _wordpiece_merges_cached(spark, sf_dir),
                     rounds=20,
                 )
@@ -442,10 +418,7 @@ def _tok_dict(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
                     if kind == "bpe_fixed"
                     else _bpe_merges_cached(spark, sf_dir)
                 )
-                syms = _chars(F.col("_w"))
-                for left, right in merges:
-                    syms = apply_merge(syms, left, right)
-                enc = words.select("_w", syms.alias("_toks"))
+                enc = bpe_pieces(words, merges)
         enc.write.mode("overwrite").format("parquet").saveAsTable(tbl)
         release_tracked()  # build-internal pins die with the build
         return tbl
@@ -602,28 +575,21 @@ def _pretrain_stage(spark: SparkSession, m: dict, rank: int) -> DataFrame:
     )
 
 
-def _retrieval_systems(
-    docs: DataFrame, staged: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
+def _retrieval_systems(staged: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Both checked retrieval systems as top-10 frames: BM25 (the
     top-10 slice of its own top-20 — same ordering, and a pair's
     score_u6 is k-independent) and the hybrid RRF fusion re-ranked.
     Carries the scores alongside the ranks (bm25: score_u6, rrf:
     rrf_u6) so ONE build serves the eval trio AND the scored top-k
     queries (bm25_doc_topk / hybrid_rrf_topk). r1 feeds the bm25
-    slice AND the fusion union (the ≥2-consumers rule); ``staged``
-    shares the composed query's ONE persisted tokenization across the
-    bm25 and coverage passes (the eval queries were re-splitting the
-    corpus 3-4×)."""
+    slice AND the fusion union (the ≥2-consumers rule); ``staged`` is
+    the composed query's ONE persisted tokenization, shared by the
+    bm25 and coverage passes."""
     r1 = _tracked_persist(
-        bm25_topk(
-            docs, k=20, include_rank=True, staged=staged, include_score=True
-        )
+        bm25_topk(staged, k=20, include_rank=True, include_score=True)
     )
     sys_bm25 = r1.filter(F.col("rank") <= 10)
-    fused = rrf_fuse(
-        [r1, term_coverage_ranked(docs, k=20, staged=staged)], k=10
-    )
+    fused = rrf_fuse([r1, term_coverage_ranked(staged, k=20)], k=10)
     wr = Window.partitionBy("query_id").orderBy(
         F.col("rrf_u6").desc(), F.col("doc_id")
     )
@@ -641,9 +607,8 @@ def _retrieval_rows(spark: SparkSession, sf_dir: str) -> dict[str, list[tuple]]:
     deterministic."""
 
     def build(_tbl: str) -> dict[str, list[tuple]]:
-        docs = _docs(spark, sf_dir)
-        st = _tracked_persist(tokenize_docs(docs))
-        b, r = _retrieval_systems(docs, staged=st)
+        st = _tracked_persist(tokenize_docs(_docs(spark, sf_dir)))
+        b, r = _retrieval_systems(st)
         return {
             "bm25": sorted(
                 (x.query_id, x.doc_id, x["rank"], x.score_u6)

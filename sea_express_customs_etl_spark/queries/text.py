@@ -103,9 +103,7 @@ def _q_unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the trained vocab AND the apply-pass segmentation, so
     both stages stay hash-pinned end to end."""
     docs = _docs(spark, sf_dir)
-    return unigram_token_counts(
-        docs, None, per_word=_tok_dict(spark, sf_dir, "unigram")
-    )
+    return unigram_token_counts(docs, _tok_dict(spark, sf_dir, "unigram"))
 
 
 @query(oracle=ext.bpe_train_sql(10))
@@ -211,11 +209,8 @@ def _q_bpe_fertility_by_source(
     metric that prices each domain's compute cost under the learned
     vocabulary. Rides the shared merge memo; dictionary-grain encode,
     one source-grain rollup."""
-    merges = _bpe_merges_cached(spark, sf_dir)
     return bpe_fertility(
-        _docs(spark, sf_dir),
-        merges,
-        enc=_tok_dict(spark, sf_dir, "bpe_learned"),
+        _docs(spark, sf_dir), _tok_dict(spark, sf_dir, "bpe_learned")
     )
 
 
@@ -282,9 +277,7 @@ def _q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocabulary AND the apply segmentation, then the slice rollup —
     train, apply, and report all under one hash."""
     docs = _docs(spark, sf_dir)
-    tc = unigram_token_counts(
-        docs, None, per_word=_tok_dict(spark, sf_dir, "unigram")
-    )
+    tc = unigram_token_counts(docs, _tok_dict(spark, sf_dir, "unigram"))
     return (
         tc.join(docs.select("doc_id", "lang", "source"), "doc_id")
         .groupBy("lang", "source")

@@ -12,7 +12,7 @@ LIVE in this environment since r5: Spark ships embedded Apache Derby
 in its own jars, so ``tests/test_jdbc_live.py`` executes the
 partitioned read (4 concurrent range queries, row parity vs the plain
 read), JDBC predicate pushdown (PushedFilters in the plan), and the
-option-assembly guards against a real SQL database — no install, same
+option assembly against a real SQL database — no install, same
 JVM.
 """
 
@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 def partitioned_read_options(
     url: str,
     table: str,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
+    partition_column: str,
+    lower_bound: int,
+    upper_bound: int,
     num_partitions: int = 8,
     fetchsize: int = 10_000,
     **props: str,
@@ -34,25 +34,20 @@ def partitioned_read_options(
     """Assemble JDBC reader options with range partitioning.
 
     ``partition_column`` must be an indexed numeric/date column; Spark
-    issues ``numPartitions`` range-predicate queries so executors read
-    concurrently instead of one WAN cursor.
+    issues ``numPartitions`` range-predicate queries over
+    [``lower_bound``, ``upper_bound``] so executors read concurrently
+    instead of one WAN cursor.
     """
-    opts: dict[str, str] = {
+    return {
         "url": url,
         "dbtable": table,
         "fetchsize": str(fetchsize),
         **props,
+        "partitionColumn": partition_column,
+        "lowerBound": str(lower_bound),
+        "upperBound": str(upper_bound),
+        "numPartitions": str(num_partitions),
     }
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partitioned read requires lower/upper bounds")
-        opts.update(
-            partitionColumn=partition_column,
-            lowerBound=str(lower_bound),
-            upperBound=str(upper_bound),
-            numPartitions=str(num_partitions),
-        )
-    return opts
 
 
 def read_jdbc_table(spark: SparkSession, **options: str) -> DataFrame:

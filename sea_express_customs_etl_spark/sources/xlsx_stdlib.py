@@ -77,8 +77,14 @@ def _col_index(letters: str) -> int:
 
 
 def _si_text(si: ET.Element) -> str:
-    # a shared-string item is either one <t> or rich-text runs <r><t>
-    return "".join(t.text or "" for t in si.iter(f"{_NS}t"))
+    # a shared-string item is either one <t> or rich-text runs <r><t>;
+    # its <rPh> phonetic runs are not part of the displayed text
+    return "".join(
+        t.text or ""
+        for part in si
+        if part.tag != f"{_NS}rPh"
+        for t in part.iter(f"{_NS}t")
+    )
 
 
 def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
@@ -178,8 +184,8 @@ def _attrs(s: str) -> dict[str, str]:
 @functools.cache
 def _patterns(prefix: str) -> tuple[re.Pattern, ...]:
     """(cell/row tokens, row start, other cell, ``<v>`` text, ``<is>``
-    body, ``<t>`` text) for SpreadsheetML elements written with
-    ``prefix`` ('' or 'x:')."""
+    body, ``<t>`` text, ``<rPh>`` element) for SpreadsheetML elements
+    written with ``prefix`` ('' or 'x:')."""
     p = re.escape(prefix)
     tokens = re.compile(
         # a canonical cell whose text holds no reference → (column
@@ -198,7 +204,8 @@ def _patterns(prefix: str) -> tuple[re.Pattern, ...]:
     v = re.compile(rf"<{p}v{_SKIP_ATTRS}(?:/>|>([^<]*))")
     is_ = re.compile(rf"<{p}is{_SKIP_ATTRS}(?:/>|>(.*?)</{p}is\s*>)", re.S)
     t = re.compile(rf"<{p}t{_SKIP_ATTRS}(?:/>|>([^<]*))")
-    return tokens, row, cell, v, is_, t
+    rph = re.compile(rf"<{p}rPh{_SKIP_ATTRS}(?:/>|>.*?</{p}rPh\s*>)", re.S)
+    return tokens, row, cell, v, is_, t, rph
 
 
 def _typed(t: str, text: str, shared: list[str]):
@@ -243,7 +250,7 @@ def read_xlsx_grid(content: bytes) -> list[list]:
         return []
     prefix = f"{prefix}:" if prefix else ""
     body = text[sd.end() : text.index(f"</{prefix}sheetData", sd.end())]
-    tokens, row_pat, cell_pat, v_pat, is_pat, t_pat = _patterns(prefix)
+    tokens, row_pat, cell_pat, v_pat, is_pat, t_pat, rph_pat = _patterns(prefix)
 
     grid: list[list] = []
     cells: list | None = None  # the open row's cells
@@ -282,11 +289,12 @@ def read_xlsx_grid(content: bytes) -> list[list]:
             t = a.get("t", "n")
             if t == "inlineStr":
                 is_m = is_pat.search(inner or "")
-                val = (
-                    "".join(map(_text, t_pat.findall(is_m.group(1) or "")))
-                    if is_m
-                    else None
-                )
+                if is_m:
+                    # the base text: <rPh> phonetic runs are not displayed
+                    runs = rph_pat.sub("", is_m.group(1) or "")
+                    val = "".join(map(_text, t_pat.findall(runs)))
+                else:
+                    val = None
             else:
                 v_m = v_pat.search(inner or "")
                 v = v_m.group(1) if v_m else None

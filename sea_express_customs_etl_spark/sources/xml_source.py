@@ -339,38 +339,6 @@ def split_quarantine(both: DataFrame) -> tuple[DataFrame, DataFrame]:
     return records, quarantine
 
 
-def replay_quarantined(quarantine: DataFrame) -> DataFrame:
-    """Re-parse quarantined ``raw_bytes`` through the SAME record
-    extractor — the replay half of the audit-and-replay contract:
-    after a parser fix (or for units that failed transiently), feed
-    the quarantine table back and recover records without re-reading
-    source files. Units that still fail stay failed (and stay in the
-    quarantine table); nothing is dropped from it here — replay is a
-    read, compaction policy belongs to the caller. Output:
-    RAW_SCHEMA records with the original ``zip::member`` provenance."""
-
-    def _replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[dict] = []
-            for fname, member, raw in zip(
-                pdf["source_file"], pdf["member"], pdf["raw_bytes"]
-            ):
-                if raw is None:
-                    continue
-                src = f"{fname}::{member}" if member else fname
-                try:
-                    out.extend(_records_from_xml_bytes(bytes(raw), src))
-                except Exception as e:  # still bad — stays quarantined
-                    log.info("replay still failing %s: %s", src, e)
-            yield pd.DataFrame(out, columns=_RAW_COLS) if out else (
-                pd.DataFrame({c: pd.Series(dtype=object) for c in _RAW_COLS})
-            )
-
-    return quarantine.select("source_file", "member", "raw_bytes").mapInPandas(
-        _replay, RAW_SCHEMA
-    )
-
-
 def official_history(raw: DataFrame) -> DataFrame:
     """Raw BID_HEAD strings → typed ``table_b_history`` rows.
 

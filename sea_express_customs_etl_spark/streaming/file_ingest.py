@@ -30,12 +30,9 @@ from sea_express_customs_etl_spark.sources.excel_source import (
     declared_cargo,
 )
 from sea_express_customs_etl_spark.sources.xml_source import (
-    QUARANTINED_SCHEMA as XML_QUARANTINED_SCHEMA,
     RAW_SCHEMA as XML_RAW_SCHEMA,
     _parse_partition as _parse_xml,
-    _parse_partition_quarantined as _parse_xml_q,
     official_history,
-    split_quarantine,
 )
 
 
@@ -75,41 +72,6 @@ def stream_xml_history(
         spark, src_dir, "*.{xml,zip}", archive_dir, max_files_per_trigger
     ).mapInPandas(_parse_xml, XML_RAW_SCHEMA)
     return official_history(raw)
-
-
-def stream_xml_history_quarantined(
-    spark: SparkSession,
-    src_dir: str,
-    archive_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming combined records+quarantine frame (same single-scan
-    UDTF as the batch path — one ingestion code path for both modes).
-    Pair with :func:`quarantine_batch_writer` so each micro-batch
-    appends typed rows AND its quarantine rows under ONE foreachBatch
-    commit: the quarantine table inherits the checkpoint's
-    exactly-once file discovery."""
-    return _binary_stream(
-        spark, src_dir, "*.{xml,zip}", archive_dir, max_files_per_trigger
-    ).mapInPandas(_parse_xml_q, XML_QUARANTINED_SCHEMA)
-
-
-def quarantine_batch_writer(
-    records_path: str, quarantine_path: str
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` writer splitting the combined frame: typed
-    ``table_b_history`` appends to ``records_path``, quarantine rows
-    (with the raw bytes, so a fixed parser can REPLAY them) to
-    ``quarantine_path``. Both writes happen inside the same batch
-    function, so a crash retries the whole batch — the streaming
-    parity the batch `split_quarantine` test pins."""
-
-    def write(batch_df: DataFrame, _batch_id: int) -> None:
-        records, quarantine = split_quarantine(batch_df)
-        official_history(records).write.mode("append").parquet(records_path)
-        quarantine.write.mode("append").parquet(quarantine_path)
-
-    return write
 
 
 def stream_manifests(

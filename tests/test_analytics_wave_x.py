@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.operators.graph import (
     clustering_coefficient,
+    triangle_triples,
 )
 from sea_express_customs_etl_spark.operators.scd import cdc_apply
 from sea_express_customs_etl_spark.operators.stats_tests import (
@@ -52,7 +53,7 @@ def test_clustering_coefficient_golden(spark):
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], ["src", "dst"]
     )
-    rows = {r.node: r for r in clustering_coefficient(e).collect()}
+    rows = {r.node: r for r in clustering_coefficient(e, triangle_triples(e)).collect()}
     assert 4 not in rows  # degree 1: undefined, excluded
     assert rows[1].coeff_ppm == 1_000_000  # deg 2, 1 triangle
     assert rows[3].degree == 3

@@ -3,7 +3,7 @@ pinned against pure-Python references on hand fixtures."""
 
 from __future__ import annotations
 
-from sea_express_customs_etl_spark.operators.bm25 import bm25_topk
+from sea_express_customs_etl_spark.operators.bm25 import bm25_topk, tokenize_docs
 from sea_express_customs_etl_spark.operators.graph import hits_bipartite
 
 
@@ -49,7 +49,7 @@ def test_bm25_matches_python_reference(spark):
     )
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     got = {}
-    for r in bm25_topk(df, queries=queries, k=3).collect():
+    for r in bm25_topk(tokenize_docs(df), queries=queries, k=3).collect():
         got.setdefault(r.query_id, []).append((r.doc_id, r.score_u6))
     want = _py_bm25(docs, queries, 3)
     for qid in want:
@@ -66,7 +66,7 @@ def test_bm25_tf_saturation_vs_short_doc_bonus(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     rows = {
         r.doc_id: r.score_u6
-        for r in bm25_topk(df, queries=(("q", ("hash",)),), k=5).collect()
+        for r in bm25_topk(tokenize_docs(df), queries=(("q", ("hash",)),), k=5).collect()
     }
     assert rows[1] > rows[2]
 
@@ -152,7 +152,7 @@ def test_term_coverage_ranker_prefers_more_terms(spark):
     got = {
         (r.query_id, r.doc_id): r.rank
         for r in term_coverage_ranked(
-            df, queries=(("q", ("hash", "join")),), k=5
+            tokenize_docs(df), queries=(("q", ("hash", "join")),), k=5
         ).collect()
     }
     assert got[("q", 2)] == 1  # coverage 2 beats tf 4

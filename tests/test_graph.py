@@ -79,20 +79,23 @@ def test_copurchase_edges_shape(spark):
 
 
 def test_triangle_counts_golden_and_direction_insensitive(spark):
-    from sea_express_customs_etl_spark.operators.graph import triangle_counts
+    from sea_express_customs_etl_spark.operators.graph import (
+        triangle_counts,
+        triangle_triples,
+    )
 
     # K4 on {1,2,3,4}: every node is in C(3,2) = 3 triangles
     k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a != b]
     got = {
         r.node: r.n_triangles
-        for r in triangle_counts(_edges(spark, k4)).collect()
+        for r in triangle_counts(triangle_triples(_edges(spark, k4))).collect()
     }
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
     # one direction only + a dangling edge: same triangles
     one_dir = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 9)]
     got2 = {
         r.node: r.n_triangles
-        for r in triangle_counts(_edges(spark, one_dir)).collect()
+        for r in triangle_counts(triangle_triples(_edges(spark, one_dir))).collect()
     }
     assert got2 == got
 
@@ -178,7 +181,10 @@ def test_triangle_orientations_agree_on_skewed_graph(spark):
     import itertools
     import random
 
-    from sea_express_customs_etl_spark.operators.graph import triangle_counts
+    from sea_express_customs_etl_spark.operators.graph import (
+        triangle_counts,
+        triangle_triples,
+    )
 
     rnd = random.Random(7)
     pairs = [(0, i) for i in range(1, 201)] + [(i, i + 1) for i in range(1, 150)]
@@ -195,7 +201,7 @@ def test_triangle_orientations_agree_on_skewed_graph(spark):
                 want[x] = want.get(x, 0) + 1
     got = {
         r.node: r.n_triangles
-        for r in triangle_counts(_edges(spark, pairs)).collect()
+        for r in triangle_counts(triangle_triples(_edges(spark, pairs))).collect()
     }
     assert got == want and len(got) > 50
 
@@ -204,31 +210,40 @@ def test_hash_walks_deterministic_and_structured(spark):
     """Walk semantics on a 2-node cycle: the only neighbor is always
     chosen, so endpoints alternate with parity of walk_length; layout
     never changes the walks; dead ends terminate the walk."""
-    from sea_express_customs_etl_spark.operators.graph import hash_walks
+    import pyspark.sql.functions as F
+
+    from sea_express_customs_etl_spark.operators.graph import walk_trail
+
+    def endpoints(edges, walk_length, n_walks):
+        return (
+            walk_trail(edges, walk_length, n_walks)
+            .filter(F.col("step") == walk_length)
+            .select("start", "walk_id", F.col("cur").alias("endpoint"))
+        )
 
     cyc = _edges(spark, [(1, 2), (2, 1)])
     got = {
         (r.start, r.walk_id): r.endpoint
-        for r in hash_walks(cyc, walk_length=4, n_walks=2).collect()
+        for r in endpoints(cyc, walk_length=4, n_walks=2).collect()
     }
     # even length on a 2-cycle returns to the start, for every walk id
     assert got == {(1, 0): 1, (1, 1): 1, (2, 0): 2, (2, 1): 2}
     odd = {
         (r.start, r.walk_id): r.endpoint
-        for r in hash_walks(cyc, walk_length=3, n_walks=1).collect()
+        for r in endpoints(cyc, walk_length=3, n_walks=1).collect()
     }
     assert odd == {(1, 0): 2, (2, 0): 1}
 
     # layout invariance on a denser graph
     pairs = [(a, b) for a in range(8) for b in range(8) if a != b]
     df = _edges(spark, pairs)
-    a = sorted(map(tuple, hash_walks(df, 4, 2).collect()))
-    b = sorted(map(tuple, hash_walks(df.repartition(5), 4, 2).collect()))
+    a = sorted(map(tuple, endpoints(df, 4, 2).collect()))
+    b = sorted(map(tuple, endpoints(df.repartition(5), 4, 2).collect()))
     assert a == b and len(a) == 16
 
     # dead end: 1 -> 2 (no out-edge from 2) drops the walk
     chain = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    assert hash_walks(chain, walk_length=2, n_walks=1).count() == 0
+    assert endpoints(chain, walk_length=2, n_walks=1).count() == 0
 
 
 def test_walk_covisit_pairs_semantics(spark):
@@ -237,16 +252,19 @@ def test_walk_covisit_pairs_semantics(spark):
     prunes ubiquitous nodes."""
     from sea_express_customs_etl_spark.operators.graph import (
         walk_covisit_pairs,
+        walk_trail,
     )
 
     def clique(nodes):
         return [(a, b) for a in nodes for b in nodes if a != b]
 
-    df = _edges(spark, clique([1, 2, 3]) + clique([10, 11, 12]))
+    trail = walk_trail(
+        _edges(spark, clique([1, 2, 3]) + clique([10, 11, 12])), 4, 2
+    )
     got = {
         (r.start_a, r.start_b): r.n_shared
         for r in walk_covisit_pairs(
-            df, walk_length=4, n_walks=2, visit_cap=50, min_shared=1
+            trail, visit_cap=50, min_shared=1
         ).collect()
     }
     assert got  # intra-clique pairs exist
@@ -254,9 +272,7 @@ def test_walk_covisit_pairs_semantics(spark):
         (a < 10) == (b < 10) for a, b in got
     )  # never across components
     # cap = 0 prunes every node -> no pairs at all
-    assert (
-        walk_covisit_pairs(df, 4, 2, visit_cap=0, min_shared=1).count() == 0
-    )
+    assert walk_covisit_pairs(trail, visit_cap=0, min_shared=1).count() == 0
 
 
 def test_pagerank_weighted_follows_strength(spark):

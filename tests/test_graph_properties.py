@@ -46,11 +46,12 @@ def test_triangles_match_reference_on_random_graphs(spark):
         und = _rand_graph(rnd, 25, 80)
         from sea_express_customs_etl_spark.operators.graph import (
             triangle_counts,
+            triangle_triples,
         )
 
         df = _edges(spark, und)
         ref = _ref_triangles(und)
-        got = {r.node: r.n_triangles for r in triangle_counts(df).collect()}
+        got = {r.node: r.n_triangles for r in triangle_counts(triangle_triples(df)).collect()}
         assert got == ref, trial
 
 

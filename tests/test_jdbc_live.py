@@ -86,7 +86,7 @@ def test_partitioned_read_and_pushdown(spark, derby_url):
     assert filtered.count() == len([i for i in range(200) if i % 7 == 3])
 
     # option-assembly guard
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError):
         partitioned_read_options(derby_url, table, partition_column="id")
 
 

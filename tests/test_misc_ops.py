@@ -3,6 +3,10 @@ near-dups, and property-based invariants (hypothesis)."""
 
 from __future__ import annotations
 
+import itertools
+import math
+
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 from hypothesis import given, settings
@@ -25,7 +29,7 @@ def test_partitioned_read_options():
     assert opts["partitionColumn"] == "id"
     assert opts["numPartitions"] == "16"
     assert opts["fetchsize"] == "10000"
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError):
         partitioned_read_options("u", "t", partition_column="id")
 
 
@@ -49,7 +53,7 @@ def test_embedding_near_dups(spark):
 
 
 def test_embedding_near_dups_never_collects(spark, monkeypatch):
-    """The blocked strategy must stay fully distributed: constructing
+    """The block × block search must stay fully distributed: constructing
     AND executing the plan may not pull the corpus to the driver
     (VERDICT r1 'What's wrong #1')."""
     import pyspark.sql.dataframe as _dfmod
@@ -76,11 +80,25 @@ def test_embedding_near_dups_blocked_matches_fold(spark):
         (r.id_a, r.id_b, r.cosine)
         for r in embedding_near_dups(df, 0.8, num_blocks=5).collect()
     }
-    fold = {
-        (r.id_a, r.id_b, round(r.cosine, 6))
-        for r in embedding_near_dups(df, 0.8, strategy="fold").collect()
-    }
-    assert blocked == fold and len(blocked) > 0
+    # brute force: float32 inputs widened to float64, each dot product
+    # and squared norm a sequential per-dimension fold
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    wide = {i: [float(np.float32(x)) for x in v] for i, v in vecs}
+    want = set()
+    for a, b in itertools.combinations(sorted(wide), 2):
+        va, vb = wide[a], wide[b]
+        cos = round(
+            fold(va, vb) / (math.sqrt(fold(va, va)) * math.sqrt(fold(vb, vb))),
+            6,
+        )
+        if cos >= 0.8:
+            want.add((a, b, cos))
+    assert blocked == want and len(blocked) > 0
 
 
 def test_embedding_near_dups_empty_corpus(spark):

@@ -3,8 +3,17 @@ tokenizer fertility (bpe), PSI drift, dataset cartography."""
 
 import pyspark.sql.functions as F
 
-from sea_express_customs_etl_spark.operators.bpe import bpe_fertility
+from sea_express_customs_etl_spark.operators.bpe import (
+    bpe_fertility,
+    bpe_pieces,
+    word_freq,
+)
 from sea_express_customs_etl_spark.operators.psi import value_psi_drift
+
+
+def _fertility(docs, merges):
+    vocab = word_freq(docs).select(F.col("word").alias("_w"))
+    return bpe_fertility(docs, bpe_pieces(vocab, merges))
 
 
 def test_bpe_fertility_golden_no_merges(spark):
@@ -13,7 +22,7 @@ def test_bpe_fertility_golden_no_merges(spark):
         [(1, "ab c", "s1"), (2, "ab", "s2")],
         ["doc_id", "text", "source"],
     )
-    out = {r.source: r for r in bpe_fertility(docs, []).collect()}
+    out = {r.source: r for r in _fertility(docs, []).collect()}
     assert out["s1"].n_words == 2 and out["s1"].n_pieces == 5
     assert out["s1"].fert_u6 == 2_500_000
     assert out["s1"].multi_ppm == 1_000_000
@@ -24,8 +33,8 @@ def test_bpe_fertility_merge_lowers_fertility(spark):
     docs = spark.createDataFrame(
         [(1, "ab ab ab", "s")], ["doc_id", "text", "source"]
     )
-    none = bpe_fertility(docs, []).collect()[0]
-    merged = bpe_fertility(docs, [("a", "b")]).collect()[0]
+    none = _fertility(docs, []).collect()[0]
+    merged = _fertility(docs, [("a", "b")]).collect()[0]
     assert merged.n_pieces < none.n_pieces
     assert merged.fert_u6 < none.fert_u6
 

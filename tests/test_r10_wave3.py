@@ -109,6 +109,7 @@ def test_hill_excludes_nonpositive(spark):
 def test_dedup_threshold_sweep_invariants(spark):
     from sea_express_customs_etl_spark.operators.dedup import (
         jaccard_threshold_sweep,
+        shingle_profiles,
     )
     from sea_express_customs_etl_spark.plans.cache import release_tracked
 
@@ -125,7 +126,7 @@ def test_dedup_threshold_sweep_invariants(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r.band: r for r in jaccard_threshold_sweep(docs).collect()}
+    out = {r.band: r for r in jaccard_threshold_sweep(shingle_profiles(docs)).collect()}
     release_tracked()
     assert set(out) == set(range(11))
     assert out[10].n_pairs >= 1  # the identical pair

@@ -15,10 +15,13 @@ Reachability is by name, so two defs that share a name are reached
 together and the scan can miss dead code. A def reached only through
 a string (``getattr``) is not seen: name it in code.
 
-The same walk finds forks inside reached defs: a parameter whose
+The same walk finds forks inside called defs: a parameter whose
 default selects one branch and whose other branch no call in the
-package or a harness selects. Such a branch is a second implementation
-only tests reach, unless it is allowlisted as a test's reference.
+package or a harness selects. For a str or bool default that is the
+non-default branch; for a ``None`` default tested by ``is None`` it is
+the default branch, which rebuilds inline what every caller passes in.
+Such a branch is a second implementation only tests reach, unless it is
+allowlisted as a test's reference.
 """
 
 from __future__ import annotations
@@ -75,25 +78,13 @@ TEST_REFERENCES: dict[str, str] = {
 # Unreached defs that fast-tier tests still check on their own. They are
 # deleted together with those tests, a few tests per change, so each
 # removal stays reviewable: def -> the tests that go with it.
-DELETE_NEXT: dict[str, tuple[str, ...]] = {
-    "stream_xml_history_quarantined": (
-        "tests/test_sources.py::test_quarantine_reconciles_batch_and_streaming",
-    ),
-    "quarantine_batch_writer": (
-        "tests/test_sources.py::test_quarantine_reconciles_batch_and_streaming",
-    ),
-    "replay_quarantined": (
-        "tests/test_sources.py::test_replay_quarantined_recovers_fixable_units",
-    ),
-}
+DELETE_NEXT: dict[str, tuple[str, ...]] = {}
 
-# (c) Forks: parameters whose default selects one branch of their
-# function (see ``_forks``) while no call in the package or a harness
-# passes anything else. The other branch is kept only as the reference
-# a test checks the default path against: (def, parameter) -> that test
-# (or the fixture that selects it).
+# (c) Forks (see ``_forks``) with a branch no call in the package or a
+# harness selects. That branch is kept only as the reference a test
+# checks the live path against: (def, parameter) -> that test (or the
+# fixture that selects it).
 FORK_REFERENCES: dict[tuple[str, str], str] = {
-    ("embedding_near_dups", "strategy"): "tests/test_misc_ops.py::test_embedding_near_dups_blocked_matches_fold",
     ("kcore", "converge"): "tests/test_graph.py::test_kcore_peel_cascade_golden",
     ("profile_table", "exact_ndv"): "tests/test_profiling.py::test_profile_approx_no_expand",
     ("stratified_exact", "two_phase"): "tests/test_textstats.py::test_stratified_exact_two_phase_skew_invariance",
@@ -261,16 +252,15 @@ def _is_str_literal(node: ast.expr) -> bool:
 def _forks(fn) -> dict[str, object]:
     """Parameters of ``fn`` that pick a branch, with their defaults: a
     str default compared by ``==``/``!=``/``in`` against a string
-    literal, or a bool default tested by an ``if`` or a conditional
-    expression."""
+    literal, a bool default tested by an ``if`` or a conditional
+    expression, or a ``None`` default tested by ``is None``/``is not
+    None``."""
     out: dict[str, object] = {}
     tests = [n.test for n in ast.walk(fn) if isinstance(n, (ast.If, ast.IfExp))]
     compares = [
-        (n.left, n.comparators[0])
+        (n.left, n.comparators[0], n.ops[0])
         for n in ast.walk(fn)
-        if isinstance(n, ast.Compare)
-        and len(n.ops) == 1
-        and isinstance(n.ops[0], (ast.Eq, ast.NotEq, ast.In, ast.NotIn))
+        if isinstance(n, ast.Compare) and len(n.ops) == 1
     ]
     for p, d in _defaults(fn).items():
         if isinstance(d, bool):
@@ -280,25 +270,57 @@ def _forks(fn) -> dict[str, object]:
                 out[p] = d
         elif isinstance(d, str):
             if any(
-                (getattr(x, "id", None) == p and _is_str_literal(y))
-                for pair in compares
-                for x, y in (pair, pair[::-1])
+                isinstance(op, (ast.Eq, ast.NotEq, ast.In, ast.NotIn))
+                and getattr(x, "id", None) == p
+                and _is_str_literal(y)
+                for a, b, op in compares
+                for x, y in ((a, b), (b, a))
+            ):
+                out[p] = d
+        elif d is None:
+            if any(
+                isinstance(op, (ast.Is, ast.IsNot))
+                and getattr(x, "id", None) == p
+                and _is_none(y)
+                for a, b, op in compares
+                for x, y in ((a, b), (b, a))
             ):
                 out[p] = d
     return out
 
 
+def _is_none(node: ast.expr) -> bool:
+    return isinstance(node, ast.Constant) and node.value is None
+
+
+def _may_be_none(node: ast.expr) -> bool:
+    """The literal ``None``, or a conditional expression with a ``None``
+    arm."""
+    if isinstance(node, ast.IfExp):
+        return _may_be_none(node.body) or _may_be_none(node.orelse)
+    return _is_none(node)
+
+
 @functools.cache
-def _fork_scan() -> tuple[dict[tuple[str, str], tuple[object, str]], set[tuple[str, str]]]:
-    """((def, parameter) -> (default, ``module:line``) for every fork,
-    the forks some call selects a non-default branch of). A call passes
-    a literal, or forwards a parameter of its enclosing function under
-    the same name, which then selects what that function's callers
-    select."""
+def _fork_scan(
+    package: Path = PACKAGE, harness: tuple[Path, ...] = HARNESS
+) -> tuple[dict[tuple[str, str], tuple[object, str]], set[tuple[str, str]]]:
+    """((def, parameter) -> (default, ``module:line``) for every fork of
+    a def that some call in the package or a harness names, the forks
+    some such call selects the other branch of).
+
+    A str or bool fork is selected by a call that passes a literal other
+    than the default. A ``None`` fork is selected by a call that reaches
+    its default branch: one that omits the argument (with no ``*``/``**``
+    splat), passes ``None`` or a conditional with a ``None`` arm, or
+    passes a local that an assignment of the enclosing function binds to
+    one of those. A call that forwards a parameter of its enclosing
+    function selects what that function's callers select."""
+    root = package.parent
     defs: dict[str, list] = {}
     forks: dict[tuple[str, str], tuple[object, str]] = {}
     trees = []
-    for path in sorted(PACKAGE.rglob("*.py")):
+    for path in sorted(package.rglob("*.py")):
         tree = ast.parse(path.read_text())
         trees.append(tree)
         for fn in ast.walk(tree):
@@ -306,11 +328,25 @@ def _fork_scan() -> tuple[dict[tuple[str, str], tuple[object, str]], set[tuple[s
                 continue
             defs.setdefault(fn.name, []).append(fn)
             for p, d in _forks(fn).items():
-                forks[(fn.name, p)] = (d, f"{path.relative_to(ROOT).as_posix()}:{fn.lineno}")
-    trees += [ast.parse(path.read_text()) for path in HARNESS]
+                forks[(fn.name, p)] = (d, f"{path.relative_to(root).as_posix()}:{fn.lineno}")
+    trees += [ast.parse(path.read_text()) for path in harness]
 
+    called: set[str] = set()
     literals: dict[tuple[str, str], set] = {}  # (def, param) -> literals passed
+    nones: set[tuple[str, str]] = set()  # (def, param) some call leaves None
     forwards: dict[tuple[str, str], set[tuple[str, str]]] = {}  # callee -> callers
+
+    def binds_none(scope: ast.AST, local: str) -> bool:
+        return any(
+            isinstance(n, (ast.Assign, ast.AnnAssign))
+            and n.value is not None
+            and _may_be_none(n.value)
+            and any(
+                getattr(t, "id", None) == local
+                for t in (n.targets if isinstance(n, ast.Assign) else [n.target])
+            )
+            for n in ast.walk(scope)
+        )
 
     def visit(node: ast.AST, scopes: tuple) -> None:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -318,18 +354,33 @@ def _fork_scan() -> tuple[dict[tuple[str, str], tuple[object, str]], set[tuple[s
         if isinstance(node, ast.Call):
             f = node.func
             name = getattr(f, "id", None) or getattr(f, "attr", None)
+            called.add(name)
+            splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            )
             for fn in defs.get(name, ()):
                 bound = list(zip(_params(fn), node.args))
                 bound += [(k.arg, k.value) for k in node.keywords if k.arg]
+                if not splat:
+                    passed = {p for p, _ in bound}
+                    nones.update(
+                        (name, p)
+                        for p, d in _defaults(fn).items()
+                        if d is None and p not in passed
+                    )
                 for p, v in bound:
                     if isinstance(v, ast.Constant):
                         literals.setdefault((name, p), set()).add(v.value)
-                    elif isinstance(v, ast.Name) and v.id == p:
+                    if _may_be_none(v) or (
+                        isinstance(v, ast.Name) and binds_none(scopes[-1] if scopes else tree, v.id)
+                    ):
+                        nones.add((name, p))
+                    elif isinstance(v, ast.Name):
                         owner = next(
-                            (s for s in reversed(scopes) if p in _arg_names(s)), None
+                            (s for s in reversed(scopes) if v.id in _arg_names(s)), None
                         )
-                        if owner is not None:
-                            forwards.setdefault((name, p), set()).add((owner.name, p))
+                        if owner is not None and (v.id == p or _defaults(fn).get(p, 0) is None):
+                            forwards.setdefault((name, p), set()).add((owner.name, v.id))
         for child in ast.iter_child_nodes(node):
             visit(child, scopes)
 
@@ -337,7 +388,9 @@ def _fork_scan() -> tuple[dict[tuple[str, str], tuple[object, str]], set[tuple[s
         visit(tree, ())
 
     def selects(key: tuple[str, str], default: object, seen: frozenset) -> bool:
-        if any(v != default for v in literals.get(key, ())):
+        if key in nones if default is None else any(
+            v != default for v in literals.get(key, ())
+        ):
             return True
         return any(
             selects(caller, default, seen | {key})
@@ -345,6 +398,7 @@ def _fork_scan() -> tuple[dict[tuple[str, str], tuple[object, str]], set[tuple[s
             if caller not in seen
         )
 
+    forks = {k: v for k, v in forks.items() if k[0] in called}
     selected = {key for key, (d, _) in forks.items() if selects(key, d, frozenset())}
     return forks, selected
 
@@ -378,3 +432,91 @@ def test_fork_references_are_unselected_forks_their_tests_select():
         }:
             bad.append((name, param, test))
     assert not bad
+
+
+_SYNTHETIC_OPS = '''
+def omitted(x, cache=None):
+    return x if cache is None else cache
+
+
+def literal(x, cache=None):
+    if cache is not None:
+        return cache
+    return x
+
+
+def conditional(x, cache=None):
+    return x if cache is None else cache
+
+
+def local(x, cache=None):
+    return x if cache is None else cache
+
+
+def forwarded(x, cache=None):
+    return x if cache is None else cache
+
+
+def unreached(x, cache=None):
+    return x if cache is None else cache
+
+
+def uncalled(x, cache=None):
+    return x if cache is None else cache
+
+
+def pairs(new_b, store_banded=None):
+    return new_b if store_banded is None else store_banded
+
+
+def increment(new, store=None):
+    store_b = None if store is None else new
+    return pairs(new, store_b)
+'''
+
+_SYNTHETIC_CALLS = '''
+def run(x, flag, *args, store=None, **kw):
+    omitted(x)
+    literal(x, None)
+    conditional(x, cache=None if flag else x)
+    forwarded(x, cache=store)
+    unreached(x, x)
+    unreached(x, cache=x)
+    unreached(*args)
+    unreached(x, **kw)
+    cache = None
+    if flag:
+        cache = x
+    return local(x, cache)
+
+
+def entry(p1):
+    run(p1, True)
+    return increment(p1)
+'''
+
+
+def test_none_fork_guard_on_synthetic_modules(tmp_path):
+    """A ``None`` default counts as selected when a call reaches its
+    default branch by omission, a literal ``None``, a conditional with
+    a ``None`` arm, a local bound to ``None`` (the
+    ``dedup_increment(p1)`` → ``store_b = None`` →
+    ``incremental_candidate_pairs`` shape) or forwarding; a splat is no
+    omission, and a def that nothing calls is not scanned."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "ops.py").write_text(_SYNTHETIC_OPS)
+    (pkg / "calls.py").write_text(_SYNTHETIC_CALLS)
+    forks, selected = _fork_scan(pkg, ())
+    assert {k for k, (d, _) in forks.items() if d is None} == {
+        ("omitted", "cache"),
+        ("literal", "cache"),
+        ("conditional", "cache"),
+        ("local", "cache"),
+        ("forwarded", "cache"),
+        ("unreached", "cache"),
+        ("pairs", "store_banded"),
+        ("increment", "store"),
+    }
+    assert forks.keys() - selected == {("unreached", "cache")}
+    assert forks[("unreached", "cache")] == (None, "pkg/ops.py:24")

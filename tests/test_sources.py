@@ -475,23 +475,16 @@ def test_manifest_end_to_end(spark, excel_dir):
     assert new[0].consignee_name is None and new[0].net_weight is None
 
 
-def test_quarantine_reconciles_batch_and_streaming(spark, xml_dir, tmp_path):
+def test_batch_quarantine_reconciles_with_plain_reader(spark, xml_dir):
     """Quarantine table e2e (r6 VERDICT #4): every dropped unit lands
     as an auditable row with its raw bytes, ingested + quarantined
-    reconcile with the planted corruption, the records side is
-    byte-identical to the plain reader, and the streaming path
-    (single foreachBatch commit for both tables) matches batch and is
-    replay-idempotent."""
+    reconcile with the planted corruption, and the records side is
+    byte-identical to the plain reader."""
     import os
 
     from sea_express_customs_etl_spark.sources.xml_source import (
         read_bid_heads_quarantined,
         split_quarantine,
-    )
-    from sea_express_customs_etl_spark.streaming.file_ingest import (
-        quarantine_batch_writer,
-        run_availablenow,
-        stream_xml_history_quarantined,
     )
 
     with open(os.path.join(xml_dir, "junk.zip"), "wb") as f:
@@ -508,7 +501,7 @@ def test_quarantine_reconciles_batch_and_streaming(spark, xml_dir, tmp_path):
         ("junk.zip", None, "bad_zip"),
         ("bad.xml", None, "bad_xml"),
     }
-    # raw bytes captured verbatim -> replayable after a parser fix
+    # raw bytes captured verbatim for the audit
     raw = {r.member or r.source_file: bytes(r.raw_bytes)
            for r in quarantine.collect()}
     assert raw["corrupt.xml"] == b"<GicDataSet><BID_HEAD>"
@@ -516,53 +509,6 @@ def test_quarantine_reconciles_batch_and_streaming(spark, xml_dir, tmp_path):
     # records side identical to the plain (non-quarantined) reader
     want_rec = sorted(map(tuple, read_bid_heads_raw(spark, xml_dir).collect()))
     assert sorted(map(tuple, records.collect())) == want_rec
-
-    # streaming parity + replay idempotence
-    rec_sink = str(tmp_path / "rec")
-    q_sink = str(tmp_path / "quar")
-    ckpt = str(tmp_path / "ck")
-    stream = stream_xml_history_quarantined(spark, xml_dir)
-    writer = quarantine_batch_writer(rec_sink, q_sink)
-    run_availablenow(stream, rec_sink, ckpt, batch_writer=writer)
-    got_stream_q = {
-        (r.source_file, r.member, r.reason)
-        for r in spark.read.parquet(q_sink).collect()
-    }
-    assert got_stream_q == got_q
-    n_rec = spark.read.parquet(rec_sink).count()
-    assert n_rec == len(want_rec)
-    run_availablenow(
-        stream_xml_history_quarantined(spark, xml_dir), rec_sink, ckpt,
-        batch_writer=quarantine_batch_writer(rec_sink, q_sink),
-    )
-    assert spark.read.parquet(rec_sink).count() == n_rec  # no-op replay
-    assert spark.read.parquet(q_sink).count() == len(got_q)
-
-
-def test_replay_quarantined_recovers_fixable_units(spark, tmp_path):
-    """The replay half of audit-and-replay: quarantine rows whose
-    bytes parse under the (fixed) parser yield their records with the
-    original provenance; still-bad bytes stay failed, silently."""
-    from sea_express_customs_etl_spark.sources.xml_source import (
-        replay_quarantined,
-    )
-
-    good = _xml_doc(_bid_head(hawb="R1"), _bid_head(hawb="R1"))
-    rows = [
-        ("late.zip", "fine.xml", "bad_member", "transient", bytearray(
-            good.encode("utf-8"))),
-        ("late.zip", "broken.xml", "bad_member", "parse", bytearray(
-            b"<GicDataSet><BID_HEAD>")),
-        ("junk.zip", None, "bad_zip", "not a zip", None),
-    ]
-    q = spark.createDataFrame(
-        rows,
-        "source_file string, member string, reason string, "
-        "error string, raw_bytes binary",
-    )
-    got = replay_quarantined(q).collect()
-    assert {r.source_file for r in got} == {"late.zip::fine.xml"}
-    assert sorted(r.item_sequence for r in got) == [1, 2]
 
 
 def test_loose_xml_non_parse_error_is_quarantined():

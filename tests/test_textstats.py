@@ -478,7 +478,8 @@ def test_tfidf_cosine_pairs_golden_and_pruning(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         (r.id_a, r.id_b): r.n_shared
-        for r in tfidf_cosine_pairs(df).collect()
+        # df <= N, so a df_max of N prunes nothing beyond the ratio cap
+        for r in tfidf_cosine_pairs(df, len(rows)).collect()
     }
     # identical docs share all 3 bigrams; no other pair survives
     assert got == {(0, 1): 3}
@@ -509,11 +510,11 @@ def test_tfidf_cosine_pairs_threshold_dial(spark):
     # bigrams bridge words — just assert the dial is monotone:
     at_half = {
         (r.id_a, r.id_b)
-        for r in tfidf_cosine_pairs(df, 1, 2).collect()
+        for r in tfidf_cosine_pairs(df, len(rows), 1, 2).collect()
     }
     at_90 = {
         (r.id_a, r.id_b)
-        for r in tfidf_cosine_pairs(df, 9, 10).collect()
+        for r in tfidf_cosine_pairs(df, len(rows), 9, 10).collect()
     }
     assert at_90 <= at_half
     assert (2, 3) not in at_half  # disjoint rare terms never pair

@@ -6,7 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import itertools
 
-from sea_express_customs_etl_spark.operators.cf import frequent_triples
+from sea_express_customs_etl_spark.operators.cf import basket_items, frequent_triples
 from sea_express_customs_etl_spark.operators.timeseries import (
     ohlc_by_bucket,
     time_weighted_avg,
@@ -39,7 +39,7 @@ def test_frequent_triples_matches_python(spark):
     df = spark.createDataFrame(rows, ["l_orderkey", "l_partkey"])
     got = sorted(
         (r.p1, r.p2, r.p3, r.support)
-        for r in frequent_triples(df, min_support=2).collect()
+        for r in frequent_triples(basket_items(df), min_support=2).collect()
     )
     assert got == _py_triples(baskets, 2)
     assert got  # non-degenerate fixture
@@ -49,7 +49,7 @@ def test_frequent_triples_duplicate_lineitems_collapse(spark):
     # the same part twice in one order is ONE basket membership
     rows = [(1, 10), (1, 10), (1, 20), (1, 30), (2, 10), (2, 20), (2, 30)]
     df = spark.createDataFrame(rows, ["l_orderkey", "l_partkey"])
-    got = [tuple(r) for r in frequent_triples(df, min_support=2).collect()]
+    got = [tuple(r) for r in frequent_triples(basket_items(df), min_support=2).collect()]
     assert got == [(10, 20, 30, 2)]
 
 
@@ -134,7 +134,7 @@ def test_basket_rules_confidence_and_lift(spark):
     df = spark.createDataFrame(rows, ["l_orderkey", "l_partkey"])
     got = {
         (r.ante, r.cons): (r.support, r.conf_ppm, r.lift_ppm)
-        for r in basket_rules(df, min_support=2, k=10).collect()
+        for r in basket_rules(basket_items(df), min_support=2, k=10).collect()
     }
     # 1->2: sup=3, conf = 3/4, lift = 3*4/(4*3) = 1.0
     assert got[(1, 2)] == (3, 750_000, 1_000_000)

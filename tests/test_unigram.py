@@ -13,6 +13,7 @@ from sea_express_customs_etl_spark.operators.unigram import (
     MAX_PIECE_LEN,
     seed_pieces,
     segment_words,
+    unigram_piece_counts,
     unigram_token_counts,
     unigram_train,
     word_dict,
@@ -101,7 +102,9 @@ def test_token_counts_match_per_word_segmentation(spark):
     vocab = unigram_train(df, rounds=2)
     got = {
         r.doc_id: (r.n_words, r.n_tokens)
-        for r in unigram_token_counts(df, vocab).collect()
+        for r in unigram_token_counts(
+            df, unigram_piece_counts(word_dict(df), vocab)
+        ).collect()
     }
     seg_np = {
         r.word: len([p for p in r.seg.split(" ") if p])

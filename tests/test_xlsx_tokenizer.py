@@ -40,7 +40,13 @@ _NS = "{" + MAIN + "}"
 
 
 def _oracle_text(el: ET.Element) -> str:
-    return "".join(t.text or "" for t in el.iter(f"{_NS}t"))
+    # the base text: <rPh> phonetic runs are not displayed
+    return "".join(
+        t.text or ""
+        for child in el
+        if child.tag != f"{_NS}rPh"
+        for t in child.iter(f"{_NS}t")
+    )
 
 
 def _oracle_value(c: ET.Element, shared: list[str]):
@@ -216,8 +222,27 @@ def test_inline_and_rich_text():
         "</row>"
     )
     assert _same(_package(_sheet(body))) == [
-        [" plain ", "bold るび", "", "", "", None, None, "a"]
+        [" plain ", "bold ", "", "", "", None, None, "a"]
     ]
+
+
+def test_phonetic_runs_are_not_shared_string_text():
+    sst = (
+        f'<sst xmlns="{MAIN}">'
+        '<si><r><t>bo</t></r><r><t xml:space="preserve">ld </t></r>'
+        '<rPh sb="0" eb="1"><t>るび</t></rPh><phoneticPr fontId="1"/></si>'
+        "<si><t>漢字</t><rPh sb=\"0\" eb=\"2\"><t>かんじ</t></rPh></si>"
+        "</sst>"
+    ).encode()
+    body = '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c></row>'
+    base = zipfile.ZipFile(io.BytesIO(_package(_sheet(body), ("a", "b"))))
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name in base.namelist():
+            zf.writestr(
+                name, sst if name == "xl/sharedStrings.xml" else base.read(name)
+            )
+    assert read_xlsx_grid(buf.getvalue()) == [["bold ", "漢字"]]
 
 
 def test_entities_and_character_references():
