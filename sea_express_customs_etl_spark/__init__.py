@@ -15,5 +15,3 @@ zip/Excel parsing) and always as Arrow-vectorized pandas UDFs.
 """
 
 __version__ = "0.1.0"
-
-from sea_express_customs_etl_spark.session import get_spark  # noqa: F401

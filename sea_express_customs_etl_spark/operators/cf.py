@@ -37,21 +37,19 @@ def basket_items(lineitem: DataFrame) -> DataFrame:
 
 
 def item_item_jaccard(
-    lineitem: DataFrame,
+    items: DataFrame,
     min_cooc: int = 2,
     k: int = 5,
-    items: DataFrame | None = None,
 ) -> DataFrame:
     """Per-item top-``k`` co-purchase recommendations by integer
     Jaccard: item_id, rec_id, sim_ppm (10⁶-scaled floor), ties broken
     by rec_id. Pairs below ``min_cooc`` shared orders are pruned
     before scoring (the sparsifier every production CF pipeline
     applies — one-off co-occurrence is noise and volume).
-    ``items`` (optional) injects an already-materialized distinct
-    (order, item) projection — the session basket table."""
-    if items is None:
-        # three scans: both co-occurrence sides + the degree count
-        items = tracked_persist(basket_items(lineitem))
+    ``items`` is the distinct (order, item) projection
+    (:func:`basket_items`), read three times: both co-occurrence sides
+    and the degree count — pass a materialized one (the session basket
+    table)."""
     deg = items.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("_d")
     )

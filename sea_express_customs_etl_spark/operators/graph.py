@@ -333,10 +333,7 @@ def triangle_triples(edges: DataFrame) -> DataFrame:
     )
 
 
-def edge_support(
-    edges: DataFrame,
-    triples: DataFrame | None = None,
-) -> DataFrame:
+def edge_support(triples: DataFrame) -> DataFrame:
     """Per-EDGE triangle support — the k-truss building block: an edge
     with support s participates in s triangles, and the k-truss is the
     maximal subgraph where every edge has support ≥ k−2. One support
@@ -344,18 +341,15 @@ def edge_support(
     bridges/noise; high-support edges sit inside dense cohesive
     groups) and the unit of work a truss-decomposition peel repeats.
 
-    Same triangle enumeration as :func:`triangle_counts`
-    (:func:`triangle_triples`, degree orientation — the power-law
-    dial), then each triple unpivots to its THREE canonical (min, max)
-    edges and one partial-aggregated groupBy counts per edge. Edges in no triangle
-    are absent (support 0 — join back against the edge list when the
-    peel needs them). Output: a, b, support.
-
-    ``triples`` (optional): a precomputed one-per-triangle (x, y, z)
-    frame over the same graph — the unpivot canonicalizes each corner
-    pair to (min, max), so the support is enumeration-invariant.
+    ``triples`` is a one-per-triangle (x, y, z) enumeration of the
+    graph, as :func:`triangle_counts` reads it (:func:`triangle_triples`,
+    degree orientation — the power-law dial). Each triple unpivots to
+    its THREE canonical (min, max) edges, so the support is
+    enumeration-invariant, and one partial-aggregated groupBy counts
+    per edge. Edges in no triangle are absent (support 0 — join back
+    against the edge list when the peel needs them). Output: a, b,
+    support.
     """
-    tris = triangle_triples(edges) if triples is None else triples
     # ONE pass over the triples: a 3-struct explode (a union of three
     # selects would re-execute the wedge joins per branch — measured
     # 15.4 s → ~6 s at sf0.1)
@@ -365,7 +359,7 @@ def edge_support(
         F.struct(F.col("y").alias("u1"), F.col("z").alias("u2")),
     )
     return (
-        tris.select(F.explode(e3).alias("_e"))
+        triples.select(F.explode(e3).alias("_e"))
         .select(
             F.least("_e.u1", "_e.u2").alias("a"),
             F.greatest("_e.u1", "_e.u2").alias("b"),
@@ -975,7 +969,9 @@ def truss_peel(
     sup = None
     for _ in range(rounds):
         sup = edge_support(
-            e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+            triangle_triples(
+                e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+            )
         ).filter(F.col("support") >= k - 2)
         sup = tracked_persist(sup)
         e = sup.select("a", "b")

@@ -244,12 +244,7 @@ def _q_item_item_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Amazon-style item-item CF: per-item top-5 co-purchase
     neighbors by exact-integer Jaccard over order sets
     ((10⁶·cooc) DIV union, min_cooc=2) — WindowGroupLimit top-k."""
-    return item_item_jaccard(
-        load_table(spark, sf_dir, "lineitem"),
-        min_cooc=2,
-        k=5,
-        items=_shared_items(spark, sf_dir),
-    )
+    return item_item_jaccard(_shared_items(spark, sf_dir), min_cooc=2, k=5)
 
 
 @query(oracle=ext.COPURCHASE_NEGATIVES_SQL)
@@ -327,10 +322,7 @@ def _q_copurchase_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-truss building block: per-edge triangle support over the
     co-purchase graph — the session's shared triangle enumeration,
     each triple unpivoted to its three canonical edges."""
-    return edge_support(
-        _shared_edges(spark, sf_dir, 1),
-        triples=_shared_triples_w1(spark, sf_dir),
-    )
+    return edge_support(_shared_triples_w1(spark, sf_dir))
 
 
 @query(oracle=ext.COPURCHASE_CHEAPEST_PATH_SQL)
@@ -395,9 +387,7 @@ def _q_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reciprocal-match primitive (SemDeDup cluster merging, mutual-NN
     matching) composed from item_item_jaccard's ranked lists."""
     sims = _tracked_persist(
-        item_item_jaccard(
-            load_table(spark, sf_dir, "lineitem"), min_cooc=2, k=5
-        )
+        item_item_jaccard(_shared_items(spark, sf_dir), min_cooc=2, k=5)
     )  # both sides of the reciprocal join
     rev = sims.select(
         F.col("rec_id").alias("item_id"),

@@ -36,8 +36,10 @@ def get_spark(
     Env knobs: ``SPARK_GRAFT_CPUS`` (local parallelism),
     ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
 
-    Python workers fork from :mod:`.worker_daemon`, which stops every
-    task from re-reading the pyspark, py4j and Spark jar zips. The
+    Python workers fork from :mod:`.worker_daemon`, which imports the
+    installed, bytecode-cached pyspark and py4j when they are
+    byte-identical to Spark's zips, and stops every task from re-reading
+    the pyspark, py4j and Spark jar zips. The
     workers must import this package to find it, as they must for the
     engine's own UDFs (pickled by reference), so
     ``spark.executorEnv.PYTHONPATH`` starts with the package's parent

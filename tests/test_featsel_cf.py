@@ -79,7 +79,10 @@ def _ref_item_item(baskets, min_cooc=2, k=5):
 
 
 def test_item_item_jaccard_matches_reference(spark):
-    from sea_express_customs_etl_spark.operators.cf import item_item_jaccard
+    from sea_express_customs_etl_spark.operators.cf import (
+        basket_items,
+        item_item_jaccard,
+    )
 
     rnd = random.Random(47)
     baskets = set()
@@ -90,7 +93,7 @@ def test_item_item_jaccard_matches_reference(spark):
         sorted(baskets), ["l_orderkey", "l_partkey"]
     )
     got = {}
-    for r in item_item_jaccard(li, min_cooc=2, k=5).orderBy(
+    for r in item_item_jaccard(basket_items(li), min_cooc=2, k=5).orderBy(
         "item_id", F.col("sim_ppm").desc(), "rec_id"
     ).collect():
         got.setdefault(r.item_id, []).append((r.rec_id, r.sim_ppm))

@@ -1,7 +1,8 @@
 """The Python/JVM boundary confs ``get_spark`` sets: Python workers fork
-from the engine's worker daemon and import the engine wherever the
-driver was started, and DataFrame call-site capture is off without
-losing the analysis error that names a bad column."""
+from the engine's worker daemon, import pyspark from its installed copy
+and import the engine wherever the driver was started, and DataFrame
+call-site capture is off without losing the analysis error that names a
+bad column."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from pathlib import Path
 import subprocess
 import sys
 
+import pyspark
 import pytest
 from pyspark.errors import AnalysisException
 
@@ -47,13 +49,16 @@ def test_worker_daemon_rereads_no_archive_inside_a_task(spark):
                 "daemon": [sys.modules["__main__"].__spec__.name],
                 "zip_importers": [zips],
                 "reads": [len(reads)],
+                "pyspark": [sys.modules["pyspark"].__file__],
             }
         )
 
     rows = (
         spark.range(4)
         .repartition(2)
-        .mapInPandas(probe, "daemon string, zip_importers long, reads long")
+        .mapInPandas(
+            probe, "daemon string, zip_importers long, reads long, pyspark string"
+        )
         .collect()
     )
     assert len(rows) == 2
@@ -61,6 +66,9 @@ def test_worker_daemon_rereads_no_archive_inside_a_task(spark):
         assert r.daemon == "sea_express_customs_etl_spark.worker_daemon"
         assert r.zip_importers > 0  # the worker imports from archives
         assert r.reads == 0
+        # this host's installed pyspark is byte-identical to pyspark.zip
+        # and bytecode-cached, so the daemon imports it ahead of the zip
+        assert r.pyspark == pyspark.__file__
 
 
 def test_call_site_capture_is_off(spark):

@@ -7,26 +7,35 @@ import pyspark.sql.functions as F
 
 
 def test_edge_support_k4_and_orientation_invariance(spark):
-    from sea_express_customs_etl_spark.operators.graph import edge_support
+    from sea_express_customs_etl_spark.operators.graph import (
+        edge_support,
+        triangle_triples,
+    )
 
     # K4: every edge sits in exactly 2 triangles
     edges = [(a, b) for a, b in itertools.combinations([1, 2, 3, 4], 2)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {(r.a, r.b): r.support for r in edge_support(df).collect()}
+    sup = edge_support(triangle_triples(df))
+    got = {(r.a, r.b): r.support for r in sup.collect()}
     assert got == {(a, b): 2 for a, b in edges}
     # both directions of every edge: the same support per canonical edge
     both = df.unionByName(df.selectExpr("dst AS src", "src AS dst"))
-    assert {(r.a, r.b): r.support for r in edge_support(both).collect()} == got
+    sup = edge_support(triangle_triples(both))
+    assert {(r.a, r.b): r.support for r in sup.collect()} == got
 
 
 def test_edge_support_bridge_absent(spark):
-    from sea_express_customs_etl_spark.operators.graph import edge_support
+    from sea_express_customs_etl_spark.operators.graph import (
+        edge_support,
+        triangle_triples,
+    )
 
     # triangle 1-2-3 plus bridge 3-4: bridge has support 0 -> absent
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], ["src", "dst"]
     )
-    got = {(r.a, r.b): r.support for r in edge_support(df).collect()}
+    sup = edge_support(triangle_triples(df))
+    got = {(r.a, r.b): r.support for r in sup.collect()}
     assert got == {(1, 2): 1, (2, 3): 1, (1, 3): 1}
 
 
