@@ -200,9 +200,7 @@ def _ann_shared_store(
 
     def build(prefix: str) -> str:
         emb = _emb(spark, sf_dir)
-        writer = ann_store_batch_writer(
-            prefix, cen, codebook, num_buckets=4
-        )
+        writer = ann_store_batch_writer(prefix, cen, codebook)
         writer(emb.filter(F.col("vec_id") % 2 == 0), 0)
         writer(emb.filter(F.col("vec_id") % 2 == 1), 1)
         return prefix

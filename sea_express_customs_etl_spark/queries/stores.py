@@ -41,13 +41,12 @@ from sea_express_customs_etl_spark.queries.shared import (
 )
 from sea_express_customs_etl_spark.streaming.ann_store import (
     ann_store_batch_writer,
-    ann_store_delete_writer,
     compact_ann_store,
     store_adc_topk,
 )
+from sea_express_customs_etl_spark.streaming.commit_fence import tombstone_writer
 from sea_express_customs_etl_spark.streaming.incremental_dedup import (
     committed_edges,
-    dedup_delete_writer,
     incremental_dedup_batch_writer,
 )
 from sea_express_customs_etl_spark.streaming.knowledge_store import (
@@ -65,7 +64,6 @@ from sea_express_customs_etl_spark.streaming.sketch_store import (
 from sea_express_customs_etl_spark.streaming.winnow_store import (
     committed_fingerprints,
     winnow_batch_writer,
-    winnow_delete_writer,
 )
 
 
@@ -117,7 +115,7 @@ def _q_ann_store_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CREATE VIEW IF NOT EXISTS {prefix}_{t} "
             f"AS SELECT * FROM {base}_{t}"
         )
-    deleter = ann_store_delete_writer(prefix)
+    deleter = tombstone_writer(prefix, "vec_id")
     deleter(emb.filter(F.col("vec_id") % 7 == 3).select("vec_id"), 2)
     return store_adc_topk(
         spark,
@@ -149,14 +147,12 @@ def _q_ann_store_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cen, codebook = _ann_model(spark, sf_dir)
 
     def build(prefix: str) -> str:
-        writer = ann_store_batch_writer(
-            prefix, cen, codebook, num_buckets=4
-        )
+        writer = ann_store_batch_writer(prefix, cen, codebook)
         writer(emb.filter(F.col("vec_id") % 2 == 0), 0)
         writer(emb.filter(F.col("vec_id") % 2 == 1), 1)
-        deleter = ann_store_delete_writer(prefix)
+        deleter = tombstone_writer(prefix, "vec_id")
         deleter(emb.filter(F.col("vec_id") % 7 == 3).select("vec_id"), 2)
-        compact_ann_store(spark, prefix, num_buckets=4)
+        compact_ann_store(spark, prefix)
         return prefix
 
     prefix = shared(spark, sf_dir, "ann_compact_build", build)
@@ -332,7 +328,7 @@ def _q_winnow_delete_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer = winnow_batch_writer(prefix, k=3, w=4)
     writer(docs.filter(F.col("doc_id") % 2 == 0), 0)
     writer(docs.filter(F.col("doc_id") % 2 == 1), 1)
-    deleter = winnow_delete_writer(prefix)
+    deleter = tombstone_writer(prefix, "doc_id")
     deleter(docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"), 2)
     fps = _tracked_persist(committed_fingerprints(spark, prefix))
     return pairs_from_fingerprints(fps, min_shared=2, df_max=50)
@@ -354,7 +350,7 @@ def _q_dedup_incremental_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer = incremental_dedup_batch_writer(prefix)
     writer(docs.filter(F.col("doc_id") % 2 == 0), 0)
     writer(docs.filter(F.col("doc_id") % 2 == 1), 1)
-    deleter = dedup_delete_writer(prefix)
+    deleter = tombstone_writer(prefix, "doc_id")
     deleter(docs.filter(F.col("doc_id") % 7 == 3).select("doc_id"), 2)
     survivors = docs.filter(F.col("doc_id") % 7 != 3)
     return dedup_clusters(survivors, committed_edges(spark, prefix))

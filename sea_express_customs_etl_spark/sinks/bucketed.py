@@ -37,16 +37,12 @@ def append_bucketed(
     table_name: str,
     bucket_cols: tuple[str, ...],
     num_buckets: int = 64,
-    sort_cols: tuple[str, ...] | None = None,
 ) -> None:
     """Append a batch into a bucketed catalog table, creating it on
     first call — the grow-only store shape (signature stores, CDC
     history). Spark enforces that appends match the table's bucket
     spec, so every batch lands bucket-aligned and later joins on the
     bucket key stay exchange-free on the store side."""
-    w = df.write.mode("append").format("parquet").bucketBy(
+    df.write.mode("append").format("parquet").bucketBy(
         num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table_name)
+    ).saveAsTable(table_name)

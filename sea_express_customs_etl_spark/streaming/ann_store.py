@@ -16,6 +16,16 @@ depend on co-arriving data cannot be maintained incrementally.
 
 Exactly-once: the ``commit_fence.py`` contract. Codes are bucketed by
 ``cluster`` so the ADC scan of a probed cell is bucket-local.
+
+Deletes — the FAISS ``remove_ids`` analog (takedowns, dedup-after-index)
+— are ``commit_fence.tombstone_writer(prefix, "vec_id")`` batches under
+the same fence (``<prefix>_del_batches`` markers). VERSIONED contract:
+a tombstone at batch ``d`` kills every code row ADDED at batch
+``<= d``, and a later re-add (add batch ``> d``) resurrects the vector.
+This requires add and delete batch ids to come from ONE monotonically
+increasing sequence — which a single maintenance stream's
+``foreachBatch`` batch ids are. Deletion is logical until
+:func:`compact_ann_store` folds the tombstones out.
 """
 
 from __future__ import annotations
@@ -33,12 +43,15 @@ from sea_express_customs_etl_spark.operators.pq import (
 )
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 from sea_express_customs_etl_spark.streaming.commit_fence import (
-    CommitFence,
+    batch_id_col,
+    committed_rows,
     drop_tombstoned,
+    fenced,
     marker_rows,
-    tombstone_writer,
 )
 from sea_express_customs_etl_spark.streaming.table_swap import backup_swap
+
+NUM_BUCKETS = 4  # of the cluster-bucketed code table: writer and compaction
 
 
 def ann_store_batch_writer(
@@ -49,50 +62,20 @@ def ann_store_batch_writer(
     dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    num_buckets: int = 8,
 ) -> Callable[[DataFrame, int], None]:
     """``foreachBatch`` callable appending each vector batch's codes
     (bucketed by cell) into ``<prefix>_codes`` under the commit-marker
     fence. The frozen model rides in the closure — broadcast per
     batch, never re-trained."""
     c_tab = f"{table_prefix}_codes"
-    fence = CommitFence(f"{table_prefix}_batches")
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch_df.sparkSession
-        if fence.committed(spark, batch_id):
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         codes = encode_with_frozen_model(
             batch_df, centroids, codebook, m, dim, vec_col, id_col
-        ).select(
-            F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-            id_col,
-            "cluster",
-            "subspace",
-            "code",
-        )
-        append_bucketed(codes, c_tab, ("cluster",), num_buckets)
-        fence.commit(spark, batch_id)
+        ).select(batch_id_col(batch_id), id_col, "cluster", "subspace", "code")
+        append_bucketed(codes, c_tab, ("cluster",), NUM_BUCKETS)
 
-    return write
-
-
-def ann_store_delete_writer(
-    table_prefix: str, id_col: str = "vec_id"
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` callable appending TOMBSTONES — the FAISS
-    ``remove_ids`` analog (takedowns, dedup-after-index): each delete
-    batch's ids land in ``<prefix>_tombstones`` under the same
-    commit-marker fence as the code writer (``<prefix>_del_batches``
-    markers, replay skipped, crash-window duplicates deterministic).
-
-    Versioned semantics: a tombstone at batch ``d`` kills every code
-    row ADDED at batch ``<= d``; a later re-add (add batch ``> d``)
-    resurrects the vector. This requires add and delete batch ids to
-    come from ONE monotonically increasing sequence — which a single
-    maintenance stream's ``foreachBatch`` batch ids are. Deletion is
-    logical until :func:`compact_ann_store` folds the tombstones out."""
-    return tombstone_writer(table_prefix, id_col)
+    return fenced(f"{table_prefix}_batches", fold)
 
 
 def committed_codes(
@@ -101,12 +84,10 @@ def committed_codes(
     """Exactly-once SEARCHABLE code-store view (marker semi-join +
     duplicate collapse, minus committed tombstones): id, cluster,
     subspace, code. Tombstones follow
-    :func:`..commit_fence.drop_tombstoned` (see
-    :func:`ann_store_delete_writer`)."""
-    codes = spark.table(f"{table_prefix}_codes").join(
-        F.broadcast(spark.table(f"{table_prefix}_batches")),
-        "batch_id",
-        "left_semi",
+    :func:`..commit_fence.drop_tombstoned` (the versioned delete
+    contract in the module docstring)."""
+    codes = committed_rows(
+        spark, f"{table_prefix}_codes", f"{table_prefix}_batches"
     )
     return (
         drop_tombstoned(codes, table_prefix, id_col)
@@ -116,10 +97,7 @@ def committed_codes(
 
 
 def compact_ann_store(
-    spark: SparkSession,
-    table_prefix: str,
-    num_buckets: int = 8,
-    id_col: str = "vec_id",
+    spark: SparkSession, table_prefix: str, id_col: str = "vec_id"
 ) -> None:
     """Fold the logical deletes out: rewrite the code store to the
     SURVIVORS of :func:`committed_codes` as one generation (batch_id =
@@ -136,15 +114,11 @@ def compact_ann_store(
     if gen is None:
         return
     survivors = committed_codes(spark, table_prefix, id_col).select(
-        F.lit(int(gen)).cast("bigint").alias("batch_id"),
-        id_col,
-        "cluster",
-        "subspace",
-        "code",
+        batch_id_col(gen), id_col, "cluster", "subspace", "code"
     )
 
     backup_swap(
-        spark, f"{table_prefix}_codes", survivors, "cluster", num_buckets
+        spark, f"{table_prefix}_codes", survivors, "cluster", NUM_BUCKETS
     )
     backup_swap(spark, m_tab, marker_rows(spark, [gen]))
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_tombstones")

@@ -32,13 +32,18 @@ The marker append is JVM-side SQL (``CREATE TABLE IF NOT EXISTS`` then
 because compaction drops or renames marker tables. Compaction builds
 its marker rows with :func:`marker_rows`, so markers are written one
 way only.
+
+A store supplies only its fold body: :func:`fenced` wraps it in the
+skip → fold → marker sequence, :func:`batch_id_col` tags its rows, and
+its committed readers start from :func:`committed_rows` (plus
+:func:`drop_tombstoned` or :func:`committed_tombstones` for deletes).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 
@@ -77,51 +82,85 @@ def marker_rows(spark: SparkSession, ids: Iterable[int]) -> DataFrame:
     )
 
 
-def tombstone_writer(
-    table_prefix: str, id_col: str
-) -> Callable[[DataFrame, int], None]:
-    """``foreachBatch`` callable appending each delete batch's ids to
-    ``<prefix>_tombstones`` under the ``<prefix>_del_batches`` fence —
-    the shared body of the stores' delete writers; :func:`drop_tombstoned`
-    is the read half."""
-    t_tab = f"{table_prefix}_tombstones"
-    fence = CommitFence(f"{table_prefix}_del_batches")
+def batch_id_col(batch_id: int) -> Column:
+    """The ``batch_id bigint`` column every store row carries."""
+    return F.lit(int(batch_id)).cast("bigint").alias("batch_id")
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch_df.sparkSession
+
+def fenced(markers: str, fold: Callable[..., None]) -> Callable[..., None]:
+    """The one writer skeleton: ``write(*frames, batch_id)`` skips a
+    ``batch_id`` committed in the ``markers`` table, else runs
+    ``fold(*frames, batch_id)`` and then writes the marker. A fold that
+    raises leaves no marker, so the next call folds the id again. Over
+    a one-frame fold, ``write`` is a ``foreachBatch`` callable."""
+    fence = CommitFence(markers)
+
+    def write(*args: Any) -> None:
+        *frames, batch_id = args
+        spark: SparkSession = frames[0].sparkSession
         if fence.committed(spark, batch_id):
             return
-        batch_df.select(
-            F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-            F.col(id_col),
-        ).write.mode("append").format("parquet").saveAsTable(t_tab)
+        fold(*frames, batch_id)
         fence.commit(spark, batch_id)
 
     return write
 
 
-def drop_tombstoned(rows: DataFrame, table_prefix: str, id_col: str) -> DataFrame:
-    """The read half of :func:`tombstone_writer`: ``rows`` (each with
-    its add ``batch_id``) minus those a committed tombstone kills — a
-    row survives unless a committed tombstone for its id has
-    delete-batch >= its add-batch, so a later re-add resurrects it.
-    Both tombstone tables must exist before the filter arms: a crash
-    between the first tombstone append and the marker-table creation
-    leaves ``<prefix>_tombstones`` without ``<prefix>_del_batches``,
-    and the committed delete-free view must still serve. The tombstone
-    side is id-grained and grows with the corpus, so it is joined
-    without a pinned broadcast (AQE picks the strategy)."""
-    spark = rows.sparkSession
+def committed_rows(spark: SparkSession, table: str, markers: str) -> DataFrame:
+    """Rows of ``table`` whose ``batch_id`` is committed in ``markers``
+    (the marker table is batch-count sized, so it is broadcast). Replay
+    duplicates are left in: each reader collapses them in its own
+    order."""
+    return spark.table(table).join(
+        F.broadcast(spark.table(markers)), "batch_id", "left_semi"
+    )
+
+
+def tombstone_writer(
+    table_prefix: str, id_col: str
+) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` callable appending each delete batch's ids to
+    ``<prefix>_tombstones`` under the ``<prefix>_del_batches`` fence —
+    every store's delete writer (each store's module docstring states
+    its delete contract); :func:`committed_tombstones` is the read
+    half."""
+    t_tab = f"{table_prefix}_tombstones"
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.select(batch_id_col(batch_id), F.col(id_col)).write.mode(
+            "append"
+        ).format("parquet").saveAsTable(t_tab)
+
+    return fenced(f"{table_prefix}_del_batches", fold)
+
+
+def committed_tombstones(
+    spark: SparkSession, table_prefix: str
+) -> DataFrame | None:
+    """The committed ``(batch_id, id)`` tombstone rows, or None when no
+    delete has been committed. Both tombstone tables must exist: a
+    crash between the first tombstone append and the marker-table
+    creation leaves ``<prefix>_tombstones`` without
+    ``<prefix>_del_batches``, and the delete-free view must still
+    serve."""
     t_tab = f"{table_prefix}_tombstones"
     dm_tab = f"{table_prefix}_del_batches"
     if not (spark.catalog.tableExists(t_tab) and spark.catalog.tableExists(dm_tab)):
+        return None
+    return committed_rows(spark, t_tab, dm_tab)
+
+
+def drop_tombstoned(rows: DataFrame, table_prefix: str, id_col: str) -> DataFrame:
+    """``rows`` (each with its add ``batch_id``) minus those a committed
+    tombstone kills — the versioned delete: a row survives unless a
+    committed tombstone for its id has delete-batch >= its add-batch,
+    so a later re-add resurrects it. The tombstone side is id-grained
+    and grows with the corpus, so it is joined without a pinned
+    broadcast (AQE picks the strategy)."""
+    dead = committed_tombstones(rows.sparkSession, table_prefix)
+    if dead is None:
         return rows
-    last_del = (
-        spark.table(t_tab)
-        .join(F.broadcast(spark.table(dm_tab)), "batch_id", "left_semi")
-        .groupBy(id_col)
-        .agg(F.max("batch_id").alias("_del_bid"))
-    )
+    last_del = dead.groupBy(id_col).agg(F.max("batch_id").alias("_del_bid"))
     return (
         rows.join(last_del, id_col, "left")
         .filter(

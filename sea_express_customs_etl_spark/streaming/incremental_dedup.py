@@ -17,6 +17,16 @@ maintains three grow-only tables across micro-batches,
 Exactly-once: the ``commit_fence.py`` contract (``_batches`` markers
 for the adds, ``_del_batches`` for the tombstones).
 
+Deletes (takedown / right-to-forget) are
+``commit_fence.tombstone_writer(prefix, "doc_id")`` batches with a
+TAKEDOWN-FINAL contract: a committed tombstone retires the doc id
+permanently, and re-adding a retired id is a caller error. This is
+deliberately simpler than the ann_store/winnow VERSIONED contract
+because profile and band rows carry no add-batch version (they are
+per-doc idempotent facts), and the right-to-forget flow this serves
+never re-admits the removed identity. Deletion is logical: the
+committed readers filter tombstoned ids.
+
 Resolution stays separate by design: components over the accumulated
 edge table (``dedup_clusters(corpus, spark.table(prefix + "_edges"))``)
 run on demand — the expensive signature/verify work is incremental,
@@ -28,7 +38,6 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.operators.dedup import (
     incremental_candidate_pairs,
@@ -38,9 +47,13 @@ from sea_express_customs_etl_spark.operators.dedup import (
 )
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 from sea_express_customs_etl_spark.streaming.commit_fence import (
-    CommitFence,
-    tombstone_writer,
+    batch_id_col,
+    committed_rows,
+    committed_tombstones,
+    fenced,
 )
+
+NUM_BUCKETS = 8  # of the id-bucketed profile and band-bucketed band tables
 
 
 def incremental_dedup_batch_writer(
@@ -51,7 +64,6 @@ def incremental_dedup_batch_writer(
     threshold: float = 0.5,
     num_hashes: int = 8,
     num_bands: int = 2,
-    num_buckets: int = 8,
 ) -> Callable[[DataFrame, int], None]:
     """A ``foreachBatch`` callable folding each micro-batch of
     documents into the signature store. Also usable directly on plain
@@ -60,14 +72,12 @@ def incremental_dedup_batch_writer(
     p_tab = f"{table_prefix}_profiles"
     b_tab = f"{table_prefix}_bands"
     e_tab = f"{table_prefix}_edges"
-    fence = CommitFence(f"{table_prefix}_batches")
+    m_tab = f"{table_prefix}_batches"
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
-        if fence.committed(spark, batch_id):
-            return
         # a marker table means the profile and band tables exist too
-        have_store = spark.catalog.tableExists(fence.table)
+        have_store = spark.catalog.tableExists(m_tab)
         prof = shingle_profiles(
             batch_df, text_col, id_col, n, num_hashes
         ).localCheckpoint()  # computed once; feeds join + two writes
@@ -80,58 +90,12 @@ def incremental_dedup_batch_writer(
         )
         edges = jaccard_verify_profiles(
             pairs, union_prof, id_col, threshold
-        ).select(
-            "id_a", "id_b", F.lit(batch_id).cast("bigint").alias("batch_id")
-        )
+        ).select("id_a", "id_b", batch_id_col(batch_id))
         edges.write.mode("append").format("parquet").saveAsTable(e_tab)
-        append_bucketed(prof, p_tab, (id_col,), num_buckets)
-        append_bucketed(new_b, b_tab, ("band",), num_buckets)
-        fence.commit(spark, batch_id)
+        append_bucketed(prof, p_tab, (id_col,), NUM_BUCKETS)
+        append_bucketed(new_b, b_tab, ("band",), NUM_BUCKETS)
 
-    return write
-
-
-def dedup_delete_writer(
-    table_prefix: str, id_col: str = "doc_id"
-) -> Callable[[DataFrame, int], None]:
-    """Fenced TOMBSTONES for the dedup signature store (r7 VERDICT
-    #6) — takedown / right-to-forget: delete-batch doc ids land in
-    ``<prefix>_tombstones`` under a ``<prefix>_del_batches`` commit
-    marker (``commit_fence.tombstone_writer``). Contract:
-    TAKEDOWN-FINAL — a committed tombstone retires the doc id
-    permanently; re-adding a retired id is a caller error. This is
-    deliberately simpler than the ann_store/winnow VERSIONED contract
-    because profile and band rows carry no add-batch version (they are
-    per-doc idempotent facts), and the right-to-forget flow this serves
-    never re-admits the removed identity. Deletion is logical: the
-    committed readers filter tombstoned ids."""
-    return tombstone_writer(table_prefix, id_col)
-
-
-def _committed_tombstones(
-    spark: SparkSession, table_prefix: str, id_col: str
-) -> DataFrame | None:
-    """Committed tombstone ids, or None when no delete has ever been
-    committed. Tolerates the crash window between the first tombstone
-    append and the marker-table creation (serve the delete-free
-    view)."""
-    t_tab = f"{table_prefix}_tombstones"
-    dm_tab = f"{table_prefix}_del_batches"
-    if not (
-        spark.catalog.tableExists(t_tab)
-        and spark.catalog.tableExists(dm_tab)
-    ):
-        return None
-    return (
-        spark.table(t_tab)
-        .join(
-            F.broadcast(spark.table(dm_tab)),
-            "batch_id",
-            "left_semi",
-        )
-        .select(id_col)
-        .distinct()
-    )
+    return fenced(m_tab, fold)
 
 
 def committed_edges(spark: SparkSession, table_prefix: str, id_col: str = "doc_id") -> DataFrame:
@@ -145,17 +109,15 @@ def committed_edges(spark: SparkSession, table_prefix: str, id_col: str = "doc_i
     the earlier one in the store), so dropping dead-endpoint edges
     removes exactly the pairs a survivor-only rebuild never forms."""
     edges = (
-        spark.table(f"{table_prefix}_edges")
-        .join(
-            F.broadcast(spark.table(f"{table_prefix}_batches")),
-            "batch_id",
-            "left_semi",
+        committed_rows(
+            spark, f"{table_prefix}_edges", f"{table_prefix}_batches"
         )
         .select("id_a", "id_b")
         .distinct()
     )
-    dead = _committed_tombstones(spark, table_prefix, id_col)
+    dead = committed_tombstones(spark, table_prefix)
     if dead is not None:
+        dead = dead.select(id_col).distinct()
         edges = edges.join(
             dead.withColumnRenamed(id_col, "id_a"), "id_a", "left_anti"
         ).join(dead.withColumnRenamed(id_col, "id_b"), "id_b", "left_anti")

@@ -44,7 +44,11 @@ from sea_express_customs_etl_spark.operators.vote import (
     vote_counts,
 )
 from sea_express_customs_etl_spark.plans.knowledge import knowledge_aligned
-from sea_express_customs_etl_spark.streaming.commit_fence import CommitFence
+from sea_express_customs_etl_spark.streaming.commit_fence import (
+    batch_id_col,
+    committed_rows,
+    fenced,
+)
 
 _KEYS = ("original_description", "official_description", "ccc_code")
 
@@ -56,23 +60,17 @@ def _vote_writer(
     sign: int,
 ) -> Callable[[DataFrame, DataFrame, int], None]:
     v_tab = f"{table_prefix}_votes"
-    fence = CommitFence(f"{table_prefix}_batches")
 
-    def write(delta_a: DataFrame, delta_b: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = delta_a.sparkSession
-        if fence.committed(spark, batch_id):
-            return
-        votes = vote_counts(
+    def fold(delta_a: DataFrame, delta_b: DataFrame, batch_id: int) -> None:
+        vote_counts(
             knowledge_aligned(delta_a, delta_b, use_nfkc=use_nfkc)
         ).select(
             *_KEYS,
             (F.lit(sign) * F.col("frequency")).alias("frequency"),
-            F.lit(int(batch_id)).cast("bigint").alias("batch_id"),
-        )
-        votes.write.mode("append").format("parquet").saveAsTable(v_tab)
-        fence.commit(spark, batch_id)
+            batch_id_col(batch_id),
+        ).write.mode("append").format("parquet").saveAsTable(v_tab)
 
-    return write
+    return fenced(f"{table_prefix}_batches", fold)
 
 
 def knowledge_batch_writer(
@@ -121,15 +119,9 @@ def committed_vote_state(spark: SparkSession, table_prefix: str) -> DataFrame:
     (deterministic recomputation ⇒ bit-identical rows ⇒ distinct
     restores exactly-once), then per-key SUM — one partial-aggregated
     shuffle over the vocabulary-sized state."""
-    raw = (
-        spark.table(f"{table_prefix}_votes")
-        .join(
-            F.broadcast(spark.table(f"{table_prefix}_batches")),
-            "batch_id",
-            "left_semi",
-        )
-        .distinct()  # (keys, frequency, batch_id) — same-batch replays only
-    )
+    raw = committed_rows(
+        spark, f"{table_prefix}_votes", f"{table_prefix}_batches"
+    ).distinct()  # (keys, frequency, batch_id) — same-batch replays only
     # net count 0 = every add retracted: the key must VANISH (a fresh
     # build on the surviving loads has no such row), not rank as a
     # 0-frequency winner candidate

@@ -17,6 +17,14 @@ correct because it is applied at READ time, not fold time.
 Exactly-once: the ``commit_fence.py`` contract, for the adds and the
 tombstones alike.
 
+Deletes (takedown / right-to-forget) are
+``commit_fence.tombstone_writer(prefix, "doc_id")`` batches, with the
+ANN store's VERSIONED contract: a tombstone at batch ``d`` kills
+fingerprint rows ADDED at batch ``<= d``, and a later re-add
+resurrects the document (add and delete batch ids share one monotonic
+sequence). Deletion is logical: :func:`committed_fingerprints` filters
+it.
+
 Scale shape: per-batch cost is ∝ |new documents| (map-only fingerprint
 + one bucketed append); the store is bucketed by ``fp`` so the
 on-demand pair join is bucket-local on the store side.
@@ -27,17 +35,19 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 
 from sea_express_customs_etl_spark.operators.fingerprint import (
     winnow_fingerprints,
 )
 from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 from sea_express_customs_etl_spark.streaming.commit_fence import (
-    CommitFence,
+    batch_id_col,
+    committed_rows,
     drop_tombstoned,
-    tombstone_writer,
+    fenced,
 )
+
+NUM_BUCKETS = 8  # of the fp-bucketed fingerprint table
 
 
 def winnow_batch_writer(
@@ -46,42 +56,20 @@ def winnow_batch_writer(
     text_col: str = "text",
     k: int = 3,
     w: int = 4,
-    num_buckets: int = 8,
 ) -> Callable[[DataFrame, int], None]:
     """A ``foreachBatch`` callable folding each micro-batch of
     documents into the fingerprint store (also usable directly on
     plain DataFrame batches — the one-code-path batch/stream parity
     kept engine-wide)."""
     f_tab = f"{table_prefix}_fps"
-    fence = CommitFence(f"{table_prefix}_batches")
 
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        spark: SparkSession = batch_df.sparkSession
-        if fence.committed(spark, batch_id):
-            return
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
         fps = winnow_fingerprints(
             batch_df, k=k, w=w, text_col=text_col, id_col=id_col
-        ).select(
-            id_col, "fp", F.lit(int(batch_id)).cast("bigint").alias("batch_id")
-        )
-        append_bucketed(fps, f_tab, ("fp",), num_buckets)
-        fence.commit(spark, batch_id)
+        ).select(id_col, "fp", batch_id_col(batch_id))
+        append_bucketed(fps, f_tab, ("fp",), NUM_BUCKETS)
 
-    return write
-
-
-def winnow_delete_writer(
-    table_prefix: str, id_col: str = "doc_id"
-) -> Callable[[DataFrame, int], None]:
-    """Fenced TOMBSTONES for the fingerprint store (r7 VERDICT #6) —
-    takedown / right-to-forget: each delete batch's doc ids land in
-    ``<prefix>_tombstones`` under a ``<prefix>_del_batches`` commit
-    marker, exactly the ``ann_store.ann_store_delete_writer`` contract.
-    Versioned semantics: a tombstone at batch ``d`` kills fingerprint
-    rows ADDED at batch ``<= d``; a later re-add resurrects the
-    document (add and delete batch ids share one monotonic sequence).
-    Deletion is logical: :func:`committed_fingerprints` filters it."""
-    return tombstone_writer(table_prefix, id_col)
+    return fenced(f"{table_prefix}_batches", fold)
 
 
 def committed_fingerprints(
@@ -94,10 +82,8 @@ def committed_fingerprints(
     (``pairs_from_fingerprints``) is applied at READ time, so it
     re-computes correctly over the SURVIVORS — a deleted boilerplate
     document stops counting toward any fingerprint's df."""
-    fps = spark.table(f"{table_prefix}_fps").join(
-        F.broadcast(spark.table(f"{table_prefix}_batches")),
-        "batch_id",
-        "left_semi",
+    fps = committed_rows(
+        spark, f"{table_prefix}_fps", f"{table_prefix}_batches"
     )
     return (
         drop_tombstoned(fps, table_prefix, id_col)

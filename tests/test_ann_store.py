@@ -14,6 +14,7 @@ from sea_express_customs_etl_spark.operators.pq import (
 )
 from sea_express_customs_etl_spark.plans.standins import load_table
 from sea_express_customs_etl_spark.streaming.ann_store import (
+    NUM_BUCKETS,
     ann_store_batch_writer,
     committed_codes,
     store_adc_topk,
@@ -35,7 +36,7 @@ def test_incremental_codes_equal_full_encode(spark, sf_dir):
     model are row-identical to one full-corpus encode."""
     emb, cen, codebook = _setup(spark, sf_dir)
     prefix = f"ann_{uuid.uuid4().hex[:8]}"
-    writer = ann_store_batch_writer(prefix, cen, codebook, num_buckets=4)
+    writer = ann_store_batch_writer(prefix, cen, codebook)
     for i in range(3):
         writer(emb.filter(F.col("vec_id") % 3 == i), i)
     got = sorted(map(tuple, committed_codes(spark, prefix).collect()))
@@ -50,7 +51,7 @@ def test_incremental_codes_equal_full_encode(spark, sf_dir):
     assert spark.table(f"{prefix}_codes").count() == n
     dup = spark.table(f"{prefix}_codes").filter(F.col("batch_id") == 0)
     dup.write.mode("append").format("parquet").bucketBy(
-        4, "cluster"
+        NUM_BUCKETS, "cluster"
     ).saveAsTable(f"{prefix}_codes")
     assert (
         sorted(map(tuple, committed_codes(spark, prefix).collect())) == got
@@ -63,7 +64,7 @@ def test_store_search_matches_one_shot_trained_index(spark, sf_dir):
     recipe, same ranking) — the index.add() soundness property."""
     emb, cen, codebook = _setup(spark, sf_dir)
     prefix = f"ann_{uuid.uuid4().hex[:8]}"
-    writer = ann_store_batch_writer(prefix, cen, codebook, num_buckets=4)
+    writer = ann_store_batch_writer(prefix, cen, codebook)
     writer(emb.filter(F.col("vec_id") % 2 == 0), 0)
     writer(emb.filter(F.col("vec_id") % 2 == 1), 1)
     q = emb.filter(F.col("vec_id") < 10)
@@ -91,21 +92,23 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
     tombstones); compaction folds deletes out physically and is
     idempotent."""
     from sea_express_customs_etl_spark.streaming.ann_store import (
-        ann_store_delete_writer,
         compact_ann_store,
+    )
+    from sea_express_customs_etl_spark.streaming.commit_fence import (
+        tombstone_writer,
     )
 
     emb, cen, codebook = _setup(spark, sf_dir)
     surv_pred = F.col("vec_id") % 5 != 2
     prefix = f"ann_{uuid.uuid4().hex[:8]}"
-    writer = ann_store_batch_writer(prefix, cen, codebook, num_buckets=4)
+    writer = ann_store_batch_writer(prefix, cen, codebook)
     writer(emb.filter(F.col("vec_id") % 2 == 0), 0)
     writer(emb.filter(F.col("vec_id") % 2 == 1), 1)
-    deleter = ann_store_delete_writer(prefix)
+    deleter = tombstone_writer(prefix, "vec_id")
     deleter(emb.filter(~surv_pred).select("vec_id"), 2)
 
     fresh = f"ann_{uuid.uuid4().hex[:8]}"
-    fresh_writer = ann_store_batch_writer(fresh, cen, codebook, num_buckets=4)
+    fresh_writer = ann_store_batch_writer(fresh, cen, codebook)
     fresh_writer(emb.filter(surv_pred), 0)
 
     got = sorted(map(tuple, committed_codes(spark, prefix).collect()))
@@ -135,10 +138,10 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
     # idempotent, and post-compaction appends still land
     deleter(emb.filter(F.col("vec_id") % 11 == 0).select("vec_id"), 4)
     before = sorted(map(tuple, committed_codes(spark, prefix).collect()))
-    compact_ann_store(spark, prefix, num_buckets=4)
+    compact_ann_store(spark, prefix)
     assert not spark.catalog.tableExists(f"{prefix}_tombstones")
     assert sorted(map(tuple, committed_codes(spark, prefix).collect())) == before
-    compact_ann_store(spark, prefix, num_buckets=4)
+    compact_ann_store(spark, prefix)
     assert sorted(map(tuple, committed_codes(spark, prefix).collect())) == before
 
 
@@ -150,7 +153,7 @@ def test_crash_window_tombstones_without_marker_table(spark, sf_dir):
     AnalysisException."""
     emb, cen, codebook = _setup(spark, sf_dir)
     prefix = f"ann_{uuid.uuid4().hex[:8]}"
-    writer = ann_store_batch_writer(prefix, cen, codebook, num_buckets=4)
+    writer = ann_store_batch_writer(prefix, cen, codebook)
     writer(emb, 0)
     before = sorted(map(tuple, committed_codes(spark, prefix).collect()))
     # simulate the crash window: tombstone rows exist, marker table not

@@ -1,16 +1,22 @@
 """The streaming stores' commit fence (streaming/commit_fence.py) on
 tiny in-memory frames: replays run no job, every fold runs the same
-jobs, restarts and crash windows keep exactly-once, and a marker table
-dropped by compaction comes back on the next commit."""
+jobs, restarts and crash windows keep exactly-once, a marker table
+dropped by compaction comes back on the next commit, and no other
+streaming module writes the fence or its marker join again."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
 import uuid
 
 import pytest
 
+from sea_express_customs_etl_spark.streaming import commit_fence
 from sea_express_customs_etl_spark.streaming.commit_fence import (
     CommitFence,
+    committed_rows,
+    fenced,
     marker_rows,
     tombstone_writer,
 )
@@ -127,3 +133,86 @@ def test_marker_rows_are_bigint_ids(spark):
     assert df.schema.simpleString() == "struct<batch_id:bigint>"
     assert sorted(r.batch_id for r in df.collect()) == [1, 2, 3]
 
+
+
+class _Recorder:
+    """A fold that records the batch ids it was called with and raises
+    on the ids in ``fail``."""
+
+    def __init__(self, fail=()):
+        self.ids: list[int] = []
+        self.fail = set(fail)
+
+    def __call__(self, df, batch_id):
+        self.ids.append(batch_id)
+        if batch_id in self.fail:
+            raise RuntimeError("fold failed")
+
+
+def _frame(spark):
+    return spark.createDataFrame([(1,)], "x bigint")
+
+
+def test_fenced_replay_skips_the_fold_and_runs_no_job(spark, prefix):
+    fold = _Recorder()
+    write = fenced(f"{prefix}_batches", fold)
+    write(_frame(spark), 0)
+    write(_frame(spark), 1)
+    assert _jobs(spark, lambda: write(_frame(spark), 1)) == 0
+    assert fold.ids == [0, 1]
+    assert _ids(spark, f"{prefix}_batches") == [0, 1]
+
+
+def test_fenced_fold_that_raises_writes_no_marker(spark, prefix):
+    fold = _Recorder(fail={1})
+    write = fenced(f"{prefix}_batches", fold)
+    write(_frame(spark), 0)
+    with pytest.raises(RuntimeError):
+        write(_frame(spark), 1)
+    assert _ids(spark, f"{prefix}_batches") == [0]
+    fold.fail.clear()
+    write(_frame(spark), 1)
+    assert fold.ids == [0, 1, 1]
+    assert _ids(spark, f"{prefix}_batches") == [0, 1]
+
+
+def test_fresh_fenced_writer_skips_ids_committed_on_disk(spark, prefix):
+    fenced(f"{prefix}_batches", _Recorder())(_frame(spark), 0)
+    fold = _Recorder()
+    restarted = fenced(f"{prefix}_batches", fold)
+    restarted(_frame(spark), 0)
+    restarted(_frame(spark), 1)
+    assert fold.ids == [1]
+    assert _ids(spark, f"{prefix}_batches") == [0, 1]
+
+
+def test_committed_rows_keep_only_committed_batches(spark, prefix):
+    spark.createDataFrame(
+        [(0, "a"), (1, "b"), (2, "c"), (2, "c")], "batch_id bigint, v string"
+    ).write.format("parquet").saveAsTable(f"{prefix}_rows")
+    marker_rows(spark, [0, 2]).write.format("parquet").saveAsTable(
+        f"{prefix}_batches"
+    )
+    got = committed_rows(spark, f"{prefix}_rows", f"{prefix}_batches")
+    # replay duplicates are the reader's to collapse
+    assert sorted((r.batch_id, r.v) for r in got.collect()) == [
+        (0, "a"), (2, "c"), (2, "c")
+    ]
+
+
+def test_no_streaming_module_but_the_fence_writes_the_fence():
+    """No Spark session: only ``commit_fence.py`` under ``streaming/``
+    builds a ``CommitFence`` or writes the ``"left_semi"`` marker join,
+    so a store cannot grow its own copy of either."""
+    here = Path(commit_fence.__file__)
+    copies = []
+    for path in sorted(here.parent.glob("*.py")):
+        if path == here:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = getattr(node, "id", None) or getattr(node, "attr", None)
+            if name == "CommitFence" or (
+                isinstance(node, ast.Constant) and node.value == "left_semi"
+            ):
+                copies.append(f"{path.name}:{node.lineno}")
+    assert not copies

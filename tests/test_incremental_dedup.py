@@ -62,7 +62,7 @@ def test_foreachbatch_store_parity_and_replay(spark, sf_dir):
     marker missing) leaves the committed view unchanged."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     prefix = f"incdedup_{uuid.uuid4().hex[:8]}"
-    writer = incremental_dedup_batch_writer(prefix, num_buckets=4)
+    writer = incremental_dedup_batch_writer(prefix)
 
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 == 1)
@@ -120,7 +120,7 @@ def test_streaming_foreachbatch_end_to_end(spark, sf_dir, tmp_path):
     )
     q = (
         stream.writeStream.foreachBatch(
-            incremental_dedup_batch_writer(prefix, num_buckets=4)
+            incremental_dedup_batch_writer(prefix)
         )
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
@@ -137,8 +137,8 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
     store ≡ a store freshly built from the survivors only — edges
     (both-endpoints-live filter) and the downstream component
     resolution; delete replay fenced."""
-    from sea_express_customs_etl_spark.streaming.incremental_dedup import (
-        dedup_delete_writer,
+    from sea_express_customs_etl_spark.streaming.commit_fence import (
+        tombstone_writer,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -148,7 +148,7 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
     writer = incremental_dedup_batch_writer(prefix)
     writer(docs.filter(F.col("doc_id") % 2 == 0), 0)
     writer(docs.filter(F.col("doc_id") % 2 == 1), 1)
-    deleter = dedup_delete_writer(prefix)
+    deleter = tombstone_writer(prefix, "doc_id")
     deleter(docs.filter(~surv_pred).select("doc_id"), 2)
 
     fresh = "deddel_test_" + uuid.uuid4().hex[:8]

@@ -25,7 +25,7 @@ def _store(spark):
     codebook = train_frozen_model(sample, cen).persist()
     codebook.count()
     prefix = f"knnadc_{uuid.uuid4().hex[:8]}"
-    writer = ann_store_batch_writer(prefix, cen, codebook, num_buckets=4)
+    writer = ann_store_batch_writer(prefix, cen, codebook)
     writer(emb.filter(F.col("vec_id") % 2 == 0), 0)
     writer(emb.filter(F.col("vec_id") % 2 == 1), 1)
     return emb, cen, codebook, prefix

@@ -15,6 +15,7 @@ from sea_express_customs_etl_spark.operators.fingerprint import (
 )
 from sea_express_customs_etl_spark.plans.standins import load_table
 from sea_express_customs_etl_spark.streaming.winnow_store import (
+    NUM_BUCKETS,
     committed_fingerprints,
     winnow_batch_writer,
 )
@@ -58,7 +59,7 @@ def test_replay_and_crash_window(spark, sf_dir):
     )
     from sea_express_customs_etl_spark.sinks.bucketed import append_bucketed
 
-    append_bucketed(fps1, f"{prefix}_fps", ("fp",), 8)
+    append_bucketed(fps1, f"{prefix}_fps", ("fp",), NUM_BUCKETS)
     # uncommitted rows are invisible
     n_committed = committed_fingerprints(spark, prefix).count()
     assert n_committed == winnow_fingerprints(b0, k=3, w=4).count()
@@ -80,8 +81,8 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
     fenced; a later re-add RESURRECTS (versioned tombstones); the
     crash window (tombstones without a del-marker table) serves the
     delete-free view."""
-    from sea_express_customs_etl_spark.streaming.winnow_store import (
-        winnow_delete_writer,
+    from sea_express_customs_etl_spark.streaming.commit_fence import (
+        tombstone_writer,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -90,7 +91,7 @@ def test_deletes_equal_fresh_build_on_survivors(spark, sf_dir):
     writer = winnow_batch_writer(prefix, k=3, w=4)
     writer(docs.filter(F.col("doc_id") % 2 == 0), 0)
     writer(docs.filter(F.col("doc_id") % 2 == 1), 1)
-    deleter = winnow_delete_writer(prefix)
+    deleter = tombstone_writer(prefix, "doc_id")
     deleter(docs.filter(~surv_pred).select("doc_id"), 2)
 
     fresh = _prefix()
